@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end sync-pipeline throughput: synthesize op envelopes
   * (comments/votes/account_updates in reference proportions), run the
   * full router→handlers→merge batch, and report ops/second — the
@@ -15,11 +13,7 @@ object SyncBench {
   def main(args: Array[String]): Unit = {
     val nOps = args.headOption.map(_.toInt).getOrElse(200000)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

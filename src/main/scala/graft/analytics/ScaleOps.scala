@@ -2686,16 +2686,8 @@ object ScaleOps {
         () => graft.Stage.mat(dt.select(col("sd"), col("rf"), col("ls")).distinct()),
         () => graft.Stage.mat(dt.select(col("qy"), col("sd"), col("rf")).distinct()),
         () => graft.Stage.mat(dt.agg(count(lit(1)).as("r4"), sum(col("cnt")).as("n"))))
-      val built = {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration._
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        try {
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutorService(pool)
-          subBuilds.map(b => Future(b())).map(Await.result(_, 30.minutes))
-        } finally pool.shutdown()
-      }
+      val built = graft.Stage.concurrently(s, "q326",
+        timeout = scala.concurrent.duration.Duration(30, "minutes"))(subBuilds)
       val (dRls, dSrl, dQsr, cnts) = (built(0), built(1), built(2), built(3))
       val cands = Seq(
         (Seq("rf", "ls", "qy", "sd"), dRls),

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Idempotent keyed-upsert merge (SURVEY.md §2.2 SNK1, §7.4 #1).
   *
@@ -75,7 +76,7 @@ object Merge {
     * which would silently rebuild state from scratch every batch on a
     * non-local deployment (review finding r6b).
     */
-  private[graft] def pathExists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
+  private[graft] def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
@@ -102,52 +103,92 @@ object Merge {
     }
   }
 
+  /** The table at `path`, or None when it does not exist yet. With a
+    * `schema` the read infers nothing (no footer-reading job); the
+    * caller then owns that schema matching the files, since a column
+    * missing from it is dropped from the read.
+    */
+  def readState(spark: SparkSession, path: String,
+                schema: Option[StructType] = None): Option[DataFrame] =
+    if (!pathExists(spark, path)) None
+    else Some(schema.fold(spark.read)(spark.read.schema).parquet(path))
+
+  /** Key-locate scan: the (keys ++ partitionCols) of the `state` rows
+    * whose keys appear in `probe` — a column-pruned read, a tiny
+    * fraction of the table width, semi-joined against the probe's keys
+    * (broadcast: micro-batches are small by construction; a semi-join
+    * needs no distinct build side, so no shuffle precedes it).
+    * The result is batch-sized, so a caller with several key sets
+    * (posts and votes of one batch) can run ONE scan over their union,
+    * materialize it and hand it to `mergePartitioned` as `located`.
+    */
+  def locate(state: DataFrame, probe: DataFrame, keys: Seq[String],
+             partitionCols: Seq[String] = Seq("year", "month")): DataFrame =
+    state.select((keys ++ partitionCols).map(col): _*)
+      .join(broadcast(probe.select(keys.map(col): _*)), keys, "left_semi")
+
   /** Partition-scoped incremental upsert: merge `incoming` into the
     * partitioned state at `path`, touching ONLY (a) the partitions the
     * batch's rows land in and (b) the partitions where the batch's KEYS
-    * already live. (b) is found with a column-pruned key-locate scan —
-    * only (keys ++ partitionCols) are read, a tiny fraction of the table
-    * width — semi-joined against the batch's distinct keys (broadcast:
-    * micro-batches are small by construction). Partition routing is
-    * first-seen (`routeFirstSeen`), so rows never migrate partitions and
-    * the rewrite stays O(touched months), not O(history). At 100 TB a
-    * key→partition index table would replace the key-locate scan; with
-    * plain Parquet the narrow scan is the honest answer.
+    * already live. (b) comes from a key-locate scan (`locate`). Partition
+    * routing is first-seen (`routeFirstSeen`), so rows never migrate
+    * partitions and the rewrite stays O(touched months), not O(history).
+    * At 100 TB a key→partition index table would replace the key-locate
+    * scan; with plain Parquet the narrow scan is the honest answer.
     */
   def upsertPartitioned(incoming: DataFrame, path: String,
                         keys: Seq[String], orderCol: String,
-                        partitionCols: Seq[String] = Seq("year", "month")): Unit = {
+                        partitionCols: Seq[String] = Seq("year", "month")): Unit =
+    writePartitioned(mergePartitioned(incoming, path, keys, orderCol, partitionCols),
+      path, partitionCols)
+
+  /** `upsertPartitioned`'s merged rows — every row of the partitions it
+    * rewrites — materialized, so the caller can write them (with
+    * `writePartitioned`) after other work, such as sibling tables'
+    * merges, has succeeded.
+    *
+    * `located` is the caller's key-locate scan, when one shared scan
+    * whose probe covers at least `incoming`'s keys already ran (e.g.
+    * `Sync.applyBatch`'s scan for posts and votes at once); without it
+    * the merge runs a scan of its own. `stateSchema` is passed to
+    * `readState`: give it only when it is the table's on-disk schema
+    * (the frame merged into it), since without it a state column
+    * `incoming` lacks still survives.
+    */
+  def mergePartitioned(incoming: DataFrame, path: String,
+                       keys: Seq[String], orderCol: String,
+                       partitionCols: Seq[String] = Seq("year", "month"),
+                       stateSchema: Option[StructType] = None,
+                       located: Option[DataFrame] = None): DataFrame = {
     val spark = incoming.sparkSession
-    val exists = pathExists(spark, path)
     val incomingTagged = incoming.withColumn("__from_state", lit(false))
-    val merged = if (!exists) {
-      latestWins(routeFirstSeen(incomingTagged, keys, orderCol, partitionCols)
-        .drop("__from_state"), keys, Seq(col(orderCol)))
-    } else {
-      val state = spark.read.parquet(path)
-      // where do the incoming keys already live? (column-pruned scan)
-      val incomingKeys = incoming.select(keys.map(col): _*).distinct()
-      val oldParts = state.select((keys ++ partitionCols).map(col): _*)
-        .join(broadcast(incomingKeys), keys, "left_semi")
-        .select(partitionCols.map(col): _*).distinct()
-      val newParts = incoming.select(partitionCols.map(col): _*).distinct()
-      val touched = oldParts.unionByName(newParts).distinct().collect()
-      // null-safe equality: a null partition value (null orderCol → null
-      // year/month) lands in the default partition, and === against a null
-      // literal is never-true — plain === would exclude the existing
-      // null-partition state rows from the merge while the dynamic
-      // overwrite still rewrites that partition, silently deleting them
-      val pruning = touched.map { r =>
-        partitionCols.zipWithIndex
-          .map { case (c, i) => col(c) <=> lit(r.get(i)) }
-          .reduce(_ && _)
-      }.reduceOption(_ || _).getOrElse(lit(false))
-      val existingTouched = state.filter(pruning).withColumn("__from_state", lit(true))
-      val unioned = existingTouched.unionByName(incomingTagged, allowMissingColumns = true)
-      latestWins(routeFirstSeen(unioned, keys, orderCol, partitionCols)
-        .drop("__from_state"), keys, Seq(col(orderCol)))
+    val merged = readState(spark, path, stateSchema) match {
+      case None =>
+        latestWins(routeFirstSeen(incomingTagged, keys, orderCol, partitionCols)
+          .drop("__from_state"), keys, Seq(col(orderCol)))
+      case Some(state) =>
+        // where do the incoming keys already live? (a shared scan holds
+        // the same columns as the table's, so it is located alike)
+        val oldParts = locate(located.getOrElse(state), incoming, keys, partitionCols)
+          .select(partitionCols.map(col): _*)
+        val newParts = incoming.select(partitionCols.map(col): _*)
+        val touched = oldParts.unionByName(newParts).distinct().collect()
+        // null-safe equality: a null partition value (null orderCol → null
+        // year/month) lands in the default partition, and === against a null
+        // literal is never-true — plain === would exclude the existing
+        // null-partition state rows from the merge while the dynamic
+        // overwrite still rewrites that partition, silently deleting them
+        val pruning = touched.map { r =>
+          partitionCols.zipWithIndex
+            .map { case (c, i) => col(c) <=> lit(r.get(i)) }
+            .reduce(_ && _)
+        }.reduceOption(_ || _).getOrElse(lit(false))
+        val existingTouched = state.filter(pruning).withColumn("__from_state", lit(true))
+        val unioned = existingTouched.unionByName(incomingTagged, allowMissingColumns = true)
+        latestWins(routeFirstSeen(unioned, keys, orderCol, partitionCols)
+          .drop("__from_state"), keys, Seq(col(orderCol)))
     }
-    // materialize before overwriting the partitions we just read
-    writePartitioned(merged.transform(graft.Stage.mat), path, partitionCols)
+    // materialize before overwriting the partitions just read
+    merged.transform(graft.Stage.mat)
   }
 }

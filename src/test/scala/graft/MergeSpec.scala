@@ -158,6 +158,52 @@ class MergeSpec extends SparkSpec {
     assert(state === Seq((5L, "v2", 2024, 1)))
   }
 
+  test("a state column missing from incoming survives upsertPartitioned") {
+    val path = java.nio.file.Files.createTempDirectory("graft-merge-dropcol").toString + "/posts"
+    def ts(s: String) = Timestamp.valueOf(s)
+    Merge.upsertPartitioned(
+      Seq((1L, ts("2024-01-10 00:00:00"), "a", "kept", 2024, 1),
+          (2L, ts("2024-01-11 00:00:00"), "b", "replaced", 2024, 1))
+        .toDF("id", "timestamp", "v", "note", "year", "month"),
+      path, Seq("id"), "timestamp")
+    // the batch lacks `note` and rewrites January, where both rows live
+    Merge.upsertPartitioned(
+      Seq((2L, ts("2024-01-20 00:00:00"), "b2", 2024, 1))
+        .toDF("id", "timestamp", "v", "year", "month"),
+      path, Seq("id"), "timestamp")
+    val state = spark.read.parquet(path)
+    assert(state.columns.contains("note"))
+    val rows = state.select("id", "v", "note").as[(Long, String, Option[String])].collect().sortBy(_._1).toSeq
+    assert(rows === Seq((1L, "a", Some("kept")), (2L, "b2", None)))
+  }
+
+  test("a shared key-locate scan wider than the batch rewrites only the batch keys' partitions") {
+    val path = java.nio.file.Files.createTempDirectory("graft-merge-located").toString + "/posts"
+    def row(id: Long, ts: String, v: String) = {
+      val t = Timestamp.valueOf(ts)
+      (id, t, v, t.toLocalDateTime.getYear, t.toLocalDateTime.getMonthValue)
+    }
+    Merge.upsertPartitioned(
+      Seq(row(1L, "2024-01-10 00:00:00", "jan"), row(2L, "2024-02-10 00:00:00", "feb"))
+        .toDF("id", "timestamp", "v", "year", "month"),
+      path, Seq("id"), "timestamp")
+    val janFile = new java.io.File(path, "year=2024/month=1")
+      .listFiles().filter(_.getName.endsWith(".parquet")).head
+    val janMod = janFile.lastModified()
+    // the scan also probes key 1 (say, a vote's post), which lives in January
+    val incoming = Seq(row(2L, "2024-03-01 00:00:00", "feb-edit"))
+      .toDF("id", "timestamp", "v", "year", "month")
+    val located = Merge.locate(spark.read.parquet(path), Seq(1L, 2L).toDF("id"), Seq("id"))
+      .transform(Stage.mat)
+    assert(located.count() === 2)
+    Merge.writePartitioned(Merge.mergePartitioned(incoming, path, Seq("id"), "timestamp",
+      stateSchema = Some(spark.read.parquet(path).schema), located = Some(located)), path)
+    val state = spark.read.parquet(path).select("id", "v", "month")
+      .as[(Long, String, Int)].collect().sortBy(_._1).toSeq
+    assert(state === Seq((1L, "jan", 1), (2L, "feb-edit", 2)))
+    assert(janFile.exists() && janFile.lastModified() === janMod)
+  }
+
   test("schema evolution: incoming may add columns (unionByName allowMissing)") {
     val existing = Seq((1L, Timestamp.valueOf("2024-01-01 00:00:00"), "x"))
       .toDF("id", "timestamp", "v")
