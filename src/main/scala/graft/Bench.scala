@@ -288,10 +288,11 @@ object Bench {
     //    captures always ENDS with a parseable record.
     def fmt(d: Double): String = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
-    // One-time memo builds (edge tables, k-means fits, the IVF index)
-    // are paid inside pass 1 and then excluded from every per-query min
+    // One-time memo builds (every graft.Memo kind: table loads, edge
+    // tables, k-means fits, the IVF index, the PQ codebook) are paid
+    // inside pass 1 and then excluded from every per-query min
     // — VERDICT r13 ask #1: the artifact itself must carry that cost.
-    // Emitted after every pass (the maps are filled during pass 1).
+    // Emitted after every pass (the map is filled during pass 1).
     def escJson(s: String): String = s.flatMap {
       case '"'          => "\\\""
       case '\\'         => "\\\\"
@@ -299,9 +300,7 @@ object Bench {
       case c            => c.toString
     }
     def memoBuilds: String =
-      (graft.analytics.GraphOps.memoBuildSeconds.toSeq ++
-        graft.text.Similarity.fitBuildSeconds.toSeq ++
-        graft.analytics.LLMOps.ivfBuildSeconds.toSeq)
+      graft.Memo.buildSeconds.toSeq.map { case (l, v) => l.toString -> v }
         .sortBy(_._1)
         .map { case (k, v) => "\"" + escJson(k) + "\":" + fmt(v) }
         .mkString("{", ",", "}")

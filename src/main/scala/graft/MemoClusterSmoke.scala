@@ -12,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   * (derive on executors → spill under `spark.sql.warehouse.dir` →
   * re-read on executors, memo hit on the second call).
   *
-  * Run in a FRESH JVM (MemoClusterSpec forks one): the test suites
-  * share a single local[4] SparkContext, and a JVM allows only one.
+  * Run in a FRESH JVM (MemoClusterSpec forks one) with the fixture dir
+  * as its argument: the test suites share a single local[4]
+  * SparkContext, and a JVM allows only one.
   */
 object MemoClusterSmoke {
   /** JDK 17 module opens Spark 4 needs when executors are plain `java`
@@ -29,7 +30,7 @@ object MemoClusterSmoke {
     "java.base/sun.security.action", "java.base/sun.util.calendar")
 
   def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
+    val dir = args.headOption.getOrElse(sys.error("usage: MemoClusterSmoke <fixture dir>"))
     val execOpens = jdk17AddOpens
       .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
     val spark = SparkSession.builder()
@@ -58,8 +59,7 @@ object MemoClusterSmoke {
       // the spill must live under the Spark-managed warehouse dir, not
       // under the driver's java.io.tmpdir (the r13 local-mode assumption)
       val wh = spark.conf.get("spark.sql.warehouse.dir")
-      require(analytics.GraphOps.memoDerivations.keySet.exists(_.endsWith("#cluster_smoke")),
-        "memo derivation counter missing")
+      require(Memo.derivations("edges", dir) == 1, "the edge memo must derive exactly once")
       println(s"MEMO_CLUSTER_SMOKE_OK n=$n warehouse=$wh")
     } finally spark.stop()
   }

@@ -791,142 +791,27 @@ object GraphOps {
       .unionByName(ew.selectExpr("pb AS u", "pa AS v", "w"))
   }
 
-  // Bounded in practice by (#corpus dirs × #variants) seen by one JVM —
-  // a handful per session; entries are path strings (bytes), so no cap
-  // machinery is warranted. A long-lived multi-corpus service would cap
-  // and evict like Tables.memo (VERDICT r13 "what's wrong" #7).
-  private val edgeMemo = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Diagnostic: how many times each (corpus, variant) memo DERIVED in
-    * this JVM — ProbeSssp's re-read check (VERDICT r12 ask #3): a bench
-    * JVM must read the spilled parquet across passes, so every key
-    * stays at 1 no matter how many times its queries run. */
-  private[graft] val memoDerivations =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  /** Wall seconds each memo key spent deriving + spilling in this JVM —
-    * the self-accounting VERDICT r13 ask #1 requires: min-over-passes
-    * per-query figures exclude the one-time build (paid inside pass 1),
-    * so the bench artifact carries it explicitly via
-    * `notes.memo_build_s` instead of leaving it unquantified. */
-  private[graft] val memoBuildSeconds =
-    scala.collection.concurrent.TrieMap.empty[String, Double]
-
-  // One spill root per JVM, created lazily under the session's
-  // SPARK-MANAGED warehouse dir (`spark.sql.warehouse.dir`): on a real
-  // cluster that is the shared filesystem (HDFS/S3) every executor can
-  // read, which is what makes the memo cluster-real — the r13 form
-  // spilled under java.nio temp (driver-local /tmp), a path only
-  // local-mode tasks can see (VERDICT r13 "what's wrong" #1). The
-  // per-JVM token keeps concurrent sessions (tests beside a bench) from
-  // colliding; the tree is deleted at JVM exit through the Hadoop FS
-  // API so the cleanup follows the path's scheme.
-  private val memoJvmToken = java.util.UUID.randomUUID().toString.take(12)
-  private val memoRootRegistered = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private def memoSpillRoot(s: SparkSession): org.apache.hadoop.fs.Path = {
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    val root = new org.apache.hadoop.fs.Path(wh, s"_graft_edge_memo/$memoJvmToken")
-    if (memoRootRegistered.compareAndSet(false, true)) {
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try fs.delete(root, true) catch { case _: Throwable => () }))
-    }
-    root
-  }
-
-  /** Per-corpus memo of a derived edge table, spilled to a temp parquet
-    * ONCE per (corpus, variant) and re-read thereafter — the q45
-    * IVF-centroid convention ([[LLMOps.ivfCentroids]]) applied to the
-    * graph family's shared inputs (VERDICT r11 ask #1: five of the
-    * suite's top-6 CPU queries each re-derived the SAME co-purchase
-    * edge table before their kernel; ProbeEdges measured the
-    * materialized derivation at 3.3 s CPU per query — 19% of the
-    * family's 108.6 s bill, ~17 s CPU suite-wide once amortized; the
+  /** Per-corpus memo of a derived edge table, spilled to parquet ONCE
+    * per (corpus, variant, input snapshot) and re-read thereafter
+    * ([[graft.Memo.spilled]], kind "edges"; `inputs` names the fixture
+    * tables the derivation reads). Five of the suite's top-6 CPU
+    * queries each re-derived the SAME co-purchase edge table before
+    * their kernel; ProbeEdges measured the materialized derivation at
+    * 3.3 s CPU per query — 19% of the family's 108.6 s bill; the
     * events-derived interaction graph measured 0.41 s CPU × 6 re-
-    * derivations — the same 19% share of its smaller family bill, so
-    * the same memo applies under variant "interaction").
+    * derivations, the same share of its smaller bill.
     *
     * This is also the 100 TB shape: a production graph battery
     * materializes the distinct edge table once per corpus snapshot and
-    * runs every kernel against it, rather than re-running the basket
-    * collect_set + pair explode + distinct per query. The spill is a
-    * deterministic function of (corpus, variant) — row ORDER may vary,
-    * but every consumer is order-insensitive (joins/aggs) and every
-    * declared query ends in a total ORDER BY — so results are
-    * bit-identical to inline derivation and each query stays
-    * self-contained for the correctness gate. The parquet barrier also
-    * subsumes the `Stage.mat` localCheckpoint the call sites used to
-    * need (no persistent blocks → the bench's plan cache can reuse the
-    * built plan across passes).
-    *
-    * The spill lives under the session's `spark.sql.warehouse.dir`
-    * (round 14, VERDICT r13 ask #1): a Spark-managed location that is a
-    * shared filesystem on any real deployment, so executors on other
-    * hosts can read the memo back — the r13 java.nio temp dir could
-    * not leave the driver's machine. Per-JVM-token subtree, deleted at
-    * JVM exit via the Hadoop FS API (so HDFS/S3 paths clean up the same
-    * way the local path does); build wall-seconds recorded per key in
-    * [[memoBuildSeconds]] and surfaced by the bench as
-    * `notes.memo_build_s`. MemoClusterSpec smokes the round-trip on a
+    * runs every kernel against it. The parquet barrier also subsumes
+    * the `Stage.mat` localCheckpoint the call sites used to need (no
+    * persistent blocks → the bench's plan cache can reuse the built plan
+    * across passes). MemoClusterSpec smokes the round-trip on a
     * `local-cluster[2,…]` master, where executors are separate JVMs.
     */
-  private[graft] def edgeTableMemo(s: SparkSession, dir: String,
-      variant: String = "full")(derive: => DataFrame): DataFrame = {
-    val key = s"$dir#$variant"
-    val path = edgeMemo.getOrElseUpdate(key, {
-      memoDerivations.updateWith(key)(c => Some(c.getOrElse(0L) + 1L))
-      val sub = s"${variant}_${Integer.toHexString(key.hashCode)}"
-      val root = memoSpillRoot(s)
-      val p = new org.apache.hadoop.fs.Path(root, sub)
-      val t0 = System.nanoTime()
-      derive.write.mode("overwrite").parquet(p.toString)
-      // Right-size the spill by BYTES (guide §6 / VERDICT r13 ask #2):
-      // the derive's final-stage partition count tracks the WRITING
-      // session's core count, so a fixture-sized memo landed as ~20
-      // near-empty files and every one of the family's many re-scans
-      // fanned out into ~20 near-empty tasks — measured 2-5× task-CPU
-      // inflation at local[32] from concurrent tiny-task overhead (the
-      // mechanism behind r13's "8-core suite beats the 32-core one").
-      // One cheap one-time rewrite packs the memo to
-      //   clamp(defaultParallelism,
-      //         lo = ceil(bytes / maxPartitionBytes),   // full splits
-      //         hi = ceil(bytes / openCostInBytes))     // file ≥ its open cost
-      // — the write-side mirror of Spark's own scan rules
-      // (files.minPartitionNum aspires to default parallelism; split
-      // packing charges every file openCostInBytes, so a file smaller
-      // than that is worth less than opening it). At corpus scale `lo`
-      // dominates and the memo is thousands of full-split files; at
-      // fixture scale the count is bytes-derived (2-3 at sf0.1) and
-      // IDENTICAL across core counts, so the 8- and 32-core benches run
-      // the same layout. Sweep evidence (q342/q358 idle, 32c): 20 files
-      // → cpu 12.6/10.2 s; 8 → 11.8/15.1; 2 → 2.2/6.1 (wall 3.0/3.5);
-      // 1 → 2.5/5.6 but wall 6.2/5.0 (serial re-parse per re-scan).
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val bytes = fs.getContentSummary(p).getLength
-      def confBytes(k: String, dflt: String) =
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          s.conf.get(k, dflt))
-      val splitBytes = confBytes("spark.sql.files.maxPartitionBytes", "134217728b")
-      val openCost = confBytes("spark.sql.files.openCostInBytes", "4194304b")
-      val nFiles = fs.listStatus(p).count(_.getPath.getName.startsWith("part-"))
-      val lo = math.max(1L, (bytes + splitBytes - 1) / splitBytes)
-      val hi = math.max(1L, (bytes + openCost - 1) / openCost)
-      val want = math.min(hi,
-        math.max(lo, s.sparkContext.defaultParallelism.toLong)).toInt
-      val finalP =
-        if (nFiles > want) {
-          val p2 = new org.apache.hadoop.fs.Path(root, sub + "_rs")
-          s.read.parquet(p.toString).coalesce(want)
-            .write.mode("overwrite").parquet(p2.toString)
-          try fs.delete(p, true) catch { case _: Throwable => () }
-          p2
-        } else p
-      memoBuildSeconds.put(key, (System.nanoTime() - t0) / 1e9)
-      finalP.toString
-    })
-    s.read.parquet(path)
-  }
+  private[graft] def edgeTableMemo(s: SparkSession, dir: String, variant: String = "full",
+      inputs: Seq[String] = Seq("lineitem"))(derive: => DataFrame): DataFrame =
+    graft.Memo.spilled(s, "edges", dir, inputs, variant)(derive)
 
   /** q257's triangle census + clustering coefficients over a distinct
     * undirected edge table (columns `pa`, `pb`, pa ≠ pb, one row per
@@ -1471,7 +1356,7 @@ object GraphOps {
     //      all three seed-gated iterations.
     ("q132_trustrank", (s: SparkSession, dir: String) => {
       val ev = Tables(s, dir).events.filter(col("user_id").isNotNull)
-      val inter = edgeTableMemo(s, dir, "interaction_directed")(
+      val inter = edgeTableMemo(s, dir, "interaction_directed", Seq("events"))(
         interactionDirectedEdges(s, dir))
       val seeds = ev.groupBy(col("user_id")).agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("user_id")).limit(5)
@@ -1514,7 +1399,7 @@ object GraphOps {
     //      pageRankDirectedMicros scaladoc).
     ("q127_pagerank_directed", (s: SparkSession, dir: String) => {
       pageRankDirectedMicros(
-        edgeTableMemo(s, dir, "interaction_directed")(
+        edgeTableMemo(s, dir, "interaction_directed", Seq("events"))(
           interactionDirectedEdges(s, dir)), iters = 3)
         .orderBy(col("node"))
     }, Some(s"""
@@ -1540,7 +1425,7 @@ object GraphOps {
     //      normalizations.
     ("q137_hits", (s: SparkSession, dir: String) => {
       hitsMicros(
-        edgeTableMemo(s, dir, "interaction_directed")(
+        edgeTableMemo(s, dir, "interaction_directed", Seq("events"))(
           interactionDirectedEdges(s, dir)), iters = 2)
         .orderBy(col("kind"), col("node"))
     }, Some(s"""
@@ -1565,7 +1450,7 @@ object GraphOps {
     //      iterations.
     ("q136_pagerank_weighted", (s: SparkSession, dir: String) => {
       pageRankWeightedMicros(
-        edgeTableMemo(s, dir, "interaction_weighted")(
+        edgeTableMemo(s, dir, "interaction_weighted", Seq("events"))(
           interactionWeightedEdges(s, dir)), iters = 3)
         .orderBy(col("node"))
     }, Some(s"""
@@ -1593,7 +1478,7 @@ object GraphOps {
     //      build side) + one map-side-combined agg — see the object
     //      scaladoc for the 100 TB bucketing/skew argument.
     ("q117_pagerank", (s: SparkSession, dir: String) => {
-      pageRankMicros(edgeTableMemo(s, dir, "interaction")(
+      pageRankMicros(edgeTableMemo(s, dir, "interaction", Seq("events"))(
         interactionEdges(s, dir)), iters = 3)
         .orderBy(col("node"))
     }, Some("""
@@ -1634,7 +1519,7 @@ object GraphOps {
     //      reached its fixpoint on this graph. The oracle unrolls all
     //      6 rounds for both k — pure integer counts, no division.
     ("q138_kcore", (s: SparkSession, dir: String) => {
-      val e = edgeTableMemo(s, dir, "interaction")(interactionEdges(s, dir))
+      val e = edgeTableMemo(s, dir, "interaction", Seq("events"))(interactionEdges(s, dir))
       // ships on the DELTA peel (r10: ProbeKCore measured 2.34 s vs the
       // semi-join peel's 3.78 s min at sf0.1, 15.5 s vs 3.9 s cold);
       // spec-pinned identical outputs, oracle unchanged
@@ -1688,7 +1573,7 @@ object GraphOps {
     //      restricted edge CTE), pinning the fixed-round semantics
     //      identically on both engines.
     ("q311_coreness", (s: SparkSession, dir: String) => {
-      corenessLadder(edgeTableMemo(s, dir, "interaction")(
+      corenessLadder(edgeTableMemo(s, dir, "interaction", Seq("events"))(
         interactionEdges(s, dir)), Seq(1, 2, 4, 8, 16, 32, 64),
         rounds = 6)
     }, Some {
@@ -1722,7 +1607,7 @@ object GraphOps {
     //      leaves), so r_sign = -1 is itself a semantic check. The
     //      oracle replays every divide-early floor.
     ("q142_assortativity", (s: SparkSession, dir: String) => {
-      degreeAssortativityMicros(edgeTableMemo(s, dir, "interaction")(
+      degreeAssortativityMicros(edgeTableMemo(s, dir, "interaction", Seq("events"))(
         interactionEdges(s, dir)))
     }, Some(s"""
       WITH inter AS (
@@ -1762,7 +1647,7 @@ object GraphOps {
     //      row_number over (cnt desc, label) is the entire tie
     //      contract, so the replay is exact, not approximate.
     ("q150_label_prop", (s: SparkSession, dir: String) => {
-      labelPropagation(edgeTableMemo(s, dir, "interaction")(
+      labelPropagation(edgeTableMemo(s, dir, "interaction", Seq("events"))(
         interactionEdges(s, dir)), iters = 3)
         .groupBy(col("label")).agg(count(lit(1)).as("n_members"))
         .orderBy(col("n_members").desc, col("label"))
@@ -1965,7 +1850,7 @@ object GraphOps {
     //      replays the three LPA rounds, both truncating quotients,
     //      and the exact subtractions.
     ("q208_modularity", (s: SparkSession, dir: String) => {
-      val e = edgeTableMemo(s, dir, "interaction")(interactionEdges(s, dir))
+      val e = edgeTableMemo(s, dir, "interaction", Seq("events"))(interactionEdges(s, dir))
       modularityPpm(e, labelPropagation(e, iters = 3))
     }, Some(s"""
       WITH inter AS (
@@ -2539,7 +2424,8 @@ object GraphOps {
     //      order + the v = −1 summary row (the census convention)
     //      carrying n_reached within 4 hops.
     ("q358_sssp_weighted", (s: SparkSession, dir: String) => {
-      val adj = edgeTableMemo(s, dir, "copurchase_wadj")(ssspWeightedAdj(s, dir))
+      val adj = edgeTableMemo(s, dir, "copurchase_wadj", Seq("lineitem", "part"))(
+        ssspWeightedAdj(s, dir))
       // no-edge guard (ADVICE r12): an empty adjacency makes MIN(u)
       // NULL, and Spark orders NULLs first ascending while DuckDB
       // orders them last — drop the degenerate row on BOTH engines

@@ -18,8 +18,8 @@ object ScaleOps {
 
   private val ws = TextStats.wsClassSql
 
-  /** Memoized offline PQ codebook per corpus dir (the ivfCentroids
-    * discipline: train once, encode/rank many — the declared queries
+  /** Memoized offline PQ codebook per corpus dir ([[graft.Memo]], kind
+    * "pq_codebook": train once, encode/rank many — the declared queries
     * time the encode/rank side, the same split a production PQ index
     * has). m=16 subspaces × k=16 codes over dim 64: 16 code bytes vs
     * 256 vector bytes (16×), the point on the recall curve where the
@@ -27,12 +27,8 @@ object ScaleOps {
     * shortlist-50 recall@10 to ~1–5/10 at sf0.1 — measured, below any
     * sound floor).
     */
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[String, IndexedSeq[IndexedSeq[IndexedSeq[Double]]]]
-
   def pqCodebook(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
-    pqCache.getOrElseUpdate(
-      s"$dir|${graft.model.Tables.statToken(dir, "embeddings")}",
+    graft.Memo.value("pq_codebook", dir, Seq("embeddings"))(
       graft.text.PQ.pqTrain(Tables(s, dir).embeddings, m = 16, k = 16, dim = 64))
 
   val defs: Seq[(String, QFn, Option[String])] = Seq(

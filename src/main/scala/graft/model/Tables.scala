@@ -10,16 +10,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * prunes columns into the scan (verify via `.explain` → `PushedFilters`
   * / `ReadSchema`), which is the property that matters at 100 TB.
   *
-  * The resolved DataFrames are memoized per (session, dir, table) in the
-  * companion: `spark.read.parquet` re-reads parquet footers for schema
-  * inference on every call, and with ~70 declared queries each opening
-  * 1–3 tables that footer I/O plus relation resolution became a
-  * measurable slice of the per-query planning floor (VERDICT r5 #7).
+  * The resolved DataFrames are memoized per (session, dir, table,
+  * file-stat token) through [[graft.Memo]]: `spark.read.parquet`
+  * re-reads parquet footers for schema inference on every call, and
+  * with ~70 declared queries each opening 1–3 tables that footer I/O
+  * plus relation resolution became a measurable slice of the per-query
+  * planning floor (VERDICT r5 #7).
   * DataFrames are immutable logical plans, so sharing one instance
   * across queries only shares the analysis work, never execution state.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def rd(name: String): DataFrame = Tables.cached(spark, dir, name)
+  private def rd(name: String): DataFrame =
+    graft.Memo.value("table", dir, Seq(name), name, s"session${System.identityHashCode(spark)}")(
+      Tables.load(spark, dir, name))
 
   def region: DataFrame     = rd("region")
   def nation: DataFrame     = rd("nation")
@@ -34,35 +37,15 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
-  // Bounded LRU, NOT a weak map: a cached DataFrame strongly references
-  // its SparkSession, so weak session keys are never collectible (the
-  // WeakHashMap value-refers-to-key trap) — the honest fix is eviction
-  // by churn. 256 entries comfortably covers one session × all fixture
-  // dirs; entries for stopped sessions or rewritten dirs age out as new
-  // reads displace them. The key carries a cheap file-stat token so a
-  // REWRITTEN fixture dir misses immediately (the ivfCacheKey
-  // discipline) instead of serving a stale file listing.
-  private val memoCap = 256
-  private val memo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, DataFrame](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        size() > memoCap
-    })
-
+  /** Cheap snapshot of one table's files (names, mtimes, sizes): a
+    * rewritten table gets a new token, so every [[graft.Memo]] key that
+    * names the table misses. `listFiles` can return null on a permission
+    * error or a concurrent rewrite. */
   private[graft] def statToken(dir: String, name: String): String = {
     val f = new java.io.File(dir, s"$name.parquet")
     val files = if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty) else Array(f)
     files.map(x => s"${x.getName}:${x.lastModified}:${x.length}")
       .sorted.mkString(",").hashCode.toString
-  }
-
-  private def cached(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val key = s"${System.identityHashCode(spark)}|$dir/$name|${statToken(dir, name)}"
-    memo.synchronized {
-      val hit = memo.get(key)
-      if (hit != null) hit
-      else { val df = load(spark, dir, name); memo.put(key, df); df }
-    }
   }
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -84,10 +67,12 @@ object Tables {
         // longs (review finding r6b). The loaded DataFrame keeps its
         // inferred schema; execution converts through the column we
         // build here, not through the conf.
+        // Serialized: loads of different keys run concurrently, and two
+        // interleaved set/restore pairs would leave the conf off for one read.
         val key = "spark.sql.legacy.parquet.nanosAsLong"
-        val prev = spark.conf.getOption(key)
-        spark.conf.set(key, "true")
-        val raw =
+        val raw = synchronized {
+          val prev = spark.conf.getOption(key)
+          spark.conf.set(key, "true")
           try spark.read.parquet(s"$dir/events.parquet")
           finally {
             prev match {
@@ -95,6 +80,7 @@ object Tables {
               case None    => spark.conf.unset(key)
             }
           }
+        }
         import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
         raw.schema("ts").dataType match {
           case LongType => // nanos fixture read as raw longs

@@ -607,57 +607,28 @@ object Similarity {
       struct(round(cosine(col("v"), typedlit(c)), 6).as("s"), lit(-id).as("nid"))
     }: _*)
 
-  /** Memoized Lloyd fit per corpus snapshot (round 13) — the q45
-    * ivfCentroids / round-12 edgeTableMemo convention applied to the
-    * cell-assignment family: six declared queries (q64 k-means, q75
-    * SemDeDup, q225 semantic dedup, q258 DBSCAN, q288 silhouette, q308
+  /** Memoized Lloyd fit per corpus snapshot ([[graft.Memo]], kind
+    * "kmeans_fit") — six declared queries (q64 k-means, q75 SemDeDup,
+    * q225 semantic dedup, q258 DBSCAN, q288 silhouette, q308
     * percolation sweep) fit the IDENTICAL k-means over the same corpus
     * (same hash-spread seeds, same round-6 integer-micros means, k
     * from the shared cell contract) before their own kernels — at
     * 100 TB a curation pipeline fits cells once per corpus snapshot
     * and runs the battery against the shared assignment, it does not
     * re-run Lloyd per audit. The memo holds the k×dim centroid table
-    * (index-sized driver state, the ivfIndexCache shape); every
-    * consumer still pays its own corpus-wide assignment scan, so the
-    * per-query bill keeps the honest linear pass. The key includes the
-    * embeddings parquet stat token, so a rewritten fixture re-fits;
-    * the fit has no RNG (hash-spread seeds), so memoized centroids are
-    * bit-identical to an inline fit — [[MemoSpec]] pins cached ≡
-    * inline and the derive-once counter.
+    * (index-sized driver state); every consumer still pays its own
+    * corpus-wide assignment scan, so the per-query bill keeps the
+    * honest linear pass. The fit has no RNG (hash-spread seeds), so
+    * memoized centroids are bit-identical to an inline fit —
+    * SimilaritySpec pins cached ≡ inline and the derive-once count.
     */
   def kmeansFitMemo(s: org.apache.spark.sql.SparkSession, dir: String,
                     k: Int, dim: Int, iters: Int = 2,
-                    salt: String = "kmeans"): Seq[(Int, Seq[Double])] = {
-    val key = s"$dir|${graft.model.Tables.statToken(dir, "embeddings")}" +
-      s"|k$k|d$dim|i$iters|$salt"
-    fitCache.getOrElseUpdate(key, {
-      fitDerivations.updateWith(key)(c => Some(c.getOrElse(0L) + 1L))
+                    salt: String = "kmeans"): Seq[(Int, Seq[Double])] =
+    graft.Memo.value("kmeans_fit", dir, Seq("embeddings"), k, dim, iters, salt) {
       val emb = graft.model.Tables(s, dir).embeddings
-      val t0 = System.nanoTime()
-      val fit = kmeansFit(emb.select(col("vec_id"), col("embedding").as("v")),
-        k, dim, iters, salt)
-      fitBuildSeconds.put(key, (System.nanoTime() - t0) / 1e9)
-      fit
-    })
-  }
-
-  // Bounded in practice by the handful of (corpus, k, dim) combinations
-  // a session fits; values are k×dim doubles. A long-lived multi-corpus
-  // service would cap and evict like Tables.memo (VERDICT r13 #7).
-  private val fitCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, Seq[Double])]]
-
-  /** Wall seconds each fit key spent deriving in this JVM — surfaced by
-    * the bench as `notes.memo_build_s` (VERDICT r13 ask #1: the
-    * one-time build must appear in the artifact, not vanish under
-    * min-over-passes). */
-  private[graft] val fitBuildSeconds =
-    scala.collection.concurrent.TrieMap.empty[String, Double]
-
-  /** Diagnostic twin of GraphOps.memoDerivations: how many times each
-    * fit key DERIVED in this JVM (must stay 1 per key across passes). */
-  private[graft] val fitDerivations =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+      kmeansFit(emb.select(col("vec_id"), col("embedding").as("v")), k, dim, iters, salt)
+    }
 
   /** [[kmeansAssignFull]]'s final assignment projection from an
     * already-fit centroid table — a pure codegen'd corpus scan. */

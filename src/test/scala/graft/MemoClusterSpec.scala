@@ -10,6 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MemoClusterSpec extends AnyFunSuite {
   test("edgeTableMemo round-trips through separate executor JVMs (local-cluster smoke)") {
+    // the in-process standalone Worker builds the executor launch
+    // command from the environment: it needs a real SPARK_HOME matching
+    // the Spark on the classpath, and the scala version so it skips
+    // source-tree build-dir detection
+    val sparkHome = sys.env.getOrElse("SPARK_HOME", "/opt/spark")
+    val dir = new java.io.File(sys.env.getOrElse("GRAFT_TESTDATA", "/root/testdata"), "sf0.001")
+    assume(new java.io.File(sparkHome, "jars").isDirectory, s"no Spark distribution at $sparkHome")
+    assume(dir.isDirectory, s"no fixture at $dir")
     val javaBin = new java.io.File(
       new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
     val addOpens = MemoClusterSmoke.jdk17AddOpens
@@ -17,15 +25,11 @@ class MemoClusterSpec extends AnyFunSuite {
     val cmd = Seq(javaBin) ++ addOpens ++ Seq(
       "-Xmx2g", "-Dspark.ui.enabled=false",
       "-cp", sys.props("java.class.path"),
-      "graft.MemoClusterSmoke", "/root/testdata/sf0.001")
+      "graft.MemoClusterSmoke", dir.getPath)
     val out = new StringBuilder
     import scala.sys.process._
-    // the in-process standalone Worker builds the executor launch
-    // command from the environment: it needs a real SPARK_HOME (the
-    // image ships the matching 4.1.2 distribution at /opt/spark) and
-    // the scala version so it skips source-tree build-dir detection
     val rc = Process(cmd, None,
-      "SPARK_HOME" -> "/opt/spark",
+      "SPARK_HOME" -> sparkHome,
       "SPARK_SCALA_VERSION" -> "2.13").!(ProcessLogger(
       l => out.synchronized { out.append(l).append('\n') },
       l => out.synchronized { out.append(l).append('\n') }))

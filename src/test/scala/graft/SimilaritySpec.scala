@@ -351,11 +351,10 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.model.Tables(spark, dir).embeddings
     val inline = Similarity.kmeansAssign(emb, k = 4, dim = 8)
       .as[(Long, Int, Double)].collect().toSet
-    val before = Similarity.fitDerivations.snapshot().values.sum
     val fit1 = Similarity.kmeansFitMemo(spark, dir, k = 4, dim = 8)
     val fit2 = Similarity.kmeansFitMemo(spark, dir, k = 4, dim = 8)
     // one derivation for both calls, and the same object back
-    assert(Similarity.fitDerivations.snapshot().values.sum === before + 1)
+    assert(Memo.derivations("kmeans_fit", dir) === 1)
     assert(fit1 eq fit2)
     val memoed = Similarity.kmeansAssignWith(fit1, emb).drop("v")
       .as[(Long, Int, Double)].collect().toSet
@@ -365,7 +364,7 @@ class SimilaritySpec extends SparkSpec {
     // cell, so size is ≤ k — only the keying and re-derivation matter)
     val fit8 = Similarity.kmeansFitMemo(spark, dir, k = 8, dim = 8)
     assert(fit8.size > fit1.size && fit1.size === 4)
-    assert(Similarity.fitDerivations.snapshot().values.sum === before + 2)
+    assert(Memo.derivations("kmeans_fit", dir) === 2)
   }
 
   test("cellCountSql twins cellCountFor exactly (integer derivation)") {
