@@ -8,10 +8,10 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   *
-  * Config mirrors the 100 TB design testbed: local[N] with shuffle
-  * partitions = N (not the 200 default), AQE on for runtime coalescing /
-  * skew handling, and a warm-up action so JIT/codegen compilation is not
-  * billed to the first query.
+  * Config mirrors the 100 TB design testbed: local[N] through
+  * [[GraftSession]] (shuffle partitions = N, not the 200 default; AQE on
+  * for runtime coalescing / skew handling), and a warm-up action so
+  * JIT/codegen compilation is not billed to the first query.
   *
   * Measurement notes (VERDICT r1 #4):
   *  - Each query is driven by a `noop`-format write, not `count()`:
@@ -46,22 +46,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // the generated-class cache defaults to 100 entries; a 100+-query
-      // suite evicts every compiled subtree between the two timing
-      // passes, so each pass pays full Janino recompilation (~2 s on the
-      // widest aggregates — measured on q01 once the suite crossed 100
-      // queries). Sizing the cache to the suite makes pass 2 measure
-      // execution, which is the bench's stated policy (pass 2 amortizes
-      // codegen), and matches any long-lived production session.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // warm-up: touch the fact table and compile one trivial stage

@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{count, lit, sum}
 
 /** Dev-loop main: regenerates GoldenPinnedSpec's golden row-hash file
@@ -35,12 +35,7 @@ object GenGoldens {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1)
       .getOrElse("/root/repo/src/test/resources/demoted_goldens.txt")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val lines = SparkEntry.goldenPinned.toSeq.sorted.map { name =>
       val (n, h) = fingerprint(SparkEntry.allQueries(name)(spark, sfDir))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Cluster-mode smoke for the edge-table memo (VERDICT r13 ask #1):
   * runs [[analytics.GraphOps.edgeTableMemo]] under a
   * `local-cluster[2,1,1024]` master — executors are SEPARATE JVMs, not
@@ -33,8 +31,7 @@ object MemoClusterSmoke {
     val dir = args.headOption.getOrElse(sys.error("usage: MemoClusterSmoke <fixture dir>"))
     val execOpens = jdk17AddOpens
       .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,1,1024]")
+    val spark = GraftSession.builder("local-cluster[2,1,1024]", 2)
       .appName("graft-memo-cluster-smoke")
       .config("spark.executor.memory", "1024m")
       // executors are forked `java` processes: hand them this JVM's
@@ -42,9 +39,6 @@ object MemoClusterSmoke {
       // opens spark-submit would normally inject
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
       .config("spark.executor.extraJavaOptions", execOpens)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Scale-behavior smoke harness (diagnostic main, like [[Prof]]): time
-  * the similarity/dedup operators on N× replications of the sf0.1
+/** Scale-behavior smoke harness (diagnostic main): time the
+  * similarity/dedup operators on N× replications of the sf0.1
   * documents fixture and print one JSON line per (operator, N) so the
   * growth CURVE is measured, not argued. Each replica rewrites every
   * token with a replica-unique suffix, so replica vocabularies are
@@ -19,13 +19,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val ns = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 5)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -81,7 +75,7 @@ object ScaleSmoke {
       val g = graphN(n)
       time("pagerank_undirected_i3", n)(graft.analytics.GraphOps.pageRankMicros(g))
       time("pagerank_directed_i3", n)(graft.analytics.GraphOps.pageRankDirectedMicros(g))
-      // q138 ships on the delta peel since r10 (ProbeKCore); timed under
+      // q138 ships on the delta peel since r10 (PERF.md); timed under
       // a new name so earlier rounds' kcore_k2_r4 curves stay comparable
       time("kcore_delta_k2_r4", n)(graft.analytics.GraphOps.kCorePeelDelta(g, 2, 4)._1)
       time("label_prop_i3", n)(graft.analytics.GraphOps.labelPropagation(g))
@@ -110,11 +104,13 @@ object ScaleSmoke {
       // round-11 additions: q342's three exact power iterations (each a
       // full-edge join + re-aggregate ⇒ expected ~linear in m on
       // disjoint replicas, the PageRank slope — VERDICT r10 ask #3) and
-      // the q335 delta peel end-to-end (one wedge enumeration + two
-      // triangle-scale filter rounds; the wedge pass dominates, so the
-      // curve should track ktruss_support_r1).
+      // the q335 peel end-to-end, in the incremental-support form q335
+      // ships since r14 (one wedge enumeration + two removed-edge-scale
+      // support updates; the wedge pass dominates, so the curve should
+      // track ktruss_support_r1). Timed under a new name so earlier
+      // rounds' ktruss_delta_r3 curves (the classic form) stay comparable.
       time("eigencentrality_i3", n)(graft.analytics.GraphOps.eigenCentralityTopK(eh))
-      time("ktruss_delta_r3", n)(graft.analytics.GraphOps.kTrussRounds(eh, 3, 2))
+      time("ktruss_inc_r3", n)(graft.analytics.GraphOps.kTrussRoundsInc(eh, 3, 2))
     }
 
     // Embedding battery (VERDICT r8 ask #2): q258's cell-bounded DBSCAN

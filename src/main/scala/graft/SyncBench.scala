@@ -13,9 +13,7 @@ object SyncBench {
   def main(args: Array[String]): Unit = {
     val nOps = args.headOption.map(_.toInt).getOrElse(200000)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -927,60 +927,6 @@ object GraphOps {
     globalRow.unionByName(localTop).orderBy(col("v"))
   }
 
-  /** [[triangleCensusAdj]] with PACKED per-vertex credits (round 11):
-    * instead of materializing one row per triangle and unioning its
-    * three corners (3·|tri| aggregated rows + a cached triangle
-    * table), each (u, w) intersection row explodes ONE credit array —
-    * struct(u, sz), struct(w, sz), and struct(z, 1) per common
-    * neighbor — so the per-vertex counts aggregate |tri| + 2·|E'|
-    * rows in a single pass and NOTHING triangle-scale is ever cached;
-    * n_tri falls out of the same aggregate as Σtri DIV 3 (every
-    * triangle credits exactly 3). Output identical to
-    * [[triangleCensusAdj]] by construction (GraphOpsSpec pins it);
-    * ProbeTri measures the ratio and PERF.md records which form q257
-    * ships with.
-    */
-  def triangleCensusAdjSz(e: DataFrame): DataFrame = {
-    val deg = e.select(col("pa").as("v")).unionByName(e.select(col("pb").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-    val lower = col("da") < col("db") ||
-      (col("da") === col("db") && col("pa") < col("pb"))
-    val ori = graft.Stage.mat(
-      e.join(deg.select(col("v").as("pa"), col("d").as("da")), Seq("pa"))
-        .join(deg.select(col("v").as("pb"), col("d").as("db")), Seq("pb"))
-        .select(when(lower, col("pa")).otherwise(col("pb")).as("u"),
-          when(lower, col("pb")).otherwise(col("pa")).as("w")))
-    val adj = graft.Stage.mat(
-      ori.groupBy(col("u")).agg(sort_array(collect_list(col("w"))).as("nbrs")))
-    val perV = graft.Stage.mat(ori
-      .join(adj, Seq("u"))
-      .join(adj.select(col("u").as("w"), col("nbrs").as("nbrs_w")), Seq("w"))
-      .select(col("u"), col("w"),
-        array_intersect(col("nbrs"), col("nbrs_w")).as("ai"))
-      .filter(size(col("ai")) > 0)
-      .select(explode(concat(
-        array(
-          struct(col("u").as("v"), size(col("ai")).cast("long").as("t")),
-          struct(col("w").as("v"), size(col("ai")).cast("long").as("t"))),
-        transform(col("ai"), z => struct(z.as("v"), lit(1L).as("t")))))
-        .as("c"))
-      .select(col("c.v").as("v"), col("c.t").as("t"))
-      .groupBy(col("v")).agg(sum(col("t")).as("tri")))
-    val totals = perV.agg(expr("sum(tri) DIV 3").as("n_tri"))
-      .crossJoin(broadcast(
-        deg.agg(sum(expr("d * (d - 1) DIV 2")).as("n_wedges"),
-          count(lit(1)).as("n_nodes"))))
-    val globalRow = totals.selectExpr("CAST(-1 AS BIGINT) AS v",
-      "n_nodes AS d", "coalesce(n_tri, 0) AS n_tri",
-      """CASE WHEN n_wedges = 0 THEN 0
-         ELSE (3 * coalesce(n_tri, 0) * 1000000) DIV n_wedges END AS cc_ppm""")
-    val localTop = deg.join(perV, Seq("v"))
-      .selectExpr("v", "d", "tri AS n_tri",
-        "(2 * tri * 1000000) DIV (d * (d - 1)) AS cc_ppm")
-      .orderBy(col("cc_ppm").desc, col("v")).limit(10)
-    globalRow.unionByName(localTop).orderBy(col("v"))
-  }
-
   /** Triangle enumeration over a distinct undirected edge table
     * (pa < pb): the q257 oriented wedge build (each triangle found
     * once, at its min-degree vertex) + the closure probe, both
@@ -1020,7 +966,7 @@ object GraphOps {
     * explode(adj⁺(u) ∩ adj⁺(w)). Same triangle set as [[triangleList]]
     * by construction; the Σ outdeg² wedge volume moves as packed
     * arrays replicated per edge instead of a row-per-wedge join probe
-    * (ProbeTruss measures both forms, PERF.md records which one the
+    * (PERF.md records both forms' measurements and which one the
     * truss family ships with).
     */
   private[graft] def triangleListAdj(e: DataFrame): DataFrame = {
@@ -1065,19 +1011,6 @@ object GraphOps {
   private[graft] def edgeSupport(e: DataFrame): DataFrame =
     triEdgeSupport(triangleList(e))
 
-  /** Delta-support k-truss peel (VERDICT r10 ask #1, the edge-wise
-    * transfer of q138's ProbeKCore lesson): the O(m^1.5) triangle
-    * enumeration runs ONCE, as a materialized triple list keyed by its
-    * three canonical edges; every subsequent round is TRIANGLE-SCALE —
-    * support = one groupBy over the list, survivors = three semi-joins
-    * against the kept-edge set (a triangle of the peeled subgraph is
-    * exactly an original triangle whose three edges all survive, so no
-    * re-enumeration can ever find anything the filter keeps out).
-    * Round summaries (edges in, triangles, edges kept with sup ≥
-    * k−2) are assembled plan-side — value-identical to re-running
-    * [[edgeSupport]] per round (GraphOpsSpec pins equality; ProbeTruss
-    * measures the ratio, PERF.md records it).
-    */
   /** INCREMENTAL-support k-truss peel (round 14, VERDICT r13 ask #4):
     * [[kTrussRounds]] re-aggregated the FULL surviving triangle list
     * into a support table every round and re-materialized the triangle
@@ -1110,9 +1043,8 @@ object GraphOps {
     * so the per-round barrier count drops from 3 (sup, next, tri
     * re-mat) to 1.
     */
-  private[graft] def kTrussRoundsInc(e: DataFrame, rounds: Int, minSup: Int,
-      enumerate: DataFrame => DataFrame = triangleListAdj): DataFrame = {
-    val tri = graft.Stage.mat(enumerate(e).select(
+  private[graft] def kTrussRoundsInc(e: DataFrame, rounds: Int, minSup: Int): DataFrame = {
+    val tri = graft.Stage.mat(triangleListAdj(e).select(
       least(col("u"), col("x")).as("a1"), greatest(col("u"), col("x")).as("b1"),
       least(col("u"), col("y")).as("a2"), greatest(col("u"), col("y")).as("b2"),
       least(col("x"), col("y")).as("a3"), greatest(col("x"), col("y")).as("b3")))
@@ -1174,10 +1106,23 @@ object GraphOps {
     rows.reduce(_ unionByName _).orderBy(col("round"))
   }
 
-  private[graft] def kTrussRounds(e: DataFrame, rounds: Int, minSup: Int,
-      enumerate: DataFrame => DataFrame = triangleListAdj): DataFrame = {
+  /** Delta-support k-truss peel (VERDICT r10 ask #1, the edge-wise
+    * transfer of q138's ProbeKCore lesson): the O(m^1.5) triangle
+    * enumeration runs ONCE, as a materialized triple list keyed by its
+    * three canonical edges; every subsequent round is TRIANGLE-SCALE —
+    * support = one groupBy over the list, survivors = three semi-joins
+    * against the kept-edge set (a triangle of the peeled subgraph is
+    * exactly an original triangle whose three edges all survive, so no
+    * re-enumeration can ever find anything the filter keeps out).
+    * Round summaries (edges in, triangles, edges kept with sup ≥
+    * k−2) are assembled plan-side — value-identical to re-running
+    * [[edgeSupport]] per round (GraphOpsSpec pins equality; PERF.md
+    * records the measured ratio). Kept as the test reference for
+    * [[kTrussRoundsInc]], the form q335 ships.
+    */
+  private[graft] def kTrussRounds(e: DataFrame, rounds: Int, minSup: Int): DataFrame = {
     var eCur = graft.Stage.mat(e)
-    var tri = graft.Stage.mat(enumerate(eCur).select(
+    var tri = graft.Stage.mat(triangleListAdj(eCur).select(
       least(col("u"), col("x")).as("a1"), greatest(col("u"), col("x")).as("b1"),
       least(col("u"), col("y")).as("a2"), greatest(col("u"), col("y")).as("b2"),
       least(col("x"), col("y")).as("a3"), greatest(col("x"), col("y")).as("b3")))

@@ -22,11 +22,6 @@ object Keys {
   // (postKeyOfVote removed: it duplicated postKey with an unused voter
   // parameter and had no callers — Votes.keyed goes through postKey)
 
-  /** Accounts use their natural name key
-    * (reference handlers/account_updates.js:9).
-    */
-  def accountKey(name: Column): Column = name
-
   /** Reference-bit-compatible document id: xxhash64 with the reference's
     * seed 0xCAFEBABE, base64 of the big-endian hash bytes — for the case
     * where ids must round-trip with an existing reference deployment

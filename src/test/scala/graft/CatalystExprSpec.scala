@@ -97,12 +97,16 @@ class CatalystExprSpec extends SparkSpec {
   }
 
   test("SQL surface: registerAll on the session") {
+    // the suite session already injects the first three through
+    // GraftExtensions; char_entropy_nanos resolves only via registerAll
     GraftFunctions.registerAll(spark)
     Seq(("a b", Seq(1f, 2f), Seq(2f, 4f))).toDF("t", "x", "y").createOrReplaceTempView("exprs_in")
     val row = spark.sql(
       """SELECT simhash64(t) AS sh, cosine_sim(x, y) AS cs,
-        |       xxhash64_seeded(7, t) AS xh FROM exprs_in""".stripMargin).head()
+        |       xxhash64_seeded(7, t) AS xh, char_entropy_nanos(t) AS ce
+        |FROM exprs_in""".stripMargin).head()
     assert(!row.isNullAt(0) && math.abs(row.getDouble(1) - 1.0) < 1e-12 && !row.isNullAt(2))
+    assert(!row.isNullAt(3))
   }
 
   test("SQL surface: SparkSessionExtensions injection registers the functions") {

@@ -549,19 +549,6 @@ class GraphOpsSpec extends SparkSpec {
       (3L, 2L, 500000L)))
   }
 
-  test("packed-credit census equals the shipped adjacency form on the sf0.001 graph") {
-    // the rejected-but-kept round-11 experiment (PERF.md): same output
-    // as triangleCensusAdj by construction, measured SLOWER (struct-
-    // array explode overhead beats the 3x row saving), pinned here so
-    // the negative result stays honest
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    val e = graft.Stage.mat(GraphOps.partCoPurchaseEdges(li))
-    val a = GraphOps.triangleCensusAdj(e).collect().toSeq
-    val b = GraphOps.triangleCensusAdjSz(e).collect().toSeq
-    assert(a === b)
-    assert(a.head.getAs[Long]("n_tri") > 0L)
-  }
-
   test("reciprocity: one mutual succession pair out of three directed edges") {
     // order 10 lines parts 1,2,3 → edges 1→2, 2→3; order 20 lines
     // parts 3,2 → edge 3→2. Mutual: {2,3}. r = 2/3, ā = 3/6,

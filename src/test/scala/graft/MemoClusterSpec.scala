@@ -23,7 +23,7 @@ class MemoClusterSpec extends AnyFunSuite {
     val addOpens = MemoClusterSmoke.jdk17AddOpens
       .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false",
+      "-Xmx2g",
       "-cp", sys.props("java.class.path"),
       "graft.MemoClusterSmoke", dir.getPath)
     val out = new StringBuilder
