@@ -307,6 +307,11 @@ object Bench {
       if (runs.nonEmpty) runs.map(_.cpuMs).min else 0L
     }.sum
     val passWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
+    // generated classes compiled per pass (driver and executor tasks
+    // alike in local mode): pass 1 pays the suite's codegen, and a later
+    // pass that compiles again shows a cache miss
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val passCompiles = scala.collection.mutable.ArrayBuffer.empty[Long]
     def emit(passesDone: Int, budgetNote: String, last: Boolean): Unit = {
       val results = resultsNow
       val qs = results.map { case (k, v) => "\"" + k + "\":" + v.fold("null")(fmt) }
@@ -318,6 +323,7 @@ object Bench {
         s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpu_total_ms":$cpuTotal,"queries":$qs,"failed":$failed,""" +
           s""""notes":{"passes_completed":$passesDone,"budget_s":${fmt(budgetS)},"budget":"$budgetNote",""" +
           s""""pass_walls_s":${passWalls.map(fmt).mkString("[", ",", "]")},""" +
+          s""""codegen_compiles_per_pass":${passCompiles.mkString("[", ",", "]")},""" +
           s""""memo_build_s":$memoBuilds,""" +
           s""""q45_ivf_ann":"probe+scan only; IVF centroid build memoized per corpus",""" +
           s""""graph_family":"q127/q132/q136/q257/q290/q325/q328/q330/q335/q342/q358 read shared edge tables from per-(corpus,variant) parquet memos (built once, first run; see PERF.md round-12/13 attribution)",""" +
@@ -344,11 +350,13 @@ object Bench {
         fits
       }) {
       val t0 = elapsedS
+      val k0 = compiles.getCount
       ordered.foreach { case (name, fn) =>
         once(name, fn).foreach(sec =>
           samples.updateWith(name)(prev => Some(prev.getOrElse(Nil) :+ sec)))
       }
       passWalls += elapsedS - t0
+      passCompiles += compiles.getCount - k0
       passesDone += 1
       emit(passesDone, budgetNote, last = false)
     }

@@ -47,13 +47,16 @@ object SyncBench {
     // warm-up (plan + codegen compile) on a slice, separate state dir
     stream.Sync.applyBatch(ops.limit(1000), opsDir + "/warmstate")
 
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val k0 = compiles.getCount
     val t0 = System.nanoTime()
     stream.Sync.applyBatch(ops, stateDir)
     val sec = (System.nanoTime() - t0) / 1e9
+    val compiled = compiles.getCount - k0
 
     val posts = spark.read.parquet(s"$stateDir/posts").count()
     val accounts = spark.read.parquet(s"$stateDir/accounts").count()
-    println(s"""{"metric":"sync_ops_per_sec","value":${(nOps / sec).round},"unit":"ops/sec","n_ops":$nOps,"elapsed_sec":$sec,"posts":$posts,"accounts":$accounts}""")
+    println(s"""{"metric":"sync_ops_per_sec","value":${(nOps / sec).round},"unit":"ops/sec","n_ops":$nOps,"elapsed_sec":$sec,"codegen_compiles":$compiled,"posts":$posts,"accounts":$accounts}""")
     spark.stop()
   }
 }

@@ -38,6 +38,7 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") === "false")
     assert(spark.sparkContext.uiWebUrl.isEmpty)
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "4096")
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") === "false")
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode").equalsIgnoreCase("static"))
   }
 

@@ -7,6 +7,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.collection.mutable
 
 import org.apache.spark.TaskContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -21,7 +22,9 @@ import graft.stream.Sync
   * scan) against the sequential composition of the same public
   * functions, its state-read schemas, and its failure path: a failed
   * handler cancels its siblings' jobs and the replayed batch converges,
-  * and so does a `query.stop()` during the merge fan-out.
+  * and so does a `query.stop()` during the merge fan-out. A second
+  * `Sync.start` in the same JVM reuses the first one's generated
+  * classes.
   */
 class SyncSpec extends SparkSpec {
 
@@ -166,6 +169,26 @@ class SyncSpec extends SparkSpec {
       assert(inferred === nullable(schema), s"$t: on-disk schema differs from the passed one")
       assert(spark.read.schema(schema).parquet(s"$state/$t").schema === inferred, t)
     }
+  }
+
+  test("a second Sync.start compiles no generated class and leaves the same state") {
+    val dir = opsDir()
+    def run(): String = {
+      val state = newState()
+      Sync.start(spark, dir.toString, Files.createTempDirectory("graft-sync-ckpt").toString, state,
+        Trigger.AvailableNow(), maxFilesPerTrigger = 1).awaitTermination()
+      state
+    }
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val first = run()
+    val before = compiles.getCount
+    val second = run()
+    val compiled = compiles.getCount - before
+    // each streaming query runs in a cloned session with its own UUID;
+    // only a class loader shared across sessions lets it reuse the
+    // classes the first query compiled
+    assert(compiled === 0, s"the second query compiled $compiled generated classes")
+    assert(snapshot(second) === snapshot(first))
   }
 
   /** Start/end of every job that carries a tag with `prefix`. */
