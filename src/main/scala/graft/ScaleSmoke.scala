@@ -91,15 +91,11 @@ object ScaleSmoke {
         .select(least(col("ha"), col("hb")).as("pa"),
           greatest(col("ha"), col("hb")).as("pb"))
         .filter(col("pa") =!= col("pb")).distinct()
-      time("triangle_census", n)(graft.analytics.GraphOps.triangleCensus(eh))
       time("triangle_census_adj", n)(graft.analytics.GraphOps.triangleCensusAdj(eh))
-      // round-10 additions on the same replica discipline: one k-truss
-      // support round (q335's kernel — 3× this per query; same O(m^1.5)
-      // wedge bound as the census, so disjoint replicas must grow
-      // ~linearly) and the cohort-bounded Adamic–Adar pass (q325 —
-      // wedge stream cut to Σ d_Q(u)² by the 10% shard; pmod on hashed
-      // ids keeps the shard a constant fraction per replica).
-      time("ktruss_support_r1", n)(graft.analytics.GraphOps.edgeSupport(eh))
+      // round-10 addition on the same replica discipline: the
+      // cohort-bounded Adamic–Adar pass (q325 — wedge stream cut to
+      // Σ d_Q(u)² by the 10% shard; pmod on hashed ids keeps the shard a
+      // constant fraction per replica).
       time("adamic_adar_cohort", n)(graft.analytics.GraphOps.adamicAdarTopK(eh))
       // round-11 additions: q342's three exact power iterations (each a
       // full-edge join + re-aggregate ⇒ expected ~linear in m on
@@ -107,7 +103,7 @@ object ScaleSmoke {
       // the q335 peel end-to-end, in the incremental-support form q335
       // ships since r14 (one wedge enumeration + two removed-edge-scale
       // support updates; the wedge pass dominates, so the curve should
-      // track ktruss_support_r1). Timed under a new name so earlier
+      // track triangle_census_adj). Timed under a new name so earlier
       // rounds' ktruss_delta_r3 curves (the classic form) stay comparable.
       time("eigencentrality_i3", n)(graft.analytics.GraphOps.eigenCentralityTopK(eh))
       time("ktruss_inc_r3", n)(graft.analytics.GraphOps.kTrussRoundsInc(eh, 3, 2))
@@ -148,9 +144,6 @@ object ScaleSmoke {
         k = graft.text.Similarity.cellCountFor(emb.count()), dim = 64, tau = 0.35))
       // q308 growth curve (VERDICT r9 ask #2): same ±1-orthant replicas;
       // pair table flat under the cell contract, CC rounds O(log).
-      // Shared vs independent CC measures the contraction's savings.
-      time("percolation_sweep_shared", n)(
-        graft.analytics.CurationOps.percolationSweep(emb, shareCC = true))
       time("percolation_sweep_indep", n)(
         graft.analytics.CurationOps.percolationSweep(emb))
     }

@@ -23,7 +23,7 @@ object SyncBench {
     // deterministic synthetic op log: 60% comments, 35% votes, 5% account
     // updates, over a keyspace that produces both inserts and re-post
     // updates plus duplicate votes (the hard paths)
-    val lines = (0 until nOps).iterator.map { i =>
+    def line(i: Int): String = {
       val ts = f"2024-01-${1 + (i % 28)}%02dT${i % 24}%02d:${i % 60}%02d:00"
       val author = s"user${i % 5000}"
       if (i % 20 < 12) {
@@ -38,14 +38,20 @@ object SyncBench {
         s"""{"block_num":${i / 50},"timestamp":"$ts","op_type":"account_update","payload":"$payload"}"""
       }
     }
-    val f = java.nio.file.Paths.get(opsDir, "ops.json")
-    val w = java.nio.file.Files.newBufferedWriter(f)
-    lines.foreach { l => w.write(l); w.newLine() }
-    w.close()
+    def writeOps(name: String, n: Int): String = {
+      val f = java.nio.file.Paths.get(opsDir, name)
+      val w = java.nio.file.Files.newBufferedWriter(f)
+      (0 until n).foreach { i => w.write(line(i)); w.newLine() }
+      w.close()
+      f.toString
+    }
 
-    val ops = pipeline.Router.readOps(spark, f.toString)
-    // warm-up (plan + codegen compile) on a slice, separate state dir
-    stream.Sync.applyBatch(ops.limit(1000), opsDir + "/warmstate")
+    // warm-up (plan + codegen compile) on the first 1000 ops, written to
+    // their own file and read the same way as the timed frame, so the
+    // warm-up plan has the timed plan's shape; separate state dir
+    stream.Sync.applyBatch(pipeline.Router.readOps(spark, writeOps("warm.json", 1000)),
+      opsDir + "/warmstate")
+    val ops = pipeline.Router.readOps(spark, writeOps("ops.json", nOps))
 
     val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val k0 = compiles.getCount

@@ -283,41 +283,66 @@ object CurationOps {
   /** Similarity-graph percolation sweep (q308): per cosine threshold,
     * edge/linked/component/largest/isolated stats over ONE cell-bounded
     * pair table (the q258 discipline — `cellCountFor` k, within-cell
-    * pairs only, computed once with cos_r kept).
+    * pairs only, computed once with cos_r kept), with an independent
+    * connected-components run per threshold.
     *
-    * With `shareCC` (the default), the three connected-components runs
-    * SHARE work instead of starting cold: thresholds are processed
-    * DESCENDING, and since e(t_high) ⊆ e(t_low) moving down a threshold
-    * only ADDS edges — components can only merge, never split. Each
-    * lower level therefore maps the denser edge set's endpoints through
-    * the previous level's labels (nodes the higher level never linked
-    * map to themselves), drops the now-internal self-loop edges, and
-    * runs CC on the CONTRACTED supernode graph — the structure the
-    * higher threshold already resolved is never re-propagated. Because
-    * every supernode label is itself the min node id of its
-    * sub-component, the composed label is the min node id of the merged
-    * component — bit-identical to an independent CC per threshold
-    * (CurationSpec pins this; the q308 oracle replays independent CC),
-    * so sharing is purely a cost knob.
-    *
-    * MEASURED (r10 ScaleSmoke, ±1-orthant replicas at sf0.1): sharing
-    * LOSES on this workload — 10.3 s vs 8.7 s at 1×, 13.4 vs 12.7 at
-    * 5× — because a sweep that spans the percolation point (its whole
-    * purpose) resolves almost nothing ABOVE the collapse threshold
-    * (t=0.65: 0 edges; t=0.50: 5 edges vs t=0.35's 1742 at sf0.1), so
-    * the densest level's CC arrives essentially uncontracted while
-    * every level pays the contraction's three extra joins + barrier.
-    * Hence `shareCC` defaults to FALSE; flip it for sweeps whose
-    * thresholds all sit below the collapse (large components at every
-    * level), where contraction is the asymptotic win.
+    * Independent CC per level, not CC on the previous level's contracted
+    * supernode graph: contraction measured SLOWER (r10 ScaleSmoke,
+    * ±1-orthant replicas at sf0.1: 10.3 s vs 8.7 s at 1×), because a
+    * sweep that spans the percolation point resolves almost nothing
+    * above the collapse threshold, so the densest level's CC arrives
+    * essentially uncontracted while every level pays the contraction's
+    * extra joins + barrier.
     */
   def percolationSweep(emb: org.apache.spark.sql.DataFrame,
                        thresholds: Seq[Int] = Seq(35, 50, 65),
-                       shareCC: Boolean = false,
                        fit: Option[Seq[(Int, Seq[Double])]] = None)
       : org.apache.spark.sql.DataFrame = {
     require(thresholds.nonEmpty && thresholds.min * 1.0 / 100 >= 0.35 - 1e-9,
       "pair table is built at the lowest threshold; sweep floor is 0.35")
+    val pairs = percolationPairs(emb, thresholds.min, fit)
+    def level(t: Int): org.apache.spark.sql.DataFrame = {
+      val et = graft.Stage.mat(pairs.filter(col("cos_r") >= t / 100.0)
+        .select(col("id_a"), col("id_b")))
+      // alternating CC directly (round 14, the q258 reasoning): a
+      // percolation sweep SPANS the collapse threshold on purpose,
+      // so the densest level holds the emerging giant component —
+      // a long-chain graph where min-label propagation burned its
+      // 8 hint rounds and escalated anyway (measured at sf0.1).
+      // Labels identical; oracle replays independent CC per level.
+      percolationLevelStat(t, et, graft.Stage.mat(
+        graft.text.Dedup.connectedComponentsAlternating(et)
+          .select(col("doc_id").as("v"), col("cluster_id").as("lbl"))))
+    }
+    // guide §2.6 (overlap independent jobs): the per-threshold CC chains
+    // are fully independent — each is a string of small
+    // barrier-separated jobs (propagation rounds + convergence probes),
+    // so run sequentially the sweep's wall is Σ(chains) of mostly idle
+    // barriers. Submitting the levels from driver threads lets one
+    // chain's jobs back-fill another's barrier tails: wall ≈ max(chain)
+    // + shared prep (measured 7.4 → ~4 s at sf0.1). Results are
+    // bit-identical — each level computes exactly what it computed
+    // sequentially. The await is finite so a wedged level fails the
+    // query loudly instead of parking the driver forever; a failed or
+    // timed-out sweep cancels its levels' jobs.
+    import scala.concurrent.duration._
+    val stats = graft.Stage.concurrently(emb.sparkSession, "q308", timeout = 30.minutes)(
+      thresholds.sorted.reverse.map(t => () => level(t)))
+    stats.reduce(_ unionByName _)
+      .crossJoin(broadcast(emb.agg(count(lit(1)).as("n_total"))))
+      .selectExpr("threshold_pct", "n_edges", "n_linked", "n_components",
+        "max_component", "n_total - n_linked AS n_isolated")
+      .orderBy(col("threshold_pct"))
+  }
+
+  /** q308's pair table: within-cell pairs (`cellCountFor` k, kmeans
+    * cells) with their 6-place cosine `cos_r`, kept at or above the
+    * sweep's lowest threshold `minPct` / 100.
+    */
+  private[graft] def percolationPairs(emb: org.apache.spark.sql.DataFrame,
+                                      minPct: Int,
+                                      fit: Option[Seq[(Int, Seq[Double])]])
+      : org.apache.spark.sql.DataFrame = {
     val n = emb.count()
     val k = graft.text.Similarity.cellCountFor(n)
     graft.text.Similarity.requireCellBounded(n, k)
@@ -325,7 +350,7 @@ object CurationOps {
       .getOrElse(graft.text.Similarity.kmeansAssign(emb, k = k, dim = 64))
     val mem = graft.Stage.mat(asg.select(col("vec_id"), col("centroid_id"))
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id")))
-    val pairs = graft.Stage.mat(
+    graft.Stage.mat(
       mem.select(col("centroid_id"), col("vec_id").as("id_a"),
           col("embedding").as("va"))
         .join(mem.select(col("centroid_id"), col("vec_id").as("id_b"),
@@ -333,85 +358,25 @@ object CurationOps {
         .filter(col("id_a") < col("id_b"))
         .withColumn("cos_r",
           round(graft.text.Similarity.cosine(col("va"), col("vb")), 6))
-        .filter(col("cos_r") >= thresholds.min / 100.0)
+        .filter(col("cos_r") >= minPct / 100.0)
         .select(col("id_a"), col("id_b"), col("cos_r")))
-    // one sweep level, given the previous (higher) level's labels when
-    // sharing; returns (stat row, this level's materialized labels)
-    def level(t: Int, prevLabels: Option[org.apache.spark.sql.DataFrame])
-        : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-      val et = graft.Stage.mat(pairs.filter(col("cos_r") >= t / 100.0)
-        .select(col("id_a"), col("id_b")))
-      val labels = prevLabels match {
-        case Some(pl) if shareCC =>
-          val contracted = et
-            .join(pl.select(col("v").as("id_a"), col("lbl").as("sa")), Seq("id_a"), "left")
-            .join(pl.select(col("v").as("id_b"), col("lbl").as("sb")), Seq("id_b"), "left")
-            .select(coalesce(col("sa"), col("id_a")).as("id_a"),
-              coalesce(col("sb"), col("id_b")).as("id_b"))
-            .filter(col("id_a") =!= col("id_b"))
-            .distinct()
-          val cc2 = graft.text.Dedup.connectedComponents(contracted)
-            .select(col("doc_id").as("s1"), col("cluster_id").as("slbl"))
-          val nodes = et.select(col("id_a").as("v"))
-            .unionByName(et.select(col("id_b").as("v"))).distinct()
-          nodes.join(pl, Seq("v"), "left")
-            .withColumn("s1", coalesce(col("lbl"), col("v")))
-            .join(cc2, Seq("s1"), "left")
-            .select(col("v"), coalesce(col("slbl"), col("s1")).as("lbl"))
-        case _ =>
-          // alternating CC directly (round 14, the q258 reasoning): a
-          // percolation sweep SPANS the collapse threshold on purpose,
-          // so the densest level holds the emerging giant component —
-          // a long-chain graph where min-label propagation burned its
-          // 8 hint rounds and escalated anyway (measured at sf0.1).
-          // Labels identical; oracle replays independent CC per level.
-          graft.text.Dedup.connectedComponentsAlternating(et)
-            .select(col("doc_id").as("v"), col("cluster_id").as("lbl"))
-      }
-      val labM = graft.Stage.mat(labels)
-      val per = labM.groupBy(col("lbl")).agg(count(lit(1)).as("sz"))
-      val stat = et.agg(count(lit(1)).as("n_edges"))
-        .crossJoin(broadcast(per.agg(
-          coalesce(sum(col("sz")), lit(0L)).as("n_linked"),
-          count(lit(1)).as("n_components"),
-          coalesce(max(col("sz")), lit(0L)).as("max_component"))))
-        .selectExpr(s"CAST($t AS BIGINT) AS threshold_pct", "n_edges",
-          "n_linked", "n_components", "max_component")
-      (stat, labM)
-    }
-    val desc = thresholds.sorted.reverse
-    val stats =
-      if (shareCC) {
-        // contraction threads each level's labels into the next —
-        // inherently sequential
-        var prevLabels: Option[org.apache.spark.sql.DataFrame] = None
-        desc.map { t =>
-          val (stat, labM) = level(t, prevLabels)
-          prevLabels = Some(labM)
-          stat
-        }
-      } else {
-        // guide §2.6 (overlap independent jobs): without sharing, the
-        // per-threshold CC chains are fully independent — each is a
-        // string of small barrier-separated jobs (propagation rounds +
-        // convergence probes), so run sequentially the sweep's wall is
-        // Σ(chains) of mostly idle barriers. Submitting the levels from
-        // driver threads lets one chain's jobs back-fill another's
-        // barrier tails: wall ≈ max(chain) + shared prep (measured
-        // 7.4 → ~4 s at sf0.1). Results are bit-identical — each level
-        // computes exactly what it computed sequentially.
-        // The await is finite so a wedged level fails the query loudly
-        // instead of parking the driver forever; a failed or timed-out
-        // sweep cancels its levels' jobs.
-        import scala.concurrent.duration._
-        graft.Stage.concurrently(emb.sparkSession, "q308", timeout = 30.minutes)(
-          desc.map(t => () => level(t, None)._1))
-      }
-    stats.reduce(_ unionByName _)
-      .crossJoin(broadcast(emb.agg(count(lit(1)).as("n_total"))))
-      .selectExpr("threshold_pct", "n_edges", "n_linked", "n_components",
-        "max_component", "n_total - n_linked AS n_isolated")
-      .orderBy(col("threshold_pct"))
+  }
+
+  /** One sweep level's stat row from its edge set `et` (id_a, id_b) and
+    * the component labels (v, lbl) of every node `et` touches.
+    */
+  private[graft] def percolationLevelStat(t: Int,
+                                          et: org.apache.spark.sql.DataFrame,
+                                          labels: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val per = labels.groupBy(col("lbl")).agg(count(lit(1)).as("sz"))
+    et.agg(count(lit(1)).as("n_edges"))
+      .crossJoin(broadcast(per.agg(
+        coalesce(sum(col("sz")), lit(0L)).as("n_linked"),
+        count(lit(1)).as("n_components"),
+        coalesce(max(col("sz")), lit(0L)).as("max_component"))))
+      .selectExpr(s"CAST($t AS BIGINT) AS threshold_pct", "n_edges",
+        "n_linked", "n_components", "max_component")
   }
 
   val defs: Seq[(String, QFn, Option[String])] = Seq(
@@ -2785,12 +2750,10 @@ object CurationOps {
     //      escalation). The oracle replays the kmeans chain and three
     //      recursive min-reach closures — every count value-checked.
     ("q308_percolation_sweep", (s: SparkSession, dir: String) => {
-      // independent CC per threshold (percolationSweep's default): the
-      // shared-CC contraction is implemented, spec-pinned identical,
-      // and ScaleSmoke-measured SLOWER here — a sweep spanning the
-      // percolation point resolves ~nothing above the collapse, so
-      // there is no higher-threshold structure to reuse (see the
-      // percolationSweep scaladoc for the numbers).
+      // independent CC per threshold: a shared-CC contraction measured
+      // SLOWER here (10.3 s vs 8.7 s at sf0.1), since a sweep spanning
+      // the percolation point resolves ~nothing above the collapse
+      // (see the percolationSweep scaladoc).
       val emb = Tables(s, dir).embeddings
       percolationSweep(emb, fit = Some(graft.text.Similarity.kmeansFitMemo(
         s, dir, graft.text.Similarity.cellCountFor(emb.count()), 64)))

@@ -2018,7 +2018,7 @@ object EvalOps {
     //      count and mean s in micros + the zz overall row. ~1e6 is
     //      well-separated, ~0 says the clusters touch — the "was k=4
     //      reasonable" readout the SemDeDup/DBSCAN family assumes.
-    //      Centroids come from Similarity.kmeansFinalCentroids (the
+    //      Centroids come from Similarity.kmeansFitMemo (the
     //      IDENTICAL fit the oracle replays: hash seeds, round-6
     //      means); scoring is a k-literal broadcast projection, one
     //      map-side-combined aggregate, no window, no join.

@@ -381,38 +381,8 @@ object GraphOps {
     * assuming it. Returns (members: (node, d) with d = degree inside
     * the final surviving subgraph, converged: one-row boolean).
     *
-    * Scale shape: each round is one map-side-combined degree aggregate
-    * plus two semi-joins of the edge list against the (node-count-
-    * sized) survivor set — all keyed on the node column, so the
-    * bucketing discipline makes every round shuffle-free at 100 TB.
-    * State is one edge list + one survivor set, materialized per round
-    * (each feeds two consumers — the pageRankDirectedMicros argument).
-    * Degrees only decrease, so the edge list shrinks monotonically.
-    */
-  def kCorePeel(edges: DataFrame, k: Int, rounds: Int): (DataFrame, DataFrame) = {
-    require(rounds >= 2, "need >= 2 rounds for the convergence certificate")
-    var e = graft.Stage.mat(edges.select(col("src"), col("dst")))
-    var alive: DataFrame = null
-    var prev: DataFrame = null
-    for (i <- 1 to rounds) {
-      alive = graft.Stage.mat(
-        e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-          .filter(col("d") >= k).select(col("src").as("node")))
-      if (i == rounds - 1) prev = alive.agg(count(lit(1)).as("n_prev"))
-      e = graft.Stage.mat(
-        e.join(alive.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(alive.select(col("node").as("dst")), Seq("dst"), "left_semi"))
-    }
-    val d = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    val conv = alive.agg(count(lit(1)).as("n_final")).crossJoin(broadcast(prev))
-      .select((col("n_final") === col("n_prev")).as("converged"))
-    val members = alive.join(d.select(col("src").as("node"), col("d")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("d"), lit(0L)).as("d"))
-    (members, conv)
-  }
-
-  /** [[kCorePeel]] in DELTA form (the q257 lesson applied to the peel —
-    * VERDICT r9 ask #4, the "degree-bucket" variant): the edge list is
+    * DELTA form (the q257 lesson applied to the peel — VERDICT r9
+    * ask #4, the "degree-bucket" variant): the edge list is
     * materialized ONCE and never rewritten; per-node degrees are the
     * evolving state, and each round only DECREMENTS them by the edges
     * incident to that round's newly-dead nodes:
@@ -422,14 +392,15 @@ object GraphOps {
     *   deg_i   = deg_{i-1} − dec_i   (over the surviving nodes)
     *
     * Per-round cost is |edges incident to dead_i| + a node-table join,
-    * instead of [[kCorePeel]]'s three full-edge-list passes (degree agg
-    * + two semi-joins) — after round 1 the dead set is typically tiny,
-    * so AQE broadcasts it and the edge list is never reshuffled.
+    * instead of the classic peel's three full-edge-list passes (degree
+    * agg + two semi-joins) — after round 1 the dead set is typically
+    * tiny, so AQE broadcasts it and the edge list is never reshuffled.
     * Round-for-round identical survivor sets by induction: the running
     * degree equals |nbrs ∩ alive| exactly because the dead sets are
     * disjoint and each neighbor's death decrements once. Same output
-    * contract as [[kCorePeel]] (GraphOpsSpec pins equality; PERF.md
-    * records which form q138 ships with and the measured ratio).
+    * as the classic peel the oracle unrolls (test reference
+    * GraphRefs.kCorePeel; GraphOpsSpec pins equality, PERF.md records
+    * the measured ratio).
     */
   def kCorePeelDelta(edges: DataFrame, k: Int, rounds: Int): (DataFrame, DataFrame) = {
     require(rounds >= 2, "need >= 2 rounds for the convergence certificate")
@@ -507,7 +478,8 @@ object GraphOps {
   /** One unrolled k-core chain for the DuckDB oracle: CTEs
     * `{p}a1..{p}aR` (survivors), `{p}e1..{p}eR` (restricted edges),
     * `{p}d` (final in-core degrees), `{p}c` (convergence boolean) —
-    * token-for-token the [[kCorePeel]] rounds over base edges `e0`.
+    * token-for-token the classic peel rounds (test reference
+    * GraphRefs.kCorePeel) over base edges `e0`.
     */
   private def kcoreSql(k: Int, rounds: Int, p: String,
                        base: String = "e0"): String = {
@@ -818,46 +790,28 @@ object GraphOps {
     * unordered pair) — extracted so ScaleSmoke can measure its growth
     * curve on replicated graphs (VERDICT r8 ask #2).
     *
-    * Scale shape (Schank–Wagner node-iterator-core / Suri–Vassilvitskii
-    * MR triangles): every edge is ORIENTED from its lower (degree, id)
-    * endpoint, so each triangle is found exactly once at its
-    * minimum-degree vertex and the wedge self-join's work is
-    * Σ_v outdeg(v)² with outdeg ≤ O(√m) — O(m^1.5) total, never naive
-    * Σ deg². The closure probe is a plain two-column equi-join against
-    * the oriented edge table. Both wedge-side joins hint SHUFFLE_HASH:
-    * the probe side is the Σ outdeg² wedge stream (41M rows at sf0.1)
-    * and sort-merge would SORT it; hashing the edge-sized build side
-    * streams the wedges unsorted (measured 9.3 s → ~3 s for the closure
-    * probe). At 100 TB the same argument holds — the build side is the
-    * edge-table partition, the probe side the strictly larger wedge set.
+    * The triangle set is [[triangleListAdj]]'s compact-adjacency
+    * INTERSECTION (the "forward"/edge-iterator variant — Schank &
+    * Wagner 2005, Algorithm forward; VERDICT r8 ask #6): every edge is
+    * oriented from its lower (degree, id) endpoint, so out-degrees stay
+    * ≤ O(√m) and each triangle is found exactly once. The Σ outdeg²
+    * wedge volume still moves through a shuffle, but as PACKED ARRAYS
+    * replicated per edge instead of a 41M-row wedge stream probing a
+    * join, and only true triangles are ever materialized as rows. Three
+    * `Stage.mat` barriers: the orientation and the adjacency arrays
+    * (inside triangleListAdj) and the triangle list here.
     *
     * Output: the global row (v = −1: n_nodes, triangle count,
     * transitivity ppm) + the top-10 local clustering coefficients.
+    * The census depends only on the triangle set, so it equals the
+    * wedge-join census (test reference GraphRefs.triangleCensus) by
+    * construction; GraphOpsSpec pins equality on hand graphs, PERF.md
+    * records the measured ratio.
     */
-  def triangleCensus(e: DataFrame): DataFrame = {
+  def triangleCensusAdj(e: DataFrame): DataFrame = {
     val deg = e.select(col("pa").as("v")).unionByName(e.select(col("pb").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
-    val lower = col("da") < col("db") ||
-      (col("da") === col("db") && col("pa") < col("pb"))
-    val ori = graft.Stage.mat(
-      e.join(deg.select(col("v").as("pa"), col("d").as("da")), Seq("pa"))
-        .join(deg.select(col("v").as("pb"), col("d").as("db")), Seq("pb"))
-        .select(when(lower, col("pa")).otherwise(col("pb")).as("u"),
-          when(lower, col("pb")).otherwise(col("pa")).as("w"),
-          when(lower, col("db")).otherwise(col("da")).as("dw")))
-    val wedges = ori.select(col("u"), col("w").as("x"), col("dw").as("dx"))
-      .join(ori.select(col("u"), col("w").as("y"), col("dw").as("dy"))
-        .hint("shuffle_hash"), Seq("u"))
-      .filter(col("x") < col("y"))
-    val xLower = col("dx") < col("dy") ||
-      (col("dx") === col("dy") && col("x") < col("y"))
-    val tri = graft.Stage.mat(wedges
-      .select(col("u"), col("x"), col("y"),
-        when(xLower, col("x")).otherwise(col("y")).as("clo"),
-        when(xLower, col("y")).otherwise(col("x")).as("chi"))
-      .join(ori.select(col("u").as("clo"), col("w").as("chi"))
-        .hint("shuffle_hash"), Seq("clo", "chi"))
-      .select(col("u"), col("x"), col("y")))
+    val tri = graft.Stage.mat(triangleListAdj(e))
     val perV = tri.select(col("u").as("v"))
       .unionByName(tri.select(col("x").as("v")))
       .unionByName(tri.select(col("y").as("v")))
@@ -876,98 +830,17 @@ object GraphOps {
     globalRow.unionByName(localTop).orderBy(col("v"))
   }
 
-  /** [[triangleCensus]] with the wedge JOIN replaced by compact
-    * adjacency-array INTERSECTION (the "forward"/edge-iterator variant
-    * — Schank & Wagner 2005, Algorithm forward; VERDICT r8 ask #6):
-    * per oriented node, collect the sorted out-neighbor array (size ≤
-    * O(√m) by the (degree, id) orientation); per oriented edge (u, w),
-    * triangles at that edge are exactly array_intersect(adj⁺(u),
-    * adj⁺(w)) — each triangle {a<b<c} is found once, at edge (a, b).
-    * The Σ outdeg² wedge volume still moves through a shuffle, but as
-    * PACKED ARRAYS replicated per edge instead of a 41M-row wedge
-    * stream probing a join, and only true triangles are ever
-    * materialized as rows. Same output as [[triangleCensus]] by
-    * construction (the census depends only on the triangle set);
-    * GraphOpsSpec pins equality on hand graphs, PERF.md records which
-    * form the declared q257 ships with and the measured ratio.
-    */
-  def triangleCensusAdj(e: DataFrame): DataFrame = {
-    val deg = e.select(col("pa").as("v")).unionByName(e.select(col("pb").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-    val lower = col("da") < col("db") ||
-      (col("da") === col("db") && col("pa") < col("pb"))
-    val ori = graft.Stage.mat(
-      e.join(deg.select(col("v").as("pa"), col("d").as("da")), Seq("pa"))
-        .join(deg.select(col("v").as("pb"), col("d").as("db")), Seq("pb"))
-        .select(when(lower, col("pa")).otherwise(col("pb")).as("u"),
-          when(lower, col("pb")).otherwise(col("pa")).as("w")))
-    val adj = graft.Stage.mat(
-      ori.groupBy(col("u")).agg(sort_array(collect_list(col("w"))).as("nbrs")))
-    // inner joins: an edge whose w has no out-neighbors closes nothing
-    val tri = graft.Stage.mat(ori
-      .join(adj, Seq("u"))
-      .join(adj.select(col("u").as("w"), col("nbrs").as("nbrs_w")), Seq("w"))
-      .select(col("u"), col("w"),
-        explode(array_intersect(col("nbrs"), col("nbrs_w"))).as("z")))
-    val perV = tri.select(col("u").as("v"))
-      .unionByName(tri.select(col("w").as("v")))
-      .unionByName(tri.select(col("z").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("tri"))
-    val totals = tri.agg(count(lit(1)).as("n_tri"))
-      .crossJoin(broadcast(
-        deg.agg(sum(expr("d * (d - 1) DIV 2")).as("n_wedges"),
-          count(lit(1)).as("n_nodes"))))
-    val globalRow = totals.selectExpr("CAST(-1 AS BIGINT) AS v",
-      "n_nodes AS d", "n_tri",
-      "CASE WHEN n_wedges = 0 THEN 0 ELSE (3 * n_tri * 1000000) DIV n_wedges END AS cc_ppm")
-    val localTop = deg.join(perV, Seq("v"))
-      .selectExpr("v", "d", "tri AS n_tri",
-        "(2 * tri * 1000000) DIV (d * (d - 1)) AS cc_ppm")
-      .orderBy(col("cc_ppm").desc, col("v")).limit(10)
-    globalRow.unionByName(localTop).orderBy(col("v"))
-  }
-
-  /** Triangle enumeration over a distinct undirected edge table
-    * (pa < pb): the q257 oriented wedge build (each triangle found
-    * once, at its min-degree vertex) + the closure probe, both
-    * shuffle_hash-hinted. One row (u, x, y) per triangle — the
-    * O(m^1.5) pass every downstream consumer (support counts, truss
-    * peels) shares, so it runs ONCE per edge set.
-    */
-  private[graft] def triangleList(e: DataFrame): DataFrame = {
-    val deg = e.select(col("pa").as("v")).unionByName(e.select(col("pb").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-    val lower = col("da") < col("db") ||
-      (col("da") === col("db") && col("pa") < col("pb"))
-    val ori = graft.Stage.mat(e
-      .join(deg.select(col("v").as("pa"), col("d").as("da")), Seq("pa"))
-      .join(deg.select(col("v").as("pb"), col("d").as("db")), Seq("pb"))
-      .select(when(lower, col("pa")).otherwise(col("pb")).as("u"),
-        when(lower, col("pb")).otherwise(col("pa")).as("w"),
-        when(lower, col("db")).otherwise(col("da")).as("dw")))
-    val wedges = ori.as("w1")
-      .join(ori.as("w2").hint("shuffle_hash"),
-        col("w1.u") === col("w2.u") && col("w1.w") < col("w2.w"))
-      .select(col("w1.u").as("cu"), col("w1.w").as("x"), col("w1.dw").as("dx"),
-        col("w2.w").as("y"), col("w2.dw").as("dy"))
-    val innerLower = col("dx") < col("dy") ||
-      (col("dx") === col("dy") && col("x") < col("y"))
-    wedges
-      .join(ori.as("o2").hint("shuffle_hash"),
-        col("o2.u") === when(innerLower, col("x")).otherwise(col("y")) &&
-          col("o2.w") === when(innerLower, col("y")).otherwise(col("x")))
-      .select(col("cu").as("u"), col("x"), col("y"))
-  }
-
   /** Triangle enumeration in the q257 compact-adjacency form
     * ([[triangleCensusAdj]]'s kernel): orient low-degree-first, pack
     * each node's out-neighbors into ONE sorted array, and find each
     * triangle {a,b,c} once at its oriented edge (u, w) as
-    * explode(adj⁺(u) ∩ adj⁺(w)). Same triangle set as [[triangleList]]
-    * by construction; the Σ outdeg² wedge volume moves as packed
-    * arrays replicated per edge instead of a row-per-wedge join probe
-    * (PERF.md records both forms' measurements and which one the
-    * truss family ships with).
+    * explode(adj⁺(u) ∩ adj⁺(w)). One row (u, x, y) per triangle — the
+    * O(m^1.5) pass every consumer (the census, truss peels) runs ONCE
+    * per edge set. Same triangle set as the wedge-join enumeration
+    * (test reference GraphRefs.triangleList) by construction; the
+    * Σ outdeg² wedge volume moves as packed arrays replicated per edge
+    * instead of a row-per-wedge join probe (PERF.md records both forms'
+    * measurements).
     */
   private[graft] def triangleListAdj(e: DataFrame): DataFrame = {
     val deg = e.select(col("pa").as("v")).unionByName(e.select(col("pb").as("v")))
@@ -981,6 +854,7 @@ object GraphOps {
           when(lower, col("pb")).otherwise(col("pa")).as("w")))
     val adj = graft.Stage.mat(
       ori.groupBy(col("u")).agg(sort_array(collect_list(col("w"))).as("nbrs")))
+    // inner joins: an edge whose w has no out-neighbors closes nothing
     ori
       .join(adj, Seq("u"))
       .join(adj.select(col("u").as("w"), col("nbrs").as("nbrs_w")), Seq("w"))
@@ -988,31 +862,9 @@ object GraphOps {
         explode(array_intersect(col("nbrs"), col("nbrs_w"))).as("y"))
   }
 
-  /** Per-edge support from a triangle list: each triangle credits its
-    * THREE canonical edges. Triangle-scale aggregation only — no wedge
-    * work happens here.
-    */
-  private[graft] def triEdgeSupport(tri: DataFrame): DataFrame =
-    tri.select(least(col("u"), col("x")).as("pa"),
-        greatest(col("u"), col("x")).as("pb"))
-      .unionByName(tri.select(least(col("u"), col("y")).as("pa"),
-        greatest(col("u"), col("y")).as("pb")))
-      .unionByName(tri.select(least(col("x"), col("y")).as("pa"),
-        greatest(col("x"), col("y")).as("pb")))
-      .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("sup"))
-
-  /** Per-edge triangle support over a distinct undirected edge table
-    * (pa < pb): the q257 oriented wedge enumeration (each triangle found
-    * once at its min-degree vertex), then each triangle credits its
-    * THREE edges — the k-truss peel primitive (Cohen 2008). Support
-    * rows cover exactly the edges that close ≥ 1 triangle (triangle
-    * edges are e-members by construction), so Σ sup = 3·|triangles|.
-    */
-  private[graft] def edgeSupport(e: DataFrame): DataFrame =
-    triEdgeSupport(triangleList(e))
-
   /** INCREMENTAL-support k-truss peel (round 14, VERDICT r13 ask #4):
-    * [[kTrussRounds]] re-aggregated the FULL surviving triangle list
+    * the delta-support peel (test reference GraphRefs.kTrussRounds)
+    * re-aggregated the FULL surviving triangle list
     * into a support table every round and re-materialized the triangle
     * list through three shuffle semi-joins against the kept-edge set.
     * But a peel round only changes the supports of edges that share a
@@ -1101,54 +953,6 @@ object GraphOps {
             col("b3"))
         eCur = next
       }
-      row
-    }
-    rows.reduce(_ unionByName _).orderBy(col("round"))
-  }
-
-  /** Delta-support k-truss peel (VERDICT r10 ask #1, the edge-wise
-    * transfer of q138's ProbeKCore lesson): the O(m^1.5) triangle
-    * enumeration runs ONCE, as a materialized triple list keyed by its
-    * three canonical edges; every subsequent round is TRIANGLE-SCALE —
-    * support = one groupBy over the list, survivors = three semi-joins
-    * against the kept-edge set (a triangle of the peeled subgraph is
-    * exactly an original triangle whose three edges all survive, so no
-    * re-enumeration can ever find anything the filter keeps out).
-    * Round summaries (edges in, triangles, edges kept with sup ≥
-    * k−2) are assembled plan-side — value-identical to re-running
-    * [[edgeSupport]] per round (GraphOpsSpec pins equality; PERF.md
-    * records the measured ratio). Kept as the test reference for
-    * [[kTrussRoundsInc]], the form q335 ships.
-    */
-  private[graft] def kTrussRounds(e: DataFrame, rounds: Int, minSup: Int): DataFrame = {
-    var eCur = graft.Stage.mat(e)
-    var tri = graft.Stage.mat(triangleListAdj(eCur).select(
-      least(col("u"), col("x")).as("a1"), greatest(col("u"), col("x")).as("b1"),
-      least(col("u"), col("y")).as("a2"), greatest(col("u"), col("y")).as("b2"),
-      least(col("x"), col("y")).as("a3"), greatest(col("x"), col("y")).as("b3")))
-    val rows = (1 to rounds).map { r =>
-      val sup = graft.Stage.mat(
-        tri.select(col("a1").as("pa"), col("b1").as("pb"))
-          .unionByName(tri.select(col("a2").as("pa"), col("b2").as("pb")))
-          .unionByName(tri.select(col("a3").as("pa"), col("b3").as("pb")))
-          .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("sup")))
-      val next = graft.Stage.mat(
-        sup.filter(col("sup") >= minSup).select(col("pa"), col("pb")))
-      val row = eCur.agg(count(lit(1)).as("n_edges_in"))
-        .crossJoin(tri.agg(count(lit(1)).as("n_tri")))
-        .crossJoin(next.agg(count(lit(1)).as("n_kept")))
-        .selectExpr(s"CAST($r AS BIGINT) AS round", "n_edges_in", "n_tri",
-          "n_kept")
-      if (r < rounds) {
-        tri = graft.Stage.mat(tri
-          .join(next.select(col("pa").as("a1"), col("pb").as("b1")),
-            Seq("a1", "b1"), "left_semi")
-          .join(next.select(col("pa").as("a2"), col("pb").as("b2")),
-            Seq("a2", "b2"), "left_semi")
-          .join(next.select(col("pa").as("a3"), col("pb").as("b3")),
-            Seq("a3", "b3"), "left_semi"))
-      }
-      eCur = next
       row
     }
     rows.reduce(_ unionByName _).orderBy(col("round"))
@@ -2163,7 +1967,8 @@ object GraphOps {
     //      O(m^1.5), so the cohort bounds each round's wedge stream the
     //      way q325's shard bounds its pairs; production sweeps
     //      cohorts). Since round 11 the peel is DELTA-SUPPORT
-    //      ([[kTrussRounds]], the edge-wise q138 lesson): the triangle
+    //      (the edge-wise q138 lesson; the round-11 form is now the test
+    //      reference GraphRefs.kTrussRounds): the triangle
     //      enumeration runs ONCE — in the q257 compact-adjacency form
     //      ([[triangleListAdj]]; ProbeTruss measured 3.5× less CPU than
     //      the wedge join on this graph) — and rounds 2+ are triangle-

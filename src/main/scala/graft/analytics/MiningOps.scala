@@ -74,45 +74,21 @@ object MiningOps {
     *
     * Scale shape: the candidate set is orders of magnitude smaller
     * than the corpus (the minhashNearDups argument), and only those
-    * pairs ever pay the O(len_a*len_b) DP. For a production maxRatio
-    * cutoff, `boundedLev = true` switches to Spark's banded
-    * `levenshtein(l, r, threshold)` (O(d*n) per pair, early-exit -1
-    * beyond d) — the declared query keeps the unbounded form because
-    * the oracle engine has no banded variant, and MiningOpsSpec pins
-    * bounded == unbounded on every fixture pair. Both engines compute
+    * pairs ever pay the O(len_a*len_b) DP. Both engines compute
     * codepoint-level unit-cost Levenshtein (verified on multibyte
     * fixtures), so the values are portable as exact integers.
     */
   def editVerifiedNearDups(docs: DataFrame, threshold: Double = 0.8,
                            maxRatioMicros: Long = 200000L,
-                           numHashes: Int = 16, bands: Int = 16,
-                           boundedLev: Boolean = false): DataFrame = {
+                           numHashes: Int = 16, bands: Int = 16): DataFrame = {
     val t = docs.select(col("doc_id"), col("text"))
-    val maxLev = if (boundedLev) {
-      // Bound the band by the largest distance any pair could PASS THE
-      // FILTER at. The filter admits lev iff
-      //   floor(lev * 1e6 / mx_pair) <= maxRatioMicros
-      //   <=> lev * 1e6 < (maxRatioMicros + 1) * mx_pair
-      //   <=> lev <= floor((maxRatioMicros + 1) * mx_pair / 1e6)   (lev integral)
-      // so the band must be derived from the SAME inequality with
-      // mx_pair <= global max length — NOT floor(maxRatio * mx), which
-      // for non-divisible lengths (e.g. maxRatioMicros=285714, 7-char
-      // texts: lev=2 passes but floor(.285714*7)=1) silently drops
-      // passing pairs (ADVICE r6). coalesce guards the empty/all-null
-      // corpus (max returns null -> NPE on getInt).
-      val mx = t.agg(coalesce(max(length(col("text"))), lit(0)))
-        .head().getInt(0).toLong
-      (((maxRatioMicros + 1L) * mx) / 1000000L).toInt.max(1)
-    } else 0
     Dedup.minhashNearDups(docs, threshold, numHashes = numHashes, bands = bands)
       .join(t.select(col("doc_id").as("id_a"), col("text").as("text_a")), Seq("id_a"))
       .join(t.select(col("doc_id").as("id_b"), col("text").as("text_b")), Seq("id_b"))
-      .withColumn("lev",
-        (if (boundedLev) levenshtein(col("text_a"), col("text_b"), maxLev)
-         else levenshtein(col("text_a"), col("text_b"))).cast("long"))
+      .withColumn("lev", levenshtein(col("text_a"), col("text_b")).cast("long"))
       .withColumn("edit_ratio_micros",
         expr("(lev * 1000000) DIV greatest(greatest(char_length(text_a), char_length(text_b)), 1)"))
-      .filter(col("lev") >= 0 && col("edit_ratio_micros") <= maxRatioMicros)
+      .filter(col("edit_ratio_micros") <= maxRatioMicros)
       .select(col("id_a"), col("id_b"), col("jaccard"), col("lev"), col("edit_ratio_micros"))
   }
 

@@ -580,25 +580,6 @@ object Similarity {
         s"Similarity.cellCountFor(n) (k=${cellCountFor(n)} here) or re-budget explicitly")
   }
 
-  /** The final (post-`iters`) centroid table of [[kmeansAssign]]'s
-    * Lloyd run — k×dim doubles, index-sized driver state, for consumers
-    * that score against the centroids themselves (q288 silhouette).
-    * Identical fit: same hash seeds, same round-6 means, so the
-    * centroids are the exact ones the oracle's replay derives.
-    */
-  def kmeansFinalCentroids(embeddings: DataFrame, k: Int, dim: Int,
-                           iters: Int = 2, idCol: String = "vec_id",
-                           vecCol: String = "embedding",
-                           salt: String = "kmeans"): Seq[(Int, Seq[Double])] =
-    kmeansFit(embeddings.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
-      k, dim, iters, salt)
-
-  /** [[kmeansAssign]] with the vector column `v` carried through the
-    * assignment projection — for consumers like [[semDedup]] that need
-    * (assignment, vector) together: since the assignment is a pure
-    * projection, keeping `v` is free, whereas re-attaching it afterwards
-    * would cost a corpus-sized join on vec_id.
-    */
   /** nearest = max(struct(round-6 cosine, −cid)): the snap + smaller-cid
     * tie-break keep the argmax engine-portable (oracle replays it).
     */
@@ -642,7 +623,7 @@ object Similarity {
   }
 
   /** The Lloyd fit shared by [[kmeansAssignFull]] and
-    * [[kmeansFinalCentroids]]: `e` must carry (vec_id, v).
+    * [[kmeansFitMemo]]: `e` must carry (vec_id, v).
     */
   private def kmeansFit(e: DataFrame, k: Int, dim: Int, iters: Int,
                         salt: String): Seq[(Int, Seq[Double])] = {
@@ -671,6 +652,12 @@ object Similarity {
     cents
   }
 
+  /** [[kmeansAssign]] with the vector column `v` carried through the
+    * assignment projection — for consumers like [[semDedup]] that need
+    * (assignment, vector) together: since the assignment is a pure
+    * projection, keeping `v` is free, whereas re-attaching it afterwards
+    * would cost a corpus-sized join on vec_id.
+    */
   private[text] def kmeansAssignFull(embeddings: DataFrame, k: Int, dim: Int, iters: Int = 2,
                                      idCol: String = "vec_id", vecCol: String = "embedding",
                                      salt: String = "kmeans"): DataFrame = {

@@ -150,15 +150,18 @@ class GraphOpsSpec extends SparkSpec {
     // triangle a-b-c, pendant d on a, isolated pair e-f (mirrored edges)
     val und = Seq(("a", "b"), ("b", "c"), ("a", "c"), ("a", "d"), ("e", "f"))
     val e = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val (m2, conv2) = GraphOps.kCorePeel(e, k = 2, rounds = 6)
-    val got = m2.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got === Map("a" -> 2L, "b" -> 2L, "c" -> 2L))
-    assert(conv2.collect().head.getBoolean(0))
-    // k=3: node a starts at degree 3 but the candidate set collapses to
-    // {a} after one round and to empty the next — converged and empty
-    val (m3, conv3) = GraphOps.kCorePeel(e, k = 3, rounds = 6)
-    assert(m3.count() === 0L)
-    assert(conv3.collect().head.getBoolean(0))
+    // the shipped delta peel and the classic reference, same pins
+    for (peel <- Seq(GraphOps.kCorePeelDelta _, GraphRefs.kCorePeel _)) {
+      val (m2, conv2) = peel(e, 2, 6)
+      val got = m2.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got === Map("a" -> 2L, "b" -> 2L, "c" -> 2L))
+      assert(conv2.collect().head.getBoolean(0))
+      // k=3: node a starts at degree 3 but the candidate set collapses to
+      // {a} after one round and to empty the next — converged and empty
+      val (m3, conv3) = peel(e, 3, 6)
+      assert(m3.count() === 0L)
+      assert(conv3.collect().head.getBoolean(0))
+    }
   }
 
   test("k-core delta peel equals the semi-join peel round-for-round outputs") {
@@ -176,7 +179,7 @@ class GraphOpsSpec extends SparkSpec {
         (p._1.collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
           p._2.collect().head.getBoolean(0))
       assert(key(GraphOps.kCorePeelDelta(e, k, rounds)) ===
-        key(GraphOps.kCorePeel(e, k, rounds)), s"k=$k rounds=$rounds")
+        key(GraphRefs.kCorePeel(e, k, rounds)), s"k=$k rounds=$rounds")
     }
   }
 
@@ -380,7 +383,7 @@ class GraphOpsSpec extends SparkSpec {
       if (a < b) Some((a, b)) else if (b < a) Some((b, a)) else None
     }).flatten.distinct
     for (g <- Seq(Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)), k5, rand)) {
-      val wedge = GraphOps.triangleCensus(edges(g)).collect().toSeq
+      val wedge = GraphRefs.triangleCensus(edges(g)).collect().toSeq
       val adjI = GraphOps.triangleCensusAdj(edges(g)).collect().toSeq
       assert(adjI === wedge, s"variants diverge on ${g.take(6)}…")
     }
@@ -484,8 +487,8 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("delta k-truss equals per-round support re-enumeration on the real sf0.001 cohort") {
-    // the kTrussRounds contract: filtering the ONE materialized triangle
-    // list by surviving edges yields exactly the triangles a full
+    // the GraphRefs.kTrussRounds contract: filtering the ONE materialized
+    // triangle list by surviving edges yields exactly the triangles a full
     // re-enumeration of the peeled subgraph would find — so every round
     // summary must match the r10 shipping plan bit for bit
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
@@ -493,7 +496,7 @@ class GraphOpsSpec extends SparkSpec {
       li.filter(pmod(col("l_orderkey"), lit(4)) === 0)))
     var eCur = cohort()
     val reenum = (1 to 3).map { r =>
-      val sup = graft.Stage.mat(GraphOps.edgeSupport(eCur))
+      val sup = graft.Stage.mat(GraphRefs.edgeSupport(eCur))
       val next = graft.Stage.mat(
         sup.filter(col("sup") >= 2).select(col("pa"), col("pb")))
       val row = eCur.agg(count(lit(1)).as("n_edges_in"))
@@ -504,7 +507,7 @@ class GraphOpsSpec extends SparkSpec {
       eCur = next
       row
     }.reduce(_ unionByName _).orderBy(col("round")).collect().toSeq
-    val delta = GraphOps.kTrussRounds(cohort(), 3, 2).collect().toSeq
+    val delta = GraphRefs.kTrussRounds(cohort(), 3, 2).collect().toSeq
     assert(reenum.head.getAs[Long]("n_tri") > 0L,
       "fixture must actually contain triangles for the pin to mean anything")
     assert(delta === reenum)
@@ -527,7 +530,7 @@ class GraphOpsSpec extends SparkSpec {
     val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L), (5L, 6L))
       .toDF("pa", "pb")
-    val classic = GraphOps.kTrussRounds(graft.Stage.mat(e), 3, 2).collect().toSeq
+    val classic = GraphRefs.kTrussRounds(graft.Stage.mat(e), 3, 2).collect().toSeq
     val inc = GraphOps.kTrussRoundsInc(graft.Stage.mat(e), 3, 2).collect().toSeq
     assert(inc === classic)
     // the fixture must actually peel across two successive rounds

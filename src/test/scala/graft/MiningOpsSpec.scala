@@ -4,8 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.analytics.MiningOps
 
 /** Hand-computed fixtures for the mining/evaluation layer: edit-verified
-  * near-dups (incl. the bounded-Levenshtein equivalence the scaladoc
-  * promises), cluster-density structure audits, rank-sum AUC with ties,
+  * near-dups, cluster-density structure audits, rank-sum AUC with ties,
   * the per-class/macro classification report, and basket lift.
   */
 class MiningOpsSpec extends SparkSpec {
@@ -31,39 +30,6 @@ class MiningOpsSpec extends SparkSpec {
     // (1,2): identical -> lev 0, ratio 0. (1,3)/(2,3): one inserted char
     // over max length 70 -> 1*1e6 div 70 = 14285.
     assert(r.toSeq === Seq((1L, 2L, 0L, 0L), (1L, 3L, 1L, 14285L), (2L, 3L, 1L, 14285L)))
-  }
-
-  test("bounded and unbounded Levenshtein verify agree on every fixture pair") {
-    val ub = MiningOps.editVerifiedNearDups(docs, threshold = 0.8, boundedLev = false)
-      .orderBy("id_a", "id_b").collect().toSeq
-    val b = MiningOps.editVerifiedNearDups(docs, threshold = 0.8, boundedLev = true)
-      .orderBy("id_a", "id_b").collect().toSeq
-    assert(ub === b)
-    assert(ub.nonEmpty)
-  }
-
-  test("bounded band covers the filter's admission region exactly (ADVICE r6)") {
-    // "a   b c" (7 chars) vs "a b c" (5): identical token shingles
-    // (J = 1) but lev = 2; ratio = floor(2e6/7) = 285714. At
-    // maxRatioMicros = 285714 the unbounded filter ADMITS the pair,
-    // but the old band floor(285714 * 7 / 1e6) = 1 made the banded
-    // levenshtein return -1 and silently dropped it. The corrected
-    // band floor((285714+1) * 7 / 1e6) = 2 keeps bounded == unbounded
-    // in this divergent region.
-    val d = Seq((1L, "a   b c"), (2L, "a b c")).toDF("doc_id", "text")
-    val ub = MiningOps.editVerifiedNearDups(d, threshold = 0.8,
-      maxRatioMicros = 285714L, boundedLev = false)
-      .orderBy("id_a", "id_b").collect().toSeq
-    val b = MiningOps.editVerifiedNearDups(d, threshold = 0.8,
-      maxRatioMicros = 285714L, boundedLev = true)
-      .orderBy("id_a", "id_b").collect().toSeq
-    assert(ub.nonEmpty, "unbounded filter must admit the lev=2/len=7 pair")
-    assert(ub === b)
-  }
-
-  test("boundedLev tolerates an empty corpus (max(length) is null)") {
-    val d = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    assert(MiningOps.editVerifiedNearDups(d, boundedLev = true).count() === 0L)
   }
 
   test("clusterDensity canonicalizes reversed and duplicate edges") {
