@@ -278,16 +278,10 @@ object Bench {
     // inside pass 1 and then excluded from every per-query min
     // — VERDICT r13 ask #1: the artifact itself must carry that cost.
     // Emitted after every pass (the map is filled during pass 1).
-    def escJson(s: String): String = s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    }
     def memoBuilds: String =
       graft.Memo.buildSeconds.toSeq.map { case (l, v) => l.toString -> v }
         .sortBy(_._1)
-        .map { case (k, v) => "\"" + escJson(k) + "\":" + fmt(v) }
+        .map { case (k, v) => Verify.jsonString(k) + ":" + fmt(v) }
         .mkString("{", ",", "}")
 
     val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]

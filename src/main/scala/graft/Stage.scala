@@ -133,6 +133,6 @@ object Stage {
     */
   def fanOut(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+    if (df.queryExecution.toRdd.getNumPartitions < par) df.repartition(par) else df
   }
 }

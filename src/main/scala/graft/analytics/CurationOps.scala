@@ -87,12 +87,15 @@ object CurationOps {
        CASE WHEN doc_id % 11 = 0 THEN 'It uses javascript for rendering today.' || chr(10) ELSE '' END,
        text)"""
 
-  /** The q76 signal CTE body (expects CTEs `p(doc_id, pt)` and
-    * `t(doc_id, pt, toks, ls)` in scope) — shared verbatim between the
+  /** The q76 signal CTEs `t(doc_id, pt, toks, ls)` and `sg` (expects
+    * CTE `p(doc_id, pt)` in scope) — shared verbatim between the
     * standalone rule query and the composed q89 pipeline so the two
     * oracles cannot drift.
     */
-  private def gopherSgSql = s"""
+  private def gopherSgSql = s"""t AS (SELECT doc_id, pt,
+              list_filter(regexp_split_to_array(lower(pt), '$ws+'), x -> x <> '') AS toks,
+              regexp_split_to_array(pt, '\n') AS ls
+            FROM p),
       sg AS (SELECT doc_id,
                CAST(len(toks) AS BIGINT) AS n_words,
                round(CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
@@ -205,6 +208,24 @@ object CurationOps {
       .orderBy(col("step"))
   }
 
+  /** Each vector's k-means cell joined back to its embedding, as
+    * (vec_id, centroid_id, embedding), materialized: the input of the
+    * within-cell pair passes (q258, q308). k follows the cell contract
+    * and the budget guard refuses an unbounded cell; `fit` is the
+    * memoized centroid table when the caller has one.
+    */
+  private def cellMembers(emb: org.apache.spark.sql.DataFrame,
+                          fit: Option[Seq[(Int, Seq[Double])]])
+      : org.apache.spark.sql.DataFrame = {
+    val n = emb.count()
+    val k = graft.text.Similarity.cellCountFor(n)
+    graft.text.Similarity.requireCellBounded(n, k)
+    val asg = fit.map(graft.text.Similarity.kmeansAssignWith(_, emb).drop("v"))
+      .getOrElse(graft.text.Similarity.kmeansAssign(emb, k = k, dim = 64))
+    graft.Stage.mat(asg.select(col("vec_id"), col("centroid_id"))
+      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id")))
+  }
+
   /** q258's cell-bounded DBSCAN (Ester et al. 1996) over an embedding
     * corpus — extracted so ScaleSmoke can measure its growth curve on
     * replicated corpora (VERDICT r8 ask #2) and so the cell discipline
@@ -224,13 +245,7 @@ object CurationOps {
   def densityClusters(emb: org.apache.spark.sql.DataFrame,
                       fit: Option[Seq[(Int, Seq[Double])]] = None)
       : org.apache.spark.sql.DataFrame = {
-    val n = emb.count()
-    val k = graft.text.Similarity.cellCountFor(n)
-    graft.text.Similarity.requireCellBounded(n, k)
-    val asg = fit.map(graft.text.Similarity.kmeansAssignWith(_, emb).drop("v"))
-      .getOrElse(graft.text.Similarity.kmeansAssign(emb, k = k, dim = 64))
-    val mem = graft.Stage.mat(asg.select(col("vec_id"), col("centroid_id"))
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id")))
+    val mem = cellMembers(emb, fit)
     val pa = mem.select(col("centroid_id"), col("vec_id").as("id_a"),
       col("embedding").as("va"))
     val pb = mem.select(col("centroid_id"), col("vec_id").as("id_b"),
@@ -335,6 +350,29 @@ object CurationOps {
       .orderBy(col("threshold_pct"))
   }
 
+  /** Every adjacent word pair in the corpus as one string `g` ("a b") —
+    * the bigram stream of the frequency-spectrum queries (q284 Good–Turing,
+    * q292 Hill tail index, q316 Chao1). */
+  private def wordBigrams(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir).documents
+      .select(filter(TextStats.tokens(lower(col("text"))),
+        x => x =!= lit("")).as("toks"))
+      .filter(size(col("toks")) >= 2)
+      .select(explode(zip_with(
+        slice(col("toks"), lit(1), size(col("toks")) - 1),
+        slice(col("toks"), lit(2), size(col("toks")) - 1),
+        (a, b) => concat(a, lit(" "), b))).as("g"))
+
+  /** DuckDB twin of [[wordBigrams]]: CTEs `t(toks)` and `bi(g)`. */
+  private val wordBigramsSql: String = s"""t AS (
+        SELECT list_filter(regexp_split_to_array(lower(text), '$ws+'),
+                 x -> x <> '') AS toks
+        FROM documents),
+      bi AS (
+        SELECT unnest(list_transform(range(1, len(toks)),
+                 i -> toks[i] || ' ' || toks[i + 1])) AS g
+        FROM t WHERE len(toks) >= 2)"""
+
   /** q308's pair table: within-cell pairs (`cellCountFor` k, kmeans
     * cells) with their 6-place cosine `cos_r`, kept at or above the
     * sweep's lowest threshold `minPct` / 100.
@@ -343,13 +381,7 @@ object CurationOps {
                                       minPct: Int,
                                       fit: Option[Seq[(Int, Seq[Double])]])
       : org.apache.spark.sql.DataFrame = {
-    val n = emb.count()
-    val k = graft.text.Similarity.cellCountFor(n)
-    graft.text.Similarity.requireCellBounded(n, k)
-    val asg = fit.map(graft.text.Similarity.kmeansAssignWith(_, emb).drop("v"))
-      .getOrElse(graft.text.Similarity.kmeansAssign(emb, k = k, dim = 64))
-    val mem = graft.Stage.mat(asg.select(col("vec_id"), col("centroid_id"))
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id")))
+    val mem = cellMembers(emb, fit)
     graft.Stage.mat(
       mem.select(col("centroid_id"), col("vec_id").as("id_a"),
           col("embedding").as("va"))
@@ -402,10 +434,7 @@ object CurationOps {
         s"SELECT CAST($i AS BIGINT) AS step, doc_id, gain FROM b$i")
         .mkString("\n      UNION ALL ")
       s"""
-      WITH t AS (SELECT doc_id,
-                        list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                                    x -> x <> '') AS toks
-                 FROM documents),
+      WITH ${TextStats.docTokensSql},
       sh AS (SELECT doc_id,
                     unnest(list_distinct(
                       CASE WHEN len(toks) < 3 THEN []::VARCHAR[]
@@ -522,10 +551,6 @@ object CurationOps {
       gates.unionAll(q).orderBy(col("gate"))
     }, Some(s"""
       WITH p AS (SELECT doc_id, $ruleLinesTextSql AS pt FROM documents),
-      t AS (SELECT doc_id, pt,
-              list_filter(regexp_split_to_array(lower(pt), '$ws+'), x -> x <> '') AS toks,
-              regexp_split_to_array(pt, '\n') AS ls
-            FROM p),
       $gopherSgSql,
       g AS (SELECT doc_id,
                    CAST(CASE WHEN $gopherKeepSql THEN 1 ELSE 0 END AS BIGINT) AS x1
@@ -593,17 +618,7 @@ object CurationOps {
           docs.filter(pmod(col("doc_id"), lit(50)) === 0), k = 3)
         .orderBy(col("doc_id"))
     }, Some(s"""
-      WITH b AS (
-        SELECT DISTINCT unnest(list_distinct(list_transform(
-          range(1, greatest(len(regexp_split_to_array(lower(text), '$ws+')) - 2, 1) + 1),
-          i -> array_to_string(regexp_split_to_array(lower(text), '$ws+')[i:i+2], ' ')))) AS sh
-        FROM documents WHERE doc_id % 50 = 0),
-      c AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-          range(1, greatest(len(regexp_split_to_array(lower(text), '$ws+')) - 2, 1) + 1),
-          i -> array_to_string(regexp_split_to_array(lower(text), '$ws+')[i:i+2], ' ')))) AS sh
-        FROM documents WHERE doc_id % 50 <> 0),
-      h AS (SELECT doc_id, count(*) AS n_shared FROM c JOIN b USING (sh) GROUP BY doc_id)
+      WITH ${Dedup.contaminationHitsSql}
       SELECT d.doc_id,
         CAST(COALESCE(h.n_shared, 0) AS BIGINT) AS n_shared,
         COALESCE(h.n_shared, 0) > 0 AS contaminated
@@ -681,27 +696,7 @@ object CurationOps {
         threshold = 0.8, numHashes = 16, bands = 16)
       Dedup.connectedComponents(pairs).orderBy(col("doc_id"))
     }, Some(s"""
-      WITH RECURSIVE sh AS (
-        SELECT doc_id AS id,
-               CASE WHEN len(toks) = 0 THEN []::VARCHAR[]
-                    ELSE list_distinct(list_transform(
-                      range(1, greatest(len(toks) - 2, 1) + 1),
-                      i -> array_to_string(toks[i:i+2], ' '))) END AS s
-        FROM (SELECT doc_id,
-                     list_filter(regexp_split_to_array(lower(text), '$ws+'), t -> t <> '') AS toks
-              FROM documents WHERE doc_id < 500)),
-      pairs AS (
-        SELECT a.id AS id_a, b.id AS id_b FROM sh a, sh b
-        WHERE a.id < b.id
-          AND CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / greatest(len(list_distinct(list_concat(a.s, b.s))), 1) >= 0.8),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION SELECT id_b, id_a FROM pairs),
-      reach(n, r) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, reach.r FROM reach JOIN edges e ON reach.n = e.src),
-      labels AS (SELECT n AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY n),
+      WITH RECURSIVE ${Dedup.nearDupLabelsSql},
       sizes AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
                 FROM labels GROUP BY cluster_id)
       SELECT l.doc_id, l.cluster_id, s.cluster_size,
@@ -800,29 +795,10 @@ object CurationOps {
     ("q61_bm25_rank", (s: SparkSession, dir: String) => {
       graft.text.Relevance.bm25TopDocs(Tables(s, dir).documents)
     }, Some(s"""
-      WITH toks AS (
-        SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '$ws+'), x -> x <> '')) AS term
-        FROM documents),
-      tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),
-      dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks GROUP BY 1),
-      dfq AS (
-        SELECT term, CAST(COUNT(*) AS BIGINT) AS df
-        FROM (SELECT doc_id, unnest(list_distinct(list_filter(regexp_split_to_array(lower(text), '$ws+'), x -> x <> ''))) AS term
-              FROM documents)
-        GROUP BY term),
-      qterms AS (SELECT term, df FROM dfq ORDER BY df DESC, term LIMIT 8),
-      stats AS (
-        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_docs,
-               CAST((SELECT SUM(dl) FROM dl) AS DOUBLE)
-                 / CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS avgdl),
+      WITH ${graft.text.Relevance.bm25StatsSql},
       contrib AS (
         SELECT tf.doc_id, dl.dl,
-               round(ln((CAST(s.n_docs AS DOUBLE) - CAST(q.df AS DOUBLE) + 0.5)
-                          / (CAST(q.df AS DOUBLE) + 0.5) + 1.0)
-                     * (CAST(tf.tf AS DOUBLE) * 2.2)
-                     / (CAST(tf.tf AS DOUBLE)
-                        + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE) / s.avgdl))),
-                     6) AS c
+               ${graft.text.Relevance.bm25TermSql} AS c
         FROM tf JOIN qterms q USING (term)
                 JOIN dl ON tf.doc_id = dl.doc_id
                 CROSS JOIN stats s)
@@ -970,32 +946,7 @@ object CurationOps {
         .drop("v")
         .orderBy(col("vec_id"))
     }, Some(s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      hs AS (SELECT vec_id, v,
-               ${TextStats.portableHash64Sql("concat('kmeans:', CAST(vec_id AS VARCHAR))")} AS h
-             FROM e),
-      kp AS (SELECT ${graft.text.Similarity.cellCountSql("count(*)")} AS k FROM e),
-      sl AS (SELECT vec_id, v, h FROM
-               (SELECT vec_id, v, h,
-                       row_number() OVER (ORDER BY h, vec_id) AS rnk FROM hs)
-             CROSS JOIN kp WHERE rnk <= k),
-      seeds AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS INTEGER) AS cid,
-                       v AS cv FROM sl),
-      a1 AS (SELECT vec_id, v, cid, cos_r,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, cid) AS rn
-             FROM (SELECT e.vec_id, e.v, s.cid,
-                     round(list_cosine_similarity(e.v, s.cv), 6) AS cos_r
-                   FROM e CROSS JOIN seeds s)),
-      m1 AS (SELECT vec_id, v, cid FROM a1 WHERE rn = 1),
-      d1 AS (SELECT cid, r.i AS i,
-               ${graft.text.Similarity.meanRound6Sql("list_extract(v, r.i)")} AS mu
-             FROM m1, range(1, 65) r(i) GROUP BY cid, r.i),
-      c2 AS (SELECT cid, list(mu ORDER BY i) AS cv FROM d1 GROUP BY cid),
-      a2 AS (SELECT vec_id, cid, cos_r,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, cid) AS rn
-             FROM (SELECT e.vec_id, c.cid,
-                     round(list_cosine_similarity(e.v, c.cv), 6) AS cos_r
-                   FROM e CROSS JOIN c2 c))
+      WITH ${graft.text.Similarity.kmeansAssignSql}
       SELECT vec_id, CAST(cid AS INTEGER) AS centroid_id, cos_r
       FROM a2 WHERE rn = 1 ORDER BY vec_id""")),
 
@@ -1006,16 +957,7 @@ object CurationOps {
       graft.text.LangModel.bigramPerplexity(Tables(s, dir).documents)
         .orderBy(col("doc_id"))
     }, Some(s"""
-      WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                              x -> x <> '') AS toks
-                 FROM documents),
-      bi AS (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i
-             FROM t WHERE len(toks) >= 2),
-      inst AS (SELECT doc_id, list_extract(toks, i) AS w1,
-                      list_extract(toks, i + 1) AS w2 FROM bi),
-      uni AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c1
-              FROM (SELECT unnest(toks) AS w FROM t) GROUP BY w),
-      vocab AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM uni),
+      WITH ${graft.text.LangModel.bigramCountsSql},
       bc AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c2
              FROM inst GROUP BY w1, w2),
       sc AS (SELECT inst.doc_id,
@@ -1037,10 +979,7 @@ object CurationOps {
       graft.text.Dedup.dupSpanCoverage(Tables(s, dir).documents, n = 8)
         .orderBy(col("doc_id"))
     }, Some(s"""
-      WITH t AS (SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                     x -> x <> '') AS toks
-                 FROM documents),
+      WITH ${TextStats.docTokensSql},
       tt AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n_tokens
              FROM t WHERE len(toks) >= 8),
       sh AS (SELECT doc_id, i,
@@ -1268,9 +1207,7 @@ object CurationOps {
     ("q134_kneser_ney", (s: SparkSession, dir: String) => {
       graft.text.LangModel.kneserNeyTop(Tables(s, dir).documents, topK = 50)
     }, Some(s"""
-      WITH t AS (SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(text), '$ws+'), x -> x <> '') AS toks
-             FROM documents),
+      WITH ${TextStats.docTokensSql},
       bi AS (SELECT unnest(list_transform(range(1, len(toks)),
                i -> [toks[i], toks[i + 1]])) AS pr
              FROM t WHERE len(toks) >= 2),
@@ -1414,27 +1351,7 @@ object CurationOps {
           fit = Some(graft.text.Similarity.kmeansFitMemo(s, dir, k, 64)))
         .orderBy(col("vec_id"))
     }, Some(s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      hs AS (SELECT vec_id, v,
-               ${TextStats.portableHash64Sql("concat('kmeans:', CAST(vec_id AS VARCHAR))")} AS h
-             FROM e),
-      kp AS (SELECT ${graft.text.Similarity.cellCountSql("count(*)")} AS k FROM e),
-      sl AS (SELECT vec_id, v, h FROM
-               (SELECT vec_id, v, h,
-                       row_number() OVER (ORDER BY h, vec_id) AS rnk FROM hs)
-             CROSS JOIN kp WHERE rnk <= k),
-      seeds AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS INTEGER) AS cid,
-                       v AS cv FROM sl),
-      a1 AS (SELECT vec_id, v, cid, cos_r,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, cid) AS rn
-             FROM (SELECT e.vec_id, e.v, s.cid,
-                     round(list_cosine_similarity(e.v, s.cv), 6) AS cos_r
-                   FROM e CROSS JOIN seeds s)),
-      m1 AS (SELECT vec_id, v, cid FROM a1 WHERE rn = 1),
-      d1 AS (SELECT cid, r.i AS i,
-               ${graft.text.Similarity.meanRound6Sql("list_extract(v, r.i)")} AS mu
-             FROM m1, range(1, 65) r(i) GROUP BY cid, r.i),
-      c2 AS (SELECT cid, list(mu ORDER BY i) AS cv FROM d1 GROUP BY cid),
+      WITH ${graft.text.Similarity.kmeansFitSql},
       a2 AS (SELECT vec_id, v, cid, cos_r,
                row_number() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, cid) AS rn
              FROM (SELECT e.vec_id, e.v, c.cid,
@@ -1463,10 +1380,6 @@ object CurationOps {
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH p AS (SELECT doc_id, $ruleLinesTextSql AS pt FROM documents),
-      t AS (SELECT doc_id, pt,
-              list_filter(regexp_split_to_array(lower(pt), '$ws+'), x -> x <> '') AS toks,
-              regexp_split_to_array(pt, '\n') AS ls
-            FROM p),
       $gopherSgSql
       SELECT doc_id, n_words, mean_word_len_r, frac_alpha_r, n_stop_hits,
              symbol_ratio_r, frac_bullet_r, frac_ellipsis_r,
@@ -1508,29 +1421,10 @@ object CurationOps {
       val t = Tables(s, dir)
       graft.text.Relevance.hybridRrf(t.documents, t.embeddings)
     }, Some(s"""
-      WITH toks AS (
-        SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '$ws+'), x -> x <> '')) AS term
-        FROM documents),
-      tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),
-      dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks GROUP BY 1),
-      dfq AS (
-        SELECT term, CAST(COUNT(*) AS BIGINT) AS df
-        FROM (SELECT doc_id, unnest(list_distinct(list_filter(regexp_split_to_array(lower(text), '$ws+'), x -> x <> ''))) AS term
-              FROM documents)
-        GROUP BY term),
-      qterms AS (SELECT term, df FROM dfq ORDER BY df DESC, term LIMIT 8),
-      stats AS (
-        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_docs,
-               CAST((SELECT SUM(dl) FROM dl) AS DOUBLE)
-                 / CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS avgdl),
+      WITH ${graft.text.Relevance.bm25StatsSql},
       contrib AS (
         SELECT tf.doc_id,
-               round(ln((CAST(s.n_docs AS DOUBLE) - CAST(q.df AS DOUBLE) + 0.5)
-                          / (CAST(q.df AS DOUBLE) + 0.5) + 1.0)
-                     * (CAST(tf.tf AS DOUBLE) * 2.2)
-                     / (CAST(tf.tf AS DOUBLE)
-                        + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE) / s.avgdl))),
-                     6) AS c
+               ${graft.text.Relevance.bm25TermSql} AS c
         FROM tf JOIN qterms q USING (term)
                 JOIN dl ON tf.doc_id = dl.doc_id
                 CROSS JOIN stats s),
@@ -1563,10 +1457,7 @@ object CurationOps {
       graft.text.Dedup.ngramNovelty(Tables(s, dir).documents, n = 8)
         .orderBy(col("doc_id"))
     }, Some(s"""
-      WITH t AS (SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                     x -> x <> '') AS toks
-                 FROM documents),
+      WITH ${TextStats.docTokensSql},
       tt AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 8),
       sh AS (SELECT DISTINCT doc_id,
                ${TextStats.portableHash64Sql("array_to_string(toks[i : i + 7], ' ')")} AS h
@@ -1752,10 +1643,6 @@ object CurationOps {
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH p AS (SELECT doc_id, source, $ruleLinesTextSql AS pt FROM documents),
-      t AS (SELECT doc_id, pt,
-              list_filter(regexp_split_to_array(lower(pt), '$ws+'), x -> x <> '') AS toks,
-              regexp_split_to_array(pt, '\n') AS ls
-            FROM p),
       $gopherSgSql,
       gk AS (SELECT doc_id FROM sg WHERE $gopherKeepSql),
       ck AS (SELECT t.doc_id FROM t
@@ -1868,27 +1755,7 @@ object CurationOps {
             lit("train")).otherwise(lit("test")))
         .orderBy(col("doc_id"))
     }, Some(s"""
-      WITH RECURSIVE sh AS (
-        SELECT doc_id AS id,
-               CASE WHEN len(toks) = 0 THEN []::VARCHAR[]
-                    ELSE list_distinct(list_transform(
-                      range(1, greatest(len(toks) - 2, 1) + 1),
-                      i -> array_to_string(toks[i:i+2], ' '))) END AS s
-        FROM (SELECT doc_id,
-                     list_filter(regexp_split_to_array(lower(text), '$ws+'), t -> t <> '') AS toks
-              FROM documents WHERE doc_id < 500)),
-      pairs AS (
-        SELECT a.id AS id_a, b.id AS id_b FROM sh a, sh b
-        WHERE a.id < b.id
-          AND CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / greatest(len(list_distinct(list_concat(a.s, b.s))), 1) >= 0.8),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION SELECT id_b, id_a FROM pairs),
-      reach(n, r) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, reach.r FROM reach JOIN edges e ON reach.n = e.src),
-      labels AS (SELECT n AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY n),
+      WITH RECURSIVE ${Dedup.nearDupLabelsSql},
       cl AS (SELECT d.doc_id, COALESCE(l.cluster_id, d.doc_id) AS cluster_id
              FROM (SELECT doc_id FROM documents WHERE doc_id < 500) d
              LEFT JOIN labels l USING (doc_id))
@@ -2178,32 +2045,7 @@ object CurationOps {
           "p AS n_dup_pairs", "d AS n_dropped", "k AS n_kept")
       per.unionByName(zz).orderBy(col("centroid_id"))
     }, Some(s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      hs AS (SELECT vec_id, v,
-               ${TextStats.portableHash64Sql("concat('kmeans:', CAST(vec_id AS VARCHAR))")} AS h
-             FROM e),
-      kp AS (SELECT ${graft.text.Similarity.cellCountSql("count(*)")} AS k FROM e),
-      sl AS (SELECT vec_id, v, h FROM
-               (SELECT vec_id, v, h,
-                       row_number() OVER (ORDER BY h, vec_id) AS rnk FROM hs)
-             CROSS JOIN kp WHERE rnk <= k),
-      seeds AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS INTEGER) AS cid,
-                       v AS cv FROM sl),
-      a1 AS (SELECT vec_id, v, cid, cos_r,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, cid) AS rn
-             FROM (SELECT e.vec_id, e.v, s.cid,
-                     round(list_cosine_similarity(e.v, s.cv), 6) AS cos_r
-                   FROM e CROSS JOIN seeds s)),
-      m1 AS (SELECT vec_id, v, cid FROM a1 WHERE rn = 1),
-      d1 AS (SELECT cid, r.i AS i,
-               ${graft.text.Similarity.meanRound6Sql("list_extract(v, r.i)")} AS mu
-             FROM m1, range(1, 65) r(i) GROUP BY cid, r.i),
-      c2 AS (SELECT cid, list(mu ORDER BY i) AS cv FROM d1 GROUP BY cid),
-      a2 AS (SELECT vec_id, cid, cos_r,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, cid) AS rn
-             FROM (SELECT e.vec_id, c.cid,
-                     round(list_cosine_similarity(e.v, c.cv), 6) AS cos_r
-                   FROM e CROSS JOIN c2 c)),
+      WITH ${graft.text.Similarity.kmeansAssignSql},
       mem AS (SELECT a2.vec_id, a2.cid, e.v
               FROM a2 JOIN e ON a2.vec_id = e.vec_id WHERE rn = 1),
       pairs AS (
@@ -2262,32 +2104,7 @@ object CurationOps {
       densityClusters(emb, fit = Some(graft.text.Similarity.kmeansFitMemo(
         s, dir, graft.text.Similarity.cellCountFor(emb.count()), 64)))
     }, Some(s"""
-      WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      hs AS (SELECT vec_id, v,
-               ${TextStats.portableHash64Sql("concat('kmeans:', CAST(vec_id AS VARCHAR))")} AS h
-             FROM e),
-      kp AS (SELECT ${graft.text.Similarity.cellCountSql("count(*)")} AS k FROM e),
-      sl AS (SELECT vec_id, v, h FROM
-               (SELECT vec_id, v, h,
-                       row_number() OVER (ORDER BY h, vec_id) AS rnk FROM hs)
-             CROSS JOIN kp WHERE rnk <= k),
-      seeds AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS INTEGER) AS cid,
-                       v AS cv FROM sl),
-      a1 AS (SELECT vec_id, v, cid, cos_r,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, cid) AS rn
-             FROM (SELECT e.vec_id, e.v, s.cid,
-                     round(list_cosine_similarity(e.v, s.cv), 6) AS cos_r
-                   FROM e CROSS JOIN seeds s)),
-      m1 AS (SELECT vec_id, v, cid FROM a1 WHERE rn = 1),
-      d1 AS (SELECT cid, r.i AS i,
-               ${graft.text.Similarity.meanRound6Sql("list_extract(v, r.i)")} AS mu
-             FROM m1, range(1, 65) r(i) GROUP BY cid, r.i),
-      c2 AS (SELECT cid, list(mu ORDER BY i) AS cv FROM d1 GROUP BY cid),
-      a2 AS (SELECT vec_id, cid, cos_r,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, cid) AS rn
-             FROM (SELECT e.vec_id, c.cid,
-                     round(list_cosine_similarity(e.v, c.cv), 6) AS cos_r
-                   FROM e CROSS JOIN c2 c)),
+      WITH RECURSIVE ${graft.text.Similarity.kmeansAssignSql},
       mem AS (SELECT a2.vec_id, a2.cid, e.v
               FROM a2 JOIN e ON a2.vec_id = e.vec_id WHERE rn = 1),
       pairs AS (
@@ -2336,14 +2153,7 @@ object CurationOps {
     //      count-of-counts aggregate (distinct-multiplicity-sized), a
     //      self-join on r+1 over that tiny table.
     ("q284_good_turing", (s: SparkSession, dir: String) => {
-      val t = Tables(s, dir).documents
-        .select(filter(TextStats.tokens(lower(col("text"))),
-          x => x =!= lit("")).as("toks"))
-        .filter(size(col("toks")) >= 2)
-      val bi = t.select(explode(zip_with(
-        slice(col("toks"), lit(1), size(col("toks")) - 1),
-        slice(col("toks"), lit(2), size(col("toks")) - 1),
-        (a, b) => concat(a, lit(" "), b))).as("g"))
+      val bi = wordBigrams(s, dir)
       val counts = bi.groupBy(col("g")).agg(count(lit(1)).as("r"))
       val coc = graft.Stage.mat(
         counts.groupBy(col("r")).agg(count(lit(1)).as("n_r")))
@@ -2357,14 +2167,7 @@ object CurationOps {
         "n1 AS n_r_next", "(n1 * 1000000) DIV greatest(n_tokens, 1) AS r_star_micros")
       rows.unionByName(zz).orderBy(col("r"))
     }, Some(s"""
-      WITH t AS (
-        SELECT list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                 x -> x <> '') AS toks
-        FROM documents),
-      bi AS (
-        SELECT unnest(list_transform(range(1, len(toks)),
-                 i -> toks[i] || ' ' || toks[i + 1])) AS g
-        FROM t WHERE len(toks) >= 2),
+      WITH $wordBigramsSql,
       counts AS (SELECT g, CAST(count(*) AS BIGINT) AS r FROM bi GROUP BY g),
       coc AS (SELECT r, CAST(count(*) AS BIGINT) AS n_r FROM counts GROUP BY r),
       tot AS (SELECT CAST(SUM(r * n_r) AS BIGINT) AS n_tokens,
@@ -2398,14 +2201,7 @@ object CurationOps {
     //      bigram count, one distinct-multiplicity-sized
     //      count-of-counts aggregate, constant-size folds after.
     ("q316_chao1_richness", (s: SparkSession, dir: String) => {
-      val t = Tables(s, dir).documents
-        .select(filter(TextStats.tokens(lower(col("text"))),
-          x => x =!= lit("")).as("toks"))
-        .filter(size(col("toks")) >= 2)
-      val bi = t.select(explode(zip_with(
-        slice(col("toks"), lit(1), size(col("toks")) - 1),
-        slice(col("toks"), lit(2), size(col("toks")) - 1),
-        (a, b) => concat(a, lit(" "), b))).as("g"))
+      val bi = wordBigrams(s, dir)
       val coc = graft.Stage.mat(bi.groupBy(col("g")).agg(count(lit(1)).as("r"))
         .groupBy(col("r")).agg(count(lit(1)).as("n_r")))
       val head = coc.filter(col("r") <= 3L)
@@ -2420,14 +2216,7 @@ object CurationOps {
           "1000000 - (1000000 * f1) DIV greatest(n, 1) AS coverage_ppm")
       head.unionByName(zz).orderBy(col("r"))
     }, Some(s"""
-      WITH t AS (
-        SELECT list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                 x -> x <> '') AS toks
-        FROM documents),
-      bi AS (
-        SELECT unnest(list_transform(range(1, len(toks)),
-                 i -> toks[i] || ' ' || toks[i + 1])) AS g
-        FROM t WHERE len(toks) >= 2),
+      WITH $wordBigramsSql,
       coc AS (SELECT r, CAST(count(*) AS BIGINT) AS n_r FROM (
                 SELECT g, CAST(count(*) AS BIGINT) AS r FROM bi GROUP BY g)
               GROUP BY r),
@@ -2521,14 +2310,7 @@ object CurationOps {
     //      is TakeOrderedAndProject on (count desc, bigram) — bounded,
     //      no window.
     ("q292_hill_tail_index", (s: SparkSession, dir: String) => {
-      val t = Tables(s, dir).documents
-        .select(filter(TextStats.tokens(lower(col("text"))),
-          x => x =!= lit("")).as("toks"))
-        .filter(size(col("toks")) >= 2)
-      val bi = t.select(explode(zip_with(
-        slice(col("toks"), lit(1), size(col("toks")) - 1),
-        slice(col("toks"), lit(2), size(col("toks")) - 1),
-        (a, b) => concat(a, lit(" "), b))).as("g"))
+      val bi = wordBigrams(s, dir)
       val ranked = bi.groupBy(col("g")).agg(count(lit(1)).as("r"))
         .orderBy(col("r").desc, col("g")).limit(65)
         .withColumn("lnr",
@@ -2545,14 +2327,7 @@ object CurationOps {
         .selectExpr("k", "x_ref", "sln DIV k AS mean_ln_ratio_nanos",
           "CAST(1000000000000000 DIV greatest(sln DIV k, 1) AS BIGINT) AS alpha_micros")
     }, Some(s"""
-      WITH t AS (
-        SELECT list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                 x -> x <> '') AS toks
-        FROM documents),
-      bi AS (
-        SELECT unnest(list_transform(range(1, len(toks)),
-                 i -> toks[i] || ' ' || toks[i + 1])) AS g
-        FROM t WHERE len(toks) >= 2),
+      WITH $wordBigramsSql,
       top AS (
         SELECT g, CAST(count(*) AS BIGINT) AS r,
                CAST(round(ln(CAST(count(*) AS DOUBLE)) * 1000000000, 0)
@@ -2774,32 +2549,7 @@ object CurationOps {
                  (SELECT CAST(count(*) AS BIGINT) FROM per$t) AS n_components,
                  COALESCE((SELECT MAX(sz) FROM per$t), 0) AS max_component)"""
       s"""
-      WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      hs AS (SELECT vec_id, v,
-               ${TextStats.portableHash64Sql("concat('kmeans:', CAST(vec_id AS VARCHAR))")} AS h
-             FROM e),
-      kp AS (SELECT ${graft.text.Similarity.cellCountSql("count(*)")} AS k FROM e),
-      sl AS (SELECT vec_id, v, h FROM
-               (SELECT vec_id, v, h,
-                       row_number() OVER (ORDER BY h, vec_id) AS rnk FROM hs)
-             CROSS JOIN kp WHERE rnk <= k),
-      seeds AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS INTEGER) AS cid,
-                       v AS cv FROM sl),
-      a1 AS (SELECT vec_id, v, cid, cos_r,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, cid) AS rn
-             FROM (SELECT e.vec_id, e.v, s.cid,
-                     round(list_cosine_similarity(e.v, s.cv), 6) AS cos_r
-                   FROM e CROSS JOIN seeds s)),
-      m1 AS (SELECT vec_id, v, cid FROM a1 WHERE rn = 1),
-      d1 AS (SELECT cid, r.i AS i,
-               ${graft.text.Similarity.meanRound6Sql("list_extract(v, r.i)")} AS mu
-             FROM m1, range(1, 65) r(i) GROUP BY cid, r.i),
-      c2 AS (SELECT cid, list(mu ORDER BY i) AS cv FROM d1 GROUP BY cid),
-      a2 AS (SELECT vec_id, cid, cos_r,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, cid) AS rn
-             FROM (SELECT e.vec_id, c.cid,
-                     round(list_cosine_similarity(e.v, c.cv), 6) AS cos_r
-                   FROM e CROSS JOIN c2 c)),
+      WITH RECURSIVE ${graft.text.Similarity.kmeansAssignSql},
       mem AS (SELECT a2.vec_id, a2.cid, e.v
               FROM a2 JOIN e ON a2.vec_id = e.vec_id WHERE rn = 1),
       pairs AS (
@@ -2850,16 +2600,7 @@ object CurationOps {
           "sp DIV n AS mean_ppl_micros")
         .orderBy(col("cohort"), col("source"))
     }, Some(s"""
-      WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                              x -> x <> '') AS toks
-                 FROM documents),
-      bi AS (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i
-             FROM t WHERE len(toks) >= 2),
-      inst AS (SELECT doc_id, list_extract(toks, i) AS w1,
-                      list_extract(toks, i + 1) AS w2 FROM bi),
-      uni AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c1
-              FROM (SELECT unnest(toks) AS w FROM t) GROUP BY w),
-      vocab AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM uni),
+      WITH ${graft.text.LangModel.bigramCountsSql},
       sc AS (SELECT inst.doc_id,
                round(ln((CAST(bc.c2 AS DOUBLE) + 1.0)
                  / (CAST(uni.c1 AS DOUBLE) + CAST(vv.v AS DOUBLE))), 6) AS lp

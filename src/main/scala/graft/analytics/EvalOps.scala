@@ -332,18 +332,34 @@ object EvalOps {
   // declared queries + oracles
   // ------------------------------------------------------------------
 
-  /** 16-bit × 16-bit Morton (Z-order) interleave as ONE generated
-    * integer expression — identical SQL text on both engines (>> & <<
-    * | are plain bitwise ops in Spark SQL and DuckDB), so the oracle
-    * replays it verbatim. Inputs must already be masked to 16 bits.
-    *
-    * This is the multi-dimensional LAYOUT key: writing a table ordered
-    * by z gives every file/row-group a bounded min-max envelope on
-    * BOTH dimensions, so parquet zone-map skipping prunes scans for
-    * predicates on EITHER column — the standard locality technique a
-    * single-column sort cannot provide (one dim clustered, the other
-    * scattered corpus-wide).
+  /** The labels-as-relevance ranking behind [[retrievalEval]] and
+    * [[InferOps.averagePrecision]]: each query vec_id in [qLo, qHi] gets
+    * its exact cosine top-k among vec_id > qHi, with both labels and
+    * `hit` = 1 for a same-label retrieval.
     */
+  private[analytics] def labeledTopK(emb: DataFrame, qLo: Long, qHi: Long,
+                                     k: Int): DataFrame = {
+    val queries = emb.filter(col("vec_id").between(qLo, qHi))
+      .select(col("vec_id").as("q_id"), col("embedding").as("qvec"),
+        col("label").cast("long").as("q_label"))
+    val corpus = emb.filter(col("vec_id") > qHi)
+    graft.text.Similarity
+      .topKPerQuery(corpus, queries.select(col("q_id"), col("qvec")), k, qidCol = "q_id")
+      .join(broadcast(queries.select(col("q_id"), col("q_label"))), Seq("q_id"))
+      .join(emb.select(col("vec_id"), col("label").cast("long").as("c_label")),
+        Seq("vec_id"))
+      .withColumn("hit", (col("c_label") === col("q_label")).cast("long"))
+  }
+
+  /** Oracle twin of [[labeledTopK]]'s inputs at the declared split
+    * (queries 1–20): CTEs `q(q_id, qv, q_label)` and `c(vec_id, v, c_label)`. */
+  private[analytics] val retrievalSplitSql: String = """q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv,
+                        CAST(label AS BIGINT) AS q_label
+                 FROM embeddings WHERE vec_id BETWEEN 1 AND 20),
+      c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+                   CAST(label AS BIGINT) AS c_label
+            FROM embeddings WHERE vec_id > 20)"""
+
   /** Labels-as-relevance retrieval eval: queries are vec_ids in
     * [qLo, qHi], the corpus is every vec_id > qHi, the system is exact
     * cosine top-k, and a hit is a same-label retrieval. Per query:
@@ -353,16 +369,7 @@ object EvalOps {
     * the label join touches only the (nQueries·k)-row result.
     */
   def retrievalEval(emb: DataFrame, qLo: Long, qHi: Long, k: Int): DataFrame = {
-    val queries = emb.filter(col("vec_id").between(qLo, qHi))
-      .select(col("vec_id").as("q_id"), col("embedding").as("qvec"),
-        col("label").cast("long").as("q_label"))
-    val corpus = emb.filter(col("vec_id") > qHi)
-    val ranked = graft.text.Similarity
-      .topKPerQuery(corpus, queries.select(col("q_id"), col("qvec")), k, qidCol = "q_id")
-      .join(broadcast(queries.select(col("q_id"), col("q_label"))), Seq("q_id"))
-      .join(emb.select(col("vec_id"), col("label").cast("long").as("c_label")),
-        Seq("vec_id"))
-      .withColumn("hit", (col("c_label") === col("q_label")).cast("long"))
+    val ranked = labeledTopK(emb, qLo, qHi, k)
     val per = ranked.groupBy(col("q_id"), col("q_label"))
       .agg(min(when(col("hit") === 1L, col("rn"))).cast("long").as("fr"),
         sum(col("hit")).as("n_hits"))
@@ -541,6 +548,20 @@ object EvalOps {
   private val rboPw10Sql: String =
     (0 until 20).map(BigInt(10).pow(_)).mkString(",")
 
+  /** The stopword-rate English detector the calibration queries (q147,
+    * q190) score: per labelled document, `hits_scaled` = 1e6 × stopword
+    * hits, `ntoks` (≥ 1) and `pos` = (lang is en). */
+  private def stopwordScores(s: SparkSession, dir: String): DataFrame = {
+    val toks = TextStats.tokens(lower(col("text")))
+    Tables(s, dir).documents
+      .filter(col("text").isNotNull && col("lang").isNotNull)
+      .select(
+        (lit(1000000L) * size(filter(toks, t => t.isin(TextStats.stopwords: _*)))
+          .cast("long")).as("hits_scaled"),
+        greatest(size(toks), lit(1)).cast("long").as("ntoks"),
+        (col("lang") === "en").as("pos"))
+  }
+
   val defs: Seq[(String, QFn, Option[String])] = Seq(
 
     // ---- McNemar's paired test (with Edwards' continuity correction):
@@ -576,23 +597,14 @@ object EvalOps {
           "(1000000 * n_base_ok) DIV n AS acc_base_micros",
           """((abs(b - c) - 1) * (abs(b - c) - 1) * 1000000)
              DIV greatest(b + c, 1) AS chi2_cc_micros""")
-    }, Some {
-      def score(lang: String): String = {
-        val words = TextStats.langProfiles.toMap.apply(lang)
-        s"len(list_filter(regexp_split_to_array(lower(text), '$ws+'), t -> t IN (${words.map("'" + _ + "'").mkString(",")})))"
-      }
-      s"""
+    }, Some(s"""
       WITH scored AS (
         SELECT doc_id, lang,
-               ${score("en")} AS s_en, ${score("de")} AS s_de,
-               ${score("es")} AS s_es, ${score("fr")} AS s_fr
+               ${TextStats.langScoresSql}
         FROM documents),
       pred AS (
         SELECT doc_id, lang,
-          CASE WHEN s_fr >= s_es AND s_fr >= s_en AND s_fr >= s_de THEN 'fr'
-               WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
-               WHEN s_en >= s_de THEN 'en'
-               ELSE 'de' END AS pred
+          ${TextStats.langPredSql} AS pred
         FROM scored),
       mode AS (SELECT lang AS mlang FROM documents GROUP BY lang
                ORDER BY count(*) DESC, lang LIMIT 1),
@@ -613,8 +625,7 @@ object EvalOps {
                   // greatest(CAST(SUM(CASE WHEN r_ok = 1 AND b_ok = 0 THEN 1 ELSE 0 END) AS BIGINT)
                              + SUM(CASE WHEN r_ok = 0 AND b_ok = 1 THEN 1 ELSE 0 END), 1)
                AS BIGINT) AS chi2_cc_micros
-      FROM cells"""
-    }),
+      FROM cells""")),
 
     // ---- truncated RBO@20 (p=0.9) between the by-chars and by-tokens
     //      document rankings: the top-weighted agreement of the two
@@ -751,22 +762,13 @@ object EvalOps {
       val p = Tables(s, dir).documents.select(col("lang").as("act"),
         TextStats.langIdPredicted(col("text")).as("pred"))
       agreementReport(p, posClass = "en")
-    }, Some {
-      def score(lang: String): String = {
-        val words = TextStats.langProfiles.toMap.apply(lang)
-        s"len(list_filter(regexp_split_to_array(lower(text), '$ws+'), t -> t IN (${words.map("'" + _ + "'").mkString(",")})))"
-      }
-      s"""
+    }, Some(s"""
       WITH scored AS (
         SELECT lang AS act,
-               ${score("en")} AS s_en, ${score("de")} AS s_de,
-               ${score("es")} AS s_es, ${score("fr")} AS s_fr
+               ${TextStats.langScoresSql}
         FROM documents),
       p AS (SELECT act,
-              CASE WHEN s_fr >= s_es AND s_fr >= s_en AND s_fr >= s_de THEN 'fr'
-                   WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
-                   WHEN s_en >= s_de THEN 'en'
-                   ELSE 'de' END AS pred
+              ${TextStats.langPredSql} AS pred
             FROM scored),
       cells AS (SELECT act, pred, CAST(count(*) AS BIGINT) AS c FROM p GROUP BY act, pred),
       tot AS (SELECT SUM(c) AS n,
@@ -799,8 +801,7 @@ object EvalOps {
                    * 1000000)
                   // greatest(CAST(tp + fp AS HUGEINT) * (tp + fn)
                              * (tn + fp) * (tn + fn), 1) AS BIGINT) AS mcc2_micros
-      FROM tot CROSS JOIN pe CROSS JOIN rec CROSS JOIN bin"""
-    }),
+      FROM tot CROSS JOIN pe CROSS JOIN rec CROSS JOIN bin""")),
 
     // ---- per-source Spearman of token count vs n_chars: the
     //      monotonic-association audit of q140's linear fit (Spearman
@@ -809,17 +810,11 @@ object EvalOps {
     //      the arithmetic exact; sum_ex/sum_ey ≡ 0 certify centering.
     ("q146_spearman", (s: SparkSession, dir: String) => {
       spearmanMicros(
-        Tables(s, dir).documents.select(col("source"),
-          TextStats.tokenCount(col("text")).cast("long").as("x"),
-          col("n_chars").cast("long").as("y")),
+        StatsOps.tokensVsChars(s, dir),
         g = "source", x = "x", y = "y")
         .orderBy(col("source"))
     }, Some(s"""
-      WITH f AS (
-        SELECT source,
-               CAST(len(regexp_split_to_array(text, '$ws+')) AS BIGINT) AS x,
-               CAST(n_chars AS BIGINT) AS y
-        FROM documents),
+      WITH ${StatsOps.tokensVsCharsSql},
       rk AS (
         SELECT source,
                2 * rank() OVER (PARTITION BY source ORDER BY x)
@@ -848,14 +843,7 @@ object EvalOps {
     //      zz row with the exact-integer ECE. The oracle replays the
     //      binning and every per-bin floor.
     ("q147_calibration", (s: SparkSession, dir: String) => {
-      val toks = TextStats.tokens(lower(col("text")))
-      val scored = Tables(s, dir).documents
-        .filter(col("text").isNotNull && col("lang").isNotNull)
-        .select(
-          (lit(1000000L) * size(filter(toks, t => t.isin(TextStats.stopwords: _*)))
-            .cast("long")).as("hits_scaled"),
-          greatest(size(toks), lit(1)).cast("long").as("ntoks"),
-          (col("lang") === "en").as("pos"))
+      val scored = stopwordScores(s, dir)
         .selectExpr("hits_scaled DIV ntoks AS score_ppm", "pos")
       calibrationReport(scored).orderBy(col("bin"))
     }, Some {
@@ -987,13 +975,8 @@ object EvalOps {
     //      200-row result.
     ("q154_retrieval_mrr", (s: SparkSession, dir: String) => {
       retrievalEval(Tables(s, dir).embeddings, qLo = 1L, qHi = 20L, k = 10)
-    }, Some("""
-      WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv,
-                        CAST(label AS BIGINT) AS q_label
-                 FROM embeddings WHERE vec_id BETWEEN 1 AND 20),
-      c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-                   CAST(label AS BIGINT) AS c_label
-            FROM embeddings WHERE vec_id > 20),
+    }, Some(s"""
+      WITH ${retrievalSplitSql},
       r AS (SELECT q_id, q_label, vec_id, c_label,
                    row_number() OVER (PARTITION BY q_id
                      ORDER BY list_cosine_similarity(v, qv) DESC, vec_id) AS rn
@@ -1518,14 +1501,7 @@ object EvalOps {
     //      minimax runs on the ≤10-row bin table (≤ 55 intervals ×
     //      ≤ 10 positions) — constant work at any corpus size.
     ("q190_isotonic", (s: SparkSession, dir: String) => {
-      val toks = TextStats.tokens(lower(col("text")))
-      val sc = Tables(s, dir).documents
-        .filter(col("text").isNotNull && col("lang").isNotNull)
-        .select(
-          (lit(1000000L) * size(filter(toks, t => t.isin(TextStats.stopwords: _*)))
-            .cast("long")).as("hits_scaled"),
-          greatest(size(toks), lit(1)).cast("long").as("ntoks"),
-          (col("lang") === "en").as("pos"))
+      val sc = stopwordScores(s, dir)
         .selectExpr("least(9L, (hits_scaled DIV ntoks) * 10 DIV 1000000) AS bin",
           "pos")
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("bin"))
@@ -2061,28 +2037,7 @@ object EvalOps {
         .selectExpr("CAST(-1 AS BIGINT) AS cid", "n_members", meanSafe)
       per.unionByName(zz).orderBy(col("cid"))
     }, Some(s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      hs AS (SELECT vec_id, v,
-               ${graft.text.TextStats.portableHash64Sql(
-        "concat('kmeans:', CAST(vec_id AS VARCHAR))")} AS h
-             FROM e),
-      kp AS (SELECT ${graft.text.Similarity.cellCountSql("count(*)")} AS k FROM e),
-      sl AS (SELECT vec_id, v, h FROM
-               (SELECT vec_id, v, h,
-                       row_number() OVER (ORDER BY h, vec_id) AS rnk FROM hs)
-             CROSS JOIN kp WHERE rnk <= k),
-      seeds AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS INTEGER) AS cid,
-                       v AS cv FROM sl),
-      a1 AS (SELECT vec_id, v, cid, cos_r,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, cid) AS rn
-             FROM (SELECT e.vec_id, e.v, s.cid,
-                     round(list_cosine_similarity(e.v, s.cv), 6) AS cos_r
-                   FROM e CROSS JOIN seeds s)),
-      m1 AS (SELECT vec_id, v, cid FROM a1 WHERE rn = 1),
-      d1 AS (SELECT cid, r.i AS i,
-               ${graft.text.Similarity.meanRound6Sql("list_extract(v, r.i)")} AS mu
-             FROM m1, range(1, 65) r(i) GROUP BY cid, r.i),
-      c2 AS (SELECT cid, list(mu ORDER BY i) AS cv FROM d1 GROUP BY cid),
+      WITH ${graft.text.Similarity.kmeansFitSql},
       cos2 AS (SELECT e.vec_id, c.cid,
                  round(list_cosine_similarity(e.v, c.cv), 6) AS cs
                FROM e CROSS JOIN c2 c),

@@ -96,18 +96,11 @@ object GraphOps {
     * bidirected variant, the frontier here has TWO consumers — the
     * contribution join and the dangling-mass aggregate — so a
     * lineage-chained loop would recompute each frontier 2^i times.
-    * State is node-count-sized, the connectedComponents regime.
+    * State is node-count-sized, the connectedComponents regime. This is
+    * [[pageRankWeightedMicros]] with every weight 1.
     */
-  def pageRankDirectedMicros(edges: DataFrame, iters: Int = 3, damp: Int = 85): DataFrame = {
-    // the uniform directed variant IS TrustRank with every node seeded:
-    // base = (100−damp)·1e6 div (100·N) to all, dangling div N to all,
-    // start 1e6 div N everywhere — term for term the seed-gated update
-    // with |S| = N (r7 review: one loop, one set of fixes).
-    val e = edges.select(col("src"), col("dst"))
-    val nodes =
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
-    trustRankMicros(e, nodes, iters, damp)
-  }
+  def pageRankDirectedMicros(edges: DataFrame, iters: Int = 3, damp: Int = 85): DataFrame =
+    pageRankWeightedMicros(edges.select(col("src"), col("dst"), lit(1L).as("w")), iters, damp)
 
   /** TrustRank / personalized PageRank (Gyöngyi et al. 2004) — the
     * seed-biased variant of [[pageRankDirectedMicros]] and the standard
@@ -120,18 +113,22 @@ object GraphOps {
     *  - dangling mass redistributes to the SEEDS, not all nodes
     *    (`dang div |S|` added inside the damped term for seed nodes);
     *  - the start vector is `1e6 div |S|` on seeds, 0 elsewhere.
-    * Plan shape is identical to the directed variant (one contribution
-    * join + agg, one one-row dangling aggregate, per-iteration
-    * Stage.mat); the seed set rides as a broadcast membership flag.
-    * `seeds` must be a DataFrame with a `node` column, a subset of the
-    * graph's nodes, deduplicated.
+    * Contributions are weighted: src→dst carries `rank_m·w div W(src)`
+    * with `W(src) = Σ_out w`, so `edges` must carry a `w` column
+    * (unweighted callers set w = 1). With every node seeded this is the
+    * weighted directed PageRank term for term, so [[pageRankWeightedMicros]]
+    * and [[pageRankDirectedMicros]] run this one update. Plan shape:
+    * one contribution join + agg, one one-row dangling aggregate,
+    * per-iteration Stage.mat; the seed set rides as a broadcast
+    * membership flag. `seeds` must be a DataFrame with a `node` column,
+    * a subset of the graph's nodes, deduplicated.
     */
   def trustRankMicros(edges: DataFrame, seeds: DataFrame,
                       iters: Int = 3, damp: Int = 85): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
+    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
     val nodes = graft.Stage.mat(
       e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
-    val deg = graft.Stage.mat(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
+    val deg = graft.Stage.mat(e.groupBy(col("src")).agg(sum(col("w")).as("outw")))
     val ew = graft.Stage.mat(e.join(deg, Seq("src")))
     val sd = graft.Stage.mat(seeds.select(col("node")).distinct())
     val ns = sd.count() // seed count — driver scalar, index-sized
@@ -148,7 +145,7 @@ object GraphOps {
     for (_ <- 1 to iters) {
       val r = graft.Stage.mat(ranks)
       val contrib = ew.join(r, ew("src") === r("node"))
-        .select(col("dst"), expr("rank_m div outdeg").as("c"))
+        .select(col("dst"), expr("(rank_m * w) div outw").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
         .select(col("dst").as("node"), col("s"))
       val dang = r.join(degNodes, Seq("node"), "left_anti")
@@ -203,6 +200,15 @@ object GraphOps {
       .union(inter.select(col("b").as("src"), col("a").as("dst")))
   }
 
+  /** DuckDB twin of [[interactionEdges]]: CTEs `inter(a, b)` and the
+    * mirrored edge list `edges(src, dst)` under the caller's name. */
+  private def interactionEdgesSql(edges: String, maxUser: Option[Long] = None): String = s"""inter AS (
+        SELECT DISTINCT concat('u:', CAST(user_id AS VARCHAR)) AS a,
+               concat('i:', CAST(COALESCE(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT), 0) AS VARCHAR)) AS b
+        FROM events WHERE user_id IS NOT NULL${maxUser.fold("")(m => s" AND user_id <= $m")}),
+      $edges AS (SELECT a AS src, b AS dst FROM inter
+            UNION ALL SELECT b AS src, a AS dst FROM inter)"""
+
   /** Distinct DIRECTED user→item action edges (`u:` → `i:` via
     * props.$.k) — the shared derivation of q127/q132/q137, memoized
     * per corpus under variant "interaction_directed" (VERDICT r12 ask
@@ -227,23 +233,43 @@ object GraphOps {
             .cast("string")).as("dst"))
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
 
-  /** One unrolled directed-PageRank iteration for the DuckDB oracle:
-    * dangling-mass aggregate, contribution sum, and the floored update —
-    * token-for-token the [[pageRankDirectedMicros]] arithmetic.
+  /** Oracle inputs of the unweighted directed ranks (q127, q132): the
+    * distinct user→item edges `inter` ([[interactionDirectedEdges]]),
+    * `nodes`, out-degrees `deg(src, outdeg)` and `ew`, edges with their
+    * source's out-degree. */
+  private val directedRankEdgesSql: String = s"""inter AS (
+        SELECT DISTINCT concat('u:', CAST(user_id AS VARCHAR)) AS src,
+               concat('i:', CAST(COALESCE(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT), 0) AS VARCHAR)) AS dst
+        FROM events WHERE user_id IS NOT NULL),
+      nodes AS (SELECT src AS node FROM inter UNION SELECT dst FROM inter),
+      deg AS (SELECT src, count(*) AS outdeg FROM inter GROUP BY src),
+      ew AS (SELECT inter.src, inter.dst, deg.outdeg FROM inter JOIN deg USING (src))"""
+
+  /** The dangling mass `d$i` and contribution sums `s$i` of one unrolled
+    * directed-rank iteration for the DuckDB oracle, `contrib` being the
+    * per-edge term over the previous ranks `r` and the edge table `ew`.
     */
-  private def prDirIterSql(i: Int): String = {
+  private def rankInputsSql(i: Int, contrib: String): String = {
     val prev = s"r${i - 1}"
     s"""d$i AS (SELECT COALESCE(SUM(r.rank_m), 0) AS dang
               FROM $prev r LEFT JOIN deg ON r.node = deg.src
               WHERE deg.src IS NULL),
-      s$i AS (SELECT ew.dst AS node, SUM(r.rank_m // ew.outdeg) AS s
-              FROM ew JOIN $prev r ON ew.src = r.node GROUP BY ew.dst),
+      s$i AS (SELECT ew.dst AS node, SUM($contrib) AS s
+              FROM ew JOIN $prev r ON ew.src = r.node GROUP BY ew.dst)"""
+  }
+
+  /** Iterations 1..3 of directed PageRank unrolled for the DuckDB oracle:
+    * the floored update of [[pageRankWeightedMicros]] over `nodes` and the
+    * one-row `p(n)`, token for token.
+    */
+  private def prItersSql(contrib: String): String = (1 to 3).map { i =>
+    s"""${rankInputsSql(i, contrib)},
       r$i AS (SELECT nodes.node,
                 CAST((15 * 1000000) // (100 * p.n)
                      + (85 * (COALESCE(s$i.s, 0) + d$i.dang // p.n)) // 100 AS BIGINT) AS rank_m
               FROM nodes LEFT JOIN s$i ON nodes.node = s$i.node
               CROSS JOIN d$i CROSS JOIN p)"""
-  }
+  }.mkString(",\n      ")
 
   /** Weighted directed PageRank — the [[pageRankDirectedMicros]] update
     * with per-edge weights: the contribution src→dst is
@@ -256,36 +282,10 @@ object GraphOps {
     * contribution product to DECIMAL(38,0) past that (the basketLift
     * overflow note).
     */
-  def pageRankWeightedMicros(edges: DataFrame, iters: Int = 3, damp: Int = 85): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-    val nodes = graft.Stage.mat(
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
-    val deg = graft.Stage.mat(e.groupBy(col("src")).agg(sum(col("w")).as("outw")))
-    val ew = graft.Stage.mat(e.join(deg, Seq("src")))
-    val n = nodes.count()
-    if (n == 0)
-      return e.select(col("src").as("node"), lit(0L).as("rank_m"), lit(0.0).as("rank_r"))
-        .limit(0)
-    val base = (100L - damp) * 1000000L / (100L * n)
-    val degNodes = deg.select(col("src").as("node"))
-    var ranks = nodes.select(col("node"), lit(1000000L / n).as("rank_m"))
-    for (_ <- 1 to iters) {
-      val r = graft.Stage.mat(ranks)
-      val contrib = ew.join(r, ew("src") === r("node"))
-        .select(col("dst"), expr("(rank_m * w) div outw").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-        .select(col("dst").as("node"), col("s"))
-      val dang = r.join(degNodes, Seq("node"), "left_anti")
-        .agg(coalesce(sum(col("rank_m")), lit(0L)).as("dang_m"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"),
-          (lit(base) +
-            expr(s"($damp * (coalesce(s, 0L) + dang_m div ${n}L)) div 100")).as("rank_m"))
-    }
-    ranks.select(col("node"), col("rank_m"),
-      (col("rank_m").cast("double") / lit(1000000.0)).as("rank_r"))
-  }
+  def pageRankWeightedMicros(edges: DataFrame, iters: Int = 3, damp: Int = 85): DataFrame =
+    trustRankMicros(edges,
+      edges.select(col("src").as("node")).union(edges.select(col("dst").as("node"))).distinct(),
+      iters, damp)
 
   /** HITS hubs & authorities (Kleinberg) over a directed edge list, in
     * integer micros: auth(i) = Σ_{u→i} hub(u), hub(u) = Σ_{u→i} auth(i),
@@ -337,31 +337,11 @@ object GraphOps {
       h$i AS (SELECT node, CAST((hr * 1000000) // m AS BIGINT) AS h FROM h${i}r, h${i}m)"""
   }
 
-  /** One unrolled weighted-PageRank iteration for the DuckDB oracle. */
-  private def prWIterSql(i: Int): String = {
-    val prev = s"r${i - 1}"
-    s"""d$i AS (SELECT COALESCE(SUM(r.rank_m), 0) AS dang
-              FROM $prev r LEFT JOIN deg ON r.node = deg.src
-              WHERE deg.src IS NULL),
-      s$i AS (SELECT ew.dst AS node, SUM((r.rank_m * ew.w) // ew.outw) AS s
-              FROM ew JOIN $prev r ON ew.src = r.node GROUP BY ew.dst),
-      r$i AS (SELECT nodes.node,
-                CAST((15 * 1000000) // (100 * p.n)
-                     + (85 * (COALESCE(s$i.s, 0) + d$i.dang // p.n)) // 100 AS BIGINT) AS rank_m
-              FROM nodes LEFT JOIN s$i ON nodes.node = s$i.node
-              CROSS JOIN d$i CROSS JOIN p)"""
-  }
-
-  /** One unrolled TrustRank iteration for the DuckDB oracle — the
+  /** Iterations 1..3 of TrustRank unrolled for the DuckDB oracle — the
     * [[trustRankMicros]] update with seed-gated base and dangling terms.
     */
-  private def trIterSql(i: Int): String = {
-    val prev = s"r${i - 1}"
-    s"""d$i AS (SELECT COALESCE(SUM(r.rank_m), 0) AS dang
-              FROM $prev r LEFT JOIN deg ON r.node = deg.src
-              WHERE deg.src IS NULL),
-      s$i AS (SELECT ew.dst AS node, SUM(r.rank_m // ew.outdeg) AS s
-              FROM ew JOIN $prev r ON ew.src = r.node GROUP BY ew.dst),
+  private def trItersSql: String = (1 to 3).map { i =>
+    s"""${rankInputsSql(i, "r.rank_m // ew.outdeg")},
       r$i AS (SELECT fn.node,
                 CAST(CASE WHEN fn.is_seed THEN (15 * 1000000) // (100 * ns.k) ELSE 0 END
                      + (85 * (COALESCE(s$i.s, 0)
@@ -369,7 +349,7 @@ object GraphOps {
                      AS BIGINT) AS rank_m
               FROM fn LEFT JOIN s$i ON fn.node = s$i.node
               CROSS JOIN d$i CROSS JOIN ns)"""
-  }
+  }.mkString(",\n      ")
 
   /** Synchronous k-core peel: `rounds` fixed rounds of "drop every node
     * whose degree among surviving nodes is < k" over a mirrored,
@@ -744,6 +724,15 @@ object GraphOps {
         .as("pr"))
       .select(col("pr.pa"), col("pr.pb")).distinct()
 
+  /** DuckDB twin of [[partCoPurchaseEdges]] plus node degrees: CTEs
+    * `li`, the co-purchase edges `e(pa, pb)` and `deg(v, d)`. */
+  private val partDegreesSql: String = """li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+      e AS (SELECT DISTINCT a.p AS pa, b.p AS pb
+            FROM li a JOIN li b ON a.o = b.o AND a.p < b.p),
+      deg AS (SELECT v, CAST(count(*) AS BIGINT) AS d
+              FROM (SELECT pa AS v FROM e UNION ALL SELECT pb AS v FROM e)
+              GROUP BY v)"""
+
   /** q358's weighted both-direction adjacency: the memoized co-purchase
     * edge table joined to part sizes (w = |Δp_size| + 1), unioned both
     * ways. Memoized itself under variant "copurchase_wadj" (ProbeEdges:
@@ -1064,13 +1053,8 @@ object GraphOps {
           """CAST((2 * coalesce(e_rich, 0) * 1000000)
                 DIV greatest(n_rich * (n_rich - 1), 1) AS BIGINT) AS phi_ppm""")
         .orderBy(col("pct"))
-    }, Some("""
-      WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-      e AS (SELECT DISTINCT a.p AS pa, b.p AS pb
-            FROM li a JOIN li b ON a.o = b.o AND a.p < b.p),
-      deg AS (SELECT v, CAST(count(*) AS BIGINT) AS d
-              FROM (SELECT pa AS v FROM e UNION ALL SELECT pb AS v FROM e)
-              GROUP BY v),
+    }, Some(s"""
+      WITH ${partDegreesSql},
       coc AS (SELECT d, CAST(count(*) AS BIGINT) AS f FROM deg GROUP BY d),
       cc AS (SELECT d, SUM(f) OVER (ORDER BY d) AS cum FROM coc),
       n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
@@ -1110,16 +1094,10 @@ object GraphOps {
       val seeds = ev.groupBy(col("user_id")).agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("user_id")).limit(5)
         .select(concat(lit("u:"), col("user_id").cast("string")).as("node"))
-      trustRankMicros(inter, seeds, iters = 3)
+      trustRankMicros(inter.withColumn("w", lit(1L)), seeds, iters = 3)
         .orderBy(col("node"))
     }, Some(s"""
-      WITH inter AS (
-        SELECT DISTINCT concat('u:', CAST(user_id AS VARCHAR)) AS src,
-               concat('i:', CAST(COALESCE(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT), 0) AS VARCHAR)) AS dst
-        FROM events WHERE user_id IS NOT NULL),
-      nodes AS (SELECT src AS node FROM inter UNION SELECT dst FROM inter),
-      deg AS (SELECT src, count(*) AS outdeg FROM inter GROUP BY src),
-      ew AS (SELECT inter.src, inter.dst, deg.outdeg FROM inter JOIN deg USING (src)),
+      WITH ${directedRankEdgesSql},
       seeds AS (SELECT concat('u:', CAST(user_id AS VARCHAR)) AS node
                 FROM (SELECT user_id, count(*) AS c FROM events
                       WHERE user_id IS NOT NULL
@@ -1129,9 +1107,7 @@ object GraphOps {
              FROM nodes LEFT JOIN seeds s ON nodes.node = s.node),
       r0 AS (SELECT node, CASE WHEN is_seed THEN CAST(1000000 // k AS BIGINT)
                            ELSE 0 END AS rank_m FROM fn, ns),
-      ${trIterSql(1)},
-      ${trIterSql(2)},
-      ${trIterSql(3)}
+      $trItersSql
       SELECT node, rank_m, rank_m / 1000000.0 AS rank_r
       FROM r3 ORDER BY node""")),
 
@@ -1152,18 +1128,10 @@ object GraphOps {
           interactionDirectedEdges(s, dir)), iters = 3)
         .orderBy(col("node"))
     }, Some(s"""
-      WITH inter AS (
-        SELECT DISTINCT concat('u:', CAST(user_id AS VARCHAR)) AS src,
-               concat('i:', CAST(COALESCE(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT), 0) AS VARCHAR)) AS dst
-        FROM events WHERE user_id IS NOT NULL),
-      nodes AS (SELECT src AS node FROM inter UNION SELECT dst FROM inter),
-      deg AS (SELECT src, count(*) AS outdeg FROM inter GROUP BY src),
-      ew AS (SELECT inter.src, inter.dst, deg.outdeg FROM inter JOIN deg USING (src)),
+      WITH ${directedRankEdgesSql},
       p AS (SELECT count(*) AS n FROM nodes),
       r0 AS (SELECT node, CAST(1000000 // n AS BIGINT) AS rank_m FROM nodes, p),
-      ${prDirIterSql(1)},
-      ${prDirIterSql(2)},
-      ${prDirIterSql(3)}
+      ${prItersSql("r.rank_m // ew.outdeg")}
       SELECT node, rank_m, rank_m / 1000000.0 AS rank_r
       FROM r3 ORDER BY node""")),
 
@@ -1213,9 +1181,7 @@ object GraphOps {
       ew AS (SELECT inter.src, inter.dst, inter.w, deg.outw FROM inter JOIN deg USING (src)),
       p AS (SELECT count(*) AS n FROM nodes),
       r0 AS (SELECT node, CAST(1000000 // n AS BIGINT) AS rank_m FROM nodes, p),
-      ${prWIterSql(1)},
-      ${prWIterSql(2)},
-      ${prWIterSql(3)}
+      ${prItersSql("(r.rank_m * ew.w) // ew.outw")}
       SELECT node, rank_m, rank_m / 1000000.0 AS rank_r
       FROM r3 ORDER BY node""")),
 
@@ -1230,13 +1196,8 @@ object GraphOps {
       pageRankMicros(edgeTableMemo(s, dir, "interaction", Seq("events"))(
         interactionEdges(s, dir)), iters = 3)
         .orderBy(col("node"))
-    }, Some("""
-      WITH inter AS (
-        SELECT DISTINCT concat('u:', CAST(user_id AS VARCHAR)) AS a,
-               concat('i:', CAST(COALESCE(TRY_CAST(json_extract_string(props, '$.k') AS BIGINT), 0) AS VARCHAR)) AS b
-        FROM events WHERE user_id IS NOT NULL),
-      e AS (SELECT a AS src, b AS dst FROM inter
-            UNION ALL SELECT b AS src, a AS dst FROM inter),
+    }, Some(s"""
+      WITH ${interactionEdgesSql("e")},
       deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
       ew AS (SELECT e.src, e.dst, deg.outdeg FROM e JOIN deg USING (src)),
       p AS (SELECT count(*) AS n FROM deg),
@@ -1285,12 +1246,7 @@ object GraphOps {
           col("converged2"), col("converged3"))
         .orderBy(col("node"))
     }, Some(s"""
-      WITH inter AS (
-        SELECT DISTINCT concat('u:', CAST(user_id AS VARCHAR)) AS a,
-               concat('i:', CAST(COALESCE(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT), 0) AS VARCHAR)) AS b
-        FROM events WHERE user_id IS NOT NULL),
-      e0 AS (SELECT a AS src, b AS dst FROM inter
-             UNION ALL SELECT b AS src, a AS dst FROM inter),
+      WITH ${interactionEdgesSql("e0")},
       ${kcoreSql(2, 6, "k2")},
       ${kcoreSql(3, 6, "k3")}
       SELECT a.node, COALESCE(d2.d, 0) AS deg_core2,
@@ -1335,12 +1291,7 @@ object GraphOps {
       val convCols = ladder.map(k => s"c$k.conv AS converged_k$k").mkString(", ")
       val convJoins = ladder.map(k => s"CROSS JOIN c${k}c c$k").mkString(" ")
       s"""
-      WITH inter AS (
-        SELECT DISTINCT concat('u:', CAST(user_id AS VARCHAR)) AS a,
-               concat('i:', CAST(COALESCE(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT), 0) AS VARCHAR)) AS b
-        FROM events WHERE user_id IS NOT NULL),
-      e0 AS (SELECT a AS src, b AS dst FROM inter
-             UNION ALL SELECT b AS src, a AS dst FROM inter),
+      WITH ${interactionEdgesSql("e0")},
       $chains,
       cor AS (SELECT node, CAST(MAX(k) AS BIGINT) AS coreness FROM (
                 $members) GROUP BY node)
@@ -1359,12 +1310,7 @@ object GraphOps {
       degreeAssortativityMicros(edgeTableMemo(s, dir, "interaction", Seq("events"))(
         interactionEdges(s, dir)))
     }, Some(s"""
-      WITH inter AS (
-        SELECT DISTINCT concat('u:', CAST(user_id AS VARCHAR)) AS a,
-               concat('i:', CAST(COALESCE(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT), 0) AS VARCHAR)) AS b
-        FROM events WHERE user_id IS NOT NULL),
-      e AS (SELECT a AS src, b AS dst FROM inter
-            UNION ALL SELECT b AS src, a AS dst FROM inter),
+      WITH ${interactionEdgesSql("e")},
       deg AS (SELECT src, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY src),
       s AS (SELECT CAST(count(*) AS BIGINT) AS m,
                    SUM(dj.d) AS sx, SUM(dk.d) AS sy, SUM(dj.d * dk.d) AS sxy,
@@ -1401,12 +1347,7 @@ object GraphOps {
         .groupBy(col("label")).agg(count(lit(1)).as("n_members"))
         .orderBy(col("n_members").desc, col("label"))
     }, Some(s"""
-      WITH inter AS (
-        SELECT DISTINCT concat('u:', CAST(user_id AS VARCHAR)) AS a,
-               concat('i:', CAST(COALESCE(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT), 0) AS VARCHAR)) AS b
-        FROM events WHERE user_id IS NOT NULL),
-      edges AS (SELECT a AS src, b AS dst FROM inter
-                UNION ALL SELECT b AS src, a AS dst FROM inter),
+      WITH ${interactionEdgesSql("edges")},
       l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
       ${lpaIterSql(1)},
       ${lpaIterSql(2)},
@@ -1437,12 +1378,7 @@ object GraphOps {
       kHopReach(interactionEdges(s, dir, maxUser = Some(60L)))
         .orderBy(col("node"))
     }, Some(s"""
-      WITH inter AS (
-        SELECT DISTINCT concat('u:', CAST(user_id AS VARCHAR)) AS a,
-               concat('i:', CAST(COALESCE(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT), 0) AS VARCHAR)) AS b
-        FROM events WHERE user_id IS NOT NULL AND user_id <= 60),
-      e AS (SELECT a AS src, b AS dst FROM inter
-            UNION ALL SELECT b AS src, a AS dst FROM inter),
+      WITH ${interactionEdgesSql("e", Some(60L))},
       hop2 AS (SELECT e1.src, e2.dst
                FROM e e1 JOIN e e2 ON e1.dst = e2.src),
       w2 AS (SELECT DISTINCT src, dst FROM
@@ -1559,12 +1495,7 @@ object GraphOps {
         .orderBy(col("n_cooc").desc, col("na"), col("nb"))
         .limit(40)
     }, Some(s"""
-      WITH inter AS (
-        SELECT DISTINCT concat('u:', CAST(user_id AS VARCHAR)) AS a,
-               concat('i:', CAST(COALESCE(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT), 0) AS VARCHAR)) AS b
-        FROM events WHERE user_id IS NOT NULL AND user_id <= 60),
-      e AS (SELECT a AS src, b AS dst FROM inter
-            UNION ALL SELECT b AS src, a AS dst FROM inter),
+      WITH ${interactionEdgesSql("e", Some(60L))},
       f0 AS (
         SELECT n.src AS start, w.w, n.src AS p0
         FROM (SELECT DISTINCT src FROM e) n
@@ -1602,12 +1533,7 @@ object GraphOps {
       val e = edgeTableMemo(s, dir, "interaction", Seq("events"))(interactionEdges(s, dir))
       modularityPpm(e, labelPropagation(e, iters = 3))
     }, Some(s"""
-      WITH inter AS (
-        SELECT DISTINCT concat('u:', CAST(user_id AS VARCHAR)) AS a,
-               concat('i:', CAST(COALESCE(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT), 0) AS VARCHAR)) AS b
-        FROM events WHERE user_id IS NOT NULL),
-      edges AS (SELECT a AS src, b AS dst FROM inter
-                UNION ALL SELECT b AS src, a AS dst FROM inter),
+      WITH ${interactionEdgesSql("edges")},
       l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
       ${lpaIterSql(1)},
       ${lpaIterSql(2)},
@@ -1702,13 +1628,8 @@ object GraphOps {
       // far more gracefully than the 41M-row wedge stream). Output
       // identical by construction; GraphOpsSpec pins equality.
       triangleCensusAdj(edgeTableMemo(s, dir)(
-        partCoPurchaseEdges(Tables(s, dir).lineitem))), Some("""
-      WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-      e AS (SELECT DISTINCT a.p AS pa, b.p AS pb
-            FROM li a JOIN li b ON a.o = b.o AND a.p < b.p),
-      deg AS (SELECT v, CAST(count(*) AS BIGINT) AS d
-              FROM (SELECT pa AS v FROM e UNION ALL SELECT pb AS v FROM e)
-              GROUP BY v),
+        partCoPurchaseEdges(Tables(s, dir).lineitem))), Some(s"""
+      WITH ${partDegreesSql},
       ori AS (SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND e.pa < e.pb)
                           THEN e.pa ELSE e.pb END AS u,
                      CASE WHEN da.d < db.d OR (da.d = db.d AND e.pa < e.pb)

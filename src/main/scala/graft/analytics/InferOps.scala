@@ -279,6 +279,16 @@ object InferOps {
     * ever globally sorted; the cross products run DECIMAL(38,0) so
     * corpus-scale n_a·n_b cannot overflow.
     */
+  /** Oracle inputs of the click-vs-purchase value tests (q193 KS, q345
+    * CvM): CTEs `base(v, ga)`, the per-value counts `pv(v, c0, c1)` and
+    * the one-row `tot(n0, n1)`. */
+  private val clickPurchaseCountsSql: String = """base AS (
+        SELECT CAST(floor(value * 1000000) AS BIGINT) AS v,
+               CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS ga
+        FROM events WHERE event_type IN ('click', 'purchase')),
+      pv AS (SELECT v, SUM(ga) AS c0, SUM(1 - ga) AS c1 FROM base GROUP BY v),
+      tot AS (SELECT CAST(SUM(c0) AS BIGINT) AS n0, CAST(SUM(c1) AS BIGINT) AS n1 FROM pv)"""
+
   /** The merged two-sample CDF table (v, c0, c1, n0, n1, cum0, cum1)
     * via the two-phase bucket decomposition — q193's kernel, shared
     * with q345's Cramér–von Mises (both are functionals of the same
@@ -482,20 +492,12 @@ object InferOps {
     * the relevant-count join is on the label dimension (broadcast).
     */
   def averagePrecision(emb: DataFrame, qLo: Long, qHi: Long, k: Int): DataFrame = {
-    val queries = emb.filter(col("vec_id").between(qLo, qHi))
-      .select(col("vec_id").as("q_id"), col("embedding").as("qvec"),
-        col("label").cast("long").as("q_label"))
-    val corpus = emb.filter(col("vec_id") > qHi)
-    val relc = corpus.groupBy(col("label").cast("long").as("q_label"))
+    val relc = emb.filter(col("vec_id") > qHi)
+      .groupBy(col("label").cast("long").as("q_label"))
       .agg(count(lit(1)).as("n_rel"))
     val wc = Window.partitionBy(col("q_id")).orderBy(col("rn"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = graft.text.Similarity
-      .topKPerQuery(corpus, queries.select(col("q_id"), col("qvec")), k, qidCol = "q_id")
-      .join(broadcast(queries.select(col("q_id"), col("q_label"))), Seq("q_id"))
-      .join(emb.select(col("vec_id"), col("label").cast("long").as("c_label")),
-        Seq("vec_id"))
-      .withColumn("hit", (col("c_label") === col("q_label")).cast("long"))
+    val ranked = EvalOps.labeledTopK(emb, qLo, qHi, k)
       .withColumn("ch", sum(col("hit")).over(wc))
     val per = ranked.groupBy(col("q_id"), col("q_label"))
       .agg(sum(when(col("hit") === 1L, expr("(1000000 * ch) DIV rn"))
@@ -998,13 +1000,8 @@ object InferOps {
         valueCol = expr("CAST(floor(value * 1000000) AS BIGINT)"),
         isA = col("event_type") === "click",
         isB = col("event_type") === "purchase")
-    }, Some("""
-      WITH base AS (
-        SELECT CAST(floor(value * 1000000) AS BIGINT) AS v,
-               CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS ga
-        FROM events WHERE event_type IN ('click', 'purchase')),
-      pv AS (SELECT v, SUM(ga) AS c0, SUM(1 - ga) AS c1 FROM base GROUP BY v),
-      tot AS (SELECT CAST(SUM(c0) AS BIGINT) AS n0, CAST(SUM(c1) AS BIGINT) AS n1 FROM pv),
+    }, Some(s"""
+      WITH ${clickPurchaseCountsSql},
       cum AS (SELECT v, SUM(c0) OVER (ORDER BY v) AS cum0,
                      SUM(c1) OVER (ORDER BY v) AS cum1 FROM pv),
       d AS (SELECT v, abs(CAST(cum0 AS HUGEINT) * n1 - CAST(cum1 AS HUGEINT) * n0) AS diff
@@ -1100,13 +1097,8 @@ object InferOps {
     //      ranking, the cumulative-hit precisions, and both DIVs.
     ("q196_avg_precision", (s: SparkSession, dir: String) => {
       averagePrecision(Tables(s, dir).embeddings, qLo = 1L, qHi = 20L, k = 10)
-    }, Some("""
-      WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv,
-                        CAST(label AS BIGINT) AS q_label
-                 FROM embeddings WHERE vec_id BETWEEN 1 AND 20),
-      c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-                   CAST(label AS BIGINT) AS c_label
-            FROM embeddings WHERE vec_id > 20),
+    }, Some(s"""
+      WITH ${EvalOps.retrievalSplitSql},
       relc AS (SELECT c_label AS q_label, CAST(count(*) AS BIGINT) AS n_rel
                FROM c GROUP BY c_label),
       r AS (SELECT q_id, q_label, vec_id, c_label,
@@ -1324,59 +1316,17 @@ object InferOps {
     //      filtering them before the running sum is identity-safe and
     //      both engines do it in the same order.
     ("q201_nelson_aalen", (s: SparkSession, dir: String) => {
-      val ev = Tables(s, dir).events
-        .filter(col("user_id").isNotNull)
-        .select(col("user_id"), col("event_type"), expr("CAST(ts AS DATE)").as("d"))
-        .transform(graft.Stage.mat)
-      val span = ev.agg(max(col("d")).as("d1"))
-      val entry = ev.groupBy(col("user_id")).agg(min(col("d")).as("ad"))
-      val conv = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id")).agg(min(col("d")).as("pd"))
-      val users = entry.join(conv, Seq("user_id"), "left")
-        .crossJoin(broadcast(span))
-        .selectExpr(
-          "CASE WHEN pd IS NOT NULL THEN datediff(pd, ad) ELSE datediff(d1, ad) END AS e_off",
-          "CAST(pd IS NOT NULL AS INT) AS is_death")
-      val days = users.groupBy(col("e_off"))
-        .agg(count(lit(1)).as("n_end"), sum(col("is_death")).cast("long").as("d"))
-      val tot = days.agg(sum(col("n_end")).as("n_total"))
       val wH = Window.orderBy(col("e_off")) // day-table sized
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      days.crossJoin(broadcast(tot))
-        .withColumn("cum_prev",
-          coalesce(sum(col("n_end")).over(Window.orderBy(col("e_off"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .selectExpr("e_off", "n_total - cum_prev AS n", "d")
+      TemporalOps.survivalRisk(s, dir)
         .filter(col("d") > 0)
         .withColumn("h_term_micros", expr("(1000000 * d) DIV n"))
         .withColumn("h_micros", sum(col("h_term_micros")).over(wH))
         .selectExpr("CAST(e_off AS BIGINT) AS day_off", "n AS n_risk",
           "d AS n_deaths", "h_term_micros", "h_micros")
         .orderBy(col("day_off"))
-    }, Some("""
-      WITH ev AS (
-        SELECT user_id, event_type, CAST(ts AS DATE) AS d
-        FROM events WHERE user_id IS NOT NULL),
-      span AS (SELECT MAX(d) AS d1 FROM ev),
-      entry AS (SELECT user_id, MIN(d) AS ad FROM ev GROUP BY user_id),
-      conv AS (SELECT user_id, MIN(d) AS pd FROM ev
-               WHERE event_type = 'purchase' GROUP BY user_id),
-      users AS (
-        SELECT CASE WHEN pd IS NOT NULL THEN datediff('day', ad, pd)
-                    ELSE datediff('day', ad, d1) END AS e_off,
-               CASE WHEN pd IS NOT NULL THEN 1 ELSE 0 END AS is_death
-        FROM entry LEFT JOIN conv USING (user_id) CROSS JOIN span),
-      days AS (
-        SELECT e_off, CAST(count(*) AS BIGINT) AS n_end,
-               CAST(SUM(is_death) AS BIGINT) AS d
-        FROM users GROUP BY e_off),
-      risk AS (
-        SELECT e_off,
-               CAST((SELECT SUM(n_end) FROM days) AS BIGINT)
-                 - CAST(COALESCE(SUM(n_end) OVER (ORDER BY e_off
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS n,
-               d
-        FROM days),
+    }, Some(s"""
+      WITH ${TemporalOps.survivalRiskSql},
       ev_days AS (
         SELECT e_off, n, d, (1000000 * d) // n AS h_term_micros
         FROM risk WHERE d > 0)
@@ -1515,14 +1465,7 @@ object InferOps {
     //      l, b, prev, and both error sums; the oracle's LIST
     //      accumulator avoids DuckDB's struct field-mutation order).
     ("q204_forecast_backtest", (s: SparkSession, dir: String) => {
-      val per = Tables(s, dir).events
-        .filter(col("user_id").isNotNull && col("value").isNotNull)
-        .selectExpr("user_id", "ts", "event_id",
-          "CAST(floor(value * 1000000) AS BIGINT) AS xm")
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sort_array(collect_list(struct(col("ts"), col("event_id"), col("xm"))))
-            .as("seq"))
+      val per = TemporalOps.userValueSeqs(s, dir)
         .selectExpr("user_id", "n_events",
           """aggregate(slice(transform(seq, e -> e.xm), 2, size(seq) - 1),
                named_struct('l', element_at(transform(seq, e -> e.xm), 1),
@@ -1548,11 +1491,8 @@ object InferOps {
           "sae_model", "sae_naive",
           "(1000000 * sae_model) DIV greatest(sae_naive, 1) AS mase_ppm")
       per.unionByName(zz).orderBy(col("user_id"))
-    }, Some("""
-      WITH f AS (
-        SELECT user_id, ts, event_id,
-               CAST(floor(value * 1000000) AS BIGINT) AS xm
-        FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL),
+    }, Some(s"""
+      WITH ${TemporalOps.userValueSql},
       folded AS (
         SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
                list_reduce(
@@ -2391,14 +2331,8 @@ object InferOps {
         valueCol = expr("CAST(floor(value * 1000000) AS BIGINT)"),
         isA = col("event_type") === "click",
         isB = col("event_type") === "purchase")
-    }, Some("""
-      WITH base AS (
-        SELECT CAST(floor(value * 1000000) AS BIGINT) AS v,
-               CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS ga
-        FROM events WHERE event_type IN ('click', 'purchase')),
-      pv AS (SELECT v, SUM(ga) AS c0, SUM(1 - ga) AS c1 FROM base GROUP BY v),
-      tot AS (SELECT CAST(SUM(c0) AS BIGINT) AS n0,
-                     CAST(SUM(c1) AS BIGINT) AS n1 FROM pv),
+    }, Some(s"""
+      WITH ${clickPurchaseCountsSql},
       cum AS (SELECT v, c0, c1, SUM(c0) OVER (ORDER BY v) AS cum0,
                      SUM(c1) OVER (ORDER BY v) AS cum1 FROM pv),
       w AS (SELECT c0 + c1 AS c,

@@ -445,6 +445,57 @@ object LLMOps {
     sel.toSeq.toDF("step", "center_id", "sel_sim_micros").orderBy(col("step"))
   }
 
+  /** The recall certificate of the single-query ANN indexes (q40 LSH,
+    * q45 IVF): the exact top-10 of `query` in `corpus`, each row flagged
+    * with whether `approx` recalled at least `minHits` of the ten. */
+  private def annTop10Recall(corpus: DataFrame, query: DataFrame,
+      approx: DataFrame, minHits: Int): DataFrame = {
+    val exact = Similarity.bruteForceTopK(corpus, query, 10)
+    val hits = exact.select(col("vec_id"))
+      .join(approx.select(col("vec_id")), Seq("vec_id"), "left_semi")
+      .agg(count(lit(1)).as("hits"))
+    exact.crossJoin(broadcast(hits))
+      .select(col("vec_id"), round(col("cos_sim"), 6).as("cos_sim_r"),
+        (col("hits") >= minHits).as("recall_ok"))
+      .orderBy(col("cos_sim_r").desc, col("vec_id"))
+  }
+
+  /** Oracle of [[annTop10Recall]] for vector 0 against the rest; a
+    * recall miss would flip `recall_ok` and fail the compare. */
+  private val annTop10Sql: String = """SELECT vec_id, cos_sim_r, TRUE AS recall_ok FROM (
+        SELECT vec_id,
+               round(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
+                 (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)), 6) AS cos_sim_r
+        FROM embeddings WHERE vec_id <> 0
+        ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]),
+                 (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)) DESC, vec_id
+        LIMIT 10)
+      ORDER BY cos_sim_r DESC, vec_id"""
+
+  /** The planted-manifest audit of the media near-dup detectors (q81
+    * image pHash, q84 audio fingerprint): per manifest pair of kind
+    * "exact" or `nearKind`, whether `pairs` recovered it within
+    * `maxHamming`, plus the detector's total pair count. `pairs` must be
+    * materialized — it feeds both the manifest join and the total, and
+    * without the barrier the decode and banded join run twice.
+    */
+  private def plantedPairAudit(s: SparkSession, pairs: DataFrame, nearKind: String,
+                               maxHamming: Int): DataFrame = {
+    import s.implicits._
+    val manifest = Multimodal.plantedPairs(nearKind).toDF("id_a", "id_b", "kind")
+    val total = pairs.agg(count(lit(1)).as("n_pairs_total"))
+    // pairs is o(n) by the banding argument — broadcast-sized here;
+    // the manifest side must survive the left join, so pairs builds.
+    manifest.join(broadcast(pairs), Seq("id_a", "id_b"), "left")
+      .crossJoin(broadcast(total))
+      .select(col("id_a"), col("id_b"), col("kind"),
+        col("hamming").isNotNull.as("recovered"),
+        coalesce(when(col("kind") === "exact", col("hamming") === 0)
+          .otherwise(col("hamming") <= maxHamming), lit(false)).as("ham_ok"),
+        col("n_pairs_total"))
+      .orderBy(col("id_a"), col("id_b"))
+  }
+
   val defs: Seq[(String, QFn, Option[String])] = Seq(
 
     // ---- deterministic negative sampling for contrastive training:
@@ -648,24 +699,14 @@ object LLMOps {
         .select(col("doc_id"), col("lang"),
           TextStats.langIdPredicted(col("text")).as("lang_pred"))
         .orderBy(col("doc_id"))
-    }, Some {
-      def score(lang: String): String = {
-        val words = TextStats.langProfiles.toMap.apply(lang)
-        s"len(list_filter(regexp_split_to_array(lower(text), '$ws+'), t -> t IN (${words.map("'" + _ + "'").mkString(",")})))"
-      }
-      s"""
+    }, Some(s"""
       WITH scored AS (
         SELECT doc_id, lang,
-               ${score("en")} AS s_en, ${score("de")} AS s_de,
-               ${score("es")} AS s_es, ${score("fr")} AS s_fr
+               ${TextStats.langScoresSql}
         FROM documents)
       SELECT doc_id, lang,
-        CASE WHEN s_fr >= s_es AND s_fr >= s_en AND s_fr >= s_de THEN 'fr'
-             WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
-             WHEN s_en >= s_de THEN 'en'
-             ELSE 'de' END AS lang_pred
-      FROM scored ORDER BY doc_id"""
-    }),
+        ${TextStats.langPredSql} AS lang_pred
+      FROM scored ORDER BY doc_id""")),
 
     // ---- brute-force cosine top-k against a fixed query vector ----
     ("q35_cosine_topk", (s: SparkSession, dir: String) => {
@@ -722,23 +763,7 @@ object LLMOps {
           threshold = 0.8, numHashes = 16, bands = 16)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 9).as("jaccard_r"))
         .orderBy(col("id_a"), col("id_b"))
-    }, Some(s"""
-      WITH sh AS (
-        SELECT doc_id AS id,
-               CASE WHEN len(toks) = 0 THEN []::VARCHAR[]
-                    ELSE list_distinct(list_transform(
-                      range(1, greatest(len(toks) - 2, 1) + 1),
-                      i -> array_to_string(toks[i:i+2], ' '))) END AS s
-        FROM (SELECT doc_id,
-                     list_filter(regexp_split_to_array(lower(text), '$ws+'), t -> t <> '') AS toks
-              FROM documents WHERE doc_id < 500))
-      SELECT a.id AS id_a, b.id AS id_b,
-             round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                   / greatest(len(list_distinct(list_concat(a.s, b.s))), 1), 9) AS jaccard_r
-      FROM sh a, sh b WHERE a.id < b.id
-        AND CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-            / greatest(len(list_distinct(list_concat(a.s, b.s))), 1) >= 0.8
-      ORDER BY id_a, id_b""")),
+    }, Some(Dedup.jaccardPairsSql("documents WHERE doc_id < 500", 0.8))),
 
     // ---- SimHash fingerprints + hamming to doc 0, driver-verified: the
     //      bit-majority algorithm is hash-agnostic, so the declared query
@@ -806,24 +831,8 @@ object LLMOps {
         .select(col("embedding").as("qvec"))
       val approx = Similarity.lshTopK(corpus, query, 10,
         nPlanes = 4, dim = 64, probeHamming = 1)
-      val exact = Similarity.bruteForceTopK(corpus, query, 10)
-      val hits = exact.select(col("vec_id"))
-        .join(approx.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      exact.crossJoin(broadcast(hits))
-        .select(col("vec_id"), round(col("cos_sim"), 6).as("cos_sim_r"),
-          (col("hits") >= 3).as("recall_ok"))
-        .orderBy(col("cos_sim_r").desc, col("vec_id"))
-    }, Some("""
-      SELECT vec_id, cos_sim_r, TRUE AS recall_ok FROM (
-        SELECT vec_id,
-               round(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-                 (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)), 6) AS cos_sim_r
-        FROM embeddings WHERE vec_id <> 0
-        ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-                 (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)) DESC, vec_id
-        LIMIT 10)
-      ORDER BY cos_sim_r DESC, vec_id""")),
+      annTop10Recall(corpus, query, approx, minHits = 3)
+    }, Some(annTop10Sql)),
 
     // ---- embedding-cosine near-dup pairs, threshold-aware dispatch
     //      (Similarity.nearDupPairs). At threshold 0.35 that resolves to
@@ -871,9 +880,7 @@ object LLMOps {
           array_join(transform(fps, f => f.cast("string")), ",").as("fps"))
         .orderBy(col("doc_id"))
     }, Some(s"""
-      WITH t AS (SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '$ws+'), x -> x <> '') AS toks
-                 FROM documents),
+      WITH ${TextStats.docTokensSql},
       g AS (SELECT doc_id,
               CASE WHEN len(toks) = 0 THEN []::VARCHAR[]
                    ELSE list_transform(range(1, greatest(len(toks) - 2, 1) + 1),
@@ -914,24 +921,8 @@ object LLMOps {
         .select(col("embedding").as("qvec"))
       val approx = Similarity.ivfTopK(assigned, centroids.toDF("centroid_id", "cvec"),
         query, k = 10, nProbe = 3)
-      val exact = Similarity.bruteForceTopK(corpus, query, 10)
-      val hits = exact.select(col("vec_id"))
-        .join(approx.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      exact.crossJoin(broadcast(hits))
-        .select(col("vec_id"), round(col("cos_sim"), 6).as("cos_sim_r"),
-          (col("hits") >= 5).as("recall_ok"))
-        .orderBy(col("cos_sim_r").desc, col("vec_id"))
-    }, Some("""
-      SELECT vec_id, cos_sim_r, TRUE AS recall_ok FROM (
-        SELECT vec_id,
-               round(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-                 (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)), 6) AS cos_sim_r
-        FROM embeddings WHERE vec_id <> 0
-        ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-                 (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)) DESC, vec_id
-        LIMIT 10)
-      ORDER BY cos_sim_r DESC, vec_id""")),
+      annTop10Recall(corpus, query, approx, minHits = 5)
+    }, Some(annTop10Sql)),
 
     // ---- multimodal feature extraction, certification-oracled (VERDICT
     //      r6 #1, the q40/q45 playbook): DuckDB cannot decode PNG/WAV/
@@ -986,23 +977,9 @@ object LLMOps {
     //      pins the full (deterministic, seeded) pair count so spurious
     //      extra pairs also hash-fail. Oracle: manifest literals + TRUE.
     ("q81_image_phash", (s: SparkSession, dir: String) => {
-      import s.implicits._
       val corpus = Multimodal.syntheticImageCorpus(s, 100)
-      // mat: pairs feeds BOTH the manifest join and the total count —
-      // without the barrier the decode + banded join run twice (r7 review)
-      val pairs = graft.Stage.mat(Multimodal.imagePhashNearDups(corpus, maxHamming = 8))
-      val manifest = Multimodal.plantedPairs("edit").toDF("id_a", "id_b", "kind")
-      val total = pairs.agg(count(lit(1)).as("n_pairs_total"))
-      // pairs is o(n) by the banding argument — broadcast-sized here;
-      // the manifest side must survive the left join, so pairs builds.
-      manifest.join(broadcast(pairs), Seq("id_a", "id_b"), "left")
-        .crossJoin(broadcast(total))
-        .select(col("id_a"), col("id_b"), col("kind"),
-          col("hamming").isNotNull.as("recovered"),
-          coalesce(when(col("kind") === "exact", col("hamming") === 0)
-            .otherwise(col("hamming") <= 8), lit(false)).as("ham_ok"),
-          col("n_pairs_total"))
-        .orderBy(col("id_a"), col("id_b"))
+      plantedPairAudit(s, graft.Stage.mat(
+        Multimodal.imagePhashNearDups(corpus, maxHamming = 8)), "edit", maxHamming = 8)
     }, Some(imagePhashOracle)),
 
     // ---- audio energy-contour fingerprint dedup, certification-oracled
@@ -1020,20 +997,9 @@ object LLMOps {
     //      `n_pairs_total` pins the deterministic pair count. Oracle:
     //      manifest literals + TRUE.
     ("q84_audio_fingerprint", (s: SparkSession, dir: String) => {
-      import s.implicits._
       val corpus = Multimodal.syntheticAudioCorpus(s, 100)
-      // mat: pairs feeds both the manifest join and the total count
-      val pairs = graft.Stage.mat(Multimodal.audioFingerprintNearDups(corpus, maxHamming = 5))
-      val manifest = Multimodal.plantedPairs("gain").toDF("id_a", "id_b", "kind")
-      val total = pairs.agg(count(lit(1)).as("n_pairs_total"))
-      manifest.join(broadcast(pairs), Seq("id_a", "id_b"), "left")
-        .crossJoin(broadcast(total))
-        .select(col("id_a"), col("id_b"), col("kind"),
-          col("hamming").isNotNull.as("recovered"),
-          coalesce(when(col("kind") === "exact", col("hamming") === 0)
-            .otherwise(col("hamming") <= 5), lit(false)).as("ham_ok"),
-          col("n_pairs_total"))
-        .orderBy(col("id_a"), col("id_b"))
+      plantedPairAudit(s, graft.Stage.mat(
+        Multimodal.audioFingerprintNearDups(corpus, maxHamming = 5)), "gain", maxHamming = 5)
     }, Some(audioFingerprintOracle)),
 
     // ---- Johnson–Lindenstrauss random projection: the sign matrix
@@ -1074,9 +1040,7 @@ object LLMOps {
           round(graft.text.TextStats.repetitionRatio(col("text"), 3), 6).as("rep3"))
         .orderBy(col("doc_id"))
     }, Some(s"""
-      WITH t AS (SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '$ws+'), x -> x <> '') AS toks
-                 FROM documents),
+      WITH ${TextStats.docTokensSql},
       g AS (SELECT doc_id,
               CASE WHEN len(toks) = 0 THEN []::VARCHAR[]
                    ELSE list_transform(range(1, greatest(len(toks) - 1, 1) + 1),

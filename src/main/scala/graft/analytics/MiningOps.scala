@@ -580,12 +580,7 @@ object MiningOps {
         .orderBy(col("cluster_id"))
     }, Some(s"""
       WITH RECURSIVE ${pairsSql()},
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION SELECT id_b, id_a FROM pairs),
-      reach(n, r) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, reach.r FROM reach JOIN edges e ON reach.n = e.src),
+      ${Dedup.pairReachSql},
       labels AS (SELECT n AS id, MIN(r) AS cluster_id FROM reach GROUP BY n),
       sizes AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_docs
                 FROM labels GROUP BY cluster_id),
@@ -680,22 +675,13 @@ object MiningOps {
       val p = Tables(s, dir).documents.select(col("lang").as("act"),
         TextStats.langIdPredicted(col("text")).as("pred"))
       classificationReport(p).orderBy(col("lang"))
-    }, Some {
-      def score(lang: String): String = {
-        val words = TextStats.langProfiles.toMap.apply(lang)
-        s"len(list_filter(regexp_split_to_array(lower(text), '$ws+'), t -> t IN (${words.map("'" + _ + "'").mkString(",")})))"
-      }
-      s"""
+    }, Some(s"""
       WITH scored AS (
         SELECT doc_id, lang AS act,
-               ${score("en")} AS s_en, ${score("de")} AS s_de,
-               ${score("es")} AS s_es, ${score("fr")} AS s_fr
+               ${TextStats.langScoresSql}
         FROM documents),
       p AS (SELECT act,
-              CASE WHEN s_fr >= s_es AND s_fr >= s_en AND s_fr >= s_de THEN 'fr'
-                   WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
-                   WHEN s_en >= s_de THEN 'en'
-                   ELSE 'de' END AS pred
+              ${TextStats.langPredSql} AS pred
             FROM scored),
       classes AS (SELECT act AS lang FROM p UNION SELECT pred FROM p),
       ac AS (SELECT act AS lang, CAST(count(*) AS BIGINT) AS n_act FROM p GROUP BY act),
@@ -730,8 +716,7 @@ object MiningOps {
                CAST(SUM(recall_micros) // count(*) AS BIGINT),
                CAST(SUM(f1_micros) // count(*) AS BIGINT)
         FROM m2)
-      ORDER BY lang"""
-    }),
+      ORDER BY lang""")),
 
     // ---- frequent part triples: top-20 canonically-ordered 3-item
     //      combinations by exact basket support (>= 2). The oracle
@@ -983,12 +968,7 @@ object MiningOps {
         .orderBy(col("cluster_id"))
     }, Some(s"""
       WITH RECURSIVE ${pairsSql()},
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION SELECT id_b, id_a FROM pairs),
-      reach(n, r) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, reach.r FROM reach JOIN edges e ON reach.n = e.src),
+      ${Dedup.pairReachSql},
       labels AS (SELECT n AS doc_id, min(r) AS cluster_id FROM reach GROUP BY n),
       ranked AS (
         SELECT l.cluster_id, l.doc_id, d.n_chars,

@@ -101,6 +101,15 @@ object Quantiles {
     */
   def rawSql(src: String, psSql: String): String = {
     val clean = s"SELECT g, x FROM ($src) WHERE x IS NOT NULL"
+    // each value's equal-width bucket b within its group's [min, max]
+    val bucketed = s"""SELECT s.g, s.x,
+                     CASE WHEN st.mx = st.mn THEN 0
+                          ELSE CAST(least(${B - 1}.0,
+                            floor(((s.x - st.mn) / (st.mx - st.mn)) * $B)) AS BIGINT)
+                     END AS b
+              FROM ($clean) s
+              JOIN (SELECT g, MIN(x) AS mn, MAX(x) AS mx
+                    FROM ($clean) GROUP BY g) st USING (g)"""
     s"""SELECT vp.g, vp.p,
                MIN(CASE WHEN vcum >= klo THEN x END)
                  + (MIN(CASE WHEN vcum >= khi THEN x END)
@@ -112,14 +121,7 @@ object Quantiles {
                    SUM(count(*)) OVER (PARTITION BY wb.g, wb.b ORDER BY wb.x)
                      + cand.cum_start AS vcum
             FROM (
-              SELECT s.g, s.x,
-                     CASE WHEN st.mx = st.mn THEN 0
-                          ELSE CAST(least(${B - 1}.0,
-                            floor(((s.x - st.mn) / (st.mx - st.mn)) * $B)) AS BIGINT)
-                     END AS b
-              FROM ($clean) s
-              JOIN (SELECT g, MIN(x) AS mn, MAX(x) AS mx
-                    FROM ($clean) GROUP BY g) st USING (g)) wb
+              $bucketed) wb
             JOIN (
               SELECT DISTINCT bc.g, bc.b, bc.cum_start
               FROM (
@@ -128,14 +130,7 @@ object Quantiles {
                 FROM (
                   SELECT wb2.g, wb2.b, CAST(count(*) AS BIGINT) AS c
                   FROM (
-                    SELECT s.g, s.x,
-                           CASE WHEN st.mx = st.mn THEN 0
-                                ELSE CAST(least(${B - 1}.0,
-                                  floor(((s.x - st.mn) / (st.mx - st.mn)) * $B)) AS BIGINT)
-                           END AS b
-                    FROM ($clean) s
-                    JOIN (SELECT g, MIN(x) AS mn, MAX(x) AS mx
-                          FROM ($clean) GROUP BY g) st USING (g)) wb2
+                    $bucketed) wb2
                   GROUP BY wb2.g, wb2.b)) bc
               JOIN (
                 SELECT g, p, CAST(floor((n - 1) * p) AS BIGINT) + 1 AS klo,

@@ -150,6 +150,28 @@ object Sampling {
         (round(col("s"), 6) > 0.0).as("keep"))
   }
 
+  /** DuckDB twin of [[dsirLogWeights]] as q95/q187 declare it (target =
+    * the English slice, 512 buckets): CTEs `tb(doc_id, is_target, b)`,
+    * the bucket counts and `lr(b, lr)`, the round-6 bucket log-ratio. */
+  private[analytics] val dsirRatioSql: String = s"""tb AS (
+        SELECT doc_id, lang = 'en' AS is_target,
+               ${TextStats.portableHash64Sql("w")} % 512 AS b
+        FROM (SELECT doc_id, lang,
+                     unnest(list_filter(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+'),
+                                        x -> x <> '')) AS w
+              FROM documents)),
+      raw AS (SELECT b, CAST(count(*) AS BIGINT) AS cr FROM tb GROUP BY b),
+      tgt AS (SELECT b, CAST(count(*) AS BIGINT) AS ct FROM tb WHERE is_target GROUP BY b),
+      tot AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM tb) AS nr,
+                     (SELECT CAST(count(*) AS BIGINT) FROM tb WHERE is_target) AS nt),
+      lr AS (
+        SELECT raw.b,
+               round(ln(((CAST(COALESCE(tgt.ct, 0) AS DOUBLE) + 1.0)
+                           * (CAST(tot.nr AS DOUBLE) + 512.0))
+                        / ((CAST(raw.cr AS DOUBLE) + 1.0)
+                           * (CAST(tot.nt AS DOUBLE) + 512.0))), 6) AS lr
+        FROM raw LEFT JOIN tgt USING (b), tot)"""
+
   /** Weighted sampling WITHOUT replacement, deterministically: the
     * Efraimidis–Spirakis exponential-clock scheme. Each row draws a
     * uniform u from its portable hash bucket (ppm granularity) and gets

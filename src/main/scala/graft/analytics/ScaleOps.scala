@@ -31,6 +31,128 @@ object ScaleOps {
     graft.Memo.value("pq_codebook", dir, Seq("embeddings"))(
       graft.text.PQ.pqTrain(Tables(s, dir).embeddings, m = 16, k = 16, dim = 64))
 
+  /** The order-date × customer-key 16×16 bucket grid the layout
+    * advisors (q303/q314) cluster: (db, cb) per order. */
+  private def zoneBuckets(s: SparkSession, dir: String): DataFrame = {
+    val o = Tables(s, dir).orders.selectExpr("o_custkey",
+      "CAST(datediff(o_orderdate, DATE '1970-01-01') AS BIGINT) AS od")
+    val st = o.agg(min(col("od")).as("mn"), max(col("od")).as("mx"),
+      min(col("o_custkey")).as("kmn"), max(col("o_custkey")).as("kmx"))
+    o.crossJoin(broadcast(st)).selectExpr(
+      "((od - mn) * 16) DIV (mx - mn + 1) AS db",
+      "((o_custkey - kmn) * 16) DIV (kmx - kmn + 1) AS cb")
+  }
+
+  /** DuckDB twin of [[zoneBuckets]]: CTEs `o`, `st` and `b0(db, cb)`. */
+  private val zoneBucketsSql: String = """o AS (SELECT o_custkey,
+               CAST(datediff('day', DATE '1970-01-01', o_orderdate) AS BIGINT) AS od
+             FROM orders),
+      st AS (SELECT MIN(od) AS mn, MAX(od) AS mx,
+                    MIN(o_custkey) AS kmn, MAX(o_custkey) AS kmx FROM o),
+      b0 AS (SELECT ((od - mn) * 16) // (mx - mn + 1) AS db,
+                    ((o_custkey - kmn) * 16) // (kmx - kmn + 1) AS cb
+             FROM o CROSS JOIN st)"""
+
+  /** Morton (Z-order) code of the (db, cb) cell, its bits spelled with
+    * the engine's integer division `div` and % (no shift builtins). */
+  private def mortonExpr(div: String): String = {
+    def bit(v: String, i: Int) = s"(($v $div ${1 << i}) % 2)"
+    (0 to 3).map(i =>
+      s"${bit("db", i)} * ${1 << (2 * i)} + ${bit("cb", i)} * ${1 << (2 * i + 1)}")
+      .mkString(" + ")
+  }
+
+  /** Per-zone footer stats of an advisor layout: row count, (db, cb)
+    * bounds and the three predicates' match counts. */
+  private def zoneStats(base: DataFrame, zcol: String): DataFrame = base
+    .groupBy(col(zcol).as("zone"))
+    .agg(count(lit(1)).as("n_rows"),
+      min(col("db")).as("db_min"), max(col("db")).as("db_max"),
+      min(col("cb")).as("cb_min"), max(col("cb")).as("cb_max"),
+      sum(col("hit_db")).as("m_db"), sum(col("hit_cb")).as("m_cb"),
+      sum(col("hit_both")).as("m_both"))
+
+  /** Whether each predicate's range intersects a zone's bounding box. */
+  private val zoneSurvives: Seq[String] = Seq(
+    "CAST(db_max >= 3 AND db_min <= 6 AS BIGINT) AS s_db",
+    "CAST(cb_max >= 5 AND cb_min <= 9 AS BIGINT) AS s_cb",
+    """CAST(db_max >= 3 AND db_min <= 6
+        AND cb_max >= 5 AND cb_min <= 9 AS BIGINT) AS s_both""")
+
+  /** DuckDB twin of [[zoneStats]] plus [[zoneSurvives]] for one layout
+    * over CTE `base`. */
+  private def zoneStatsSql(zcol: String, layout: String): String = s"""
+        SELECT '$layout' AS layout, $zcol AS zone, CAST(count(*) AS BIGINT) AS n_rows,
+               CAST(SUM(hit_db) AS BIGINT) AS m_db,
+               CAST(SUM(hit_cb) AS BIGINT) AS m_cb,
+               CAST(SUM(hit_both) AS BIGINT) AS m_both,
+               CAST(MAX(db) >= 3 AND MIN(db) <= 6 AS BIGINT) AS s_db,
+               CAST(MAX(cb) >= 5 AND MIN(cb) <= 9 AS BIGINT) AS s_cb,
+               CAST(MAX(db) >= 3 AND MIN(db) <= 6
+                 AND MAX(cb) >= 5 AND MIN(cb) <= 9 AS BIGINT) AS s_both
+        FROM base GROUP BY $zcol"""
+
+  /** One advisor row per (layout, predicate): how many zones the footer
+    * stats keep, how many rows those zones force through the scan, and
+    * the true match count they contain. */
+  private def zoneSummary(per: DataFrame): DataFrame = {
+    def summary(p: String) = per.groupBy(col("layout")).agg(
+        count(lit(1)).as("n_zones"),
+        sum(col(s"s_$p")).as("zones_hit"),
+        sum(when(col(s"s_$p") === 1L, col("n_rows")).otherwise(0L)).as("rows_scanned"),
+        sum(col(s"m_$p")).as("rows_matched"),
+        sum(col("n_rows")).as("rows_total"))
+      .selectExpr("layout", s"'$p' AS pred", "n_zones", "zones_hit",
+        "rows_scanned", "rows_matched", "rows_total")
+    summary("db").unionByName(summary("cb")).unionByName(summary("both"))
+      .orderBy(col("layout"), col("pred"))
+  }
+
+  /** DuckDB twin of [[zoneSummary]] over CTE `per`. */
+  private val zoneSummarySql: String = Seq("db", "cb", "both").map(p => s"""
+        SELECT layout, '$p' AS pred, CAST(count(*) AS BIGINT) AS n_zones,
+               CAST(SUM(s_$p) AS BIGINT) AS zones_hit,
+               CAST(SUM(CASE WHEN s_$p = 1 THEN n_rows ELSE 0 END) AS BIGINT) AS rows_scanned,
+               CAST(SUM(m_$p) AS BIGINT) AS rows_matched,
+               CAST(SUM(n_rows) AS BIGINT) AS rows_total
+        FROM per GROUP BY layout""").mkString("\n      UNION ALL ") + "\n      ORDER BY layout, pred"
+
+  /** Oracle of the ANN recall audits (q110 IVF, q116 PQ-ADC): each of
+    * queries 1–10's exact top-1 neighbour among vectors 11+, which the
+    * shortlist must recall. */
+  private val annTop1Sql: String = """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
+                 FROM embeddings WHERE vec_id BETWEEN 1 AND 10),
+      c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+            FROM embeddings WHERE vec_id > 10),
+      s AS (SELECT q_id, vec_id, list_cosine_similarity(v, qv) AS cs FROM c, q),
+      r AS (SELECT q_id, vec_id, cs,
+                   row_number() OVER (PARTITION BY q_id ORDER BY cs DESC, vec_id) AS rn
+            FROM s)
+      SELECT q_id, vec_id AS top1_id, round(cs, 6) AS top1_cos_r, TRUE AS recall_ok
+      FROM r WHERE rn = 1 ORDER BY q_id"""
+
+  /** Exact hard-negative ranking the q120/q128 oracles share: CTEs
+    * `q`, `c`, `s` and `r`, every other-label candidate ranked by cosine
+    * to each of queries 1–10 (`rnk`). */
+  private val hardNegRankSql: String = """q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv, label AS ql
+                 FROM embeddings WHERE vec_id BETWEEN 1 AND 10),
+      c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
+            FROM embeddings WHERE vec_id > 10),
+      s AS (SELECT q.q_id, c.vec_id, list_cosine_similarity(c.v, q.qv) AS cs
+            FROM c, q WHERE c.label <> q.ql),
+      r AS (SELECT q_id, vec_id, cs,
+                   row_number() OVER (PARTITION BY q_id ORDER BY cs DESC, vec_id) AS rnk
+            FROM s)"""
+
+  /** The unit start vector `x0` and three unrolled power iterations
+    * (`x1`..`x3`) over the centered table `cmt` — the first-component
+    * loop shared by the q130 and q133 oracles. */
+  private val pc1ItersSql: String = s"""x0 AS (SELECT list_transform(range(1, 65),
+               j -> CAST(CASE WHEN j = 1 THEN 1000000 ELSE 0 END AS BIGINT)) AS xm),
+      ${graft.text.Similarity.powerIterSql(1, 64)},
+      ${graft.text.Similarity.powerIterSql(2, 64)},
+      ${graft.text.Similarity.powerIterSql(3, 64)}"""
+
   val defs: Seq[(String, QFn, Option[String])] = Seq(
 
     // ---- zone-map data-skipping advisor: the min/max-per-zone index a
@@ -835,23 +957,7 @@ object ScaleOps {
       Dedup.jaccardJoinPrefix(Tables(s, dir).documents, threshold = 0.4)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 9).as("jaccard_r"))
         .orderBy(col("id_a"), col("id_b"))
-    }, Some(s"""
-      WITH sh AS (
-        SELECT doc_id AS id,
-               CASE WHEN len(toks) = 0 THEN []::VARCHAR[]
-                    ELSE list_distinct(list_transform(
-                      range(1, greatest(len(toks) - 2, 1) + 1),
-                      i -> array_to_string(toks[i:i+2], ' '))) END AS s
-        FROM (SELECT doc_id,
-                     list_filter(regexp_split_to_array(lower(text), '$ws+'), t -> t <> '') AS toks
-              FROM documents))
-      SELECT a.id AS id_a, b.id AS id_b,
-             round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                   / greatest(len(list_distinct(list_concat(a.s, b.s))), 1), 9) AS jaccard_r
-      FROM sh a, sh b WHERE a.id < b.id
-        AND CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-            / greatest(len(list_distinct(list_concat(a.s, b.s))), 1) >= 0.4
-      ORDER BY id_a, id_b""")),
+    }, Some(Dedup.jaccardPairsSql("documents", 0.4))),
 
     // ---- Bloom-filter decontamination with a no-false-negative
     //      certification (the q42 playbook: approximate operator +
@@ -889,17 +995,7 @@ object ScaleOps {
             .as("ok_no_fn"))
         .orderBy(col("doc_id"))
     }, Some(s"""
-      WITH b AS (
-        SELECT DISTINCT unnest(list_distinct(list_transform(
-          range(1, greatest(len(regexp_split_to_array(lower(text), '$ws+')) - 2, 1) + 1),
-          i -> array_to_string(regexp_split_to_array(lower(text), '$ws+')[i:i+2], ' ')))) AS sh
-        FROM documents WHERE doc_id % 50 = 0),
-      c AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-          range(1, greatest(len(regexp_split_to_array(lower(text), '$ws+')) - 2, 1) + 1),
-          i -> array_to_string(regexp_split_to_array(lower(text), '$ws+')[i:i+2], ' ')))) AS sh
-        FROM documents WHERE doc_id % 50 <> 0),
-      h AS (SELECT doc_id, count(*) AS n_shared FROM c JOIN b USING (sh) GROUP BY doc_id)
+      WITH ${Dedup.contaminationHitsSql}
       SELECT d.doc_id,
         CAST(COALESCE(h.n_shared, 0) AS BIGINT) AS n_shared,
         COALESCE(h.n_shared, 0) > 0 AS contaminated,
@@ -994,24 +1090,7 @@ object ScaleOps {
           isTarget = col("lang") === "en", buckets = 512)
         .orderBy(col("doc_id"))
     }, Some(s"""
-      WITH tb AS (
-        SELECT doc_id, lang = 'en' AS is_target,
-               ${TextStats.portableHash64Sql("w")} % 512 AS b
-        FROM (SELECT doc_id, lang,
-                     unnest(list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                                        x -> x <> '')) AS w
-              FROM documents)),
-      raw AS (SELECT b, CAST(count(*) AS BIGINT) AS cr FROM tb GROUP BY b),
-      tgt AS (SELECT b, CAST(count(*) AS BIGINT) AS ct FROM tb WHERE is_target GROUP BY b),
-      tot AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM tb) AS nr,
-                     (SELECT CAST(count(*) AS BIGINT) FROM tb WHERE is_target) AS nt),
-      lr AS (
-        SELECT raw.b,
-               round(ln(((CAST(COALESCE(tgt.ct, 0) AS DOUBLE) + 1.0)
-                           * (CAST(tot.nr AS DOUBLE) + 512.0))
-                        / ((CAST(raw.cr AS DOUBLE) + 1.0)
-                           * (CAST(tot.nt AS DOUBLE) + 512.0))), 6) AS lr
-        FROM raw LEFT JOIN tgt USING (b), tot)
+      WITH ${graft.analytics.Sampling.dsirRatioSql}
       SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
              round(CAST(SUM(CAST(lr AS DECIMAL(25,6))) AS DOUBLE), 6) AS logw_r,
              round(CAST(SUM(CAST(lr AS DECIMAL(25,6))) AS DOUBLE), 6) > 0.0 AS keep
@@ -1043,24 +1122,7 @@ object ScaleOps {
           """round(CAST(sw AS DOUBLE) * CAST(sw AS DOUBLE)
                    / CAST(sw2 AS DOUBLE) / n_docs, 6) AS ess_frac_r""")
     }, Some(s"""
-      WITH tb AS (
-        SELECT doc_id, lang = 'en' AS is_target,
-               ${TextStats.portableHash64Sql("w")} % 512 AS b
-        FROM (SELECT doc_id, lang,
-                     unnest(list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                                        x -> x <> '')) AS w
-              FROM documents)),
-      raw AS (SELECT b, CAST(count(*) AS BIGINT) AS cr FROM tb GROUP BY b),
-      tgt AS (SELECT b, CAST(count(*) AS BIGINT) AS ct FROM tb WHERE is_target GROUP BY b),
-      tot AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM tb) AS nr,
-                     (SELECT CAST(count(*) AS BIGINT) FROM tb WHERE is_target) AS nt),
-      lr AS (
-        SELECT raw.b,
-               round(ln(((CAST(COALESCE(tgt.ct, 0) AS DOUBLE) + 1.0)
-                           * (CAST(tot.nr AS DOUBLE) + 512.0))
-                        / ((CAST(raw.cr AS DOUBLE) + 1.0)
-                           * (CAST(tot.nt AS DOUBLE) + 512.0))), 6) AS lr
-        FROM raw LEFT JOIN tgt USING (b), tot),
+      WITH ${graft.analytics.Sampling.dsirRatioSql},
       docw AS (
         SELECT doc_id,
                round(exp(round(CAST(SUM(CAST(lr AS DECIMAL(25,6))) AS DOUBLE), 6)), 9) AS w
@@ -1129,27 +1191,7 @@ object ScaleOps {
           score = TextStats.tokenCount(col("text")).cast("long"))
         .orderBy(col("doc_id"))
     }, Some(s"""
-      WITH RECURSIVE sh AS (
-        SELECT doc_id AS id,
-               CASE WHEN len(toks) = 0 THEN []::VARCHAR[]
-                    ELSE list_distinct(list_transform(
-                      range(1, greatest(len(toks) - 2, 1) + 1),
-                      i -> array_to_string(toks[i:i+2], ' '))) END AS s
-        FROM (SELECT doc_id,
-                     list_filter(regexp_split_to_array(lower(text), '$ws+'), t -> t <> '') AS toks
-              FROM documents WHERE doc_id < 500)),
-      pairs AS (
-        SELECT a.id AS id_a, b.id AS id_b FROM sh a, sh b
-        WHERE a.id < b.id
-          AND CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / greatest(len(list_distinct(list_concat(a.s, b.s))), 1) >= 0.8),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION SELECT id_b, id_a FROM pairs),
-      reach(n, r) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, reach.r FROM reach JOIN edges e ON reach.n = e.src),
-      labels AS (SELECT n AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY n),
+      WITH RECURSIVE ${Dedup.nearDupLabelsSql},
       d AS (
         SELECT doc_id,
                COALESCE(l.cluster_id, doc_id) AS cluster_id,
@@ -1368,23 +1410,14 @@ object ScaleOps {
           round(col("n_docs").cast("double") / col("n_label").cast("double"), 6)
             .as("cell_recall_r"))
         .orderBy(col("lang"), col("lang_pred"))
-    }, Some {
-      def score(lang: String): String = {
-        val words = TextStats.langProfiles.toMap.apply(lang)
-        s"len(list_filter(regexp_split_to_array(lower(text), '$ws+'), t -> t IN (${words.map("'" + _ + "'").mkString(",")})))"
-      }
-      s"""
+    }, Some(s"""
       WITH scored AS (
         SELECT doc_id, lang,
-               ${score("en")} AS s_en, ${score("de")} AS s_de,
-               ${score("es")} AS s_es, ${score("fr")} AS s_fr
+               ${TextStats.langScoresSql}
         FROM documents),
       pred AS (
         SELECT lang,
-          CASE WHEN s_fr >= s_es AND s_fr >= s_en AND s_fr >= s_de THEN 'fr'
-               WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
-               WHEN s_en >= s_de THEN 'en'
-               ELSE 'de' END AS lang_pred
+          ${TextStats.langPredSql} AS lang_pred
         FROM scored),
       tot AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_label FROM pred GROUP BY lang)
       SELECT p.lang, p.lang_pred, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1392,8 +1425,7 @@ object ScaleOps {
                AS cell_recall_r
       FROM pred p JOIN tot t ON p.lang = t.lang
       GROUP BY p.lang, p.lang_pred, t.n_label
-      ORDER BY p.lang, lang_pred"""
-    }),
+      ORDER BY p.lang, lang_pred""")),
 
     // ---- per-source KL drift from the corpus token distribution: the
     //      feed-health score. Integer counts, one mirrored IEEE term
@@ -1403,11 +1435,7 @@ object ScaleOps {
       graft.text.Vocab.sourceTokenKL(Tables(s, dir).documents)
         .orderBy(col("source"))
     }, Some(s"""
-      WITH tok AS (
-        SELECT source,
-               unnest(list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                                  x -> x <> '')) AS w
-        FROM documents),
+      WITH ${TextStats.sourceTokensSql},
       bysrc AS (SELECT source, w, CAST(count(*) AS BIGINT) AS cs FROM tok GROUP BY 1, 2),
       srctot AS (SELECT source, CAST(count(*) AS BIGINT) AS ns FROM tok GROUP BY 1),
       corp AS (SELECT w, CAST(count(*) AS BIGINT) AS cw FROM tok GROUP BY 1),
@@ -1533,11 +1561,7 @@ object ScaleOps {
       graft.text.Vocab.distinctiveTerms(Tables(s, dir).documents, topK = 3)
         .orderBy(col("source"), col("rank"))
     }, Some(s"""
-      WITH tok AS (
-        SELECT source,
-               unnest(list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                                  x -> x <> '')) AS w
-        FROM documents),
+      WITH ${TextStats.sourceTokensSql},
       bysrc AS (SELECT source, w, CAST(count(*) AS BIGINT) AS ysw FROM tok GROUP BY 1, 2),
       srctot AS (SELECT source, CAST(count(*) AS BIGINT) AS ns FROM tok GROUP BY 1),
       corp AS (SELECT w, CAST(count(*) AS BIGINT) AS cw FROM tok GROUP BY 1),
@@ -1639,17 +1663,7 @@ object ScaleOps {
           round(col("cos_sim"), 6).as("top1_cos_r"),
           (coalesce(col("hits"), lit(0L)) >= 2).as("recall_ok"))
         .orderBy(col("q_id"))
-    }, Some("""
-      WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
-                 FROM embeddings WHERE vec_id BETWEEN 1 AND 10),
-      c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-            FROM embeddings WHERE vec_id > 10),
-      s AS (SELECT q_id, vec_id, list_cosine_similarity(v, qv) AS cs FROM c, q),
-      r AS (SELECT q_id, vec_id, cs,
-                   row_number() OVER (PARTITION BY q_id ORDER BY cs DESC, vec_id) AS rn
-            FROM s)
-      SELECT q_id, vec_id AS top1_id, round(cs, 6) AS top1_cos_r, TRUE AS recall_ok
-      FROM r WHERE rn = 1 ORDER BY q_id""")),
+    }, Some(annTop1Sql)),
 
     // ---- ingest-rate spike detection: hourly event counts z-scored
     //      against the trailing 24-hour window (emitted only once a
@@ -1990,17 +2004,7 @@ object ScaleOps {
           round(col("cos_sim"), 6).as("top1_cos_r"),
           (coalesce(col("hits"), lit(0L)) >= 3).as("recall_ok"))
         .orderBy(col("q_id"))
-    }, Some("""
-      WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
-                 FROM embeddings WHERE vec_id BETWEEN 1 AND 10),
-      c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-            FROM embeddings WHERE vec_id > 10),
-      s AS (SELECT q_id, vec_id, list_cosine_similarity(v, qv) AS cs FROM c, q),
-      r AS (SELECT q_id, vec_id, cs,
-                   row_number() OVER (PARTITION BY q_id ORDER BY cs DESC, vec_id) AS rn
-            FROM s)
-      SELECT q_id, vec_id AS top1_id, round(cs, 6) AS top1_cos_r, TRUE AS recall_ok
-      FROM r WHERE rn = 1 ORDER BY q_id""")),
+    }, Some(annTop1Sql)),
 
     // ---- exact multi-quantile by two-phase rank selection (the 100 TB
     //      form of percentile(x, array(...)) — see [[Quantiles]]):
@@ -2050,16 +2054,8 @@ object ScaleOps {
         .select(col("q_id"), col("rnk").cast("long").as("rnk"),
           col("vec_id").as("neg_id"), round(col("cos_sim"), 6).as("cos_r"))
         .orderBy(col("q_id"), col("rnk"))
-    }, Some("""
-      WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv, label AS ql
-                 FROM embeddings WHERE vec_id BETWEEN 1 AND 10),
-      c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
-            FROM embeddings WHERE vec_id > 10),
-      s AS (SELECT q.q_id, c.vec_id, list_cosine_similarity(c.v, q.qv) AS cs
-            FROM c, q WHERE c.label <> q.ql),
-      r AS (SELECT q_id, vec_id, cs,
-                   row_number() OVER (PARTITION BY q_id ORDER BY cs DESC, vec_id) AS rnk
-            FROM s)
+    }, Some(s"""
+      WITH ${hardNegRankSql}
       SELECT q_id, CAST(rnk AS BIGINT) AS rnk, vec_id AS neg_id, round(cs, 6) AS cos_r
       FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""")),
 
@@ -2107,16 +2103,8 @@ object ScaleOps {
           col("vec_id").as("neg_id"), round(col("cos_sim"), 6).as("cos_r"),
           (coalesce(col("hits"), lit(0L)) >= 3).as("adc_recall_ok"))
         .orderBy(col("q_id"), col("rnk"))
-    }, Some("""
-      WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv, label AS ql
-                 FROM embeddings WHERE vec_id BETWEEN 1 AND 10),
-      c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
-            FROM embeddings WHERE vec_id > 10),
-      s AS (SELECT q.q_id, c.vec_id, list_cosine_similarity(c.v, q.qv) AS cs
-            FROM c, q WHERE c.label <> q.ql),
-      r AS (SELECT q_id, vec_id, cs,
-                   row_number() OVER (PARTITION BY q_id ORDER BY cs DESC, vec_id) AS rnk
-            FROM s)
+    }, Some(s"""
+      WITH ${hardNegRankSql}
       SELECT q_id, CAST(rnk AS BIGINT) AS rnk, vec_id AS neg_id, round(cs, 6) AS cos_r,
              TRUE AS adc_recall_ok
       FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""")),
@@ -2135,23 +2123,11 @@ object ScaleOps {
           Tables(s, dir).embeddings, dim = 64, iters = 3)
         .orderBy(col("j"))
     }, Some(s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-                 WHERE embedding IS NOT NULL),
-      vmt AS (SELECT vec_id, list_transform(v,
-                x -> CAST(FLOOR(x * 1000000.0 + 0.5) AS BIGINT)) AS vm FROM e),
-      mus AS (SELECT r.j AS j, SUM(vm[r.j]) AS sj, COUNT(*) AS n
-              FROM vmt, range(1, 65) r(j) GROUP BY r.j),
-      mur AS (SELECT j, CASE WHEN sj >= 0 THEN (2*sj + n) // (2*n)
-                             ELSE -((2*(-sj) + n) // (2*n)) END AS mu FROM mus),
-      mul AS (SELECT list(mu ORDER BY j) AS mu FROM mur),
+      WITH ${graft.text.Similarity.centeredSql},
       cmt AS (SELECT vec_id AS rid,
                 list_transform(range(1, 65), j -> vm[j] - mu[j]) AS cm
               FROM vmt, mul),
-      x0 AS (SELECT list_transform(range(1, 65),
-               j -> CAST(CASE WHEN j = 1 THEN 1000000 ELSE 0 END AS BIGINT)) AS xm),
-      ${graft.text.Similarity.powerIterSql(1, 64)},
-      ${graft.text.Similarity.powerIterSql(2, 64)},
-      ${graft.text.Similarity.powerIterSql(3, 64)}
+      $pc1ItersSql
       SELECT r.j AS j, x.xm[r.j] AS pc_m, x.xm[r.j] / 1000000.0 AS pc_r
       FROM x3 x, range(1, 65) r(j)
       WHERE x.xm IS NOT NULL
@@ -2168,23 +2144,11 @@ object ScaleOps {
           Tables(s, dir).embeddings, dim = 64, iters = 3)
         .orderBy(col("comp"), col("j"))
     }, Some(s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-                 WHERE embedding IS NOT NULL),
-      vmt AS (SELECT vec_id, list_transform(v,
-                x -> CAST(FLOOR(x * 1000000.0 + 0.5) AS BIGINT)) AS vm FROM e),
-      mus AS (SELECT r.j AS j, SUM(vm[r.j]) AS sj, COUNT(*) AS n
-              FROM vmt, range(1, 65) r(j) GROUP BY r.j),
-      mur AS (SELECT j, CASE WHEN sj >= 0 THEN (2*sj + n) // (2*n)
-                             ELSE -((2*(-sj) + n) // (2*n)) END AS mu FROM mus),
-      mul AS (SELECT list(mu ORDER BY j) AS mu FROM mur),
+      WITH ${graft.text.Similarity.centeredSql},
       cmt AS MATERIALIZED (SELECT vec_id AS rid,
                 list_transform(range(1, 65), j -> vm[j] - mu[j]) AS cm
               FROM vmt, mul),
-      x0 AS (SELECT list_transform(range(1, 65),
-               j -> CAST(CASE WHEN j = 1 THEN 1000000 ELSE 0 END AS BIGINT)) AS xm),
-      ${graft.text.Similarity.powerIterSql(1, 64)},
-      ${graft.text.Similarity.powerIterSql(2, 64)},
-      ${graft.text.Similarity.powerIterSql(3, 64)},
+      $pc1ItersSql,
       xx AS MATERIALIZED (SELECT GREATEST(SUM(x.xm[r.j] * x.xm[r.j]), 1) AS xx
              FROM x3 x, range(1, 65) r(j)),
       sd AS MATERIALIZED (SELECT c.rid, SUM(c.cm[r.j] * x.xm[r.j]) AS srow
@@ -2397,82 +2361,29 @@ object ScaleOps {
     //      both engines derive identical codes; everything else is one
     //      projection + one 128-group aggregate.
     ("q303_zorder_advisor", (s: SparkSession, dir: String) => {
-      val o = Tables(s, dir).orders.selectExpr("o_custkey",
-        "CAST(datediff(o_orderdate, DATE '1970-01-01') AS BIGINT) AS od")
-      val st = o.agg(min(col("od")).as("mn"), max(col("od")).as("mx"),
-        min(col("o_custkey")).as("kmn"), max(col("o_custkey")).as("kmx"))
-      def bit(v: String, i: Int) = s"(($v DIV ${1 << i}) % 2)"
-      val morton = (0 to 3).map(i =>
-        s"${bit("db", i)} * ${1 << (2 * i)} + ${bit("cb", i)} * ${1 << (2 * i + 1)}")
-        .mkString(" + ")
-      val base = graft.Stage.mat(o.crossJoin(broadcast(st)).selectExpr(
-          "((od - mn) * 16) DIV (mx - mn + 1) AS db",
-          "((o_custkey - kmn) * 16) DIV (kmx - kmn + 1) AS cb")
+      val base = graft.Stage.mat(zoneBuckets(s, dir)
         .selectExpr("db", "cb", "(db * 16 + cb) DIV 4 AS z_lin",
-          s"($morton) DIV 4 AS z_mor",
+          s"(${mortonExpr("DIV")}) DIV 4 AS z_mor",
           "CAST(db BETWEEN 3 AND 6 AS BIGINT) AS hit_db",
           "CAST(cb BETWEEN 5 AND 9 AS BIGINT) AS hit_cb",
           """CAST(db BETWEEN 3 AND 6 AND cb BETWEEN 5 AND 9
              AS BIGINT) AS hit_both"""))
-      def zones(zcol: String, layout: String) = base
-        .groupBy(col(zcol).as("zone"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("db")).as("db_min"), max(col("db")).as("db_max"),
-          min(col("cb")).as("cb_min"), max(col("cb")).as("cb_max"),
-          sum(col("hit_db")).as("m_db"), sum(col("hit_cb")).as("m_cb"),
-          sum(col("hit_both")).as("m_both"))
-        .selectExpr(s"'$layout' AS layout", "zone", "n_rows",
-          "db_min", "db_max", "cb_min", "cb_max", "m_db", "m_cb", "m_both",
-          "CAST(db_max >= 3 AND db_min <= 6 AS BIGINT) AS s_db",
-          "CAST(cb_max >= 5 AND cb_min <= 9 AS BIGINT) AS s_cb",
-          """CAST(db_max >= 3 AND db_min <= 6
-              AND cb_max >= 5 AND cb_min <= 9 AS BIGINT) AS s_both""")
-      val per = graft.Stage.mat(
-        zones("z_lin", "linear").unionByName(zones("z_mor", "zorder")))
-      // one advisor row per (layout, predicate): how many zones the
-      // footer stats keep, how many rows those zones force through the
-      // scan, and the true match count they contain
-      def summary(p: String) = per.groupBy(col("layout")).agg(
-          count(lit(1)).as("n_zones"),
-          sum(col(s"s_$p")).as("zones_hit"),
-          sum(when(col(s"s_$p") === 1L, col("n_rows")).otherwise(0L)).as("rows_scanned"),
-          sum(col(s"m_$p")).as("rows_matched"),
-          sum(col("n_rows")).as("rows_total"))
-        .selectExpr("layout", s"'$p' AS pred", "n_zones", "zones_hit",
-          "rows_scanned", "rows_matched", "rows_total")
-      summary("db").unionByName(summary("cb")).unionByName(summary("both"))
-        .orderBy(col("layout"), col("pred"))
-    }, Some {
-      def bit(v: String, i: Int) = s"(($v // ${1 << i}) % 2)"
-      val morton = (0 to 3).map(i =>
-        s"${bit("db", i)} * ${1 << (2 * i)} + ${bit("cb", i)} * ${1 << (2 * i + 1)}")
-        .mkString(" + ")
-      s"""
-      WITH o AS (SELECT o_custkey,
-               CAST(datediff('day', DATE '1970-01-01', o_orderdate) AS BIGINT) AS od
-             FROM orders),
-      st AS (SELECT MIN(od) AS mn, MAX(od) AS mx,
-                    MIN(o_custkey) AS kmn, MAX(o_custkey) AS kmx FROM o),
-      b0 AS (SELECT ((od - mn) * 16) // (mx - mn + 1) AS db,
-                    ((o_custkey - kmn) * 16) // (kmx - kmn + 1) AS cb
-             FROM o CROSS JOIN st),
+      def zones(zcol: String, layout: String) = zoneStats(base, zcol)
+        .selectExpr((Seq(s"'$layout' AS layout", "zone", "n_rows",
+          "db_min", "db_max", "cb_min", "cb_max", "m_db", "m_cb", "m_both")
+          ++ zoneSurvives): _*)
+      zoneSummary(graft.Stage.mat(
+        zones("z_lin", "linear").unionByName(zones("z_mor", "zorder"))))
+    }, Some(s"""
+      WITH $zoneBucketsSql,
       base AS (SELECT db, cb, (db * 16 + cb) // 4 AS z_lin,
-                      ($morton) // 4 AS z_mor,
+                      (${mortonExpr("//")}) // 4 AS z_mor,
                       CAST(db BETWEEN 3 AND 6 AS BIGINT) AS hit_db,
                       CAST(cb BETWEEN 5 AND 9 AS BIGINT) AS hit_cb,
                       CAST(db BETWEEN 3 AND 6 AND cb BETWEEN 5 AND 9
                         AS BIGINT) AS hit_both
                FROM b0),
-      per AS (
-        SELECT 'linear' AS layout, z_lin AS zone, CAST(count(*) AS BIGINT) AS n_rows,
-               CAST(SUM(hit_db) AS BIGINT) AS m_db,
-               CAST(SUM(hit_cb) AS BIGINT) AS m_cb,
-               CAST(SUM(hit_both) AS BIGINT) AS m_both,
-               CAST(MAX(db) >= 3 AND MIN(db) <= 6 AS BIGINT) AS s_db,
-               CAST(MAX(cb) >= 5 AND MIN(cb) <= 9 AS BIGINT) AS s_cb,
-               CAST(MAX(db) >= 3 AND MIN(db) <= 6
-                 AND MAX(cb) >= 5 AND MIN(cb) <= 9 AS BIGINT) AS s_both
-        FROM base GROUP BY z_lin
+      per AS (${zoneStatsSql("z_lin", "linear")}
         UNION ALL
         SELECT 'zorder', z_mor, CAST(count(*) AS BIGINT),
                CAST(SUM(hit_db) AS BIGINT), CAST(SUM(hit_cb) AS BIGINT),
@@ -2482,16 +2393,7 @@ object ScaleOps {
                CAST(MAX(db) >= 3 AND MIN(db) <= 6
                  AND MAX(cb) >= 5 AND MIN(cb) <= 9 AS BIGINT)
         FROM base GROUP BY z_mor)
-      ${Seq("db", "cb", "both").map(p =>
-        s"""SELECT layout, '$p' AS pred, CAST(count(*) AS BIGINT) AS n_zones,
-             CAST(SUM(s_$p) AS BIGINT) AS zones_hit,
-             CAST(SUM(CASE WHEN s_$p = 1 THEN n_rows ELSE 0 END) AS BIGINT)
-               AS rows_scanned,
-             CAST(SUM(m_$p) AS BIGINT) AS rows_matched,
-             CAST(SUM(n_rows) AS BIGINT) AS rows_total
-           FROM per GROUP BY layout""").mkString("\n      UNION ALL\n      ")}
-      ORDER BY layout, pred"""
-    }),
+      $zoneSummarySql""")),
 
     // ---- Hilbert-curve layout advisor — q303's head-to-head: same
     //      16×16 bucket grid, same three footer-stat predicates, but
@@ -2519,18 +2421,8 @@ object ScaleOps {
     //      wrong rotation breaks. Pure projection + one groupBy — the
     //      q303 scale shape.
     ("q314_hilbert_advisor", (s: SparkSession, dir: String) => {
-      val o = Tables(s, dir).orders.selectExpr("o_custkey",
-        "CAST(datediff(o_orderdate, DATE '1970-01-01') AS BIGINT) AS od")
-      val st = o.agg(min(col("od")).as("mn"), max(col("od")).as("mx"),
-        min(col("o_custkey")).as("kmn"), max(col("o_custkey")).as("kmx"))
-      def bit(v: String, i: Int) = s"(($v DIV ${1 << i}) % 2)"
-      val morton = (0 to 3).map(i =>
-        s"${bit("db", i)} * ${1 << (2 * i)} + ${bit("cb", i)} * ${1 << (2 * i + 1)}")
-        .mkString(" + ")
-      val b0 = o.crossJoin(broadcast(st)).selectExpr(
-          "((od - mn) * 16) DIV (mx - mn + 1) AS db",
-          "((o_custkey - kmn) * 16) DIV (kmx - kmn + 1) AS cb")
-        .selectExpr("db", "cb", s"($morton) DIV 6 AS z_mor",
+      val b0 = zoneBuckets(s, dir)
+        .selectExpr("db", "cb", s"(${mortonExpr("DIV")}) DIV 6 AS z_mor",
           "CAST(db BETWEEN 3 AND 6 AS BIGINT) AS hit_db",
           "CAST(cb BETWEEN 5 AND 9 AS BIGINT) AS hit_cb",
           """CAST(db BETWEEN 3 AND 6 AND cb BETWEEN 5 AND 9
@@ -2541,66 +2433,18 @@ object ScaleOps {
       }
       val base = graft.Stage.mat(hil.selectExpr("db", "cb", "z_mor",
         "hd4 DIV 6 AS z_hil", "hit_db", "hit_cb", "hit_both"))
-      def zones(zcol: String, layout: String) = base
-        .groupBy(col(zcol).as("zone"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("db")).as("db_min"), max(col("db")).as("db_max"),
-          min(col("cb")).as("cb_min"), max(col("cb")).as("cb_max"),
-          sum(col("hit_db")).as("m_db"), sum(col("hit_cb")).as("m_cb"),
-          sum(col("hit_both")).as("m_both"))
-        .selectExpr(s"'$layout' AS layout", "zone", "n_rows",
-          "m_db", "m_cb", "m_both",
-          "CAST(db_max >= 3 AND db_min <= 6 AS BIGINT) AS s_db",
-          "CAST(cb_max >= 5 AND cb_min <= 9 AS BIGINT) AS s_cb",
-          """CAST(db_max >= 3 AND db_min <= 6
-              AND cb_max >= 5 AND cb_min <= 9 AS BIGINT) AS s_both""")
-      val per = graft.Stage.mat(
-        zones("z_hil", "hilbert").unionByName(zones("z_mor", "zorder")))
-      def summary(p: String) = per.groupBy(col("layout")).agg(
-          count(lit(1)).as("n_zones"),
-          sum(col(s"s_$p")).as("zones_hit"),
-          sum(when(col(s"s_$p") === 1L, col("n_rows")).otherwise(0L)).as("rows_scanned"),
-          sum(col(s"m_$p")).as("rows_matched"),
-          sum(col("n_rows")).as("rows_total"))
-        .selectExpr("layout", s"'$p' AS pred", "n_zones", "zones_hit",
-          "rows_scanned", "rows_matched", "rows_total")
-      summary("db").unionByName(summary("cb")).unionByName(summary("both"))
-        .orderBy(col("layout"), col("pred"))
+      def zones(zcol: String, layout: String) = zoneStats(base, zcol)
+        .selectExpr((Seq(s"'$layout' AS layout", "zone", "n_rows",
+          "m_db", "m_cb", "m_both") ++ zoneSurvives): _*)
+      zoneSummary(graft.Stage.mat(
+        zones("z_hil", "hilbert").unionByName(zones("z_mor", "zorder"))))
     }, Some {
-      def bit(v: String, i: Int) = s"(($v // ${1 << i}) % 2)"
-      val morton = (0 to 3).map(i =>
-        s"${bit("db", i)} * ${1 << (2 * i)} + ${bit("cb", i)} * ${1 << (2 * i + 1)}")
-        .mkString(" + ")
       val gs = hilbertLevelExprs(16).zipWithIndex.map { case (exprs, i) =>
         s"g${i + 1} AS (SELECT *, ${exprs.mkString(", ")} FROM g$i)"
       }.mkString(",\n      ")
-      def zonesSql(zcol: String, layout: String) = s"""
-        SELECT '$layout' AS layout, $zcol AS zone, CAST(count(*) AS BIGINT) AS n_rows,
-               CAST(SUM(hit_db) AS BIGINT) AS m_db,
-               CAST(SUM(hit_cb) AS BIGINT) AS m_cb,
-               CAST(SUM(hit_both) AS BIGINT) AS m_both,
-               CAST(MAX(db) >= 3 AND MIN(db) <= 6 AS BIGINT) AS s_db,
-               CAST(MAX(cb) >= 5 AND MIN(cb) <= 9 AS BIGINT) AS s_cb,
-               CAST(MAX(db) >= 3 AND MIN(db) <= 6
-                 AND MAX(cb) >= 5 AND MIN(cb) <= 9 AS BIGINT) AS s_both
-        FROM base GROUP BY $zcol"""
-      def summarySql(p: String) = s"""
-        SELECT layout, '$p' AS pred, CAST(count(*) AS BIGINT) AS n_zones,
-               CAST(SUM(s_$p) AS BIGINT) AS zones_hit,
-               CAST(SUM(CASE WHEN s_$p = 1 THEN n_rows ELSE 0 END) AS BIGINT) AS rows_scanned,
-               CAST(SUM(m_$p) AS BIGINT) AS rows_matched,
-               CAST(SUM(n_rows) AS BIGINT) AS rows_total
-        FROM per GROUP BY layout"""
       s"""
-      WITH o AS (SELECT o_custkey,
-               CAST(datediff('day', DATE '1970-01-01', o_orderdate) AS BIGINT) AS od
-             FROM orders),
-      st AS (SELECT MIN(od) AS mn, MAX(od) AS mx,
-                    MIN(o_custkey) AS kmn, MAX(o_custkey) AS kmx FROM o),
-      b0 AS (SELECT ((od - mn) * 16) // (mx - mn + 1) AS db,
-                    ((o_custkey - kmn) * 16) // (kmx - kmn + 1) AS cb
-             FROM o CROSS JOIN st),
-      g0 AS (SELECT db, cb, ($morton) // 6 AS z_mor,
+      WITH $zoneBucketsSql,
+      g0 AS (SELECT db, cb, (${mortonExpr("//")}) // 6 AS z_mor,
                     CAST(db BETWEEN 3 AND 6 AS BIGINT) AS hit_db,
                     CAST(cb BETWEEN 5 AND 9 AS BIGINT) AS hit_cb,
                     CAST(db BETWEEN 3 AND 6 AND cb BETWEEN 5 AND 9
@@ -2610,12 +2454,9 @@ object ScaleOps {
       $gs,
       base AS (SELECT db, cb, z_mor, hd4 // 6 AS z_hil,
                       hit_db, hit_cb, hit_both FROM g4),
-      per AS (${zonesSql("z_hil", "hilbert")}
-              UNION ALL ${zonesSql("z_mor", "zorder")})
-      ${summarySql("db")}
-      UNION ALL ${summarySql("cb")}
-      UNION ALL ${summarySql("both")}
-      ORDER BY layout, pred"""
+      per AS (${zoneStatsSql("z_hil", "hilbert")}
+              UNION ALL ${zoneStatsSql("z_mor", "zorder")})
+      $zoneSummarySql"""
     }),
 
     // ---- RLE sort-order advisor (the third member of the layout

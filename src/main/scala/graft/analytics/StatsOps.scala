@@ -156,6 +156,20 @@ object StatsOps {
                 AS BIGINT) AS kurt_micros""")
   }
 
+  /** One shared word's round-9 JSD term over its (ca/na, cb/nb) source
+    * frequencies, as SQL text that Spark's selectExpr and DuckDB parse
+    * alike — the q159 kernel and its oracle evaluate the same string. */
+  private val jsdTermSql: String = """round(
+             (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE))
+               * ln((2.0 * (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)))
+                    / (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
+                       + CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)))
+             + (CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))
+               * ln((2.0 * (CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)))
+                    / (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
+                       + CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))),
+             9) AS term"""
+
   /** Pairwise Jensen–Shannon divergence between source unigram
     * distributions — the symmetric, bounded (≤ ln 2) companion to
     * q103's source-vs-corpus KL: a SOURCE SIMILARITY MATRIX (which
@@ -192,16 +206,7 @@ object StatsOps {
       col("c").as("cb"), col("n").as("nb"))
     a.join(b, Seq("w")).filter(col("src_a") < col("src_b"))
       .selectExpr("src_a", "src_b", "ca", "na", "cb", "nb",
-        """round(
-             (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE))
-               * ln((2.0 * (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)))
-                    / (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
-                       + CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)))
-             + (CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))
-               * ln((2.0 * (CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)))
-                    / (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
-                       + CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))),
-             9) AS term""")
+        jsdTermSql)
       .groupBy(col("src_a"), col("src_b"))
       .agg(count(lit(1)).as("n_shared"),
         sum(col("term").cast("decimal(30,9)")).as("s"),
@@ -308,6 +313,34 @@ object StatsOps {
         "((1 + n_ge) * 1000000) DIV (n_perms + 1) AS p_ppm")
   }
 
+  /** The A/A cohort hash of q264/q265: a user's sign is 1 − 2·(h mod 2). */
+  private val signFlipUserHSql: String =
+    TextStats.portableHash64Sql("concat('pt:', CAST(user_id AS VARCHAR))")
+
+  /** DuckDB twin of [[signFlipPermutation]]: given CTE `dd(grp, od, d)`,
+    * CTEs `base`, `obs(grp, n_days, s_obs)`, `perms` and
+    * `cnt(grp, n_ge, n_perms)`. Follows `dd` in the WITH list.
+    */
+  private val signFlipCountsSql: String = {
+    val dayH = TextStats.portableHash64Sql(
+      "concat('flip:', grp, ':', CAST(od AS VARCHAR))")
+    s"""base AS (SELECT grp, od, d, $dayH % 2147483647 AS h FROM dd),
+      obs AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_days,
+                     CAST(SUM(d) AS BIGINT) AS s_obs
+              FROM base GROUP BY grp),
+      perms AS (
+        SELECT grp, rb,
+               CAST(SUM((1 - 2 * (((h * (2 * rb + 1)) % 2147483647) % 2)) * d)
+                 AS BIGINT) AS s_b
+        FROM base CROSS JOIN (SELECT unnest(range(1, 201)) AS rb)
+        GROUP BY grp, rb),
+      cnt AS (
+        SELECT p.grp,
+               CAST(count(*) FILTER (WHERE abs(s_b) >= abs(s_obs)) AS BIGINT) AS n_ge,
+               CAST(count(*) AS BIGINT) AS n_perms
+        FROM perms p JOIN obs o ON p.grp = o.grp GROUP BY p.grp)"""
+  }
+
   /** Kruskal–Wallis H across k groups (Kruskal & Wallis 1952), with the
     * standard tie correction — the nonparametric k-group extension of
     * q124's Mann–Whitney rank sum: does at least one group's value
@@ -347,6 +380,18 @@ object StatsOps {
     * a plain single cumulative window, so hash equality doubles as the
     * decomposition-exactness proof (the scoreOrder convention).
     */
+  /** DuckDB twin of [[kruskalWallis]]'s and [[mannWhitneyU]]'s shared
+    * midrank pass: given CTE `base(grp, score)`, CTEs `ties(score, cnt)`,
+    * `mr` (first rank `mn` of each tie group) and `pergs(grp, score, pc)`.
+    */
+  private val scoreMidranksSql: String = """ties AS (SELECT score, CAST(count(*) AS BIGINT) AS cnt
+               FROM base GROUP BY score),
+      mr AS (SELECT score, cnt,
+                    SUM(cnt) OVER (ORDER BY score) - cnt + 1 AS mn
+             FROM ties),
+      pergs AS (SELECT grp, score, CAST(count(*) AS BIGINT) AS pc
+                FROM base GROUP BY grp, score)"""
+
   /** Two-phase distributed midrank over a tie-group table (score, cnt):
     * range-bucket the distinct scores, cumulate bucket counts in ONE
     * ≤`buckets`-row window (the PlanSpec-allowlisted bucket-offset
@@ -498,6 +543,33 @@ object StatsOps {
       .unionAll(f).orderBy(col("grp"))
   }
 
+  /** DuckDB twin of [[anovaF]] after its per-group pass: given CTE
+    * `perg(grp, n_g, s_g, q_g)`, the F fold and the final rows (group
+    * means, then the `zz_f` row). Follows `perg` in the WITH list.
+    */
+  private val anovaFSql: String = """f AS (
+        SELECT CAST(SUM(n_g) AS BIGINT) AS n, CAST(SUM(s_g) AS BIGINT) AS s,
+               SUM(q_g) AS q, CAST(count(*) AS BIGINT) AS k,
+               SUM((CAST(s_g AS HUGEINT) * s_g * 1000000) // n_g) AS bsum
+        FROM perg),
+      sc AS (
+        SELECT n, k,
+               bsum - (CAST(s AS HUGEINT) * s * 1000000) // n AS ssb_sc,
+               q * 1000000 - (CAST(s AS HUGEINT) * s * 1000000) // n AS sst_sc
+        FROM f),
+      sc2 AS (SELECT n, k, ssb_sc, sst_sc - ssb_sc AS ssw_sc FROM sc)
+      SELECT grp, n_g, (s_g * 1000000) // n_g AS mean_micros,
+             CAST(0 AS BIGINT) AS ssb, CAST(0 AS BIGINT) AS ssw
+      FROM perg
+      UNION ALL
+      SELECT 'zz_f', n,
+             CAST((ssb_sc * (n - k) * 1000000)
+                  // greatest(ssw_sc * (k - 1), 1) AS BIGINT),
+             CAST(ssb_sc // 1000000 AS BIGINT),
+             CAST(ssw_sc // 1000000 AS BIGINT)
+      FROM sc2
+      ORDER BY grp"""
+
   /** Burrows' Delta stylometric distance between sources (Burrows
     * 2002; the robust scaling follows the Evert et al. 2017 analysis
     * of Delta variants): over the T most frequent corpus terms, each
@@ -552,6 +624,38 @@ object StatsOps {
       .selectExpr("src_a", "src_b", "n_terms", "sz DIV n_terms AS delta_micros")
   }
 
+  /** Per-treatment sums of doubled within-block midranks over a complete
+    * (b, t, v) grid — the rank pass of [[friedman]] and q351's Page
+    * test: (t, n_blocks, rr2), materialized because it feeds both the
+    * treatment rows and the statistic's fold.
+    */
+  private def blockRankSums(grid: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val tg = grid.groupBy(col("b"), col("v")).agg(count(lit(1)).as("cnt"))
+    val mn = tg.withColumn("mn",
+      sum(col("cnt")).over(Window.partitionBy(col("b")).orderBy(col("v")))
+        - col("cnt") + 1)
+    grid.join(mn, Seq("b", "v"))
+      .withColumn("r2", lit(2L) * col("mn") + col("cnt") - 1)
+      .groupBy(col("t"))
+      .agg(count(lit(1)).as("n_blocks"), sum(col("r2")).as("rr2"))
+      .transform(graft.Stage.mat)
+  }
+
+  /** DuckDB twin of [[blockRankSums]]: given CTE `grid(b, t, v)`, CTEs
+    * `tg`, `mr`, `r2` and `pert(t, n_blocks, rr2)`.
+    */
+  private val blockRankSumsSql: String = """tg AS (SELECT b, v, CAST(count(*) AS BIGINT) AS cnt
+             FROM grid GROUP BY b, v),
+      mr AS (SELECT b, v, cnt,
+                    SUM(cnt) OVER (PARTITION BY b ORDER BY v) - cnt + 1 AS mn
+             FROM tg),
+      r2 AS (SELECT grid.b, grid.t, 2 * mn + cnt - 1 AS r2
+             FROM grid JOIN mr ON grid.b = mr.b AND grid.v = mr.v),
+      pert AS (SELECT t, CAST(count(*) AS BIGINT) AS n_blocks,
+                      CAST(SUM(r2) AS BIGINT) AS rr2
+               FROM r2 GROUP BY t)"""
+
   /** Friedman rank test (Friedman 1937) over a complete block design:
     * within each block, rank the k treatments by value (doubled
     * average ranks — the [[kruskalWallis]] tie discipline), then
@@ -575,16 +679,7 @@ object StatsOps {
     * bound: R2 ≤ 2·k·b — squares stay tiny for any feasible design.
     */
   def friedman(grid: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val tg = grid.groupBy(col("b"), col("v")).agg(count(lit(1)).as("cnt"))
-    val mn = tg.withColumn("mn",
-      sum(col("cnt")).over(Window.partitionBy(col("b")).orderBy(col("v")))
-        - col("cnt") + 1)
-    val r2 = grid.join(mn, Seq("b", "v"))
-      .withColumn("r2", lit(2L) * col("mn") + col("cnt") - 1)
-    val perT = r2.groupBy(col("t"))
-      .agg(count(lit(1)).as("n_blocks"), sum(col("r2")).as("rr2"))
-      .transform(graft.Stage.mat) // feeds the treatment rows AND the fold
+    val perT = blockRankSums(grid)
     val f = perT.agg(count(lit(1)).as("k"), max(col("n_blocks")).as("nb"),
       sum(expr("(CAST(rr2 AS DECIMAL(38,0)) * rr2) DIV 4")).as("s"))
       .selectExpr("'zz_f' AS t", "nb AS n_blocks",
@@ -706,6 +801,20 @@ object StatsOps {
                    CASE WHEN m2 <= 0 THEN 0.0 ELSE m4 / (m2 * m2) - 3 END AS g2
             FROM mom)"""
 
+  /** Per document: its source, token count `x` and character count `y`
+    * — the regression input of q140 (OLS) and q146 (Spearman). */
+  private[analytics] def tokensVsChars(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir).documents.select(col("source"),
+      TextStats.tokenCount(col("text")).cast("long").as("x"),
+      col("n_chars").cast("long").as("y"))
+
+  /** DuckDB twin of [[tokensVsChars]]: CTE `f(source, x, y)`. */
+  private[analytics] val tokensVsCharsSql: String = s"""f AS (
+        SELECT source,
+               CAST(len(regexp_split_to_array(text, '$ws+')) AS BIGINT) AS x,
+               CAST(n_chars AS BIGINT) AS y
+        FROM documents)"""
+
   val defs: Seq[(String, QFn, Option[String])] = Seq(
 
     // ---- Simpson's-paradox slope audit: the pooled OLS slope of
@@ -812,7 +921,7 @@ object StatsOps {
         .join(daily, Seq("b", "t"), "left")
         .select(col("b"), col("t"), coalesce(col("v0"), lit(0L)).as("v"))
       friedman(grid)
-    }, Some("""
+    }, Some(s"""
       WITH daily AS (
         SELECT CAST(day(ts) AS BIGINT) AS b, event_type AS t,
                CAST(count(*) AS BIGINT) AS v0
@@ -822,16 +931,7 @@ object StatsOps {
         FROM (SELECT DISTINCT b FROM daily) bb
         CROSS JOIN (SELECT DISTINCT t FROM daily) tt
         LEFT JOIN daily d ON d.b = bb.b AND d.t = tt.t),
-      tg AS (SELECT b, v, CAST(count(*) AS BIGINT) AS cnt
-             FROM grid GROUP BY b, v),
-      mr AS (SELECT b, v, cnt,
-                    SUM(cnt) OVER (PARTITION BY b ORDER BY v) - cnt + 1 AS mn
-             FROM tg),
-      r2 AS (SELECT grid.b, grid.t, 2 * mn + cnt - 1 AS r2
-             FROM grid JOIN mr ON grid.b = mr.b AND grid.v = mr.v),
-      pert AS (SELECT t, CAST(count(*) AS BIGINT) AS n_blocks,
-                      CAST(SUM(r2) AS BIGINT) AS rr2
-               FROM r2 GROUP BY t),
+      ${blockRankSumsSql},
       f AS (SELECT CAST(count(*) AS BIGINT) AS k,
                    CAST(MAX(n_blocks) AS BIGINT) AS nb,
                    SUM((CAST(rr2 AS HUGEINT) * rr2) // 4) AS s
@@ -853,18 +953,12 @@ object StatsOps {
     ("q239_kruskal_wallis", (s: SparkSession, dir: String) => {
       kruskalWallis(Tables(s, dir).orders, group = "o_orderpriority",
         score = expr("CAST(floor(o_totalprice * 100) AS BIGINT)"))
-    }, Some("""
+    }, Some(s"""
       WITH base AS (
         SELECT o_orderpriority AS grp,
                CAST(floor(o_totalprice * 100) AS BIGINT) AS score
         FROM orders),
-      ties AS (SELECT score, CAST(count(*) AS BIGINT) AS cnt
-               FROM base GROUP BY score),
-      mr AS (SELECT score, cnt,
-                    SUM(cnt) OVER (ORDER BY score) - cnt + 1 AS mn
-             FROM ties),
-      pergs AS (SELECT grp, score, CAST(count(*) AS BIGINT) AS pc
-                FROM base GROUP BY grp, score),
+      ${scoreMidranksSql},
       perg AS (
         SELECT grp, CAST(SUM(pc) AS BIGINT) AS n_g,
                CAST(SUM(pc * (2 * mn + cnt - 1)) AS BIGINT) AS r2
@@ -901,18 +995,12 @@ object StatsOps {
       mannWhitneyU(Tables(s, dir).orders,
         treat = (col("o_orderpriority") === "1-URGENT").cast("long"),
         score = expr("CAST(floor(o_totalprice * 100) AS BIGINT)"))
-    }, Some("""
+    }, Some(s"""
       WITH base AS (
         SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS grp,
                CAST(floor(o_totalprice * 100) AS BIGINT) AS score
         FROM orders),
-      ties AS (SELECT score, CAST(count(*) AS BIGINT) AS cnt
-               FROM base GROUP BY score),
-      mr AS (SELECT score, cnt,
-                    SUM(cnt) OVER (ORDER BY score) - cnt + 1 AS mn
-             FROM ties),
-      pergs AS (SELECT grp, score, CAST(count(*) AS BIGINT) AS pc
-                FROM base GROUP BY grp, score),
+      ${scoreMidranksSql},
       perg AS (
         SELECT grp, CAST(SUM(pc) AS BIGINT) AS n_g,
                CAST(SUM(pc * (2 * mn + cnt - 1)) AS BIGINT) AS r2x
@@ -947,11 +1035,7 @@ object StatsOps {
       burrowsDelta(Tables(s, dir).documents, topT = 40)
         .orderBy(col("src_a"), col("src_b"))
     }, Some(s"""
-      WITH tok AS (
-        SELECT source,
-               unnest(list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                                  x -> x <> '')) AS w
-        FROM documents),
+      WITH ${TextStats.sourceTokensSql},
       c AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c
             FROM tok GROUP BY source, w),
       ns AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n_s FROM c GROUP BY source),
@@ -984,34 +1068,13 @@ object StatsOps {
     ("q240_anova_f", (s: SparkSession, dir: String) => {
       anovaF(Tables(s, dir).documents, group = "lang",
         x = col("n_chars"))
-    }, Some("""
+    }, Some(s"""
       WITH perg AS (
         SELECT lang AS grp, CAST(count(*) AS BIGINT) AS n_g,
                CAST(SUM(n_chars) AS BIGINT) AS s_g,
                SUM(CAST(n_chars AS HUGEINT) * n_chars) AS q_g
         FROM documents GROUP BY lang),
-      f AS (
-        SELECT CAST(SUM(n_g) AS BIGINT) AS n, CAST(SUM(s_g) AS BIGINT) AS s,
-               SUM(q_g) AS q, CAST(count(*) AS BIGINT) AS k,
-               SUM((CAST(s_g AS HUGEINT) * s_g * 1000000) // n_g) AS bsum
-        FROM perg),
-      sc AS (
-        SELECT n, k,
-               bsum - (CAST(s AS HUGEINT) * s * 1000000) // n AS ssb_sc,
-               q * 1000000 - (CAST(s AS HUGEINT) * s * 1000000) // n AS sst_sc
-        FROM f),
-      sc2 AS (SELECT n, k, ssb_sc, sst_sc - ssb_sc AS ssw_sc FROM sc)
-      SELECT grp, n_g, (s_g * 1000000) // n_g AS mean_micros,
-             CAST(0 AS BIGINT) AS ssb, CAST(0 AS BIGINT) AS ssw
-      FROM perg
-      UNION ALL
-      SELECT 'zz_f', n,
-             CAST((ssb_sc * (n - k) * 1000000)
-                  // greatest(ssw_sc * (k - 1), 1) AS BIGINT),
-             CAST(ssb_sc // 1000000 AS BIGINT),
-             CAST(ssw_sc // 1000000 AS BIGINT)
-      FROM sc2
-      ORDER BY grp""")),
+      ${anovaFSql}""")),
 
     // ---- Mood's median test (Mood 1950): the distribution-free
     //      LOCATION complement of q315's spread test — classify every
@@ -1247,28 +1310,7 @@ object StatsOps {
                CAST(SUM(z2) AS BIGINT) AS s_g,
                SUM(CAST(z2 AS HUGEINT) * z2) AS q_g
         FROM z GROUP BY grp),
-      f AS (
-        SELECT CAST(SUM(n_g) AS BIGINT) AS n, CAST(SUM(s_g) AS BIGINT) AS s,
-               SUM(q_g) AS q, CAST(count(*) AS BIGINT) AS k,
-               SUM((CAST(s_g AS HUGEINT) * s_g * 1000000) // n_g) AS bsum
-        FROM perg),
-      sc AS (
-        SELECT n, k,
-               bsum - (CAST(s AS HUGEINT) * s * 1000000) // n AS ssb_sc,
-               q * 1000000 - (CAST(s AS HUGEINT) * s * 1000000) // n AS sst_sc
-        FROM f),
-      sc2 AS (SELECT n, k, ssb_sc, sst_sc - ssb_sc AS ssw_sc FROM sc)
-      SELECT grp, n_g, (s_g * 1000000) // n_g AS mean_micros,
-             CAST(0 AS BIGINT) AS ssb, CAST(0 AS BIGINT) AS ssw
-      FROM perg
-      UNION ALL
-      SELECT 'zz_f', n,
-             CAST((ssb_sc * (n - k) * 1000000)
-                  // greatest(ssw_sc * (k - 1), 1) AS BIGINT),
-             CAST(ssb_sc // 1000000 AS BIGINT),
-             CAST(ssw_sc // 1000000 AS BIGINT)
-      FROM sc2
-      ORDER BY grp""")),
+      ${anovaFSql}""")),
 
     // ---- per-source OLS of n_chars on token count: the linearity
     //      audit of the cheapest two length signals (a source whose
@@ -1278,17 +1320,11 @@ object StatsOps {
     //      normal-equation integer arithmetic term for term.
     ("q140_ols_chars_tokens", (s: SparkSession, dir: String) => {
       olsMicros(
-        Tables(s, dir).documents.select(col("source"),
-          TextStats.tokenCount(col("text")).cast("long").as("x"),
-          col("n_chars").cast("long").as("y")),
+        tokensVsChars(s, dir),
         group = "source", x = "x", y = "y")
         .orderBy(col("source"))
     }, Some(s"""
-      WITH f AS (
-        SELECT source,
-               CAST(len(regexp_split_to_array(text, '$ws+')) AS BIGINT) AS x,
-               CAST(n_chars AS BIGINT) AS y
-        FROM documents),
+      WITH $tokensVsCharsSql,
       sums AS (
         SELECT source, CAST(count(*) AS BIGINT) AS n,
                SUM(x) AS sx, SUM(y) AS sy, SUM(x * y) AS sxy,
@@ -1407,11 +1443,7 @@ object StatsOps {
       sourceJsdPairs(Tables(s, dir).documents)
         .orderBy(col("src_a"), col("src_b"))
     }, Some(s"""
-      WITH tok AS (
-        SELECT source,
-               unnest(list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                                  x -> x <> '')) AS w
-        FROM documents),
+      WITH ${TextStats.sourceTokensSql},
       bysrc AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1, 2),
       srctot AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY 1),
       bw AS (SELECT b.source, b.w, b.c, t.n FROM bysrc b JOIN srctot t USING (source)),
@@ -1421,16 +1453,7 @@ object StatsOps {
         FROM bw a JOIN bw b ON a.w = b.w AND a.source < b.source),
       terms AS (
         SELECT src_a, src_b, ca, na, cb, nb,
-               round(
-                 (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE))
-                   * ln((2.0 * (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)))
-                        / (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
-                           + CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)))
-                 + (CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))
-                   * ln((2.0 * (CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)))
-                        / (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
-                           + CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))),
-                 9) AS term
+               $jsdTermSql
         FROM pr),
       agg AS (
         SELECT src_a, src_b, CAST(count(*) AS BIGINT) AS n_shared,
@@ -1790,37 +1813,17 @@ object StatsOps {
         .groupBy(col("od")).agg(sum(col("w")).as("d"))
         .withColumn("grp", lit("all"))
       signFlipPermutation(dayDiffs, b = 200).orderBy(col("grp"))
-    }, Some {
-      val userH = TextStats.portableHash64Sql(
-        "concat('pt:', CAST(user_id AS VARCHAR))")
-      val dayH = TextStats.portableHash64Sql(
-        "concat('flip:', grp, ':', CAST(od AS VARCHAR))")
-      s"""
+    }, Some(s"""
       WITH dd AS (
         SELECT CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS od,
-               CAST(SUM(1 - 2 * ($userH % 2)) AS BIGINT) AS d,
+               CAST(SUM(1 - 2 * ($signFlipUserHSql % 2)) AS BIGINT) AS d,
                'all' AS grp
         FROM events GROUP BY od),
-      base AS (SELECT grp, od, d, $dayH % 2147483647 AS h FROM dd),
-      obs AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_days,
-                     CAST(SUM(d) AS BIGINT) AS s_obs
-              FROM base GROUP BY grp),
-      perms AS (
-        SELECT grp, rb,
-               CAST(SUM((1 - 2 * (((h * (2 * rb + 1)) % 2147483647) % 2)) * d)
-                 AS BIGINT) AS s_b
-        FROM base CROSS JOIN (SELECT unnest(range(1, 201)) AS rb)
-        GROUP BY grp, rb),
-      cnt AS (
-        SELECT p.grp,
-               CAST(count(*) FILTER (WHERE abs(s_b) >= abs(s_obs)) AS BIGINT) AS n_ge,
-               CAST(count(*) AS BIGINT) AS n_perms
-        FROM perms p JOIN obs o ON p.grp = o.grp GROUP BY p.grp)
+      ${signFlipCountsSql}
       SELECT o.grp, n_days, s_obs, n_perms, n_ge,
              ((1 + n_ge) * 1000000) // (n_perms + 1) AS p_ppm
       FROM obs o JOIN cnt c ON o.grp = c.grp
-      ORDER BY o.grp"""
-    }),
+      ORDER BY o.grp""")),
 
     // ---- Benjamini-Hochberg FDR battery (Benjamini & Hochberg 1995):
     //      one q264 sign-flip A/A test PER EVENT TYPE (independent day
@@ -1856,32 +1859,13 @@ object StatsOps {
           """CAST(CASE WHEN r_max IS NOT NULL AND bh_rank <= r_max
                   THEN 1 ELSE 0 END AS BIGINT) AS rejected""")
         .orderBy(col("grp"))
-    }, Some {
-      val userH = TextStats.portableHash64Sql(
-        "concat('pt:', CAST(user_id AS VARCHAR))")
-      val dayH = TextStats.portableHash64Sql(
-        "concat('flip:', grp, ':', CAST(od AS VARCHAR))")
-      s"""
+    }, Some(s"""
       WITH dd AS (
         SELECT event_type AS grp,
                CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS od,
-               CAST(SUM(1 - 2 * ($userH % 2)) AS BIGINT) AS d
+               CAST(SUM(1 - 2 * ($signFlipUserHSql % 2)) AS BIGINT) AS d
         FROM events GROUP BY grp, od),
-      base AS (SELECT grp, od, d, $dayH % 2147483647 AS h FROM dd),
-      obs AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_days,
-                     CAST(SUM(d) AS BIGINT) AS s_obs
-              FROM base GROUP BY grp),
-      perms AS (
-        SELECT grp, rb,
-               CAST(SUM((1 - 2 * (((h * (2 * rb + 1)) % 2147483647) % 2)) * d)
-                 AS BIGINT) AS s_b
-        FROM base CROSS JOIN (SELECT unnest(range(1, 201)) AS rb)
-        GROUP BY grp, rb),
-      cnt AS (
-        SELECT p.grp,
-               CAST(count(*) FILTER (WHERE abs(s_b) >= abs(s_obs)) AS BIGINT) AS n_ge,
-               CAST(count(*) AS BIGINT) AS n_perms
-        FROM perms p JOIN obs o ON p.grp = o.grp GROUP BY p.grp),
+      ${signFlipCountsSql},
       pv AS (
         SELECT o.grp, n_days, s_obs, n_ge, n_perms,
                ((1 + n_ge) * 1000000) // (n_perms + 1) AS p_ppm
@@ -1899,8 +1883,7 @@ object StatsOps {
              CAST(CASE WHEN r_max IS NOT NULL AND bh_rank <= r_max
                   THEN 1 ELSE 0 END AS BIGINT) AS rejected
       FROM ranked CROSS JOIN rmax
-      ORDER BY grp"""
-    }),
+      ORDER BY grp""")),
 
     // ---- r×c chi-square independence + Cramér's V (Cramér 1946): is
     //      language independent of source? The general contingency
@@ -2099,11 +2082,7 @@ object StatsOps {
           .agg(sum(col("c")).as("c")).groupBy(), lit("zz_all"))
       per.unionByName(all).orderBy(col("source"))
     }, Some(s"""
-      WITH tok AS (
-        SELECT source,
-               unnest(list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                                  x -> x <> '')) AS w
-        FROM documents),
+      WITH ${TextStats.sourceTokensSql},
       bysrc AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c
                 FROM tok GROUP BY 1, 2),
       per AS (
@@ -2729,7 +2708,6 @@ object StatsOps {
     //      window PARTITIONED BY block (k rows each), then k-row
     //      arithmetic — the friedman() shape exactly.
     ("q351_page_trend", (s: SparkSession, dir: String) => {
-      import org.apache.spark.sql.expressions.Window
       val cell = Tables(s, dir).orders
         .groupBy(expr("CAST(month(CAST(o_orderdate AS DATE)) AS BIGINT)").as("b"),
           col("o_orderpriority").as("t"))
@@ -2738,15 +2716,7 @@ object StatsOps {
         .crossJoin(broadcast(cell.select(col("t")).distinct()))
         .join(cell, Seq("b", "t"), "left")
         .select(col("b"), col("t"), coalesce(col("v0"), lit(0L)).as("v"))
-      val tg = grid.groupBy(col("b"), col("v")).agg(count(lit(1)).as("cnt"))
-      val mn = tg.withColumn("mn",
-        sum(col("cnt")).over(Window.partitionBy(col("b")).orderBy(col("v")))
-          - col("cnt") + 1)
-      val perT = grid.join(mn, Seq("b", "v"))
-        .withColumn("r2", lit(2L) * col("mn") + col("cnt") - 1)
-        .groupBy(col("t"))
-        .agg(count(lit(1)).as("n_blocks"), sum(col("r2")).as("rr2"))
-        .transform(graft.Stage.mat)
+      val perT = blockRankSums(grid)
       val zz = perT
         .agg(count(lit(1)).as("k"), max(col("n_blocks")).as("nb"),
           sum(expr("CAST(substring(t, 1, 1) AS BIGINT) * rr2")).as("l2"))
@@ -2759,7 +2729,7 @@ object StatsOps {
                    * (k - 1), 1) AS BIGINT) AS z2_micros""")
       perT.selectExpr("t", "n_blocks", "rr2", "CAST(0 AS BIGINT) AS z2_micros")
         .unionByName(zz).orderBy(col("t"))
-    }, Some("""
+    }, Some(s"""
       WITH cell AS (
         SELECT CAST(month(CAST(o_orderdate AS DATE)) AS BIGINT) AS b,
                o_orderpriority AS t,
@@ -2770,16 +2740,7 @@ object StatsOps {
         FROM (SELECT DISTINCT b FROM cell) bb
         CROSS JOIN (SELECT DISTINCT t FROM cell) tt
         LEFT JOIN cell c ON c.b = bb.b AND c.t = tt.t),
-      tg AS (SELECT b, v, CAST(count(*) AS BIGINT) AS cnt
-             FROM grid GROUP BY b, v),
-      mr AS (SELECT b, v, cnt,
-                    SUM(cnt) OVER (PARTITION BY b ORDER BY v) - cnt + 1 AS mn
-             FROM tg),
-      r2 AS (SELECT grid.b, grid.t, 2 * mn + cnt - 1 AS r2
-             FROM grid JOIN mr ON grid.b = mr.b AND grid.v = mr.v),
-      pert AS (SELECT t, CAST(count(*) AS BIGINT) AS n_blocks,
-                      CAST(SUM(r2) AS BIGINT) AS rr2
-               FROM r2 GROUP BY t),
+      ${blockRankSumsSql},
       f AS (SELECT CAST(count(*) AS BIGINT) AS k,
                    CAST(MAX(n_blocks) AS BIGINT) AS nb,
                    CAST(SUM(CAST(substring(t, 1, 1) AS BIGINT) * rr2) AS BIGINT) AS l2

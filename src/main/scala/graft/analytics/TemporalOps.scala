@@ -172,6 +172,44 @@ object TemporalOps {
       .selectExpr("CAST(datediff(CAST(ts AS DATE), DATE '1970-01-01') AS BIGINT) AS od")
       .groupBy(col("od")).agg(count(lit(1)).as("x"))
 
+  /** Tail of the sessionizers' `flagged` CTE (q51, q153's session
+    * windows): `is_new` marks an event more than 10 minutes after the
+    * user's previous one, over `events` in (ts, event_id) order. */
+  private val sessionBreakSql: String = """CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
+                 OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 600000000
+               THEN 1 ELSE 0 END AS is_new
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"""
+
+  /** Daily event counts centered by n (the q183/q347 autocorrelation
+    * inputs): CTEs `daily(day, x)`, `tot`, `c(day, c)` with c = n·x − Σx,
+    * and the one-row `den`, Σc². */
+  private val centeredDailySql: String = """daily AS (
+        SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS x
+        FROM events GROUP BY day),
+      tot AS (SELECT CAST(SUM(x) AS BIGINT) AS sx,
+                     CAST(count(*) AS BIGINT) AS n FROM daily),
+      c AS (SELECT day, n * x - sx AS c FROM daily, tot),
+      den AS (SELECT SUM(CAST(c AS HUGEINT) * c) AS den FROM c)"""
+
+  /** DuckDB twin of [[dailyVolumes]] plus [[bestSplit]]'s candidate
+    * table: CTEs `daily(od, x)`, `tot`, `pre` and `cand` (one row per
+    * split with both segments' counts and sums).
+    */
+  private val splitCandidatesSql: String = """daily AS (
+        SELECT CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS od,
+               CAST(count(*) AS BIGINT) AS x
+        FROM events GROUP BY od),
+      tot AS (SELECT CAST(count(*) AS BIGINT) AS tn, CAST(SUM(x) AS BIGINT) AS ts
+              FROM daily),
+      pre AS (SELECT od, CAST(row_number() OVER (ORDER BY od) AS BIGINT) AS i,
+                     CAST(SUM(x) OVER (ORDER BY od) AS BIGINT) AS sl
+              FROM daily),
+      cand AS (
+        SELECT od AS split_od, i AS n_left, tn - i AS n_right,
+               sl AS s_left, ts - sl AS s_right, tn, ts
+        FROM pre CROSS JOIN tot WHERE i < tn)"""
+
   /** Zero-filled hourly event-count spine (q111's gap-fill idiom on an
     * integer epoch-hour key): (hb, x, p) with p the 1-based hour
     * position. The position rank is ONE unpartitioned window over the
@@ -189,6 +227,16 @@ object TemporalOps {
       .select(col("hb"), coalesce(col("x"), lit(0L)).as("x"))
       .withColumn("p", row_number().over(Window.orderBy(col("hb"))).cast("long")))
   }
+
+  /** DuckDB twin of [[hourlySpine]]'s inputs: CTEs `counts(hb, x)` and
+    * the gap-free epoch-hour `spine(hb)`; callers left-join them into
+    * their own `hourly` table.
+    */
+  private val hourSpineSql: String = """counts AS (
+        SELECT epoch_us(ts) // 3600000000 AS hb, CAST(count(*) AS BIGINT) AS x
+        FROM events GROUP BY 1),
+      spine AS (SELECT unnest(generate_series(h0, h1)) AS hb
+                FROM (SELECT min(hb) AS h0, max(hb) AS h1 FROM counts))"""
 
   /** The q259 two-segment SSE argmin over a (od, x) day table: one row
     * (split_od, n_left, n_right, mean_left_micros, mean_right_micros,
@@ -344,6 +392,93 @@ object TemporalOps {
                   ELSE 'd' END AS symbol
       FROM ${p}paa)"""
 
+  /** Each user's numeric events as micros in time order — the series the
+    * q162/q176/q204 smoothing folds consume: (user_id, n_events, seq of
+    * (ts, event_id, xm)). */
+  private[analytics] def userValueSeqs(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir).events
+      .filter(col("user_id").isNotNull && col("value").isNotNull)
+      .selectExpr("user_id", "ts", "event_id",
+        "CAST(floor(value * 1000000) AS BIGINT) AS xm")
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_events"),
+        sort_array(collect_list(struct(col("ts"), col("event_id"), col("xm"))))
+          .as("seq"))
+
+  /** DuckDB twin of [[userValueSeqs]]'s rows before the fold: CTE
+    * `f(user_id, ts, event_id, xm)`. */
+  private[analytics] val userValueSql: String = """f AS (
+        SELECT user_id, ts, event_id,
+               CAST(floor(value * 1000000) AS BIGINT) AS xm
+        FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL)"""
+
+  /** Right-censored per-user survival table shared by q175 (Kaplan–Meier)
+    * and q201 (Nelson–Aalen): the event is a user's first purchase, in
+    * days from first activity; users without one are censored at the
+    * window's end. One row per end day: (e_off, n = users still at
+    * risk, d = deaths that day). Day-table sized, never corpus sized.
+    */
+  private[analytics] def survivalRisk(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables(s, dir).events
+      .filter(col("user_id").isNotNull)
+      .select(col("user_id"), col("event_type"), expr("CAST(ts AS DATE)").as("d"))
+      .transform(graft.Stage.mat) // feeds span, entry, AND conv — one scan
+    val span = ev.agg(max(col("d")).as("d1"))
+    val entry = ev.groupBy(col("user_id")).agg(min(col("d")).as("ad"))
+    val conv = ev.filter(col("event_type") === "purchase")
+      .groupBy(col("user_id")).agg(min(col("d")).as("pd"))
+    val users = entry.join(conv, Seq("user_id"), "left")
+      .crossJoin(broadcast(span))
+      .selectExpr(
+        "CASE WHEN pd IS NOT NULL THEN datediff(pd, ad) ELSE datediff(d1, ad) END AS e_off",
+        "CAST(pd IS NOT NULL AS INT) AS is_death")
+    val days = users.groupBy(col("e_off"))
+      .agg(count(lit(1)).as("n_end"),
+        sum(col("is_death")).cast("long").as("d"))
+    val tot = days.agg(sum(col("n_end")).as("n_total"))
+    days.crossJoin(broadcast(tot))
+      .withColumn("cum_prev",
+        coalesce(sum(col("n_end")).over(
+          Window.orderBy(col("e_off"))
+            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .selectExpr("e_off", "n_total - cum_prev AS n", "d")
+  }
+
+  /** DuckDB twin of [[survivalRisk]]: CTEs `ev` through `risk(e_off, n, d)`. */
+  private[analytics] val survivalRiskSql: String = """ev AS (
+        SELECT user_id, event_type, CAST(ts AS DATE) AS d
+        FROM events WHERE user_id IS NOT NULL),
+      span AS (SELECT MAX(d) AS d1 FROM ev),
+      entry AS (SELECT user_id, MIN(d) AS ad FROM ev GROUP BY user_id),
+      conv AS (SELECT user_id, MIN(d) AS pd FROM ev
+               WHERE event_type = 'purchase' GROUP BY user_id),
+      users AS (
+        SELECT CASE WHEN pd IS NOT NULL THEN datediff('day', ad, pd)
+                    ELSE datediff('day', ad, d1) END AS e_off,
+               CASE WHEN pd IS NOT NULL THEN 1 ELSE 0 END AS is_death
+        FROM entry LEFT JOIN conv USING (user_id) CROSS JOIN span),
+      days AS (
+        SELECT e_off, CAST(count(*) AS BIGINT) AS n_end,
+               CAST(SUM(is_death) AS BIGINT) AS d
+        FROM users GROUP BY e_off),
+      risk AS (
+        SELECT e_off,
+               CAST((SELECT SUM(n_end) FROM days) AS BIGINT)
+                 - CAST(COALESCE(SUM(n_end) OVER (ORDER BY e_off
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS n,
+               d
+        FROM days)"""
+
+  /** [[saxSql]] over daily order revenue in kilodollars (prefix `r`,
+    * ending in `rsax`) — the q299 series that q304 aligns against
+    * order counts. */
+  private val revenueSaxSql: String = saxSql(
+    """SELECT od, SUM(cents) // 100000 AS x FROM (
+          SELECT CAST(datediff('day', DATE '1970-01-01', o_orderdate) AS BIGINT) AS od,
+                 CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
+          FROM orders)
+        GROUP BY od""", "r")
+
   val defs: Seq[(String, QFn, Option[String])] = Seq(
 
     // ---- inter-event gap dispersion (index of dispersion / CV² on
@@ -458,14 +593,10 @@ object TemporalOps {
              min(col("ts")).as("session_start"),
              max(col("ts")).as("session_end"))
         .orderBy(col("user_id"), col("session_idx"))
-    }, Some("""
+    }, Some(s"""
       WITH flagged AS (
         SELECT user_id, event_id, ts,
-          CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
-                 OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 600000000
-               THEN 1 ELSE 0 END AS is_new
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+          ${sessionBreakSql}),
       sessions AS (
         SELECT user_id, ts,
           -- DuckDB windowed SUM(int) yields HUGEINT; Spark yields BIGINT —
@@ -598,14 +729,10 @@ object TemporalOps {
         .select(col("user_id"), col("w.start").as("session_start"),
           col("w.end").as("session_end"), col("n_events"))
         .orderBy(col("user_id"), col("session_start"))
-    }, Some("""
+    }, Some(s"""
       WITH flagged AS (
         SELECT user_id, ts,
-          CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
-                 OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 600000000
-               THEN 1 ELSE 0 END AS is_new
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+          ${sessionBreakSql}),
       sessions AS (
         SELECT user_id, ts,
           CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
@@ -674,25 +801,15 @@ object TemporalOps {
     //      streaming form (flatMapGroupsWithState carrying s_t, the
     //      StatefulDedup shape) where state is ONE long per key.
     ("q162_ewma", (s: SparkSession, dir: String) => {
-      Tables(s, dir).events
-        .filter(col("user_id").isNotNull && col("value").isNotNull)
-        .selectExpr("user_id", "ts", "event_id",
-          "CAST(floor(value * 1000000) AS BIGINT) AS xm")
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sort_array(collect_list(struct(col("ts"), col("event_id"), col("xm"))))
-            .as("seq"))
+      userValueSeqs(s, dir)
         .selectExpr("user_id", "n_events",
           """aggregate(slice(transform(seq, e -> e.xm), 2, size(seq) - 1),
                        element_at(transform(seq, e -> e.xm), 1),
                        (acc, x) -> (300000 * x + 700000 * acc) DIV 1000000)
              AS ewma_micros""")
         .orderBy(col("user_id"))
-    }, Some("""
-      WITH f AS (
-        SELECT user_id, ts, event_id,
-               CAST(floor(value * 1000000) AS BIGINT) AS xm
-        FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL)
+    }, Some(s"""
+      WITH ${userValueSql}
       SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
              list_reduce(list(xm ORDER BY ts, event_id),
                          (acc, x) -> (300000 * x + 700000 * acc) // 1000000)
@@ -825,30 +942,8 @@ object TemporalOps {
     //      collect + O(days²) prefix fold is span-bounded driver-safe
     //      state, the same argument as q129's vocab-sized merge loop.
     ("q175_kaplan_meier", (s: SparkSession, dir: String) => {
-      val ev = Tables(s, dir).events
-        .filter(col("user_id").isNotNull)
-        .select(col("user_id"), col("event_type"), expr("CAST(ts AS DATE)").as("d"))
-        .transform(graft.Stage.mat) // feeds span, entry, AND conv — one scan
-      val span = ev.agg(max(col("d")).as("d1"))
-      val entry = ev.groupBy(col("user_id")).agg(min(col("d")).as("ad"))
-      val conv = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id")).agg(min(col("d")).as("pd"))
-      val users = entry.join(conv, Seq("user_id"), "left")
-        .crossJoin(broadcast(span))
-        .selectExpr(
-          "CASE WHEN pd IS NOT NULL THEN datediff(pd, ad) ELSE datediff(d1, ad) END AS e_off",
-          "CAST(pd IS NOT NULL AS INT) AS is_death")
-      val days = users.groupBy(col("e_off"))
-        .agg(count(lit(1)).as("n_end"),
-          sum(col("is_death")).cast("long").as("d"))
-      val tot = days.agg(sum(col("n_end")).as("n_total"))
-      val risk = days.crossJoin(broadcast(tot))
-        .withColumn("cum_prev",
-          coalesce(sum(col("n_end")).over(
-            Window.orderBy(col("e_off"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .selectExpr("e_off", "n_total - cum_prev AS n", "d")
-      risk.agg(sort_array(collect_list(struct(col("e_off"), col("n"), col("d"))))
+      survivalRisk(s, dir)
+        .agg(sort_array(collect_list(struct(col("e_off"), col("n"), col("d"))))
           .as("arr"))
         .selectExpr("""explode(transform(sequence(1, size(arr)), k ->
             named_struct(
@@ -860,30 +955,8 @@ object TemporalOps {
         .selectExpr("e.day_off", "e.n_risk", "e.n_deaths", "e.s_micros")
         .filter(col("n_deaths") > 0)
         .orderBy(col("day_off"))
-    }, Some("""
-      WITH ev AS (
-        SELECT user_id, event_type, CAST(ts AS DATE) AS d
-        FROM events WHERE user_id IS NOT NULL),
-      span AS (SELECT MAX(d) AS d1 FROM ev),
-      entry AS (SELECT user_id, MIN(d) AS ad FROM ev GROUP BY user_id),
-      conv AS (SELECT user_id, MIN(d) AS pd FROM ev
-               WHERE event_type = 'purchase' GROUP BY user_id),
-      users AS (
-        SELECT CASE WHEN pd IS NOT NULL THEN datediff('day', ad, pd)
-                    ELSE datediff('day', ad, d1) END AS e_off,
-               CASE WHEN pd IS NOT NULL THEN 1 ELSE 0 END AS is_death
-        FROM entry LEFT JOIN conv USING (user_id) CROSS JOIN span),
-      days AS (
-        SELECT e_off, CAST(count(*) AS BIGINT) AS n_end,
-               CAST(SUM(is_death) AS BIGINT) AS d
-        FROM users GROUP BY e_off),
-      risk AS (
-        SELECT e_off,
-               CAST((SELECT SUM(n_end) FROM days) AS BIGINT)
-                 - CAST(COALESCE(SUM(n_end) OVER (ORDER BY e_off
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS n,
-               d
-        FROM days),
+    }, Some(s"""
+      WITH ${survivalRiskSql},
       packed AS (
         SELECT list_prepend({'e_off': 0::BIGINT, 'n': 1::BIGINT, 'd': 0::BIGINT,
                              's': 1000000::BIGINT},
@@ -921,14 +994,7 @@ object TemporalOps {
     //      unbounded-stream form belongs to flatMapGroupsWithState
     //      with TWO longs of state per key.
     ("q176_holt_trend", (s: SparkSession, dir: String) => {
-      Tables(s, dir).events
-        .filter(col("user_id").isNotNull && col("value").isNotNull)
-        .selectExpr("user_id", "ts", "event_id",
-          "CAST(floor(value * 1000000) AS BIGINT) AS xm")
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sort_array(collect_list(struct(col("ts"), col("event_id"), col("xm"))))
-            .as("seq"))
+      userValueSeqs(s, dir)
         .selectExpr("user_id", "n_events",
           """aggregate(slice(transform(seq, e -> e.xm), 2, size(seq) - 1),
                named_struct('l', element_at(transform(seq, e -> e.xm), 1),
@@ -941,11 +1007,8 @@ object TemporalOps {
         .selectExpr("user_id", "n_events", "st.l AS level_micros",
           "st.b AS trend_micros", "st.l + st.b AS forecast_micros")
         .orderBy(col("user_id"))
-    }, Some("""
-      WITH f AS (
-        SELECT user_id, ts, event_id,
-               CAST(floor(value * 1000000) AS BIGINT) AS xm
-        FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL),
+    }, Some(s"""
+      WITH ${userValueSql},
       folded AS (
         -- state is a 2-list [l, b], NOT a struct: DuckDB's list_reduce
         -- mutates a struct accumulator field-by-field during
@@ -1061,14 +1124,8 @@ object TemporalOps {
         .selectExpr("lag", "n_pairs",
           "CAST((num * 1000000) DIV greatest(den, CAST(1 AS DECIMAL(38,0))) AS BIGINT) AS r_micros")
         .orderBy(col("lag"))
-    }, Some("""
-      WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS x
-        FROM events GROUP BY day),
-      tot AS (SELECT CAST(SUM(x) AS BIGINT) AS sx,
-                     CAST(count(*) AS BIGINT) AS n FROM daily),
-      c AS (SELECT day, n * x - sx AS c FROM daily, tot),
-      den AS (SELECT SUM(CAST(c AS HUGEINT) * c) AS den FROM c),
+    }, Some(s"""
+      WITH ${centeredDailySql},
       lags AS (SELECT unnest(range(1, 8)) AS lag),
       num AS (
         SELECT lag, CAST(count(*) AS BIGINT) AS n_pairs,
@@ -1594,20 +1651,8 @@ object TemporalOps {
     //      TakeOrdered top-1.
     ("q259_changepoint", (s: SparkSession, dir: String) => {
       bestSplit(dailyVolumes(s, dir))
-    }, Some("""
-      WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS od,
-               CAST(count(*) AS BIGINT) AS x
-        FROM events GROUP BY od),
-      tot AS (SELECT CAST(count(*) AS BIGINT) AS tn, CAST(SUM(x) AS BIGINT) AS ts
-              FROM daily),
-      pre AS (SELECT od, CAST(row_number() OVER (ORDER BY od) AS BIGINT) AS i,
-                     CAST(SUM(x) OVER (ORDER BY od) AS BIGINT) AS sl
-              FROM daily),
-      cand AS (
-        SELECT od AS split_od, i AS n_left, tn - i AS n_right,
-               sl AS s_left, ts - sl AS s_right, tn, ts
-        FROM pre CROSS JOIN tot WHERE i < tn),
+    }, Some(s"""
+      WITH ${splitCandidatesSql},
       scored AS (
         SELECT split_od, n_left, n_right,
                (s_left * 1000000) // n_left AS mean_left_micros,
@@ -1642,20 +1687,8 @@ object TemporalOps {
         .unionByName(daily.selectExpr("'all' AS grp", "od", "x"))
       StatsOps.olsMicros(seg, group = "grp", x = "od", y = "x")
         .orderBy(col("grp"))
-    }, Some("""
-      WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS od,
-               CAST(count(*) AS BIGINT) AS x
-        FROM events GROUP BY od),
-      tot AS (SELECT CAST(count(*) AS BIGINT) AS tn, CAST(SUM(x) AS BIGINT) AS ts
-              FROM daily),
-      pre AS (SELECT od, CAST(row_number() OVER (ORDER BY od) AS BIGINT) AS i,
-                     CAST(SUM(x) OVER (ORDER BY od) AS BIGINT) AS sl
-              FROM daily),
-      cand AS (
-        SELECT od AS split_od, i AS n_left, tn - i AS n_right,
-               sl AS s_left, ts - sl AS s_right, tn, ts
-        FROM pre CROSS JOIN tot WHERE i < tn),
+    }, Some(s"""
+      WITH ${splitCandidatesSql},
       best AS (
         SELECT split_od
         FROM (SELECT split_od,
@@ -2203,12 +2236,7 @@ object TemporalOps {
         .transform(graft.Stage.mat)
       saxSegments(d).orderBy(col("seg"))
     }, Some(s"""
-      WITH ${saxSql(
-        """SELECT od, SUM(cents) // 100000 AS x FROM (
-          SELECT CAST(datediff('day', DATE '1970-01-01', o_orderdate) AS BIGINT) AS od,
-                 CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
-          FROM orders)
-        GROUP BY od""", "r")}
+      WITH $revenueSaxSql
       SELECT seg, n_days, paa_micros, symbol
       FROM rsax ORDER BY seg"""))
   ) ++ Seq(
@@ -2310,12 +2338,7 @@ object TemporalOps {
           "hamming_dist",
           "CAST(levenshtein(word_revenue, word_orders) AS BIGINT) AS edit_dist")
     }, Some(s"""
-      WITH ${saxSql(
-        """SELECT od, SUM(cents) // 100000 AS x FROM (
-          SELECT CAST(datediff('day', DATE '1970-01-01', o_orderdate) AS BIGINT) AS od,
-                 CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
-          FROM orders)
-        GROUP BY od""", "r")},
+      WITH $revenueSaxSql,
       ${saxSql(
         """SELECT CAST(datediff('day', DATE '1970-01-01', o_orderdate) AS BIGINT) AS od,
                   CAST(count(*) AS BIGINT) AS x
@@ -2396,12 +2419,8 @@ object TemporalOps {
           "CAST(0 AS BIGINT) AS mean_rs_ppm", "CAST(0 AS BIGINT) AS ln_rs_nanos",
           "((-3 * y1 - y2 + y3 + 3 * y4) * 1000000) DIV 6931471810 AS hurst_micros")
       rows.unionByName(zz).orderBy(col("w"))
-    }, Some("""
-      WITH counts AS (
-        SELECT epoch_us(ts) // 3600000000 AS hb, CAST(count(*) AS BIGINT) AS x
-        FROM events GROUP BY 1),
-      spine AS (SELECT unnest(generate_series(h0, h1)) AS hb
-                FROM (SELECT min(hb) AS h0, max(hb) AS h1 FROM counts)),
+    }, Some(s"""
+      WITH ${hourSpineSql},
       hourly AS (SELECT s.hb, COALESCE(c.x, 0) AS x,
                         CAST(row_number() OVER (ORDER BY s.hb) AS BIGINT) AS p
                  FROM spine s LEFT JOIN counts c USING (hb)),
@@ -2490,12 +2509,8 @@ object TemporalOps {
         .selectExpr("pattern", "cnt", "(cnt * 1000000) DIV nt AS share_ppm",
           "CAST(0 AS BIGINT) AS pe_nanos", "CAST(0 AS BIGINT) AS pe_norm_ppm")
         .unionByName(zz).orderBy(col("pattern"))
-    }, Some("""
-      WITH counts AS (
-        SELECT epoch_us(ts) // 3600000000 AS hb, CAST(count(*) AS BIGINT) AS x
-        FROM events GROUP BY 1),
-      spine AS (SELECT unnest(generate_series(h0, h1)) AS hb
-                FROM (SELECT min(hb) AS h0, max(hb) AS h1 FROM counts)),
+    }, Some(s"""
+      WITH ${hourSpineSql},
       hourly AS (SELECT s.hb, COALESCE(c.x, 0) AS x
                  FROM spine s LEFT JOIN counts c USING (hb)),
       trip AS (SELECT x, lead(x, 1) OVER (ORDER BY hb) AS x2,
@@ -2572,11 +2587,7 @@ object TemporalOps {
       per.selectExpr("sgn", "n_g", "runs_g", "CAST(0 AS BIGINT) AS z2_micros")
         .unionByName(zz).orderBy(col("sgn"))
     }, Some(s"""
-      WITH counts AS (
-        SELECT epoch_us(ts) // 3600000000 AS hb, CAST(count(*) AS BIGINT) AS x
-        FROM events GROUP BY 1),
-      spine AS (SELECT unnest(generate_series(h0, h1)) AS hb
-                FROM (SELECT min(hb) AS h0, max(hb) AS h1 FROM counts)),
+      WITH ${hourSpineSql},
       hourly AS (SELECT s.hb, COALESCE(c.x, 0) AS x
                  FROM spine s LEFT JOIN counts c USING (hb)),
       med AS (SELECT CAST(2 * q AS BIGINT) AS med2 FROM (
@@ -2677,12 +2688,8 @@ object TemporalOps {
           """CAST((sdd * 1000000) DIV greatest(see, 1) AS BIGINT) AS dw_ppm""",
           "round(bh, 6) AS slope_r")
       days.unionByName(zz).orderBy(col("od"))
-    }, Some("""
-      WITH counts AS (
-        SELECT epoch_us(ts) // 3600000000 AS hb, CAST(count(*) AS BIGINT) AS x
-        FROM events GROUP BY 1),
-      spine AS (SELECT unnest(generate_series(h0, h1)) AS hb
-                FROM (SELECT min(hb) AS h0, max(hb) AS h1 FROM counts)),
+    }, Some(s"""
+      WITH ${hourSpineSql},
       hourly AS (SELECT s.hb, COALESCE(c.x, 0) AS x,
                         CAST(row_number() OVER (ORDER BY s.hb) AS BIGINT) AS p
                  FROM spine s LEFT JOIN counts c USING (hb)),
@@ -2966,12 +2973,8 @@ object TemporalOps {
              ELSE g * sqrt(cxx) / sqrt(rss / (nd - 2)) END"""))
         .selectExpr("n", "round(g, 6) AS gamma_r", "round(t, 6) AS t_r",
           "t < CAST(-2.86 AS DOUBLE) AS stationary")
-    }, Some("""
-      WITH counts AS (
-        SELECT epoch_us(ts) // 3600000000 AS hb, CAST(count(*) AS BIGINT) AS x
-        FROM events GROUP BY 1),
-      spine AS (SELECT unnest(generate_series(h0, h1)) AS hb
-                FROM (SELECT min(hb) AS h0, max(hb) AS h1 FROM counts)),
+    }, Some(s"""
+      WITH ${hourSpineSql},
       hourly AS (SELECT s.hb, COALESCE(c.x, 0) AS x
                  FROM spine s LEFT JOIN counts c USING (hb)),
       lagd AS (SELECT x - x1 AS dx, x1 FROM (
@@ -3038,12 +3041,8 @@ object TemporalOps {
       rl.selectExpr("l", "n_pairs", "sgn", "abs_rho_ppm",
           "CAST(0 AS BIGINT) AS period")
         .unionByName(zz).orderBy(col("l"))
-    }, Some("""
-      WITH counts AS (
-        SELECT epoch_us(ts) // 3600000000 AS hb, CAST(count(*) AS BIGINT) AS x
-        FROM events GROUP BY 1),
-      spine AS (SELECT unnest(generate_series(h0, h1)) AS hb
-                FROM (SELECT min(hb) AS h0, max(hb) AS h1 FROM counts)),
+    }, Some(s"""
+      WITH ${hourSpineSql},
       hourly AS (SELECT s.hb, COALESCE(c.x, 0) AS x
                  FROM spine s LEFT JOIN counts c USING (hb)),
       tot AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(SUM(x) AS BIGINT) AS sx
@@ -3128,13 +3127,7 @@ object TemporalOps {
         s"p${i + 1} AS (SELECT *, $ex AS $nm FROM p$i)"
       }.mkString(",\n      ")
       s"""
-      WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS x
-        FROM events GROUP BY day),
-      tot AS (SELECT CAST(SUM(x) AS BIGINT) AS sx,
-                     CAST(count(*) AS BIGINT) AS n FROM daily),
-      c AS (SELECT day, n * x - sx AS c FROM daily, tot),
-      den AS (SELECT SUM(CAST(c AS HUGEINT) * c) AS den FROM c),
+      WITH ${centeredDailySql},
       lags AS (SELECT unnest(range(1, 5)) AS lag),
       nums AS (
         SELECT lag, SUM(CAST(a.c AS HUGEINT) * b.c) AS num

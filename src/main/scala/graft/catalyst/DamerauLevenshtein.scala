@@ -53,22 +53,22 @@ case class DamerauLevenshtein(left: Expression, right: Expression)
 
 object DamerauLevenshtein {
 
-  def compute(ua: UTF8String, ub: UTF8String): Long = {
-    // ASCII fast path (numBytes == numChars ⟺ no multibyte sequences):
-    // read bytes directly, skipping the String + codePoints() stream
-    // allocation that dominates on short identifier-like inputs
-    val na = ua.numBytes(); val nb = ub.numBytes()
-    if (na == ua.numChars() && nb == ub.numChars()) {
-      val a = new Array[Int](na)
+  def compute(ua: UTF8String, ub: UTF8String): Long =
+    compute(codePoints(ua), codePoints(ub))
+
+  /** The string's code points. ASCII fast path (numBytes == numChars ⟺
+    * no multibyte sequences): read bytes directly, skipping the String +
+    * codePoints() stream allocation that dominates on short
+    * identifier-like inputs. Shared with [[JaroWinklerMicros]].
+    */
+  private[catalyst] def codePoints(u: UTF8String): Array[Int] = {
+    val n = u.numBytes()
+    if (n == u.numChars()) {
+      val a = new Array[Int](n)
       var i = 0
-      while (i < na) { a(i) = ua.getByte(i) & 0xff; i += 1 }
-      val b = new Array[Int](nb)
-      i = 0
-      while (i < nb) { b(i) = ub.getByte(i) & 0xff; i += 1 }
-      compute(a, b)
-    } else {
-      compute(ua.toString.codePoints().toArray, ub.toString.codePoints().toArray)
-    }
+      while (i < n) { a(i) = u.getByte(i) & 0xff; i += 1 }
+      a
+    } else u.toString.codePoints().toArray
   }
 
   private[catalyst] def compute(a: Array[Int], b: Array[Int]): Long = {

@@ -64,21 +64,8 @@ case class JaroWinklerMicros(left: Expression, right: Expression)
 
 object JaroWinklerMicros {
 
-  def compute(ua: UTF8String, ub: UTF8String): Long = {
-    val na = ua.numBytes(); val nb = ub.numBytes()
-    if (na == ua.numChars() && nb == ub.numChars()) {
-      // ASCII fast path (the DamerauLevenshtein convention)
-      val a = new Array[Int](na)
-      var i = 0
-      while (i < na) { a(i) = ua.getByte(i) & 0xff; i += 1 }
-      val b = new Array[Int](nb)
-      i = 0
-      while (i < nb) { b(i) = ub.getByte(i) & 0xff; i += 1 }
-      compute(a, b)
-    } else {
-      compute(ua.toString.codePoints().toArray, ub.toString.codePoints().toArray)
-    }
-  }
+  def compute(ua: UTF8String, ub: UTF8String): Long =
+    compute(DamerauLevenshtein.codePoints(ua), DamerauLevenshtein.codePoints(ub))
 
   private[catalyst] def compute(a: Array[Int], b: Array[Int]): Long = {
     val la = a.length

@@ -45,56 +45,8 @@ case class PortableShingles(child: Expression, k: Int) extends UnaryExpression {
 object PortableShingles {
 
   def compute(input: UTF8String, k: Int): ArrayData = {
-    val bytes = input.toLowerCase.getBytes
-    val n = bytes.length
-    var starts = new Array[Int](16)
-    var ends = new Array[Int](16)
-    var nTok = 0
-    var i = 0
-    while (i < n) {
-      while (i < n && isSpace(bytes(i))) i += 1
-      val s = i
-      while (i < n && !isSpace(bytes(i))) i += 1
-      if (i > s) {
-        if (nTok == starts.length) {
-          starts = java.util.Arrays.copyOf(starts, nTok * 2)
-          ends = java.util.Arrays.copyOf(ends, nTok * 2)
-        }
-        starts(nTok) = s
-        ends(nTok) = i
-        nTok += 1
-      }
-    }
-    if (nTok < k) return new GenericArrayData(Array.emptyLongArray)
-    val nGrams = nTok - k + 1
-    var maxGram = 0
-    var g = 0
-    while (g < nGrams) {
-      var len = k - 1
-      var t = g
-      while (t < g + k) { len += ends(t) - starts(t); t += 1 }
-      if (len > maxGram) maxGram = len
-      g += 1
-    }
-    val out = new Array[Long](nGrams)
-    val buf = new Array[Byte](maxGram)
-    g = 0
-    while (g < nGrams) {
-      var pos = 0
-      var t = g
-      while (t < g + k) {
-        if (t > g) { buf(pos) = ' '; pos += 1 }
-        val l = ends(t) - starts(t)
-        System.arraycopy(bytes, starts(t), buf, pos, l)
-        pos += l
-        t += 1
-      }
-      out(g) = PortableWinnow.portableHash(buf, pos)
-      g += 1
-    }
-    new GenericArrayData(out)
+    val toks = PortableWinnow.tokenize(input)
+    if (toks.n < k) new GenericArrayData(Array.emptyLongArray)
+    else new GenericArrayData(PortableWinnow.gramHashesOf(toks, k))
   }
-
-  private def isSpace(b: Byte): Boolean =
-    b == ' ' || b == '\n' || b == '\t' || b == '\r' || b == '\f' || b == 0x0B
 }

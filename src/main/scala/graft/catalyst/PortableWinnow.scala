@@ -76,56 +76,10 @@ object PortableWinnow {
   }
 
   def compute(input: UTF8String, k: Int, w: Int): ArrayData = {
-    val bytes = input.toLowerCase.getBytes
-    val n = bytes.length
-    // token ranges (start, end) over maximal non-whitespace runs
-    var starts = new Array[Int](16)
-    var ends = new Array[Int](16)
-    var nTok = 0
-    var i = 0
-    while (i < n) {
-      while (i < n && isSpace(bytes(i))) i += 1
-      val s = i
-      while (i < n && !isSpace(bytes(i))) i += 1
-      if (i > s) {
-        if (nTok == starts.length) {
-          starts = java.util.Arrays.copyOf(starts, nTok * 2)
-          ends = java.util.Arrays.copyOf(ends, nTok * 2)
-        }
-        starts(nTok) = s
-        ends(nTok) = i
-        nTok += 1
-      }
-    }
-    if (nTok == 0) return new GenericArrayData(Array.emptyLongArray)
-    // gram hashes: windows of eff tokens joined by ' '
-    val eff = math.min(k, nTok)
-    val nGrams = nTok - eff + 1
-    val gramHashes = new Array[Long](nGrams)
-    var maxGram = 0
-    var g = 0
-    while (g < nGrams) {
-      var len = eff - 1
-      var t = g
-      while (t < g + eff) { len += ends(t) - starts(t); t += 1 }
-      if (len > maxGram) maxGram = len
-      g += 1
-    }
-    val buf = new Array[Byte](maxGram)
-    g = 0
-    while (g < nGrams) {
-      var pos = 0
-      var t = g
-      while (t < g + eff) {
-        if (t > g) { buf(pos) = ' '; pos += 1 }
-        val l = ends(t) - starts(t)
-        System.arraycopy(bytes, starts(t), buf, pos, l)
-        pos += l
-        t += 1
-      }
-      gramHashes(g) = portableHash(buf, pos)
-      g += 1
-    }
+    val toks = tokenize(input)
+    if (toks.n == 0) return new GenericArrayData(Array.emptyLongArray)
+    val gramHashes = gramHashesOf(toks, math.min(k, toks.n))
+    val nGrams = gramHashes.length
     // sliding-window minima (monotonic deque, O(nGrams))
     val effW = math.min(w, nGrams)
     val nMins = nGrams - effW + 1
@@ -151,6 +105,67 @@ object PortableWinnow {
       r += 1
     }
     new GenericArrayData(java.util.Arrays.copyOf(mins, uniq))
+  }
+
+  /** Lowercased UTF-8 bytes and the [start, end) ranges of their `n`
+    * maximal non-whitespace runs. */
+  private[catalyst] final class Tokens(val bytes: Array[Byte],
+      val starts: Array[Int], val ends: Array[Int], val n: Int)
+
+  private[catalyst] def tokenize(input: UTF8String): Tokens = {
+    val bytes = input.toLowerCase.getBytes
+    val len = bytes.length
+    var starts = new Array[Int](16)
+    var ends = new Array[Int](16)
+    var nTok = 0
+    var i = 0
+    while (i < len) {
+      while (i < len && isSpace(bytes(i))) i += 1
+      val s = i
+      while (i < len && !isSpace(bytes(i))) i += 1
+      if (i > s) {
+        if (nTok == starts.length) {
+          starts = java.util.Arrays.copyOf(starts, nTok * 2)
+          ends = java.util.Arrays.copyOf(ends, nTok * 2)
+        }
+        starts(nTok) = s
+        ends(nTok) = i
+        nTok += 1
+      }
+    }
+    new Tokens(bytes, starts, ends, nTok)
+  }
+
+  /** [[portableHash]] of every window of `k` consecutive tokens joined by
+    * ' ' (1 <= k <= toks.n): toks.n - k + 1 hashes in token order. */
+  private[catalyst] def gramHashesOf(toks: Tokens, k: Int): Array[Long] = {
+    val nGrams = toks.n - k + 1
+    var maxGram = 0
+    var g = 0
+    while (g < nGrams) {
+      var len = k - 1
+      var t = g
+      while (t < g + k) { len += toks.ends(t) - toks.starts(t); t += 1 }
+      if (len > maxGram) maxGram = len
+      g += 1
+    }
+    val out = new Array[Long](nGrams)
+    val buf = new Array[Byte](maxGram)
+    g = 0
+    while (g < nGrams) {
+      var pos = 0
+      var t = g
+      while (t < g + k) {
+        if (t > g) { buf(pos) = ' '; pos += 1 }
+        val l = toks.ends(t) - toks.starts(t)
+        System.arraycopy(toks.bytes, toks.starts(t), buf, pos, l)
+        pos += l
+        t += 1
+      }
+      out(g) = portableHash(buf, pos)
+      g += 1
+    }
+    out
   }
 
   private def isSpace(b: Byte): Boolean =

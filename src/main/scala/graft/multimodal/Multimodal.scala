@@ -567,11 +567,19 @@ object Multimodal {
       amps(k) = 0.10 + ((s0 >>> 33) % 800) / 1000.0 // 0.10 .. 0.90
       k += 1
     }
+    pcm16Wav(sampleRate, nSamples) { s =>
+      val a = gain * amps(s * 16 / nSamples)
+      (a * math.sin(2 * math.Pi * 400.0 * s / sampleRate) * 32767).toInt
+    }
+  }
+
+  /** WAV bytes of 16-bit mono little-endian PCM whose s-th sample is
+    * `sample(s)`, s < nSamples. */
+  private def pcm16Wav(sampleRate: Float, nSamples: Int)(sample: Int => Int): Array[Byte] = {
     val pcm = new Array[Byte](nSamples * 2)
     var s = 0
     while (s < nSamples) {
-      val a = gain * amps(s * 16 / nSamples)
-      val v = (a * math.sin(2 * math.Pi * 400.0 * s / sampleRate) * 32767).toInt
+      val v = sample(s)
       pcm(2 * s) = (v & 0xff).toByte
       pcm(2 * s + 1) = ((v >> 8) & 0xff).toByte
       s += 1
@@ -771,20 +779,9 @@ object Multimodal {
   private[graft] def syntheticWav(i: Int, sampleRate: Float = 8000f,
                                   nSamples: Int = 800, amplitude: Double = 0.5): Array[Byte] = {
     val freq = 200.0 + (i % 20) * 20.0
-    val pcm = new Array[Byte](nSamples * 2)
-    var s = 0
-    while (s < nSamples) {
-      val v = (amplitude * math.sin(2 * math.Pi * freq * s / sampleRate) * 32767).toInt
-      pcm(2 * s) = (v & 0xff).toByte         // little-endian
-      pcm(2 * s + 1) = ((v >> 8) & 0xff).toByte
-      s += 1
+    pcm16Wav(sampleRate, nSamples) { s =>
+      (amplitude * math.sin(2 * math.Pi * freq * s / sampleRate) * 32767).toInt
     }
-    val fmt = new javax.sound.sampled.AudioFormat(sampleRate, 16, 1, true, false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, nSamples.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-    bos.toByteArray
   }
 
   /** Deterministic synthetic MJPEG clip: `nFrames` concatenated JPEG

@@ -106,6 +106,59 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
+  /** DuckDB twin of the word 3-shingle sets [[minhashNearDups]] verifies
+    * on: CTE `sh(id, s)` over the rows of `from` (an empty token list
+    * gives an empty set). The oracles compare exact all-pairs Jaccard on
+    * these sets, which the banded candidates match with overwhelming
+    * probability.
+    */
+  def shingleSetSql(from: String): String = s"""sh AS (
+        SELECT doc_id AS id,
+               CASE WHEN len(toks) = 0 THEN []::VARCHAR[]
+                    ELSE list_distinct(list_transform(
+                      range(1, greatest(len(toks) - 2, 1) + 1),
+                      i -> array_to_string(toks[i:i+2], ' '))) END AS s
+        FROM (SELECT doc_id,
+                     list_filter(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+'), t -> t <> '') AS toks
+              FROM $from))"""
+
+  /** Oracle for a [[minhashNearDups]] pair set: every pair of `from` rows
+    * with exact Jaccard ≥ `threshold`, as (id_a, id_b, jaccard_r).
+    */
+  def jaccardPairsSql(from: String, threshold: Double): String = s"""
+      WITH ${shingleSetSql(from)}
+      SELECT a.id AS id_a, b.id AS id_b,
+             round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+                   / greatest(len(list_distinct(list_concat(a.s, b.s))), 1), 9) AS jaccard_r
+      FROM sh a, sh b WHERE a.id < b.id
+        AND CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+            / greatest(len(list_distinct(list_concat(a.s, b.s))), 1) >= $threshold
+      ORDER BY id_a, id_b"""
+
+  /** Recursive reachability over a near-dup pair CTE `pairs(id_a, id_b)`:
+    * CTEs `edges` (both directions) and `reach(n, r)`; MIN(r) per n is
+    * the [[connectedComponents]] label. Follows `WITH RECURSIVE`.
+    */
+  val pairReachSql: String = """edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+                UNION SELECT id_b, id_a FROM pairs),
+      reach(n, r) AS (
+        SELECT src, src FROM edges
+        UNION
+        SELECT e.dst, reach.r FROM reach JOIN edges e ON reach.n = e.src)"""
+
+  /** Oracle for [[connectedComponents]] over q57's near-dup pairs (first
+    * 500 documents, Jaccard ≥ 0.8): a recursive min-label closure ending
+    * in CTE `labels(doc_id, cluster_id)`; follows `WITH RECURSIVE`.
+    */
+  val nearDupLabelsSql: String = s"""${shingleSetSql("documents WHERE doc_id < 500")},
+      pairs AS (
+        SELECT a.id AS id_a, b.id AS id_b FROM sh a, sh b
+        WHERE a.id < b.id
+          AND CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+              / greatest(len(list_distinct(list_concat(a.s, b.s))), 1) >= 0.8),
+      $pairReachSql,
+      labels AS (SELECT n AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY n)"""
+
   /** Exact Jaccard similarity of two (distinct-element) arrays. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") /
@@ -123,50 +176,6 @@ object Dedup {
     inter.cast("double") /
       greatest(size(a) + size(b) - inter, lit(1)).cast("double")
   }
-
-  /** Bands needed so a pair with Jaccard >= `threshold` misses every
-    * LSH band with probability <= `missTarget`, at `rowsPerBand` MinHash
-    * rows per band: smallest b with (1 - t^r)^b <= missTarget — the
-    * Jaccard twin of [[graft.text.Similarity.bandsFor]] (there the
-    * per-band collision probability is the hyperplane angle bound; here
-    * it is exactly t^r by the MinHash property P[h_min agrees] = J).
-    */
-  def jaccardBandsFor(threshold: Double, rowsPerBand: Int = 2,
-                      missTarget: Double = 1e-9): Int = {
-    require(threshold > 0.0 && threshold < 1.0, s"threshold in (0,1): $threshold")
-    val pBand = math.pow(threshold, rowsPerBand)
-    math.ceil(math.log(missTarget) / math.log1p(-pBand)).toInt.max(1)
-  }
-
-  /** n-gram Jaccard near-dup pairs — threshold-aware dispatch (the
-    * [[graft.text.Similarity.nearDupPairs]] pattern applied to Jaccard):
-    *
-    *  - `threshold >= 0.5`: banded MinHash LSH candidates verified with
-    *    EXACT Jaccard over the shingle-hash sets — identical output to
-    *    the all-pairs form except for pairs missed by every band, and
-    *    the band count is sized by [[jaccardBandsFor]] so that miss
-    *    probability is <= 1e-9 per qualifying pair (at t = 0.5,
-    *    r = 2 rows/band that is b = 73 bands / 146 hashes; at t = 0.8
-    *    just b = 21 / 42). Only bucket-mates are ever paired, so the
-    *    corpus never goes through a quadratic join — this is the 100 TB
-    *    path.
-    *  - `threshold < 0.5`: LSH cannot prune (the band count needed for
-    *    a 1e-9 miss bound grows past the signature budget while the
-    *    candidate set approaches all-pairs anyway), so the DETERMINISTIC
-    *    prefix-filtering join runs ([[jaccardJoinPrefix]]) — exact
-    *    output with zero miss probability, candidates bounded by
-    *    rare-token bucket mates instead of the corpus square. No
-    *    threshold regime falls back to all-pairs anymore;
-    *    [[ngramJaccardPairsExact]] remains only as the bounded oracle-
-    *    replay primitive.
-    */
-  def ngramJaccardPairs(docs: DataFrame, threshold: Double, k: Int = 3,
-                        idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    if (threshold >= 0.5) {
-      val bands = jaccardBandsFor(threshold, rowsPerBand = 2)
-      minhashNearDups(docs, threshold, k, numHashes = 2 * bands, bands = bands,
-        idCol = idCol, textCol = textCol)
-    } else jaccardJoinPrefix(docs, threshold, k, idCol, textCol)
 
   /** EXACT Jaccard similarity join by prefix filtering (the
     * AllPairs/PPJoin family — Bayardo et al., "Scaling Up All Pairs
@@ -191,8 +200,8 @@ object Dedup {
     * the join; exact-Jaccard verification re-attaches the two shingle
     * sets by key join. Every shuffle carries (hash, id, size) or
     * (id, set) pairs — never text; no stage is quadratic in the corpus.
-    * Output is IDENTICAL to [[ngramJaccardPairsExact]] at any
-    * threshold — candidate generation is a superset of the qualifying
+    * Output is IDENTICAL to the exact all-pairs kernel (the test
+    * reference `TextRefs.ngramJaccardPairsExact`) at any threshold — candidate generation is a superset of the qualifying
     * pairs by the prefix theorem, and verification is exact.
     */
   /** FP guard for every prefix-filter bound: a product like 0.07·100
@@ -299,23 +308,6 @@ object Dedup {
           .cast("double") / size(col("sh_a")).cast("double"))
       .filter(col("containment") >= threshold)
       .select(col("id_a"), col("id_b"), col("containment"))
-  }
-
-  /** Exact all-pairs n-gram Jaccard (no LSH) — the bounded verification
-    * primitive backing oracle replay and per-bucket verify. Quadratic in
-    * the input by construction: NEVER call on an unbounded corpus — use
-    * [[ngramJaccardPairs]], which prunes through banded MinHash at any
-    * threshold where pruning is sound.
-    */
-  def ngramJaccardPairsExact(docs: DataFrame, threshold: Double, k: Int = 3,
-                             idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sh = docs.select(col(idCol).as("id"), shingleHashes(col(textCol), k).as("sh"))
-    val a = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    a.crossJoin(b).filter(col("id_a") < col("id_b"))
-      .withColumn("jaccard", jaccardSortedHashes(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   // ---- line-level dedup (CCNet/Dolma-style) ----------------------------
@@ -502,6 +494,21 @@ object Dedup {
         coalesce(col("n_shared"), lit(0L)).as("n_shared"),
         (coalesce(col("n_shared"), lit(0L)) > 0).as("contaminated"))
   }
+
+  /** DuckDB twin of [[contamination]] as q55/q92 declare it (benchmark =
+    * every 50th document, k = 3): CTEs `b` (benchmark shingles), `c`
+    * (corpus doc shingles) and `h(doc_id, n_shared)`. */
+  val contaminationHitsSql: String = s"""b AS (
+        SELECT DISTINCT unnest(list_distinct(list_transform(
+          range(1, greatest(len(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+')) - 2, 1) + 1),
+          i -> array_to_string(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+')[i:i+2], ' ')))) AS sh
+        FROM documents WHERE doc_id % 50 = 0),
+      c AS (
+        SELECT doc_id, unnest(list_distinct(list_transform(
+          range(1, greatest(len(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+')) - 2, 1) + 1),
+          i -> array_to_string(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+')[i:i+2], ' ')))) AS sh
+        FROM documents WHERE doc_id % 50 <> 0),
+      h AS (SELECT doc_id, count(*) AS n_shared FROM c JOIN b USING (sh) GROUP BY doc_id)"""
 
   /** FUZZY cross-corpus decontamination: near-duplicate matches between
     * a training corpus and a benchmark/eval set — the paraphrase-level
@@ -785,13 +792,7 @@ object Dedup {
       graft.catalyst.GraftFunctions.portableShingles(col(textCol), n).as("hs"))
       .withColumn("n_tokens", size(col("otoks")).cast("long"))
       .transform(graft.Stage.mat)
-    val sh = t
-      .select(col("doc_id"), posexplode(col("hs")).as(Seq("i0", "h")))
-      .select(col("doc_id"), (col("i0") + 1).cast("int").as("i"), col("h"))
-    val dup = sh.groupBy(col("h"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= 2).select(col("h"))
-    val covered = sh.join(dup, Seq("h"))
+    val covered = dupSpanStarts(t)
       .select(col("doc_id"), explode(sequence(col("i"), col("i") + (n - 1))).as("pos"))
       .distinct()
     val tokPos = t
@@ -810,6 +811,19 @@ object Dedup {
         coalesce(col("text_trimmed"), lit("")).as("text_trimmed"))
   }
 
+  /** The n-gram spans that occur in at least two documents: one row
+    * (h, doc_id, i) per duplicated span start i (1-based) of each
+    * document in `t` (doc_id, hs = ordered portable n-gram hashes). */
+  private def dupSpanStarts(t: DataFrame): DataFrame = {
+    val sh = t
+      .select(col("doc_id"), posexplode(col("hs")).as(Seq("i0", "h")))
+      .select(col("doc_id"), (col("i0") + 1).cast("int").as("i"), col("h"))
+    val dup = sh.groupBy(col("h"))
+      .agg(countDistinct(col("doc_id")).as("nd"))
+      .filter(col("nd") >= 2).select(col("h"))
+    sh.join(dup, Seq("h"))
+  }
+
   def dupSpanCoverage(docs: DataFrame, n: Int = 8,
                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // fused native shingle pass: the composed form (explode starts +
@@ -821,13 +835,7 @@ object Dedup {
         .cast("long").as("n_tokens"),
       graft.catalyst.GraftFunctions.portableShingles(col(textCol), n).as("hs"))
       .filter(col("n_tokens") >= n)
-    val sh = t
-      .select(col("doc_id"), posexplode(col("hs")).as(Seq("i0", "h")))
-      .select(col("doc_id"), (col("i0") + 1).cast("int").as("i"), col("h"))
-    val dup = sh.groupBy(col("h"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= 2).select(col("h"))
-    val marked = sh.join(dup, Seq("h"))
+    val marked = dupSpanStarts(t)
     val perDoc = marked.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_dup_shingles"))
     // interval union over sorted starts: (doc_id, i) is unique, so the

@@ -59,6 +59,29 @@ object LangModel {
         round(exp(col("s") * lit(-1.0) / col("n_bigrams").cast("double")), 6).as("ppl"))
   }
 
+  /** DuckDB twin of [[bigramPerplexity]]'s training counts: CTEs
+    * `t(doc_id, toks)`, the bigram instances `inst(doc_id, w1, w2)`,
+    * unigram counts `uni(w, c1)` and the one-row `vocab(v)`. */
+  val bigramCountsSql: String = s"""t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+'),
+                              x -> x <> '') AS toks
+                 FROM documents),
+      bi AS (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i
+             FROM t WHERE len(toks) >= 2),
+      inst AS (SELECT doc_id, list_extract(toks, i) AS w1,
+                      list_extract(toks, i + 1) AS w2 FROM bi),
+      uni AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c1
+              FROM (SELECT unnest(toks) AS w FROM t) GROUP BY w),
+      vocab AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM uni)"""
+
+  /** Every adjacent token pair (w1, w2) of the `toks` arrays in `t`. */
+  private[text] def bigramInstances(t: DataFrame): DataFrame =
+    t.filter(size(col("toks")) >= 2)
+      .select(explode(zip_with(
+        slice(col("toks"), lit(1), size(col("toks")) - 1),
+        slice(col("toks"), lit(2), size(col("toks")) - 1),
+        (a, b) => struct(a.as("w1"), b.as("w2")))).as("z"))
+      .select(col("z.w1").as("w1"), col("z.w2").as("w2"))
+
   /** Interpolated Kneser-Ney bigram probabilities — the smoothing the
     * production web-corpus quality LM actually uses (CCNet-style
     * perplexity filters train KN models; [[bigramPerplexity]]'s add-1 is
@@ -88,12 +111,7 @@ object LangModel {
     val D38 = DecimalType(38, 0)
     val t = docs.select(col(idCol).as("doc_id"),
       filter(TextStats.tokens(lower(col(textCol))), x => x =!= lit("")).as("toks"))
-    val inst = t.filter(size(col("toks")) >= 2)
-      .select(explode(zip_with(
-        slice(col("toks"), lit(1), size(col("toks")) - 1),
-        slice(col("toks"), lit(2), size(col("toks")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("z"))
-      .select(col("z.w1").as("w1"), col("z.w2").as("w2"))
+    val inst = bigramInstances(t)
     val c2 = graft.Stage.mat(
       inst.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2")))
     val ctx = c2.groupBy(col("w1")).agg(sum(col("c2")).as("ctx"))

@@ -77,6 +77,34 @@ object Relevance {
       .limit(topK)
   }
 
+  /** DuckDB twin of [[bm25TopDocs]]'s inputs at its defaults (8 query
+    * terms): CTEs `toks`, `tf`, `dl`, `dfq`, `qterms(term, df)` and the
+    * one-row `stats(n_docs, avgdl)`. */
+  val bm25StatsSql: String = s"""toks AS (
+        SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+'), x -> x <> '')) AS term
+        FROM documents),
+      tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),
+      dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks GROUP BY 1),
+      dfq AS (
+        SELECT term, CAST(COUNT(*) AS BIGINT) AS df
+        FROM (SELECT doc_id, unnest(list_distinct(list_filter(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+'), x -> x <> ''))) AS term
+              FROM documents)
+        GROUP BY term),
+      qterms AS (SELECT term, df FROM dfq ORDER BY df DESC, term LIMIT 8),
+      stats AS (
+        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_docs,
+               CAST((SELECT SUM(dl) FROM dl) AS DOUBLE)
+                 / CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS avgdl)"""
+
+  /** [[bm25TopDocs]]'s round-6 per-(doc, term) contribution at k1 = 1.2,
+    * b = 0.75, over `s` (stats), `q` (qterms), `tf` and `dl`. */
+  val bm25TermSql: String = """round(ln((CAST(s.n_docs AS DOUBLE) - CAST(q.df AS DOUBLE) + 0.5)
+                          / (CAST(q.df AS DOUBLE) + 0.5) + 1.0)
+                     * (CAST(tf.tf AS DOUBLE) * 2.2)
+                     / (CAST(tf.tf AS DOUBLE)
+                        + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE) / s.avgdl))),
+                     6)"""
+
   /** Hybrid retrieval via Reciprocal Rank Fusion (Cormack et al. 2009):
     * fuse the lexical BM25 ranking ([[bm25TopDocs]]) with a dense
     * embedding ranking (cosine to one query vector) by

@@ -194,17 +194,6 @@ object Similarity {
                     vecCol: String = "embedding"): DataFrame =
     embeddings.withColumn("centroid_id", nearestCentroid(col(vecCol), centroids))
 
-  /** Train + assign in one call (fixture-scale convenience; at corpus
-    * scale call [[ivfTrain]] offline and ship its output).
-    */
-  def ivfAssign(embeddings: DataFrame, nCentroids: Int,
-                idCol: String = "vec_id", vecCol: String = "embedding"): (DataFrame, DataFrame) = {
-    val centroids = ivfTrain(embeddings, nCentroids, idCol, vecCol)
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    (ivfAssignWith(embeddings, centroids, vecCol), centroids.toDF("centroid_id", "cvec"))
-  }
-
   /** Nearest-centroid id as a pure projection: the centroid set is a
     * driver-side literal (it IS collected state by construction), so
     * assignment is `greatest` over (cosine, id) structs — zero shuffle,
@@ -563,9 +552,8 @@ object Similarity {
   def cellCountSql(nExpr: String): String =
     s"GREATEST($CellKMin, ($nExpr + ${CellTargetSize - 1}) // $CellTargetSize)"
 
-  /** Dispatch guard for a cell-bounded pairwise pass (the
-    * [[graft.text.Dedup.ngramJaccardPairs]] refuse-don't-degrade
-    * pattern): a (n, k) combination whose EXPECTED cell size n/k
+  /** Dispatch guard for a cell-bounded pairwise pass (refuse, don't
+    * degrade): a (n, k) combination whose EXPECTED cell size n/k
     * exceeds [[CellMaxExpectedSize]] is refused outright — the caller
     * either derives k from [[cellCountFor]] (which always passes) or
     * consciously re-budgets. Failing fast here beats silently planning
@@ -610,6 +598,44 @@ object Similarity {
       val emb = graft.model.Tables(s, dir).embeddings
       kmeansFit(emb.select(col("vec_id"), col("embedding").as("v")), k, dim, iters, salt)
     }
+
+  /** DuckDB twin of [[kmeansFitMemo]] at its declared arguments (dim 64,
+    * two Lloyd iterations, salt "kmeans"): CTEs `e` (vec_id, v) through
+    * `c2` (cid, cv), the refit centroids — hash-spread seeds, round-6
+    * argmax with smaller-cid tie-break, [[meanRound6Sql]] means. One
+    * definition for every k-means oracle; the two change together.
+    */
+  val kmeansFitSql: String = s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      hs AS (SELECT vec_id, v,
+               ${TextStats.portableHash64Sql("concat('kmeans:', CAST(vec_id AS VARCHAR))")} AS h
+             FROM e),
+      kp AS (SELECT ${cellCountSql("count(*)")} AS k FROM e),
+      sl AS (SELECT vec_id, v, h FROM
+               (SELECT vec_id, v, h,
+                       row_number() OVER (ORDER BY h, vec_id) AS rnk FROM hs)
+             CROSS JOIN kp WHERE rnk <= k),
+      seeds AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS INTEGER) AS cid,
+                       v AS cv FROM sl),
+      a1 AS (SELECT vec_id, v, cid, cos_r,
+               row_number() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, cid) AS rn
+             FROM (SELECT e.vec_id, e.v, s.cid,
+                     round(list_cosine_similarity(e.v, s.cv), 6) AS cos_r
+                   FROM e CROSS JOIN seeds s)),
+      m1 AS (SELECT vec_id, v, cid FROM a1 WHERE rn = 1),
+      d1 AS (SELECT cid, r.i AS i,
+               ${meanRound6Sql("list_extract(v, r.i)")} AS mu
+             FROM m1, range(1, 65) r(i) GROUP BY cid, r.i),
+      c2 AS (SELECT cid, list(mu ORDER BY i) AS cv FROM d1 GROUP BY cid)"""
+
+  /** [[kmeansFitSql]] plus `a2`: every vector's round-6 cosine to each
+    * refit centroid, ranked (`rn = 1` is the [[kmeansAssignWith]] cell).
+    */
+  val kmeansAssignSql: String = s"""$kmeansFitSql,
+      a2 AS (SELECT vec_id, cid, cos_r,
+               row_number() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, cid) AS rn
+             FROM (SELECT e.vec_id, c.cid,
+                     round(list_cosine_similarity(e.v, c.cv), 6) AS cos_r
+                   FROM e CROSS JOIN c2 c))"""
 
   /** [[kmeansAssignFull]]'s final assignment projection from an
     * already-fit centroid table — a pure codegen'd corpus scan. */
@@ -992,6 +1018,19 @@ object Similarity {
     graft.Stage.mat(vm.crossJoin(broadcast(mu))
       .select(zip_with(col("vm"), col("mu"), (a, b) => a - b).as("cm")))
   }
+
+  /** DuckDB twin of [[centeredMicros]] at dim 64: CTEs `e`, `vmt`
+    * (integer-micros vectors), `mus`/`mur` (half-up per-coordinate means)
+    * and the one-row `mul(mu)`. */
+  val centeredSql: String = """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+                 WHERE embedding IS NOT NULL),
+      vmt AS (SELECT vec_id, list_transform(v,
+                x -> CAST(FLOOR(x * 1000000.0 + 0.5) AS BIGINT)) AS vm FROM e),
+      mus AS (SELECT r.j AS j, SUM(vm[r.j]) AS sj, COUNT(*) AS n
+              FROM vmt, range(1, 65) r(j) GROUP BY r.j),
+      mur AS (SELECT j, CASE WHEN sj >= 0 THEN (2*sj + n) // (2*n)
+                             ELSE -((2*(-sj) + n) // (2*n)) END AS mu FROM mus),
+      mul AS (SELECT list(mu ORDER BY j) AS mu FROM mur)"""
 
   /** `iters` L∞-normalized power-iteration rounds over a centered
     * integer corpus (column `cm`), starting from e1. Returns the 1-row

@@ -146,6 +146,39 @@ object TextStats {
     * the Spark side splits on `\s`. */
   val wsClassSql: String = s"[$wsCharsSql]"
 
+  /** DuckDB twin of [[langIdPredicted]]'s per-language hit counts over
+    * `text`: the select-list columns s_en, s_de, s_es, s_fr. */
+  val langScoresSql: String = {
+    def score(lang: String): String = {
+      val words = langProfiles.toMap.apply(lang)
+      s"len(list_filter(regexp_split_to_array(lower(text), '$wsClassSql+'), t -> t IN (${words.map("'" + _ + "'").mkString(",")})))"
+    }
+    s"""${score("en")} AS s_en, ${score("de")} AS s_de,
+               ${score("es")} AS s_es, ${score("fr")} AS s_fr"""
+  }
+
+  /** CTE `t(doc_id, toks)`: each document's lowercased whitespace tokens,
+    * empties dropped — the [[tokens]] split as the oracles spell it. */
+  val docTokensSql: String = s"""t AS (SELECT doc_id,
+                   list_filter(regexp_split_to_array(lower(text), '$wsClassSql+'), x -> x <> '') AS toks
+                 FROM documents)"""
+
+  /** CTE `tok(source, w)`: every lowercased whitespace token of the
+    * corpus with its document's source — the input of the per-source
+    * term-distribution oracles (q103, q107, q159, q246, q329). */
+  val sourceTokensSql: String = s"""tok AS (
+        SELECT source,
+               unnest(list_filter(regexp_split_to_array(lower(text), '$wsClassSql+'),
+                                  x -> x <> '')) AS w
+        FROM documents)"""
+
+  /** [[langIdPredicted]]'s argmax over the [[langScoresSql]] columns,
+    * ties resolved as the greatest (score, lang) struct resolves them. */
+  val langPredSql: String = """CASE WHEN s_fr >= s_es AND s_fr >= s_en AND s_fr >= s_de THEN 'fr'
+               WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
+               WHEN s_en >= s_de THEN 'en'
+               ELSE 'de' END"""
+
   /** 64-bit document fingerprint over the whitespace-normalized,
     * lowercased text — the exact-dedup key that is robust to whitespace
     * and case jitter (rolling-hash fingerprint in the single-window

@@ -154,13 +154,20 @@ object Vocab {
       size(split(trim(col("w")), "  ")).cast("long").as("n_tok"))
   }
 
-  /** The mirrored DuckDB replay of [[bpeLearnMerges]]: the same word
-    * histogram, character spacing, weighted pair counts, (c desc, a, b)
-    * argmax, and sentinel-padded literal replace, unrolled per merge.
-    */
-  def bpeLearnSql(nMerges: Int, src: String = "documents"): String = {
-    val ws = TextStats.wsClassSql
-    val iters = (1 to nMerges).map { i =>
+  /** CTE `hist(word, cnt)` of the BPE replays: the lowercased
+    * whitespace-token histogram of `src`. */
+  private def bpeHistSql(src: String): String = s"""hist AS (
+        SELECT w AS word, count(*) AS cnt FROM (
+          SELECT unnest(list_filter(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+'),
+                   x -> x <> '')) AS w
+          FROM $src) GROUP BY 1)"""
+
+  /** The unrolled merges of the BPE replays: per merge i the pair counts
+    * `p$i`, the (c desc, a, b) argmax `b$i` and the rewrite `w$i`, which
+    * keeps the select-list prefix `carry` ("" to learn, "word, " to
+    * encode). */
+  private def bpeMergeStepsSql(nMerges: Int, carry: String): String =
+    (1 to nMerges).map { i =>
       val prev = s"w${i - 1}"
       s"""p$i AS (SELECT p.pr[1] AS a, p.pr[2] AS b, SUM(p.cnt) AS c FROM (
             SELECT unnest(list_transform(range(1, len(toks)),
@@ -168,19 +175,22 @@ object Vocab {
             FROM (SELECT string_split(trim(w), '  ') AS toks, cnt FROM $prev)
           ) p GROUP BY 1, 2),
         b$i AS (SELECT a, b, c FROM p$i ORDER BY c DESC, a, b LIMIT 1),
-        w$i AS (SELECT replace(w, ' ' || b.a || '  ' || b.b || ' ',
+        w$i AS (SELECT ${carry}replace(w, ' ' || b.a || '  ' || b.b || ' ',
                                ' ' || b.a || b.b || ' ') AS w, cnt
                 FROM $prev, b$i b)"""
     }.mkString(",\n      ")
+
+  /** The mirrored DuckDB replay of [[bpeLearnMerges]]: the same word
+    * histogram, character spacing, weighted pair counts, (c desc, a, b)
+    * argmax, and sentinel-padded literal replace, unrolled per merge.
+    */
+  def bpeLearnSql(nMerges: Int, src: String = "documents"): String = {
+    val iters = bpeMergeStepsSql(nMerges, "")
     val sel = (1 to nMerges).map(i =>
       s"SELECT $i AS merge_rank, a AS tok_a, b AS tok_b, CAST(c AS BIGINT) AS n FROM b$i")
       .mkString("\n      UNION ALL ")
     s"""
-      WITH hist AS (
-        SELECT w AS word, count(*) AS cnt FROM (
-          SELECT unnest(list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                   x -> x <> '')) AS w
-          FROM $src) GROUP BY 1),
+      WITH ${bpeHistSql(src)},
       w0 AS (SELECT ' ' || rtrim(regexp_replace(word, '(.)', '\\1  ', 'g')) || ' ' AS w, cnt
              FROM hist),
       $iters
@@ -195,25 +205,9 @@ object Vocab {
     * [[bpeEncodeWordTokens]]-based declared query.
     */
   def bpeEncodeSql(nMerges: Int, src: String = "documents"): String = {
-    val ws = TextStats.wsClassSql
-    val iters = (1 to nMerges).map { i =>
-      val prev = s"w${i - 1}"
-      s"""p$i AS (SELECT p.pr[1] AS a, p.pr[2] AS b, SUM(p.cnt) AS c FROM (
-            SELECT unnest(list_transform(range(1, len(toks)),
-                     i -> [toks[i], toks[i + 1]])) AS pr, cnt
-            FROM (SELECT string_split(trim(w), '  ') AS toks, cnt FROM $prev)
-          ) p GROUP BY 1, 2),
-        b$i AS (SELECT a, b, c FROM p$i ORDER BY c DESC, a, b LIMIT 1),
-        w$i AS (SELECT word, replace(w, ' ' || b.a || '  ' || b.b || ' ',
-                               ' ' || b.a || b.b || ' ') AS w, cnt
-                FROM $prev, b$i b)"""
-    }.mkString(",\n      ")
+    val iters = bpeMergeStepsSql(nMerges, "word, ")
     s"""
-      WITH hist AS (
-        SELECT w AS word, count(*) AS cnt FROM (
-          SELECT unnest(list_filter(regexp_split_to_array(lower(text), '$ws+'),
-                   x -> x <> '')) AS w
-          FROM $src) GROUP BY 1),
+      WITH ${bpeHistSql(src)},
       w0 AS (SELECT word,
                ' ' || rtrim(regexp_replace(word, '(.)', '\\1  ', 'g')) || ' ' AS w, cnt
              FROM hist),
@@ -221,7 +215,7 @@ object Vocab {
       enc AS (SELECT word, CAST(len(string_split(trim(w), '  ')) AS BIGINT) AS n_tok
               FROM w$nMerges),
       dw AS (SELECT doc_id,
-               unnest(list_filter(regexp_split_to_array(lower(text), '$ws+'),
+               unnest(list_filter(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+'),
                  x -> x <> '')) AS word
              FROM $src),
       ag AS (SELECT doc_id, SUM(e.n_tok) AS n_bpe_tokens,
@@ -313,12 +307,7 @@ object Vocab {
     // two corpus passes (unigram + bigram explodes); both totals derive
     // from the count tables instead of re-walking the corpus
     val t = docs.select(words(col(textCol)).as("toks"))
-    val inst = t.filter(size(col("toks")) >= 2)
-      .select(explode(zip_with(
-        slice(col("toks"), lit(1), size(col("toks")) - 1),
-        slice(col("toks"), lit(2), size(col("toks")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("z"))
-      .select(col("z.w1").as("w1"), col("z.w2").as("w2"))
+    val inst = LangModel.bigramInstances(t)
     val uni = t.select(explode(col("toks")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cu"))
     val n1 = uni.agg(sum(col("cu")).as("n1"))

@@ -49,18 +49,18 @@ class DedupSpec extends SparkSpec {
 
   test("ngramJaccardPairs banded default equals the exact all-pairs kernel") {
     // 30 docs: 10 planted near-dup pairs (1-word edits) + 10 unrelated.
-    // The dispatch (threshold 0.8 >= 0.5) runs banded MinHash + exact
-    // verify; with bands sized by jaccardBandsFor the miss probability
-    // per qualifying pair is <= 1e-9, so outputs must match exactly.
+    // Banded MinHash + exact verify at 21 bands of 2 rows: the miss
+    // probability per qualifying pair at t = 0.8 is (1 - 0.8^2)^21
+    // <= 1e-9, so outputs must match exactly.
     val corpus = (0 until 10).flatMap { i =>
       val b = s"document number $i with a stable shared body of many words " +
         s"covering topic $i in detail for the dedup fixture today"
       Seq((i * 2L, b), (i * 2 + 1L, b.replace("today", "tonight")))
     } ++ (0 until 10).map(i => (100L + i, s"singleton text $i " + ("x" + i) * 3))
     val df = corpus.toDF("doc_id", "text")
-    val banded = Dedup.ngramJaccardPairs(df, threshold = 0.8)
+    val banded = Dedup.minhashNearDups(df, threshold = 0.8, numHashes = 42, bands = 21)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val exact = Dedup.ngramJaccardPairsExact(df, threshold = 0.8)
+    val exact = TextRefs.ngramJaccardPairsExact(df, threshold = 0.8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(banded === exact)
     assert(exact.size === 10)
@@ -81,9 +81,9 @@ class DedupSpec extends SparkSpec {
       Seq((s * 2L, base), (s * 2 + 1L, mutated.mkString(" ")))
     }
     val df = corpus.toDF("doc_id", "text")
-    val banded = Dedup.ngramJaccardPairs(df, threshold = 0.8)
+    val banded = Dedup.minhashNearDups(df, threshold = 0.8, numHashes = 42, bands = 21)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val exact = Dedup.ngramJaccardPairsExact(df, threshold = 0.8)
+    val exact = TextRefs.ngramJaccardPairsExact(df, threshold = 0.8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(banded === exact)
     assert(exact.nonEmpty, "fixture must generate pairs above the threshold")
@@ -110,17 +110,11 @@ class DedupSpec extends SparkSpec {
     for (t <- Seq(0.2, 0.4)) {
       val pref = Dedup.jaccardJoinPrefix(df, threshold = t)
         .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
-      val exact = Dedup.ngramJaccardPairsExact(df, threshold = t)
+      val exact = TextRefs.ngramJaccardPairsExact(df, threshold = t)
         .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
       assert(pref === exact, s"threshold $t")
       assert(exact.nonEmpty, s"fixture must generate pairs at threshold $t")
     }
-    // and the dispatch routes the sub-0.5 regime through the prefix join
-    val viaDispatch = Dedup.ngramJaccardPairs(df, threshold = 0.4)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val viaPrefix = Dedup.jaccardJoinPrefix(df, threshold = 0.4)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(viaDispatch === viaPrefix)
   }
 
   test("prefix join keeps a pair whose Jaccard is EXACTLY the threshold (FP boundary)") {
@@ -133,7 +127,7 @@ class DedupSpec extends SparkSpec {
     val a = aToks.mkString(" ")                 // 100 3-shingles
     val b = aToks.take(9).mkString(" ")         // 7 3-shingles, all ⊂ a's
     val df = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
-    val exact = Dedup.ngramJaccardPairsExact(df, threshold = 0.07)
+    val exact = TextRefs.ngramJaccardPairsExact(df, threshold = 0.07)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(exact === Set((1L, 2L)), "fixture must sit exactly on the threshold")
     val pref = Dedup.jaccardJoinPrefix(df, threshold = 0.07)
@@ -161,7 +155,7 @@ class DedupSpec extends SparkSpec {
       val t = 0.05 + rng.nextDouble() * 0.4
       val pref = Dedup.jaccardJoinPrefix(df, threshold = t)
         .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
-      val exact = Dedup.ngramJaccardPairsExact(df, threshold = t)
+      val exact = TextRefs.ngramJaccardPairsExact(df, threshold = t)
         .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
       assert(pref === exact, s"seed=$seed threshold=$t")
     }
@@ -178,16 +172,9 @@ class DedupSpec extends SparkSpec {
     // quote (|page∩quote|/|page| ≈ 0.18); `other` shares nothing
     assert(out.toSeq === Seq((2L, 1L, 1.0)))
     // symmetric Jaccard misses this pair entirely at the same threshold
-    val j = Dedup.ngramJaccardPairsExact(df, threshold = 0.9)
+    val j = TextRefs.ngramJaccardPairsExact(df, threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect()
     assert(j.isEmpty)
-  }
-
-  test("jaccardBandsFor sizes the signature to the miss target") {
-    // (1 - t^2)^b <= 1e-9 at t=0.8 -> b = 21; t=0.5 -> b = 73
-    assert(Dedup.jaccardBandsFor(0.8) === 21)
-    assert(Dedup.jaccardBandsFor(0.5) === 73)
-    assert(math.pow(1 - math.pow(0.8, 2), Dedup.jaccardBandsFor(0.8)) <= 1e-9)
   }
 
   test("jaccard: identical -> 1.0, disjoint -> 0.0") {

@@ -92,7 +92,7 @@ class GraphOpsSpec extends SparkSpec {
     //   a: 150000 + (85*722500) div 100 = 150000 + 614125 = 764125
     //   b: (85*150000) div 100 = 127500
     //   c: (85*127500) div 100 = 108375
-    val chain = Seq(("a", "b"), ("b", "c")).toDF("src", "dst")
+    val chain = Seq(("a", "b", 1L), ("b", "c", 1L)).toDF("src", "dst", "w")
     val seeds = Seq("a").toDF("node")
     val r = GraphOps.trustRankMicros(chain, seeds, iters = 3).collect()
       .map(x => x.getString(0) -> x.getLong(1)).toMap

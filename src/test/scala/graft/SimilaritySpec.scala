@@ -65,7 +65,9 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF: assignment covers the corpus; probed top-k achieves recall") {
-    val (assigned, centroids) = Similarity.ivfAssign(vecs, nCentroids = 8)
+    val trained = Similarity.ivfTrain(vecs, nCentroids = 8)
+    val assigned = Similarity.ivfAssignWith(vecs, trained)
+    val centroids = trained.toDF("centroid_id", "cvec")
     assert(assigned.count() === 200)
     assert(assigned.select("centroid_id").distinct().count() <= 8)
     val query = vecs.filter(col("vec_id") === 11).select(col("embedding").as("qvec"))
