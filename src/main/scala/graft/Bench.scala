@@ -85,7 +85,7 @@ object Bench {
           val query = t.embeddings.filter(col("vec_id") === 0)
             .select(col("embedding").as("qvec"))
           graft.text.Similarity.lshTopK(t.embeddings.filter(col("vec_id") =!= 0),
-              query, 10, nPlanes = 4, dim = 64, probeHamming = 1)
+              query, nPlanes = 4, dim = 64, probeHamming = 1)
             .select(col("vec_id"), round(col("cos_sim"), 6).as("cos_sim_r"))
         })
       .updated("q128_hard_negatives_adc",
@@ -110,8 +110,7 @@ object Bench {
           val assigned = graft.text.Similarity.ivfAssignWith(corpus, centroids)
           val query = t.embeddings.filter(col("vec_id") === 0)
             .select(col("embedding").as("qvec"))
-          graft.text.Similarity.ivfTopK(assigned,
-              centroids.toDF("centroid_id", "cvec"), query, k = 10, nProbe = 3)
+          graft.text.Similarity.ivfTopK(assigned, centroids.toDF("centroid_id", "cvec"), query)
             .select(col("vec_id"), round(col("cos_sim"), 6).as("cos_sim_r"))
         })
 

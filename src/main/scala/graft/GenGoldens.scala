@@ -38,7 +38,7 @@ object GenGoldens {
     val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val lines = SparkEntry.goldenPinned.toSeq.sorted.map { name =>
-      val (n, h) = fingerprint(SparkEntry.allQueries(name)(spark, sfDir))
+      val (n, h) = fingerprint(SparkEntry.queries(name)(spark, sfDir))
       println(s"[goldens] $name n=$n h=$h")
       s"$name $n $h"
     }

@@ -94,10 +94,10 @@ object Memo {
     * every call. The spill is a deterministic function of the key up to
     * row order, so consumers that end in a total ORDER BY get the same
     * rows as inline derivation. */
-  def spilled(s: SparkSession, kind: String, dir: String, inputs: Seq[String], params: Any*)(
+  def spilled(s: SparkSession, dir: String, inputs: Seq[String], params: Any*)(
       derive: => DataFrame): DataFrame = {
-    val path = value(kind, dir, inputs, params: _*) {
-      val name = (kind +: params).mkString("_") + "_" + spillIds.incrementAndGet()
+    val path = value("edges", dir, inputs, params: _*) {
+      val name = ("edges" +: params).mkString("_") + "_" + spillIds.incrementAndGet()
       val root = spillRoot(s.conf.get("spark.sql.warehouse.dir"), s.sparkContext.hadoopConfiguration)
       spill(s, new Path(root, name))(derive)
     }

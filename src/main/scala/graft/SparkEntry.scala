@@ -58,23 +58,15 @@ object SparkEntry {
     // layout-advisor family (anchors: q303_zorder_advisor, q155_zorder_layout)
     "q326_rle_advisor", "q314_hilbert_advisor", "q267_zonemap_advisor")
 
-  /** FULL implemented surface — identical to [[queries]]; kept as the
-    * stable name specs and plan audits use. */
-  def allQueries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map { case (n, f, _) => n -> f }.toMap
-
-  def allOracleSql: Map[String, String] =
-    modules.collect { case (n, _, Some(sql)) => n -> sql.trim }.toMap
-
   /** One entry per implemented operator from SURVEY.md §2 — the
     * DECLARED surface the driver benches and oracle-checks. Every
     * query ever declared stays declared (optimization-round contract:
     * entries may be added, never removed or renamed). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    allQueries
+    modules.map { case (n, f, _) => n -> f }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    allOracleSql
+    modules.collect { case (n, _, Some(sql)) => n -> sql.trim }.toMap
 }

@@ -184,8 +184,7 @@ object ChainOps {
       // past 10^11 rows/key (ANSI fails loudly beyond).
       Salting.saltedCountSum(
         Tables(s, dir).lineitem
-          .withColumn("__q", Relational.microsOf(col("l_quantity"))),
-        keyCol = "l_returnflag", valueCol = "__q", uniqueCol = "l_orderkey")
+          .withColumn("__q", Relational.microsOf(col("l_quantity"))))
         .select(col("l_returnflag"), col("n"),
                 round(Relational.microsTotal(col("total")).cast("double"), 6).as("total"))
         .orderBy(col("l_returnflag"))

@@ -156,7 +156,7 @@ object CurationOps {
     * round's broadcast. Only one stat row and one document's shingles
     * are ever collected per round (the k-means centroid precedent).
     */
-  def greedyMaxCoverage(docs: DataFrame, k: Int = 5): DataFrame = {
+  def greedyMaxCoverage(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // Scan-parallelism guard (guide §2.5 "input skew: one unsplittable
@@ -187,7 +187,7 @@ object CurationOps {
     var covered = Set.empty[String] // shingles of picked docs: ≤ k docs' worth
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     var total = 0L
-    for (step <- 1 to k) {
+    for (step <- 1 to 5) {
       val resid =
         if (covered.isEmpty) sh
         else sh.join(broadcast(covered.toSeq.toDF("sh")), Seq("sh"), "left_anti")
@@ -199,7 +199,7 @@ object CurationOps {
         val (id, gain) = (r.getLong(0), r.getLong(1))
         total += gain
         picked += ((step.toLong, id, gain, total))
-        if (step < k)
+        if (step < 5)
           covered ++= sh.filter(col("doc_id") === id).select(col("sh"))
             .as[String].collect() // one document's shingles
       }
@@ -211,16 +211,17 @@ object CurationOps {
   /** Each vector's k-means cell joined back to its embedding, as
     * (vec_id, centroid_id, embedding), materialized: the input of the
     * within-cell pair passes (q258, q308). k follows the cell contract
-    * and the budget guard refuses an unbounded cell; `fit` is the
-    * memoized centroid table when the caller has one.
+    * from the one corpus count and the budget guard refuses an
+    * unbounded cell; `fit` gives the memoized centroid table for k
+    * when the caller has one.
     */
   private def cellMembers(emb: org.apache.spark.sql.DataFrame,
-                          fit: Option[Seq[(Int, Seq[Double])]])
+                          fit: Option[Int => Seq[(Int, Seq[Double])]])
       : org.apache.spark.sql.DataFrame = {
     val n = emb.count()
     val k = graft.text.Similarity.cellCountFor(n)
     graft.text.Similarity.requireCellBounded(n, k)
-    val asg = fit.map(graft.text.Similarity.kmeansAssignWith(_, emb).drop("v"))
+    val asg = fit.map(f => graft.text.Similarity.kmeansAssignWith(f(k), emb).drop("v"))
       .getOrElse(graft.text.Similarity.kmeansAssign(emb, k = k, dim = 64))
     graft.Stage.mat(asg.select(col("vec_id"), col("centroid_id"))
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id")))
@@ -243,7 +244,7 @@ object CurationOps {
     * cluster; the rest is noise (the −1 row).
     */
   def densityClusters(emb: org.apache.spark.sql.DataFrame,
-                      fit: Option[Seq[(Int, Seq[Double])]] = None)
+                      fit: Option[Int => Seq[(Int, Seq[Double])]] = None)
       : org.apache.spark.sql.DataFrame = {
     val mem = cellMembers(emb, fit)
     val pa = mem.select(col("centroid_id"), col("vec_id").as("id_a"),
@@ -295,6 +296,9 @@ object CurationOps {
     per.unionByName(noise).orderBy(col("cluster_id"))
   }
 
+  /** q308's cosine thresholds in percent, ascending. */
+  private val SweepThresholdsPct = Seq(35, 50, 65)
+
   /** Similarity-graph percolation sweep (q308): per cosine threshold,
     * edge/linked/component/largest/isolated stats over ONE cell-bounded
     * pair table (the q258 discipline — `cellCountFor` k, within-cell
@@ -310,12 +314,10 @@ object CurationOps {
     * extra joins + barrier.
     */
   def percolationSweep(emb: org.apache.spark.sql.DataFrame,
-                       thresholds: Seq[Int] = Seq(35, 50, 65),
-                       fit: Option[Seq[(Int, Seq[Double])]] = None)
+                       fit: Option[Int => Seq[(Int, Seq[Double])]] = None)
       : org.apache.spark.sql.DataFrame = {
-    require(thresholds.nonEmpty && thresholds.min * 1.0 / 100 >= 0.35 - 1e-9,
-      "pair table is built at the lowest threshold; sweep floor is 0.35")
-    val pairs = percolationPairs(emb, thresholds.min, fit)
+    // the pair table is built once, at the lowest threshold
+    val pairs = percolationPairs(emb, SweepThresholdsPct.head, fit)
     def level(t: Int): org.apache.spark.sql.DataFrame = {
       val et = graft.Stage.mat(pairs.filter(col("cos_r") >= t / 100.0)
         .select(col("id_a"), col("id_b")))
@@ -342,7 +344,7 @@ object CurationOps {
     // timed-out sweep cancels its levels' jobs.
     import scala.concurrent.duration._
     val stats = graft.Stage.concurrently(emb.sparkSession, "q308", timeout = 30.minutes)(
-      thresholds.sorted.reverse.map(t => () => level(t)))
+      SweepThresholdsPct.reverse.map(t => () => level(t)))
     stats.reduce(_ unionByName _)
       .crossJoin(broadcast(emb.agg(count(lit(1)).as("n_total"))))
       .selectExpr("threshold_pct", "n_edges", "n_linked", "n_components",
@@ -379,7 +381,7 @@ object CurationOps {
     */
   private[graft] def percolationPairs(emb: org.apache.spark.sql.DataFrame,
                                       minPct: Int,
-                                      fit: Option[Seq[(Int, Seq[Double])]])
+                                      fit: Option[Int => Seq[(Int, Seq[Double])]])
       : org.apache.spark.sql.DataFrame = {
     val mem = cellMembers(emb, fit)
     graft.Stage.mat(
@@ -419,7 +421,7 @@ object CurationOps {
     //      (gain desc, doc_id) tie-break → union) and recovers
     //      covered_total as the running gain sum.
     ("q254_max_coverage", (s: SparkSession, dir: String) => {
-      greedyMaxCoverage(Tables(s, dir).documents, k = 5)
+      greedyMaxCoverage(Tables(s, dir).documents)
     }, Some {
       val steps = (2 to 5).map { i =>
         val p = i - 1
@@ -615,7 +617,7 @@ object CurationOps {
       val docs = Tables(s, dir).documents
       Dedup.contamination(
           docs.filter(pmod(col("doc_id"), lit(50)) =!= 0),
-          docs.filter(pmod(col("doc_id"), lit(50)) === 0), k = 3)
+          docs.filter(pmod(col("doc_id"), lit(50)) === 0))
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH ${Dedup.contaminationHitsSql}
@@ -680,7 +682,7 @@ object CurationOps {
         .orderBy(col("doc_id"))
     }, Some(s"""
       SELECT doc_id, lang, source FROM documents
-      WHERE ${Sampling.hashBucketSql("doc_id", "sample")} <
+      WHERE ${Sampling.hashBucketSql} <
         CASE lang WHEN 'en' THEN 700 WHEN 'zh' THEN 400 WHEN 'de' THEN 250 ELSE 500 END
       ORDER BY doc_id""")),
 
@@ -748,12 +750,12 @@ object CurationOps {
                  / greatest(len(regexp_split_to_array(text, '$ws+')), 1) AS uniq_ratio
         FROM documents),
       f AS (
-        SELECT *, ${TextStats.fingerprintSql("text")} AS fp
+        SELECT *, ${TextStats.fingerprintSql} AS fp
         FROM q WHERE n_words >= 30 AND uniq_ratio >= 0.35),
       r AS (SELECT fp, MIN(doc_id) AS keep_id FROM f GROUP BY fp)
       SELECT doc_id, lang, source, n_words
       FROM f JOIN r ON f.doc_id = r.keep_id
-      WHERE ${Sampling.hashBucketSql("doc_id", "sample")} <
+      WHERE ${Sampling.hashBucketSql} <
         CASE lang WHEN 'en' THEN 800 ELSE 600 END
       ORDER BY doc_id""")),
 
@@ -908,8 +910,7 @@ object CurationOps {
     //      cross-domain float sum, snapped round-6 and applied in
     //      parts-per-million over the portable hash bucket.
     ("q63_temperature_mix", (s: SparkSession, dir: String) => {
-      Sampling.temperatureResample(Tables(s, dir).documents, "lang", "doc_id",
-          temperature = 2.0)
+      Sampling.temperatureResample(Tables(s, dir).documents)
         .select(col("doc_id"), col("lang"), col("c_dom"), col("keep_ppm"))
         .orderBy(col("doc_id"))
     }, Some(s"""
@@ -922,7 +923,7 @@ object CurationOps {
             FROM c CROSS JOIN m)
       SELECT d.doc_id, d.lang, r.c_dom, r.keep_ppm
       FROM documents d JOIN r USING (lang)
-      WHERE ${Sampling.hashBucketNSql("d.doc_id", "temp", 1000000L)} < r.keep_ppm
+      WHERE ${Sampling.hashBucketNSql("d.doc_id", "temp")} < r.keep_ppm
       ORDER BY d.doc_id""")),
 
     // ---- k-means clustering (k = 4, two Lloyd iterations) ----
@@ -976,7 +977,7 @@ object CurationOps {
     //      Spans shared by >= 2 docs, union-counted per document over
     //      the portable shingle hash.
     ("q66_dup_spans", (s: SparkSession, dir: String) => {
-      graft.text.Dedup.dupSpanCoverage(Tables(s, dir).documents, n = 8)
+      graft.text.Dedup.dupSpanCoverage(Tables(s, dir).documents)
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH ${TextStats.docTokensSql},
@@ -1076,7 +1077,7 @@ object CurationOps {
                CAST(len(regexp_split_to_array(text, '$ws+')) AS BIGINT) AS n_words,
                CAST(len(list_distinct(regexp_split_to_array(text, '$ws+'))) AS DOUBLE)
                  / greatest(len(regexp_split_to_array(text, '$ws+')), 1) AS uniq_ratio,
-               ${TextStats.fingerprintSql("text")} AS fp
+               ${TextStats.fingerprintSql} AS fp
         FROM documents),
       g AS (
         SELECT lang, source,
@@ -1114,7 +1115,7 @@ object CurationOps {
       val docs = Tables(s, dir).documents
         .withColumn("text",
           concat(lit("== "), col("source"), lit(" boilerplate ==\n"), col("text")))
-      Dedup.lineLevelDedup(docs, maxOccurrences = 1)
+      Dedup.lineLevelDedup(docs)
         .orderBy(col("doc_id"))
     }, Some("""
       WITH t AS (
@@ -1171,7 +1172,7 @@ object CurationOps {
     ("q129_bpe_learn", (s: SparkSession, dir: String) => {
       graft.text.Vocab.bpeLearnMerges(Tables(s, dir).documents, nMerges = 6)
         .orderBy(col("merge_rank"))
-    }, Some(graft.text.Vocab.bpeLearnSql(6))),
+    }, Some(graft.text.Vocab.bpeLearnSql)),
 
     // ---- BPE ENCODE (the deployment half of q129): apply the 6
     //      learned merges in rank order to the vocabulary, then count
@@ -1196,7 +1197,7 @@ object CurationOps {
               DIV greatest(coalesce(n_bpe_tokens, 0L), 1) AS BIGINT)
              AS chars_per_token_micros""")
         .orderBy(col("doc_id"))
-    }, Some(graft.text.Vocab.bpeEncodeSql(6))),
+    }, Some(graft.text.Vocab.bpeEncodeSql)),
 
     // ---- interpolated Kneser-Ney bigram table (the production
     //      quality-LM smoothing; q65's add-1 is the baseline): exact
@@ -1312,7 +1313,7 @@ object CurationOps {
         FROM documents WHERE doc_id % 10 = 0),
       fp AS (
         SELECT DISTINCT
-          ${TextStats.fingerprintSql("text")} AS fp,
+          ${TextStats.fingerprintSql} AS fp,
           source AS src
         FROM all_docs),
       per AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS n FROM fp GROUP BY src),
@@ -1474,7 +1475,7 @@ object CurationOps {
     //      vocabulary, least-squares slope/intercept of log-freq vs
     //      log-rank with DECIMAL-exact regression sums.
     ("q80_zipf_slope", (s: SparkSession, dir: String) => {
-      graft.text.Vocab.zipfSlope(Tables(s, dir).documents, n = 100)
+      graft.text.Vocab.zipfSlope(Tables(s, dir).documents)
     }, Some(s"""
       WITH w AS (SELECT unnest(list_filter(
                    regexp_split_to_array(lower(text), '$ws+'), x -> x <> '')) AS word
@@ -1610,7 +1611,7 @@ object CurationOps {
     //      portable-hash order (deterministic random-without-replacement
     //      draw, resumable and oracle-replayable).
     ("q88_domain_cap", (s: SparkSession, dir: String) => {
-      Sampling.perGroupCap(Tables(s, dir).documents, groupCol = "source", k = 10)
+      Sampling.perGroupCap(Tables(s, dir).documents, k = 10)
         .select(col("doc_id"), col("source"), col("cap_rank"))
         .orderBy(col("doc_id"))
     }, Some(s"""
@@ -1637,7 +1638,7 @@ object CurationOps {
       val survivors = docs.join(g, Seq("doc_id")).join(c, Seq("doc_id"))
         .filter(col("keep") && col("keep_doc"))
         .select(col("doc_id"), col("source"))
-      val capped = Sampling.perGroupCap(survivors, groupCol = "source", k = 8)
+      val capped = Sampling.perGroupCap(survivors, k = 8)
       capped.join(graft.text.Packing.trainingOrder(capped), Seq("doc_id"))
         .select(col("doc_id"), col("source"), col("cap_rank"), col("pos"))
         .orderBy(col("doc_id"))
@@ -1668,8 +1669,7 @@ object CurationOps {
       FROM capped JOIN ord USING (doc_id) ORDER BY capped.doc_id""")),
 
     ("q74_embed_outliers", (s: SparkSession, dir: String) => {
-      graft.text.Similarity.centroidOutliers(Tables(s, dir).embeddings, dim = 64,
-          threshold = 0.0)
+      graft.text.Similarity.centroidOutliers(Tables(s, dir).embeddings, dim = 64)
         .orderBy(col("vec_id"))
     }, Some(s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -1694,7 +1694,7 @@ object CurationOps {
     //      on [[Sampling.unimaxSelect]] (exact rank = verify primitive;
     //      rate-filter form for corpus-sized strata).
     ("q118_unimax_budget", (s: SparkSession, dir: String) => {
-      Sampling.unimaxSelect(Tables(s, dir).documents, "lang", "doc_id", budget = 350L)
+      Sampling.unimaxSelect(Tables(s, dir).documents, budget = 350L)
         .select(col("doc_id"), col("lang"), col("source"))
         .orderBy(col("doc_id"))
     }, Some(s"""
@@ -2101,8 +2101,7 @@ object CurationOps {
     //      every label is value-checked cross-engine.
     ("q258_density_clusters", (s: SparkSession, dir: String) => {
       val emb = Tables(s, dir).embeddings
-      densityClusters(emb, fit = Some(graft.text.Similarity.kmeansFitMemo(
-        s, dir, graft.text.Similarity.cellCountFor(emb.count()), 64)))
+      densityClusters(emb, fit = Some(k => graft.text.Similarity.kmeansFitMemo(s, dir, k, 64)))
     }, Some(s"""
       WITH RECURSIVE ${graft.text.Similarity.kmeansAssignSql},
       mem AS (SELECT a2.vec_id, a2.cid, e.v
@@ -2530,8 +2529,7 @@ object CurationOps {
       // the percolation point resolves ~nothing above the collapse
       // (see the percolationSweep scaladoc).
       val emb = Tables(s, dir).embeddings
-      percolationSweep(emb, fit = Some(graft.text.Similarity.kmeansFitMemo(
-        s, dir, graft.text.Similarity.cellCountFor(emb.count()), 64)))
+      percolationSweep(emb, fit = Some(k => graft.text.Similarity.kmeansFitMemo(s, dir, k, 64)))
     }, Some {
       def sweep(t: Int) = s"""
       e$t AS (SELECT id_a, id_b FROM pairs WHERE cos_r >= 0.$t),

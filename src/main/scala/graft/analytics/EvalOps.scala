@@ -34,14 +34,14 @@ object EvalOps {
     * P[i beats j] = s_i/(s_i+s_j)). Duels here: within each order,
     * for every pair of universe parts, the one with the larger
     * floor-micros quantity total wins (ties abstain). The universe is
-    * the `topN` most-ordered parts (count desc, id), so the pair/
+    * the 24 most-ordered parts (count desc, id), so the pair/
     * strength state is INDEX-SIZED (≤ topN² counts) — the kmeansFit
     * precedent: the corpus-side work is one (order, part) aggregate
     * and one basket-bounded self-join, the fit itself folds on the
     * driver over ≤ C(topN, 2) collected pair counts.
     *
     * The update is the standard MM iteration
-    * s_i ← W_i / Σ_j n_ij/(s_i+s_j), run `iters` fixed rounds from
+    * s_i ← W_i / Σ_j n_ij/(s_i+s_j), run 3 fixed rounds from
     * s = 1e6 in EXACT integer arithmetic: every division is a Long
     * floor at scale 1e12 with GREATEST(·, 1) guards, so DuckDB replays
     * the whole fit bit-for-bit (the oracle unrolls the rounds as
@@ -49,14 +49,14 @@ object EvalOps {
     * BT is scale-invariant and the fixed init pins the scale.
     * Zero-win parts go to 0, the MM fixed point.
     */
-  def bradleyTerry(li: DataFrame, topN: Int = 24, iters: Int = 3): DataFrame = {
+  def bradleyTerry(li: DataFrame): DataFrame = {
     val spark = li.sparkSession
     import spark.implicits._
     val oq = li.select(col("l_orderkey").as("o"), col("l_partkey").as("p"),
         expr("CAST(floor(l_quantity * 1000000) AS BIGINT)").as("qm"))
       .groupBy(col("o"), col("p")).agg(sum(col("qm")).as("q"))
     val top = oq.groupBy(col("p")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("p")).limit(topN)
+      .orderBy(col("c").desc, col("p")).limit(24)
     val lu = graft.Stage.mat(oq.join(broadcast(top.select(col("p"))), Seq("p")))
     val duels = lu.select(col("o"), col("p").as("i"), col("q").as("qa"))
       .join(lu.select(col("o"), col("p").as("j"), col("q").as("qb")), Seq("o"))
@@ -71,7 +71,7 @@ object EvalOps {
       ps.map(i => i -> ps.map(j => winMap.getOrElse((i, j), 0L)).sum).toMap
     val S = 1000000000000L
     var s: Map[Long, Long] = ps.map(_ -> 1000000L).toMap
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to 3) {
       s = ps.map { i =>
         val wi = wTot(i)
         if (wi == 0L) i -> 0L
@@ -184,13 +184,13 @@ object EvalOps {
     * the unavoidable cost of exact ranks; at corpus scale the same
     * suffstat pass runs over bucketed approximate ranks instead.
     */
-  def spearmanMicros(df: DataFrame, g: String, x: String, y: String): DataFrame = {
-    val wx = Window.partitionBy(col(g)).orderBy(col(x))
-    val wy = Window.partitionBy(col(g)).orderBy(col(y))
-    val cx = Window.partitionBy(col(g), col(x))
-    val cy = Window.partitionBy(col(g), col(y))
+  def spearmanMicros(df: DataFrame, g: String): DataFrame = {
+    val wx = Window.partitionBy(col(g)).orderBy(col("x"))
+    val wy = Window.partitionBy(col(g)).orderBy(col("y"))
+    val cx = Window.partitionBy(col(g), col("x"))
+    val cy = Window.partitionBy(col(g), col("y"))
     val cg = Window.partitionBy(col(g))
-    df.select(col(g), col(x), col(y))
+    df.select(col(g), col("x"), col("y"))
       .withColumn("nn", count(lit(1)).over(cg))
       .withColumn("ex",
         lit(2L) * rank().over(wx) + count(lit(1)).over(cx) - 1L - (col("nn") + 1L))
@@ -258,26 +258,25 @@ object EvalOps {
     * aggregate for the clamped/trimmed sums. No row-level sort, no
     * buffered group, no percentile() OOM hazard.
     */
-  def winsorizedMeans(df: DataFrame, g: String, x: String,
-                      pLo: Int = 10, pHi: Int = 90): DataFrame = {
-    val hist = df.filter(col(x).isNotNull)
-      .groupBy(col(g), col(x)).agg(count(lit(1)).as("c"))
-    val wcum = Window.partitionBy(col(g)).orderBy(col(x))
+  def winsorizedMeans(df: DataFrame, g: String): DataFrame = {
+    val hist = df.filter(col("x").isNotNull)
+      .groupBy(col(g), col("x")).agg(count(lit(1)).as("c"))
+    val wcum = Window.partitionBy(col(g)).orderBy(col("x"))
     val hc = hist.withColumn("cum", sum(col("c")).over(wcum))
     val ns = hist.groupBy(col(g)).agg(sum(col("c")).as("n"))
-      .withColumn("klo", expr(s"(n * $pLo + 99) DIV 100"))
-      .withColumn("khi", expr(s"(n * $pHi + 99) DIV 100"))
+      .withColumn("klo", expr(s"(n * 10 + 99) DIV 100"))
+      .withColumn("khi", expr(s"(n * 90 + 99) DIV 100"))
     val thr = hc.join(broadcast(ns), Seq(g))
       .groupBy(col(g), col("n"))
-      .agg(min(when(col("cum") >= col("klo"), col(x))).as("lo"),
-        min(when(col("cum") >= col("khi"), col(x))).as("hi"))
+      .agg(min(when(col("cum") >= col("klo"), col("x"))).as("lo"),
+        min(when(col("cum") >= col("khi"), col("x"))).as("hi"))
     hist.join(broadcast(thr), Seq(g))
       .groupBy(col(g), col("n"), col("lo"), col("hi"))
       .agg(
-        sum(col("c") * greatest(col("lo"), least(col("hi"), col(x)))).as("wsum"),
-        sum(when(col(x).between(col("lo"), col("hi")), col("c"))
+        sum(col("c") * greatest(col("lo"), least(col("hi"), col("x")))).as("wsum"),
+        sum(when(col("x").between(col("lo"), col("hi")), col("c"))
           .otherwise(lit(0L))).as("trim_n"),
-        sum(when(col(x).between(col("lo"), col("hi")), col("c") * col(x))
+        sum(when(col("x").between(col("lo"), col("hi")), col("c") * col("x"))
           .otherwise(lit(0L))).as("trim_sum"))
       .selectExpr(g, "n", "lo", "hi",
         "(1000000 * wsum) DIV n AS wins_mean_micros",
@@ -337,9 +336,9 @@ object EvalOps {
     * its exact cosine top-k among vec_id > qHi, with both labels and
     * `hit` = 1 for a same-label retrieval.
     */
-  private[analytics] def labeledTopK(emb: DataFrame, qLo: Long, qHi: Long,
+  private[analytics] def labeledTopK(emb: DataFrame, qHi: Long,
                                      k: Int): DataFrame = {
-    val queries = emb.filter(col("vec_id").between(qLo, qHi))
+    val queries = emb.filter(col("vec_id").between(1L, qHi))
       .select(col("vec_id").as("q_id"), col("embedding").as("qvec"),
         col("label").cast("long").as("q_label"))
     val corpus = emb.filter(col("vec_id") > qHi)
@@ -368,15 +367,15 @@ object EvalOps {
     * P@k. One corpus pass (queries broadcast, per-query top-k window);
     * the label join touches only the (nQueries·k)-row result.
     */
-  def retrievalEval(emb: DataFrame, qLo: Long, qHi: Long, k: Int): DataFrame = {
-    val ranked = labeledTopK(emb, qLo, qHi, k)
+  def retrievalEval(emb: DataFrame, qHi: Long): DataFrame = {
+    val ranked = labeledTopK(emb, qHi, 10)
     val per = ranked.groupBy(col("q_id"), col("q_label"))
       .agg(min(when(col("hit") === 1L, col("rn"))).cast("long").as("fr"),
         sum(col("hit")).as("n_hits"))
       .selectExpr("q_id", "q_label AS label",
         "coalesce(fr, 0L) AS first_hit_rank",
         "coalesce(1000000 DIV fr, 0L) AS rr_micros",
-        "n_hits", s"(1000000 * n_hits) DIV $k AS p10_micros")
+        "n_hits", s"(1000000 * n_hits) DIV 10 AS p10_micros")
     val zz = per.agg(count(lit(1)).as("nq"), sum(col("rr_micros")).as("srr"),
         sum(col("n_hits")).as("sh"), sum(col("p10_micros")).as("sp"))
       .selectExpr("CAST(-1 AS BIGINT) AS q_id", "CAST(-1 AS BIGINT) AS label",
@@ -395,8 +394,8 @@ object EvalOps {
     * instead of guessed). Two map-side-combined aggregates and
     * constant-size state after the first.
     */
-  def skewReport(rows: DataFrame, key: String): DataFrame = {
-    val kc = rows.groupBy(col(key)).agg(count(lit(1)).as("c"))
+  def skewReport(rows: DataFrame): DataFrame = {
+    val kc = rows.groupBy(col("user_id")).agg(count(lit(1)).as("c"))
     val hist = kc.groupBy(col("c")).agg(count(lit(1)).as("f"))
     val wc = Window.orderBy(col("c")) // count-of-counts-sized input
     val hcum = hist.withColumn("cum", sum(col("f")).over(wc))
@@ -406,8 +405,8 @@ object EvalOps {
       .agg(min(when(col("cum") >= expr("(n_keys * 50 + 99) DIV 100"), col("c"))).as("p50_c"),
         min(when(col("cum") >= expr("(n_keys * 90 + 99) DIV 100"), col("c"))).as("p90_c"),
         min(when(col("cum") >= expr("(n_keys * 99 + 99) DIV 100"), col("c"))).as("p99_c"))
-    val top = kc.orderBy(col("c").desc, col(key)).limit(1)
-      .select(col(key).as("top_key"), col("c").as("top_c"))
+    val top = kc.orderBy(col("c").desc, col("user_id")).limit(1)
+      .select(col("user_id").as("top_key"), col("c").as("top_c"))
     tot.crossJoin(broadcast(qs)).crossJoin(broadcast(top))
       .selectExpr("n_rows", "n_keys", "max_c", "p50_c", "p90_c", "p99_c",
         "top_key", "(1000000 * top_c) DIV n_rows AS top_share_ppm",
@@ -415,9 +414,9 @@ object EvalOps {
            AS salt_factor""")
   }
 
-  def zInterleave16Sql(x: String, y: String): String =
+  def zInterleave16Sql: String =
     (0 until 16).map(i =>
-      s"((($x >> $i) & 1) << ${2 * i}) | ((($y >> $i) & 1) << ${2 * i + 1})")
+      s"(((x >> $i) & 1) << ${2 * i}) | (((y >> $i) & 1) << ${2 * i + 1})")
       .mkString("(", " | ", ")")
 
   /** Truncated rank-biased overlap (Webber, Moffat & Zobel 2010)
@@ -811,7 +810,7 @@ object EvalOps {
     ("q146_spearman", (s: SparkSession, dir: String) => {
       spearmanMicros(
         StatsOps.tokensVsChars(s, dir),
-        g = "source", x = "x", y = "y")
+        g = "source")
         .orderBy(col("source"))
     }, Some(s"""
       WITH ${StatsOps.tokensVsCharsSql},
@@ -894,7 +893,7 @@ object EvalOps {
       winsorizedMeans(
         Tables(s, dir).documents.select(col("source"),
           TextStats.tokenCount(col("text")).cast("long").as("x")),
-        g = "source", x = "x", pLo = 10, pHi = 90)
+        g = "source")
         .orderBy(col("source"))
     }, Some(s"""
       WITH f AS (
@@ -974,7 +973,7 @@ object EvalOps {
     //      queries broadcast, per-query top-k window, label join on the
     //      200-row result.
     ("q154_retrieval_mrr", (s: SparkSession, dir: String) => {
-      retrievalEval(Tables(s, dir).embeddings, qLo = 1L, qHi = 20L, k = 10)
+      retrievalEval(Tables(s, dir).embeddings, qHi = 20L)
     }, Some(s"""
       WITH ${retrievalSplitSql},
       r AS (SELECT q_id, q_label, vec_id, c_label,
@@ -1011,7 +1010,7 @@ object EvalOps {
     //      interleave is one shared generated expression (verbatim in
     //      the oracle); everything else is one group-by.
     ("q155_zorder_layout", (s: SparkSession, dir: String) => {
-      val z = zInterleave16Sql("x", "y")
+      val z = zInterleave16Sql
       val raw = Tables(s, dir).orders
         .selectExpr("o_custkey AS xr",
           // CAST up front: Spark's datediff is INT, DuckDB's date_diff
@@ -1037,7 +1036,7 @@ object EvalOps {
           "y_min", "y_max", "y_max - y_min + 1 AS y_span")
         .orderBy(col("bucket"))
     }, Some {
-      val z = zInterleave16Sql("x", "y")
+      val z = zInterleave16Sql
       s"""
       WITH raw AS (
         SELECT o_custkey AS xr,
@@ -1065,7 +1064,7 @@ object EvalOps {
     //      bring the hottest key down to an even 32-partition share
     //      (the q43 salted-agg parameter, measured instead of guessed).
     ("q156_skew_report", (s: SparkSession, dir: String) => {
-      skewReport(Tables(s, dir).events.filter(col("user_id").isNotNull), "user_id")
+      skewReport(Tables(s, dir).events.filter(col("user_id").isNotNull))
     }, Some("""
       WITH kc AS (SELECT user_id, CAST(count(*) AS BIGINT) AS c
                   FROM events WHERE user_id IS NOT NULL GROUP BY user_id),
@@ -1255,7 +1254,7 @@ object EvalOps {
     ("q163_matryoshka_eval", (s: SparkSession, dir: String) => {
       val emb = Tables(s, dir).embeddings
       def zzRow(e: DataFrame, dim: Int) =
-        retrievalEval(e, qLo = 1L, qHi = 20L, k = 10)
+        retrievalEval(e, qHi = 20L)
           .filter(col("q_id") === -1L)
           .selectExpr(s"CAST($dim AS BIGINT) AS dim",
             "rr_micros AS mrr_micros", "n_hits", "p10_micros AS mean_p10_micros")
@@ -2085,7 +2084,7 @@ object EvalOps {
     //      all 3 rounds via btIterSql — token-for-token the driver
     //      fold's arithmetic.
     ("q297_bradley_terry", (s: SparkSession, dir: String) =>
-      bradleyTerry(Tables(s, dir).lineitem, topN = 24, iters = 3),
+      bradleyTerry(Tables(s, dir).lineitem),
       Some(s"""
       WITH oq AS (SELECT l_orderkey AS o, l_partkey AS p,
               CAST(SUM(CAST(floor(l_quantity * 1000000) AS BIGINT)) AS BIGINT) AS q
@@ -2288,17 +2287,10 @@ object EvalOps {
       // split 12× per row (measured 9.7 → 1.2 s min at sf0.1)
       val tk = Tables(s, dir).documents
         .select(TextStats.tokens(lower(col("text"))).as("tk"))
-      def rater(profiles: Seq[(String, Seq[String])]): Column = {
-        val scored = profiles.map { case (lang, words) =>
-          struct(size(filter(col("tk"), t => t.isin(words: _*))).as("score"),
-            lit(lang).as("lang"))
-        }
-        greatest(scored: _*).getField("lang")
-      }
       val preds = graft.Stage.mat(tk.select(
-        rater(TextStats.langProfiles).as("r1"),
-        rater(halves.map(t => (t._1, t._2))).as("r2"),
-        rater(halves.map(t => (t._1, t._3))).as("r3")))
+        TextStats.langIdPredictedWith(col("tk"), TextStats.langProfiles).as("r1"),
+        TextStats.langIdPredictedWith(col("tk"), halves.map(t => (t._1, t._2))).as("r2"),
+        TextStats.langIdPredictedWith(col("tk"), halves.map(t => (t._1, t._3))).as("r3")))
       val items = preds.selectExpr(
           """CASE WHEN r1 = r2 AND r2 = r3 THEN 9
                   WHEN r1 = r2 OR r2 = r3 OR r1 = r3 THEN 5

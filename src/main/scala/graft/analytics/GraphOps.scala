@@ -39,13 +39,23 @@ import graft.text.TextStats
 object GraphOps {
   import Relational.QFn
 
+  /** PageRank damping in percent, shared by every rank kernel. */
+  private val Damping = 85
+
+  /** Peel rounds of the k-core kernels (q138, q311) and their oracles. */
+  private val KCoreRounds = 6
+
+  /** Rounds and triangle-support floor of the k-truss peel (q335). */
+  private val TrussRounds = 3
+  private val TrussMinSup = 2
+
   /** Integer-micros PageRank over an already-bidirected, deduplicated
     * edge list (src, dst). Bidirection guarantees every node has
     * out-degree ≥ 1, so there is no dangling-mass term. Returns
     * (node, rank_m, rank_r) after `iters` synchronous iterations from
     * a uniform `1e6 div N` start.
     */
-  def pageRankMicros(edges: DataFrame, iters: Int = 3, damp: Int = 85): DataFrame = {
+  def pageRankMicros(edges: DataFrame, iters: Int = 3): DataFrame = {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     // ew feeds every iteration — materialize once (Stage.mat). The
     // per-iteration frontier stays lineage-chained: at iters=3 the
@@ -60,7 +70,7 @@ object GraphOps {
       return edges       // would be driver ÷0; rank table is just empty
         .select(col("src").as("node"), lit(0L).as("rank_m"), lit(0.0).as("rank_r"))
         .limit(0)
-    val base = (100L - damp) * 1000000L / (100L * n)
+    val base = (100L - Damping) * 1000000L / (100L * n)
     var ranks = deg.select(col("src").as("node"), lit(1000000L / n).as("rank_m"))
     for (_ <- 1 to iters) {
       ranks = ew.join(ranks, ew("src") === ranks("node"))
@@ -68,7 +78,7 @@ object GraphOps {
         .groupBy(col("dst"))
         .agg(sum(col("c")).as("s"))
         .select(col("dst").as("node"),
-          (lit(base) + expr(s"($damp * s) div 100")).as("rank_m"))
+          (lit(base) + expr(s"($Damping * s) div 100")).as("rank_m"))
     }
     ranks.select(col("node"), col("rank_m"),
       (col("rank_m").cast("double") / lit(1000000.0)).as("rank_r"))
@@ -99,8 +109,8 @@ object GraphOps {
     * State is node-count-sized, the connectedComponents regime. This is
     * [[pageRankWeightedMicros]] with every weight 1.
     */
-  def pageRankDirectedMicros(edges: DataFrame, iters: Int = 3, damp: Int = 85): DataFrame =
-    pageRankWeightedMicros(edges.select(col("src"), col("dst"), lit(1L).as("w")), iters, damp)
+  def pageRankDirectedMicros(edges: DataFrame, iters: Int = 3): DataFrame =
+    pageRankWeightedMicros(edges.select(col("src"), col("dst"), lit(1L).as("w")), iters)
 
   /** TrustRank / personalized PageRank (Gyöngyi et al. 2004) — the
     * seed-biased variant of [[pageRankDirectedMicros]] and the standard
@@ -124,7 +134,7 @@ object GraphOps {
     * a subset of the graph's nodes, deduplicated.
     */
   def trustRankMicros(edges: DataFrame, seeds: DataFrame,
-                      iters: Int = 3, damp: Int = 85): DataFrame = {
+                      iters: Int = 3): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
     val nodes = graft.Stage.mat(
       e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
@@ -135,7 +145,7 @@ object GraphOps {
     if (ns == 0)
       return e.select(col("src").as("node"), lit(0L).as("rank_m"), lit(0.0).as("rank_r"))
         .limit(0)
-    val base = (100L - damp) * 1000000L / (100L * ns)
+    val base = (100L - Damping) * 1000000L / (100L * ns)
     val degNodes = deg.select(col("src").as("node"))
     val flagged = graft.Stage.mat(nodes.join(
         sd.select(col("node"), lit(true).as("is_seed")), Seq("node"), "left")
@@ -154,7 +164,7 @@ object GraphOps {
         .crossJoin(broadcast(dang))
         .select(col("node"),
           (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
-            expr(s"($damp * (coalesce(s, 0L) + " +
+            expr(s"($Damping * (coalesce(s, 0L) + " +
               s"(case when is_seed then dang_m div ${ns}L else 0L end))) div 100")).as("rank_m"))
     }
     ranks.select(col("node"), col("rank_m"),
@@ -282,10 +292,10 @@ object GraphOps {
     * contribution product to DECIMAL(38,0) past that (the basketLift
     * overflow note).
     */
-  def pageRankWeightedMicros(edges: DataFrame, iters: Int = 3, damp: Int = 85): DataFrame =
+  def pageRankWeightedMicros(edges: DataFrame, iters: Int = 3): DataFrame =
     trustRankMicros(edges,
       edges.select(col("src").as("node")).union(edges.select(col("dst").as("node"))).distinct(),
-      iters, damp)
+      iters)
 
   /** HITS hubs & authorities (Kleinberg) over a directed edge list, in
     * integer micros: auth(i) = Σ_{u→i} hub(u), hub(u) = Σ_{u→i} auth(i),
@@ -299,13 +309,13 @@ object GraphOps {
     * node-count-sized, Stage.mat'd per half-step because each feeds the
     * next update AND the normalization max.
     */
-  def hitsMicros(edges: DataFrame, iters: Int = 2): DataFrame = {
+  def hitsMicros(edges: DataFrame): DataFrame = {
     val e = graft.Stage.mat(edges.select(col("src"), col("dst")).distinct())
     var hubs = e.select(col("src").as("node")).distinct()
       .select(col("node"), lit(1000000L).as("h"))
     var auths = e.select(col("dst").as("node")).distinct()
       .select(col("node"), lit(0L).as("a"))
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to 2) {
       val hb = graft.Stage.mat(hubs)
       val araw = e.join(hb, e("src") === hb("node"))
         .groupBy(col("dst")).agg(sum(col("h")).as("ar"))
@@ -426,20 +436,19 @@ object GraphOps {
   }
 
   /** Warm-started coreness ladder (q311's core): for each k in the
-    * ascending `ladder`, a fixed-`rounds` [[kCorePeelDelta]] over the
+    * ascending `ladder`, a fixed-round [[kCorePeelDelta]] over the
     * PREVIOUS level's core subgraph (k-core ⊆ k'-core for k ≥ k', so
     * each level's input shrinks monotonically and the expensive low-k
     * levels never rerun). Output: (node, coreness = max ladder level
     * containing the node, one converged_k<k> certificate column per
     * level). GraphOpsSpec pins the shell separation on a hand graph.
     */
-  def corenessLadder(edges: DataFrame, ladder: Seq[Int],
-                     rounds: Int): DataFrame = {
+  def corenessLadder(edges: DataFrame, ladder: Seq[Int]): DataFrame = {
     require(ladder == ladder.sorted && ladder.nonEmpty,
       "ladder must ascend: each level warm-starts from the previous core")
     var e = graft.Stage.mat(edges.select(col("src"), col("dst")))
     val levels = ladder.map { k =>
-      val (m, conv) = kCorePeelDelta(e, k, rounds)
+      val (m, conv) = kCorePeelDelta(e, k, KCoreRounds)
       val mm = graft.Stage.mat(m.select(col("node")))
       e = graft.Stage.mat(
         e.join(mm.select(col("node").as("src")), Seq("src"), "left_semi")
@@ -461,14 +470,14 @@ object GraphOps {
     * token-for-token the classic peel rounds (test reference
     * GraphRefs.kCorePeel) over base edges `e0`.
     */
-  private def kcoreSql(k: Int, rounds: Int, p: String,
+  private def kcoreSql(k: Int, p: String,
                        base: String = "e0"): String = {
     // AS MATERIALIZED: DuckDB inlines plain CTEs, so a chained peel
     // would re-expand the whole upstream chain at every reference —
     // exponential plan growth (q311's 4-level warm-started ladder hit
     // the file-handle limit through repeated base re-scans). Each round
     // is evaluated once instead; results are identical.
-    val chain = (1 to rounds).map { i =>
+    val chain = (1 to KCoreRounds).map { i =>
       val pe = if (i == 1) base else s"${p}e${i - 1}"
       s"""${p}a$i AS MATERIALIZED (SELECT src AS node FROM $pe GROUP BY src HAVING count(*) >= $k),
       ${p}e$i AS MATERIALIZED (SELECT e.src, e.dst FROM $pe e
@@ -477,9 +486,9 @@ object GraphOps {
     }.mkString(",\n      ")
     s"""$chain,
       ${p}d AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS d
-                FROM ${p}e$rounds GROUP BY src),
-      ${p}c AS (SELECT (SELECT count(*) FROM ${p}a$rounds)
-                     = (SELECT count(*) FROM ${p}a${rounds - 1}) AS conv)"""
+                FROM ${p}e$KCoreRounds GROUP BY src),
+      ${p}c AS (SELECT (SELECT count(*) FROM ${p}a$KCoreRounds)
+                     = (SELECT count(*) FROM ${p}a${KCoreRounds - 1}) AS conv)"""
   }
 
   /** Degree assortativity of a mirrored, deduplicated edge list, in
@@ -661,11 +670,11 @@ object GraphOps {
 
   /** TextRank keywords (Mihalcea & Tarau 2004) as uniform PageRank
     * over the graph of words: candidate tokens (lowercased,
-    * length ≥ `minLen` — a deterministic, list-free stand-in for the
+    * length ≥ 4 — a deterministic, list-free stand-in for the
     * paper's POS filter) are linked when ADJACENT in the filtered
     * token sequence, mirrored, deduplicated, then ranked by
     * [[pageRankMicros]] (mirrored graph ⇒ no dangling mass, the q117
-    * precondition holds by construction). Top-`topK` words by rank.
+    * precondition holds by construction). Top-30 words by rank.
     *
     * Scale shape: tokenize+filter is one projection pass; the pair
     * explode is ≤ tokens-per-doc rows; edges collapse by DISTINCT to
@@ -673,11 +682,10 @@ object GraphOps {
     * size); the PageRank joins then run on the word key — bucketable.
     * No per-doc state survives the edge distinct.
     */
-  def textRankKeywords(docs: DataFrame, iters: Int = 3, minLen: Int = 4,
-                       topK: Int = 30): DataFrame = {
+  def textRankKeywords(docs: DataFrame): DataFrame = {
     val toks = docs.select(
       filter(TextStats.tokens(lower(col("text"))),
-        x => length(x) >= minLen).as("w"))
+        x => length(x) >= 4).as("w"))
     val pairs = toks.select(explode(expr(
         """CASE WHEN size(w) >= 2
              THEN transform(sequence(1, size(w) - 1),
@@ -688,10 +696,10 @@ object GraphOps {
     val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
       .union(pairs.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
-    pageRankMicros(edges, iters)
+    pageRankMicros(edges, 3)
       .select(col("node").as("word"), col("rank_m"))
       .orderBy(col("rank_m").desc, col("word"))
-      .limit(topK)
+      .limit(30)
   }
 
   /** One unrolled uniform-PageRank iteration over the `edges`/`deg`/`p`
@@ -772,7 +780,7 @@ object GraphOps {
     */
   private[graft] def edgeTableMemo(s: SparkSession, dir: String, variant: String = "full",
       inputs: Seq[String] = Seq("lineitem"))(derive: => DataFrame): DataFrame =
-    graft.Memo.spilled(s, "edges", dir, inputs, variant)(derive)
+    graft.Memo.spilled(s, dir, inputs, variant)(derive)
 
   /** q257's triangle census + clustering coefficients over a distinct
     * undirected edge table (columns `pa`, `pb`, pa ≠ pb, one row per
@@ -884,7 +892,7 @@ object GraphOps {
     * so the per-round barrier count drops from 3 (sup, next, tri
     * re-mat) to 1.
     */
-  private[graft] def kTrussRoundsInc(e: DataFrame, rounds: Int, minSup: Int): DataFrame = {
+  private[graft] def kTrussRoundsInc(e: DataFrame): DataFrame = {
     val tri = graft.Stage.mat(triangleListAdj(e).select(
       least(col("u"), col("x")).as("a1"), greatest(col("u"), col("x")).as("b1"),
       least(col("u"), col("y")).as("a2"), greatest(col("u"), col("y")).as("b2"),
@@ -897,14 +905,14 @@ object GraphOps {
     var supCur = graft.Stage.mat(support(tri))
     var triCur = tri
     var eCur = e.select(col("pa"), col("pb"))
-    val rows = (1 to rounds).map { r =>
-      val next = supCur.filter(col("sup") >= minSup).select(col("pa"), col("pb"))
+    val rows = (1 to TrussRounds).map { r =>
+      val next = supCur.filter(col("sup") >= TrussMinSup).select(col("pa"), col("pb"))
       val row = eCur.agg(count(lit(1)).as("n_edges_in"))
         .crossJoin(triCur.agg(count(lit(1)).as("n_tri")))
         .crossJoin(next.agg(count(lit(1)).as("n_kept")))
         .selectExpr(s"CAST($r AS BIGINT) AS round", "n_edges_in", "n_tri",
           "n_kept")
-      if (r < rounds) {
+      if (r < TrussRounds) {
         // materialized once (it feeds three lookup builds), and
         // broadcast: the peel delta is bounded by the current edge set
         // and shrinks as the peel converges — the same size class as
@@ -917,7 +925,7 @@ object GraphOps {
         // surviving triangles) kill nothing and are dropped from the
         // kept set by the ≥ minSup filter alone.
         def rm(a: String, b: String, x: String) =
-          broadcast(supCur.filter(col("sup") < minSup)
+          broadcast(supCur.filter(col("sup") < TrussMinSup)
             .select(col("pa").as(a), col("pb").as(b), lit(1).as(x)))
         // ONE materialized pass carries the three dead-edge flags: the
         // dec aggregate and the surviving-triangle view both read the
@@ -954,7 +962,7 @@ object GraphOps {
     * scale shape with no damping vector. Extracted so ScaleSmoke can
     * measure its growth on replicated graphs (VERDICT r10 ask #3).
     */
-  private[graft] def eigenCentralityTopK(e: DataFrame, k: Int = 20): DataFrame = {
+  private[graft] def eigenCentralityTopK(e: DataFrame): DataFrame = {
     val adj = graft.Stage.mat(
       e.select(col("pa").as("u"), col("pb").as("v"))
         .unionByName(e.select(col("pb").as("u"), col("pa").as("v"))))
@@ -970,7 +978,7 @@ object GraphOps {
       .selectExpr("v", "s AS walks3",
         """CAST((CAST(1000000 AS DECIMAL(38,0)) * s) DIV smax AS BIGINT)
            AS score_ppm""")
-      .orderBy(col("score_ppm").desc, col("v")).limit(k)
+      .orderBy(col("score_ppm").desc, col("v")).limit(20)
   }
 
   /** q325's cohort-bounded Adamic–Adar body over a distinct undirected
@@ -979,7 +987,7 @@ object GraphOps {
     * 1e15 DIV round9ln(d), existing edges anti-joined, top-k TakeOrdered.
     * Extracted so ScaleSmoke can measure its growth on replicated graphs.
     */
-  private[graft] def adamicAdarTopK(e: DataFrame, k: Int = 20): DataFrame = {
+  private[graft] def adamicAdarTopK(e: DataFrame): DataFrame = {
     val adj = e.select(col("pa").as("u"), col("pb").as("v"))
       .unionByName(e.select(col("pb").as("u"), col("pa").as("v")))
     val cen = adj
@@ -999,7 +1007,7 @@ object GraphOps {
       .agg(count(lit(1)).as("cn"), sum(col("w")).as("aa_micros"))
       .join(e.select(col("pa").as("x"), col("pb").as("y")), Seq("x", "y"),
         "left_anti")
-      .orderBy(col("aa_micros").desc, col("x"), col("y")).limit(k)
+      .orderBy(col("aa_micros").desc, col("x"), col("y")).limit(20)
   }
 
   val defs: Seq[(String, QFn, Option[String])] = Seq(
@@ -1143,7 +1151,7 @@ object GraphOps {
     ("q137_hits", (s: SparkSession, dir: String) => {
       hitsMicros(
         edgeTableMemo(s, dir, "interaction_directed", Seq("events"))(
-          interactionDirectedEdges(s, dir)), iters = 2)
+          interactionDirectedEdges(s, dir)))
         .orderBy(col("kind"), col("node"))
     }, Some(s"""
       WITH e AS (
@@ -1247,8 +1255,8 @@ object GraphOps {
         .orderBy(col("node"))
     }, Some(s"""
       WITH ${interactionEdgesSql("e0")},
-      ${kcoreSql(2, 6, "k2")},
-      ${kcoreSql(3, 6, "k3")}
+      ${kcoreSql(2, "k2")},
+      ${kcoreSql(3, "k3")}
       SELECT a.node, COALESCE(d2.d, 0) AS deg_core2,
              (a3.node IS NOT NULL) AS in_core3,
              COALESCE(d3.d, 0) AS deg_core3,
@@ -1279,12 +1287,11 @@ object GraphOps {
     //      identically on both engines.
     ("q311_coreness", (s: SparkSession, dir: String) => {
       corenessLadder(edgeTableMemo(s, dir, "interaction", Seq("events"))(
-        interactionEdges(s, dir)), Seq(1, 2, 4, 8, 16, 32, 64),
-        rounds = 6)
+        interactionEdges(s, dir)), Seq(1, 2, 4, 8, 16, 32, 64))
     }, Some {
       val ladder = Seq(1, 2, 4, 8, 16, 32, 64)
       val chains = ladder.zipWithIndex.map { case (k, i) =>
-        kcoreSql(k, 6, s"c$k", if (i == 0) "e0" else s"c${ladder(i - 1)}e6")
+        kcoreSql(k, s"c$k", if (i == 0) "e0" else s"c${ladder(i - 1)}e6")
       }.mkString(",\n      ")
       val members = ladder.map(k => s"SELECT node, $k AS k FROM c${k}a6")
         .mkString("\n                UNION ALL ")
@@ -1570,7 +1577,7 @@ object GraphOps {
     //      oracle rebuilds the same filtered-adjacency edge list and
     //      unrolls all three iterations.
     ("q209_textrank", (s: SparkSession, dir: String) => {
-      textRankKeywords(Tables(s, dir).documents, iters = 3, minLen = 4, topK = 30)
+      textRankKeywords(Tables(s, dir).documents)
     }, Some(s"""
       WITH toks AS (
         SELECT list_filter(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+'),
@@ -1910,8 +1917,7 @@ object GraphOps {
       // the per-round shuffle semi-joins become removed-sized lookups.
       // Output identical (GraphOpsSpec pins inc ≡ classic; same oracle).
       kTrussRoundsInc(edgeTableMemo(s, dir, "mod4")(partCoPurchaseEdges(
-          Tables(s, dir).lineitem.filter(pmod(col("l_orderkey"), lit(4)) === 0))),
-        rounds = 3, minSup = 2)
+          Tables(s, dir).lineitem.filter(pmod(col("l_orderkey"), lit(4)) === 0))))
     }, Some {
       def roundSql(e: String, p: String) = s"""
       ${p}deg AS MATERIALIZED (SELECT v, CAST(count(*) AS BIGINT) AS d

@@ -57,11 +57,11 @@ object InferOps {
     * broadcast. At corpus scale nothing holds more than (vocab ×
     * langs) counts.
     */
-  def nbLangId(docs: DataFrame, folds: Int = 5): DataFrame = {
+  def nbLangId(docs: DataFrame): DataFrame = {
     import graft.text.TextStats
     val sp = docs.select(col("doc_id"), col("lang"), lower(col("text")).as("t"))
       .withColumn("h",
-        TextStats.portableHash64(concat(lit("nb:"), col("doc_id").cast("string"))) % folds)
+        TextStats.portableHash64(concat(lit("nb:"), col("doc_id").cast("string"))) % 5)
       .transform(graft.Stage.mat)
     val tr = sp.filter(col("h") =!= 0)
     val te = sp.filter(col("h") === 0)
@@ -132,8 +132,7 @@ object InferOps {
     * fan-out, not global; item counts re-attach by a part-dimension
     * join.
     */
-  def itemNeighbors(lineitem: DataFrame, minSupport: Long = 2,
-                    neighborsPerItem: Int = 3): DataFrame = {
+  def itemNeighbors(lineitem: DataFrame): DataFrame = {
     val baskets = graft.Stage.mat(lineitem
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .groupBy(col("o")).agg(collect_set(col("p")).as("ps")))
@@ -145,7 +144,7 @@ object InferOps {
         .as("pr"))
       .select(col("pr.pa"), col("pr.pb"))
       .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("c_ab"))
-      .filter(col("c_ab") >= minSupport)
+      .filter(col("c_ab") >= 2L)
     val scored = pairs
       .join(itemC.select(col("l_partkey").as("pa"), col("c").as("c_a")), Seq("pa"))
       .join(itemC.select(col("l_partkey").as("pb"), col("c").as("c_b")), Seq("pb"))
@@ -155,7 +154,7 @@ object InferOps {
     val wN = Window.partitionBy(col("pa"))
       .orderBy(col("cos2_ppm").desc, col("c_ab").desc, col("pb").asc)
     scored.withColumn("rnk", row_number().over(wN))
-      .filter(col("rnk") <= neighborsPerItem)
+      .filter(col("rnk") <= 3)
       .selectExpr("pa AS item", "CAST(rnk AS BIGINT) AS rnk", "pb AS neighbor", "c_ab",
         "CAST(cos2_ppm AS BIGINT) AS cos2_ppm")
       .orderBy(col("item"), col("rnk"))
@@ -223,8 +222,7 @@ object InferOps {
     * never all-pairs); scoring is a pure projection; top-k is
     * TakeOrderedAndProject.
     */
-  def fellegiSunter(customer: DataFrame, topK: Int = 50,
-                    mPpm: Long = 950000L): DataFrame = {
+  def fellegiSunter(customer: DataFrame, topK: Int = 50): DataFrame = {
     val c = customer.selectExpr("c_custkey", "c_nationkey", "c_mktsegment",
       "CASE WHEN c_acctbal < 0 THEN 1 ELSE 0 END AS f_sign",
       "CAST(floor(c_acctbal / 1000) AS BIGINT) AS f_b1000",
@@ -235,10 +233,10 @@ object InferOps {
       .agg(sum(expr("CAST(cv AS DECIMAL(38,0)) * (cv - 1)")).as("num"))
       .crossJoin(broadcast(n))
       .selectExpr(
-        s"""CAST(round((ln($mPpm / 1e6) - ln(CAST(num AS DOUBLE)
+        s"""CAST(round((ln(950000 / 1e6) - ln(CAST(num AS DOUBLE)
               / (CAST(n AS DOUBLE) * (n - 1)))) * 1000000000, 0) AS BIGINT)
             AS wa_$f""",
-        s"""CAST(round((ln(1.0 - $mPpm / 1e6) - ln(1.0 - CAST(num AS DOUBLE)
+        s"""CAST(round((ln(1.0 - 950000 / 1e6) - ln(1.0 - CAST(num AS DOUBLE)
               / (CAST(n AS DOUBLE) * (n - 1)))) * 1000000000, 0) AS BIGINT)
             AS wd_$f""")
     val weights = uOf("f_sign").crossJoin(uOf("f_b1000")).crossJoin(uOf("f_b100"))
@@ -275,7 +273,7 @@ object InferOps {
     * bucket decomposition — linear value-range buckets (any monotone
     * bucketing preserves bucket-order + in-bucket-order = global
     * order), per-bucket window cumsums in parallel, bucket offsets
-    * from a window over the `buckets`-row bucket table. Nothing is
+    * from a window over the 1024-row bucket table. Nothing is
     * ever globally sorted; the cross products run DECIMAL(38,0) so
     * corpus-scale n_a·n_b cannot overflow.
     */
@@ -295,7 +293,7 @@ object InferOps {
     * CDF gap; KS takes the sup, CvM the weighted L²).
     */
   private def mergedCdf(df: DataFrame, valueCol: Column, isA: Column,
-                        isB: Column, buckets: Int): DataFrame = {
+                        isB: Column): DataFrame = {
     val base = df.filter(isA || isB)
       .select(valueCol.cast("long").as("v"), isA.cast("long").as("ga"))
     val pv = base.groupBy(col("v"))
@@ -304,8 +302,8 @@ object InferOps {
       sum(col("c0")).as("n0"), sum(col("c1")).as("n1"))
     val bucketed = pv.crossJoin(broadcast(stats))
       .withColumn("bucket",
-        least(expr(s"((v - mn) * $buckets) DIV greatest(mx - mn + 1, 1)"),
-          lit(buckets - 1L)))
+        least(expr(s"((v - mn) * 1024) DIV greatest(mx - mn + 1, 1)"),
+          lit(1023L)))
     val bAgg = bucketed.groupBy(col("bucket"))
       .agg(sum(col("c0")).as("b0"), sum(col("c1")).as("b1"))
     val wOff = Window.orderBy(col("bucket")) // buckets-row table
@@ -322,9 +320,8 @@ object InferOps {
         col("cum0"), col("cum1"))
   }
 
-  def ksTest(df: DataFrame, valueCol: Column, isA: Column, isB: Column,
-             buckets: Int = 1024): DataFrame = {
-    val cum = mergedCdf(df, valueCol, isA, isB, buckets)
+  def ksTest(df: DataFrame, valueCol: Column, isA: Column, isB: Column): DataFrame = {
+    val cum = mergedCdf(df, valueCol, isA, isB)
       .selectExpr("v", "n0", "n1",
         """abs(CAST(cum0 AS DECIMAL(38,0)) * n1
                - CAST(cum1 AS DECIMAL(38,0)) * n0) AS diff""")
@@ -344,9 +341,8 @@ object InferOps {
     * gap, on the same mergedCdf kernel. With integer CDFs the sum is
     * exact: Σ c·(cum0·n1 − cum1·n0)² DIV (N²·n0·n1) in ppm.
     */
-  def cvmTest(df: DataFrame, valueCol: Column, isA: Column, isB: Column,
-              buckets: Int = 1024): DataFrame =
-    mergedCdf(df, valueCol, isA, isB, buckets)
+  def cvmTest(df: DataFrame, valueCol: Column, isA: Column, isB: Column): DataFrame =
+    mergedCdf(df, valueCol, isA, isB)
       .selectExpr("n0", "n1", "c0 + c1 AS c",
         """CAST(cum0 AS DECIMAL(38,0)) * n1
            - CAST(cum1 AS DECIMAL(38,0)) * n0 AS diff""")
@@ -424,8 +420,8 @@ object InferOps {
     * state; Σx² runs DECIMAL(38,0) so corpus-scale sums cannot
     * overflow.
     */
-  def welchDrift(events: DataFrame, grpCol: String, valueMicros: Column): DataFrame = {
-    val base = events.select(col(grpCol).as("grp"), valueMicros.as("x"),
+  def welchDrift(events: DataFrame, valueMicros: Column): DataFrame = {
+    val base = events.select(col("event_type").as("grp"), valueMicros.as("x"),
       expr("CAST(datediff(CAST(ts AS DATE), DATE '1970-01-01') AS BIGINT)").as("day"))
     val span = base.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
     val halves = base.crossJoin(broadcast(span))
@@ -491,13 +487,13 @@ object InferOps {
     * window); the cumulative-hit window is per-query over ≤ k rows;
     * the relevant-count join is on the label dimension (broadcast).
     */
-  def averagePrecision(emb: DataFrame, qLo: Long, qHi: Long, k: Int): DataFrame = {
+  def averagePrecision(emb: DataFrame, qHi: Long, k: Int): DataFrame = {
     val relc = emb.filter(col("vec_id") > qHi)
       .groupBy(col("label").cast("long").as("q_label"))
       .agg(count(lit(1)).as("n_rel"))
     val wc = Window.partitionBy(col("q_id")).orderBy(col("rn"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = EvalOps.labeledTopK(emb, qLo, qHi, k)
+    val ranked = EvalOps.labeledTopK(emb, qHi, k)
       .withColumn("ch", sum(col("hit")).over(wc))
     val per = ranked.groupBy(col("q_id"), col("q_label"))
       .agg(sum(when(col("hit") === 1L, expr("(1000000 * ch) DIV rn"))
@@ -537,16 +533,15 @@ object InferOps {
     * state, so the K iterations are driver-cheap tiny joins, never
     * corpus passes.
     */
-  def markovAttribution(events: DataFrame, channels: Seq[String],
-                        conv: String = "purchase", iters: Int = 6): DataFrame = {
+  def markovAttribution(events: DataFrame, channels: Seq[String]): DataFrame = {
     val sp = events.sparkSession
     import sp.implicits._
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val ev = events
       .filter(col("user_id").isNotNull &&
-        (col("event_type").isin(channels: _*) || col("event_type") === conv))
+        (col("event_type").isin(channels: _*) || col("event_type") === "purchase"))
       .withColumn("rn", row_number().over(w))
-    val pfirst = ev.filter(col("event_type") === conv)
+    val pfirst = ev.filter(col("event_type") === "purchase")
       .groupBy(col("user_id")).agg(min(col("rn")).as("prn"))
     val jj = ev.join(pfirst, Seq("user_id"), "left")
       .filter(col("prn").isNull || col("rn") < col("prn"))
@@ -576,7 +571,7 @@ object InferOps {
     val convRows = variants.select(col("variant"), lit("CONV").as("state"),
       lit(1000000L).as("v"))
     var v = convRows
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to 6) {
       val prev = v.select(col("variant").as("pv"), col("state").as("pb"), col("v"))
       v = tv.join(prev, tv("variant") === prev("pv") && tv("b") === prev("pb"))
         .groupBy(tv("variant").as("variant"), col("s").as("state"))
@@ -618,7 +613,7 @@ object InferOps {
     * crossing (−1 if none), and the LLR at that crossing (final LLR
     * when still continuing).
     */
-  def sprtDaily(events: DataFrame, threshold: Double = 35.0): DataFrame = {
+  def sprtDaily(events: DataFrame): DataFrame = {
     // Constants are Scala-computed integer-nanos literals embedded in
     // BOTH engines' SQL — an in-SQL `ln(11.0/9.0)` is NOT portable:
     // Spark parses 11.0/9.0 as DECIMAL division (scale-truncated ratio,
@@ -628,7 +623,7 @@ object InferOps {
     val bound = InferOps.sprtBoundNanos //  ln(19)·1e9 = 2944438979
     val daily = events
       .selectExpr("event_type", "CAST(ts AS DATE) AS day",
-        s"CASE WHEN value >= $threshold THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS hit")
+        s"CASE WHEN value >= 35.0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS hit")
       .groupBy(col("event_type"), col("day"))
       .agg(count(lit(1)).as("n"), sum(col("hit")).as("s"))
       .withColumn("llr_day", expr(s"s * ${lpos}L + (n - s) * ${lneg}L"))
@@ -661,7 +656,7 @@ object InferOps {
   /** Difference-in-differences estimator over the event stream:
     * `treat` is any per-row treatment predicate (a user cohort flag, a
     * rollout ramp, an experiment assignment), outcome = the
-    * floor-micros value of `outcomeType` events, periods = the q195
+    * floor-micros value of purchase events, periods = the q195
     * early/late calendar halves ((mn+mx+1) div 2 cutoff). Emits the
     * four (treat, post) cell means plus the zz row carrying
     * DiD = (T̄post − T̄pre) − (C̄post − C̄pre) — subtractions of
@@ -676,10 +671,9 @@ object InferOps {
     * flag, a 4-group aggregate. Nothing holds more than 4 rows after
     * the agg.
     */
-  def diffInDiff(events: DataFrame, treat: Column,
-                 outcomeType: String = "purchase"): DataFrame = {
+  def diffInDiff(events: DataFrame, treat: Column): DataFrame = {
     val ev = events.filter(col("user_id").isNotNull)
-    val base = ev.filter(col("event_type") === outcomeType)
+    val base = ev.filter(col("event_type") === "purchase")
       .select(when(treat, 1L).otherwise(0L).as("is_t"),
         expr("CAST(datediff(CAST(ts AS DATE), DATE '1970-01-01') AS BIGINT)").as("day"),
         expr("CAST(floor(value * 1000000) AS BIGINT)").as("x"))
@@ -709,7 +703,7 @@ object InferOps {
 
   /** Two-group log-rank test (Mantel 1966) on time-to-first-conversion:
     * cohort g=1 = users whose FIRST event is a view, duration = days
-    * from first-seen to first `conv` (censored at the corpus's last
+    * from first-seen to first purchase (censored at the corpus's last
     * day) — "do view-first users convert on a different clock?", the
     * whole-curve sequel to the Kaplan–Meier estimate. Per event time:
     * observed group-1 deaths d1, expected e1 = d·n1·1e6 div n, and the
@@ -720,7 +714,7 @@ object InferOps {
     * duration-histogram table — span-bounded (days), never user-bounded
     * — so the only per-user state is one (duration, event) row.
     */
-  def logRank(events: DataFrame, conv: String = "purchase"): DataFrame = {
+  def logRank(events: DataFrame): DataFrame = {
     val ev = events.filter(col("user_id").isNotNull)
       .select(col("user_id"), col("event_type"), col("ts"), col("event_id"),
         expr("CAST(datediff(CAST(ts AS DATE), DATE '1970-01-01') AS BIGINT)").as("day"))
@@ -728,7 +722,7 @@ object InferOps {
     val first = ev.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("user_id"),
         (col("event_type") === "view").cast("long").as("g"), col("day").as("t0"))
-    val convDay = ev.filter(col("event_type") === conv)
+    val convDay = ev.filter(col("event_type") === "purchase")
       .groupBy(col("user_id")).agg(min(col("day")).as("tc"))
     val lastDay = ev.agg(max(col("day")).as("ld"))
     val dur = first.join(convDay, Seq("user_id"), "left")
@@ -1042,7 +1036,7 @@ object InferOps {
     //      all from one sufficient-statistics pass; the oracle replays
     //      every truncating DIV in the same order.
     ("q195_welch_drift", (s: SparkSession, dir: String) => {
-      welchDrift(Tables(s, dir).events, grpCol = "event_type",
+      welchDrift(Tables(s, dir).events,
         valueMicros = expr("CAST(floor(value * 1000000) AS BIGINT)"))
     }, Some("""
       WITH base AS (
@@ -1096,7 +1090,7 @@ object InferOps {
     //      counts in the denominator; the oracle replays the cosine
     //      ranking, the cumulative-hit precisions, and both DIVs.
     ("q196_avg_precision", (s: SparkSession, dir: String) => {
-      averagePrecision(Tables(s, dir).embeddings, qLo = 1L, qHi = 20L, k = 10)
+      averagePrecision(Tables(s, dir).embeddings, qHi = 20L, k = 10)
     }, Some(s"""
       WITH ${EvalOps.retrievalSplitSql},
       relc AS (SELECT c_label AS q_label, CAST(count(*) AS BIGINT) AS n_rel
@@ -1132,7 +1126,7 @@ object InferOps {
     //      add-one counts, same integer-nanos log terms — and replays
     //      every argmax including the lang-asc tie-break.
     ("q197_nb_langid", (s: SparkSession, dir: String) => {
-      nbLangId(Tables(s, dir).documents, folds = 5)
+      nbLangId(Tables(s, dir).documents)
     }, Some {
       val h = graft.text.TextStats.portableHash64Sql(
         "concat('nb:', CAST(doc_id AS VARCHAR))")
@@ -1206,7 +1200,7 @@ object InferOps {
     //      basket pair counts, the integer cos², and the full
     //      (cos2 desc, c_ab desc, pb) tie-break.
     ("q198_item_cf", (s: SparkSession, dir: String) => {
-      itemNeighbors(Tables(s, dir).lineitem, minSupport = 2, neighborsPerItem = 3)
+      itemNeighbors(Tables(s, dir).lineitem)
     }, Some("""
       WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
       itemc AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS c FROM li GROUP BY 1),
@@ -1531,7 +1525,7 @@ object InferOps {
     //      ppm matrix, and all 6 rounds for all 5 variants.
     ("q211_markov_attribution", (s: SparkSession, dir: String) => {
       markovAttribution(Tables(s, dir).events,
-        channels = Seq("view", "click", "signup", "error"), iters = 6)
+        channels = Seq("view", "click", "signup", "error"))
     }, Some {
       val channels = Seq("view", "click", "signup", "error")
       val variantsSql = (Seq(("full", "")) ++ channels.map(c => (s"no_$c", c)))
@@ -1592,7 +1586,7 @@ object InferOps {
     //      The oracle replays the daily fold, both window sums, and
     //      the crossing selection.
     ("q212_sprt", (s: SparkSession, dir: String) => {
-      sprtDaily(Tables(s, dir).events, threshold = 35.0)
+      sprtDaily(Tables(s, dir).events)
     }, Some(s"""
       WITH daily AS (
         SELECT event_type, CAST(ts AS DATE) AS day,
@@ -1891,7 +1885,7 @@ object InferOps {
       val ranks = cal.agg(count(lit(1)).as("n_cal"))
         .selectExpr("CAST(1 AS BIGINT) AS t",
           "least(((n_cal + 1) * 9 + 9) DIV 10, n_cal) AS k", "n_cal")
-      val qh = Quantiles.pairRankSelect(cal, "r", "o_orderkey",
+      val qh = Quantiles.pairRankSelect(cal,
         ranks.select(col("t"), col("k"))).selectExpr("bx AS qhat")
       val cov = base.filter(col("h") >= 8).join(broadcast(model), Seq("g"))
         .select(abs(col("y") - col("yhat")).as("r"))

@@ -29,10 +29,10 @@ object LLMOps {
     * corpora are LCG-seeded, so the banded join's full output — planted
     * AND accidental pairs — is a constant; a changed count hash-fails).
     */
-  private def plantedManifestOracle(nearKind: String, nPairsTotal: Long): String = {
+  private def plantedManifestOracle(nearKind: String): String = {
     val rows = Multimodal.plantedPairs(nearKind)
       .map { case (a, b, k) =>
-        s"(CAST($a AS BIGINT), CAST($b AS BIGINT), '$k', TRUE, TRUE, CAST($nPairsTotal AS BIGINT))"
+        s"(CAST($a AS BIGINT), CAST($b AS BIGINT), '$k', TRUE, TRUE, CAST(20 AS BIGINT))"
       }.mkString(",\n        ")
     s"""
       SELECT * FROM (VALUES
@@ -42,8 +42,8 @@ object LLMOps {
   }
   // both measured totals are exactly the 20 planted pairs — the seeded
   // corpora produce zero accidental collisions within the band budgets
-  private val imagePhashOracle = plantedManifestOracle("edit", 20L)
-  private val audioFingerprintOracle = plantedManifestOracle("gain", 20L)
+  private val imagePhashOracle = plantedManifestOracle("edit")
+  private val audioFingerprintOracle = plantedManifestOracle("gain")
 
   /** The memoized offline-built IVF index for a corpus dir ([[graft.Memo]],
     * kind "ivf_centroids": trains on first use, probe-only afterwards,
@@ -54,7 +54,7 @@ object LLMOps {
     */
   def ivfCentroids(s: SparkSession, dir: String): Seq[(Int, Seq[Double])] =
     graft.Memo.value("ivf_centroids", dir, Seq("embeddings"))(Similarity.ivfTrain(
-      Tables(s, dir).embeddings.filter(col("vec_id") =!= 0), nCentroids = 8))
+      Tables(s, dir).embeddings.filter(col("vec_id") =!= 0)))
 
   /** Whitespace tokens, lowercased, empties dropped — the shared
     * tokenization of the corpus-statistics family below (GT / Zipf /
@@ -69,7 +69,7 @@ object LLMOps {
     * n ≥ 2 tail is where the low-r mass it models actually lives (the
     * fixture's unigram vocabulary has no terms below r = 26 — a
     * unigram GT table would be structurally empty). */
-  def goodTuring(docs: DataFrame, maxR: Long = 10): DataFrame = {
+  def goodTuring(docs: DataFrame): DataFrame = {
     val tf = docs.select(loTokens(col("text")).as("w"))
       .select(explode(expr(
         """CASE WHEN size(w) >= 2
@@ -80,7 +80,7 @@ object LLMOps {
     val nr = graft.Stage.mat(
       tf.groupBy(col("r")).agg(count(lit(1)).as("n_r")))
     val nr1 = nr.select((col("r") - 1).as("r"), col("n_r").as("n_r1"))
-    val rows = nr.filter(col("r") <= maxR)
+    val rows = nr.filter(col("r") <= 10L)
       .join(nr1, Seq("r"), "left")
       .selectExpr("r", "n_r", "coalesce(n_r1, CAST(0 AS BIGINT)) AS n_r1",
         "(1000000 * (r + 1) * coalesce(n_r1, CAST(0 AS BIGINT))) DIV n_r AS r_star_micros")
@@ -92,13 +92,13 @@ object LLMOps {
     rows.unionByName(zz).orderBy(col("r"))
   }
 
-  /** Zipf-fit OLS over the top-`topK` term frequencies — see the q215
+  /** Zipf-fit OLS over the top-100 term frequencies — see the q215
     * def comment. Integer-MICROS log grids (nanos would overflow Σx²). */
-  def zipfFit(docs: DataFrame, topK: Int = 100): DataFrame = {
+  def zipfFit(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tf = docs.select(explode(loTokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
-    val top = tf.orderBy(col("c").desc, col("w")).limit(topK)
+    val top = tf.orderBy(col("c").desc, col("w")).limit(100)
     val ranked = top
       .withColumn("rank", row_number().over(Window.orderBy(col("c").desc, col("w"))))
       .selectExpr("'zipf' AS fit",
@@ -196,13 +196,13 @@ object LLMOps {
     * ⇒ the 1/V_k OOV floor falls out of the same formula).
     *
     * Scale shape: one tokenize pass per split; per-bucket bigram
-    * counts expand ≤ `buckets`× via the prefix explode then collapse
+    * counts expand ≤ 5× via the prefix explode then collapse
     * to (k, a, b) — model-sized, never corpus-sized; both CE sums are
     * bigram-keyed joins (bucketable); the holdout marginal × prefix
     * spine product is (holdout-left-vocab × buckets). Nothing holds
     * row state after the first aggregates.
     */
-  def scalingCurve(docs: DataFrame, folds: Int = 5, buckets: Int = 5): DataFrame = {
+  def scalingCurve(docs: DataFrame): DataFrame = {
     def L(e: String) = s"CAST(round(ln(CAST($e AS DOUBLE)) * 1000000000, 0) AS BIGINT)"
     val bigrams =
       """CASE WHEN size(w) >= 2
@@ -211,13 +211,13 @@ object LLMOps {
            ELSE array() END"""
     val sp = docs.select(col("doc_id"), loTokens(col("text")).as("w"))
       .withColumn("h", TextStats.portableHash64(
-        concat(lit("sc:"), col("doc_id").cast("string"))) % folds)
+        concat(lit("sc:"), col("doc_id").cast("string"))) % 5)
       .transform(graft.Stage.mat)
     val tr = sp.filter(col("h") =!= 0)
     val te = sp.filter(col("h") === 0)
     val rng = tr.agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
     val trb = tr.crossJoin(broadcast(rng))
-      .withColumn("bkt", expr(s"((doc_id - mn) * $buckets) DIV (mx - mn + 1) + 1"))
+      .withColumn("bkt", expr(s"((doc_id - mn) * 5) DIV (mx - mn + 1) + 1"))
       .transform(graft.Stage.mat)
     // per-prefix model: bigram counts, left marginals, vocabulary
     val bgb = trb.select(col("bkt"), explode(expr(bigrams)).as("g"))
@@ -225,18 +225,18 @@ object LLMOps {
       .groupBy(col("bkt"), col("a"), col("b")).agg(count(lit(1)).as("c"))
     val model = graft.Stage.mat(bgb
       .select(col("a"), col("b"), col("c"),
-        explode(expr(s"sequence(bkt, $buckets)")).as("k"))
+        explode(expr(s"sequence(bkt, 5)")).as("k"))
       .groupBy(col("k"), col("a"), col("b")).agg(sum(col("c")).as("c_ab")))
     val ca = model.groupBy(col("k"), col("a")).agg(sum(col("c_ab")).as("c_a"))
     val vk = graft.Stage.mat(trb
       .select(col("bkt"), explode(array_distinct(col("w"))).as("t"))
       .groupBy(col("t")).agg(min(col("bkt")).as("fb"))
-      .select(explode(expr(s"sequence(fb, $buckets)")).as("k"))
+      .select(explode(expr(s"sequence(fb, 5)")).as("k"))
       .groupBy(col("k")).agg(count(lit(1)).as("v")))
     val sizes = trb
       .select(col("bkt"), size(col("w")).cast("long").as("ntok"))
       .groupBy(col("bkt")).agg(count(lit(1)).as("nd"), sum(col("ntok")).as("nt"))
-      .select(col("nd"), col("nt"), explode(expr(s"sequence(bkt, $buckets)")).as("k"))
+      .select(col("nd"), col("nt"), explode(expr(s"sequence(bkt, 5)")).as("k"))
       .groupBy(col("k"))
       .agg(sum(col("nd")).as("n_train_docs"), sum(col("nt")).as("n_train_tokens"))
     // holdout bigram table + left marginals
@@ -322,7 +322,7 @@ object LLMOps {
     * combined counts; bucket by word at 100 TB) → phrase-keyed top-k
     * via TakeOrderedAndProject.
     */
-  def rakeTopPhrases(docs: DataFrame, topK: Int = 15): DataFrame = {
+  def rakeTopPhrases(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tok = docs.select(col("doc_id"),
       posexplode(filter(TextStats.tokens(lower(col("text"))), w => w =!= lit("")))
@@ -346,7 +346,7 @@ object LLMOps {
       .agg(sum(col("score")).as("pscore"))
       .groupBy(col("phrase"))
       .agg(count(lit(1)).as("n_occ"), min(col("pscore")).as("score_micros"))
-      .orderBy(col("score_micros").desc, col("phrase")).limit(topK)
+      .orderBy(col("score_micros").desc, col("phrase")).limit(15)
   }
 
   /** Driver-state ceilings for the greedy shortlist-stage operators
@@ -591,7 +591,7 @@ object LLMOps {
     //      islands grouping, the word co-occurrence degrees, and the
     //      (score desc, phrase) top-15.
     ("q251_rake_phrases", (s: SparkSession, dir: String) => {
-      rakeTopPhrases(Tables(s, dir).documents, topK = 15)
+      rakeTopPhrases(Tables(s, dir).documents)
     }, Some {
       val stops = rakeStops.map("'" + _ + "'").mkString(",")
       s"""
@@ -728,7 +728,7 @@ object LLMOps {
     ("q36_ngram_jaccard", (s: SparkSession, dir: String) => {
       val docs = Tables(s, dir).documents.filter(col("doc_id") < 40)
         .select(col("doc_id").as("id"),
-                array_distinct(Dedup.shingles(col("text"), 3)).as("sh"))
+                array_distinct(Dedup.shingles(col("text"))).as("sh"))
       val a = docs.select(col("id").as("id_a"), col("sh").as("sh_a"))
       val b = docs.select(col("id").as("id_b"), col("sh").as("sh_b"))
       a.crossJoin(b).filter(col("id_a") < col("id_b"))
@@ -803,7 +803,7 @@ object LLMOps {
         .orderBy(col("doc_id"))
     }, Some(s"""
       SELECT doc_id,
-        ${TextStats.fingerprintSql("text")} AS fp
+        ${TextStats.fingerprintSql} AS fp
       FROM documents ORDER BY doc_id""")),
 
     // ---- LSH-bucketed approximate NN with an in-plan accuracy contract
@@ -829,7 +829,7 @@ object LLMOps {
       val corpus = t.embeddings.filter(col("vec_id") =!= 0)
       val query = t.embeddings.filter(col("vec_id") === 0)
         .select(col("embedding").as("qvec"))
-      val approx = Similarity.lshTopK(corpus, query, 10,
+      val approx = Similarity.lshTopK(corpus, query,
         nPlanes = 4, dim = 64, probeHamming = 1)
       annTop10Recall(corpus, query, approx, minHits = 3)
     }, Some(annTop10Sql)),
@@ -919,8 +919,7 @@ object LLMOps {
       val assigned = Similarity.ivfAssignWith(corpus, centroids)
       val query = t.embeddings.filter(col("vec_id") === 0)
         .select(col("embedding").as("qvec"))
-      val approx = Similarity.ivfTopK(assigned, centroids.toDF("centroid_id", "cvec"),
-        query, k = 10, nProbe = 3)
+      val approx = Similarity.ivfTopK(assigned, centroids.toDF("centroid_id", "cvec"), query)
       annTop10Recall(corpus, query, approx, minHits = 5)
     }, Some(annTop10Sql)),
 
@@ -979,7 +978,7 @@ object LLMOps {
     ("q81_image_phash", (s: SparkSession, dir: String) => {
       val corpus = Multimodal.syntheticImageCorpus(s, 100)
       plantedPairAudit(s, graft.Stage.mat(
-        Multimodal.imagePhashNearDups(corpus, maxHamming = 8)), "edit", maxHamming = 8)
+        Multimodal.imagePhashNearDups(corpus)), "edit", maxHamming = 8)
     }, Some(imagePhashOracle)),
 
     // ---- audio energy-contour fingerprint dedup, certification-oracled
@@ -999,7 +998,7 @@ object LLMOps {
     ("q84_audio_fingerprint", (s: SparkSession, dir: String) => {
       val corpus = Multimodal.syntheticAudioCorpus(s, 100)
       plantedPairAudit(s, graft.Stage.mat(
-        Multimodal.audioFingerprintNearDups(corpus, maxHamming = 5)), "gain", maxHamming = 5)
+        Multimodal.audioFingerprintNearDups(corpus)), "gain", maxHamming = 5)
     }, Some(audioFingerprintOracle)),
 
     // ---- Johnson–Lindenstrauss random projection: the sign matrix
@@ -1241,7 +1240,7 @@ object LLMOps {
     //      histogram. The oracle replays both aggregations and every
     //      truncating quotient.
     ("q214_good_turing", (s: SparkSession, dir: String) => {
-      goodTuring(Tables(s, dir).documents, maxR = 10)
+      goodTuring(Tables(s, dir).documents)
     }, Some(s"""
       WITH toks AS (
         SELECT list_filter(regexp_split_to_array(lower(text), '$ws+'),
@@ -1278,7 +1277,7 @@ object LLMOps {
     //      100-row result, never the vocabulary. The oracle replays
     //      ranking, both log grids, and the normal equations.
     ("q215_zipf_fit", (s: SparkSession, dir: String) => {
-      zipfFit(Tables(s, dir).documents, topK = 100)
+      zipfFit(Tables(s, dir).documents)
     }, Some(s"""
       WITH tok AS (
         SELECT unnest(list_filter(regexp_split_to_array(lower(text), '$ws+'),
@@ -1663,7 +1662,7 @@ object LLMOps {
     //      (same split, same prefix buckets, same nanos-log grid) and
     //      replays both CE sums including the OOV floor.
     ("q221_scaling_curve", (s: SparkSession, dir: String) => {
-      scalingCurve(Tables(s, dir).documents, folds = 5, buckets = 5)
+      scalingCurve(Tables(s, dir).documents)
     }, Some {
       def l(e: String) = s"CAST(round(ln(CAST($e AS DOUBLE)) * 1000000000, 0) AS BIGINT)"
       val h = graft.text.TextStats.portableHash64Sql(

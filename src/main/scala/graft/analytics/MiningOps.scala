@@ -78,11 +78,10 @@ object MiningOps {
     * codepoint-level unit-cost Levenshtein (verified on multibyte
     * fixtures), so the values are portable as exact integers.
     */
-  def editVerifiedNearDups(docs: DataFrame, threshold: Double = 0.8,
-                           maxRatioMicros: Long = 200000L,
-                           numHashes: Int = 16, bands: Int = 16): DataFrame = {
+  def editVerifiedNearDups(docs: DataFrame,
+                           maxRatioMicros: Long = 200000L): DataFrame = {
     val t = docs.select(col("doc_id"), col("text"))
-    Dedup.minhashNearDups(docs, threshold, numHashes = numHashes, bands = bands)
+    Dedup.minhashNearDups(docs, 0.8, numHashes = 16, bands = 16)
       .join(t.select(col("doc_id").as("id_a"), col("text").as("text_a")), Seq("id_a"))
       .join(t.select(col("doc_id").as("id_b"), col("text").as("text_b")), Seq("id_b"))
       .withColumn("lev", levenshtein(col("text_a"), col("text_b")).cast("long"))
@@ -163,11 +162,10 @@ object MiningOps {
     * sound for ANY tie-break order because row_number ranks within a
     * tie group are consecutive regardless of which doc got which.
     */
-  def rankSumAuc(scored: DataFrame, labelCol: String = "lang",
-                 scoreCol: String = "score", idCol: String = "doc_id"): DataFrame = {
-    val base = scored.select(col(idCol), col(labelCol).as("label"),
-      col(scoreCol).cast("long").as("score"))
-    val ranks = graft.text.Packing.scoreOrder(base, col("score"), idCol = idCol)
+  def rankSumAuc(scored: DataFrame, labelCol: String = "lang"): DataFrame = {
+    val base = scored.select(col("doc_id"), col(labelCol).as("label"),
+      col("score").cast("long").as("score"))
+    val ranks = graft.text.Packing.scoreOrder(base, col("score"))
     val grp = ranks.groupBy(col("score"))
       .agg(min(col("rank")).as("mn"), count(lit(1)).as("cnt"))
     val pos = base.groupBy(col("label"), col("score")).agg(count(lit(1)).as("pc"))
@@ -190,9 +188,8 @@ object MiningOps {
     * `DIV greatest(denom, 1)`. The macro row carries summed counts and
     * macro-averaged (unweighted class-mean) metric micros.
     */
-  def classificationReport(preds: DataFrame, actCol: String = "act",
-                           predCol: String = "pred"): DataFrame = {
-    val p = preds.select(col(actCol).as("act"), col(predCol).as("pred"))
+  def classificationReport(preds: DataFrame): DataFrame = {
+    val p = preds.select(col("act"), col("pred"))
     val classes = p.select(col("act").as("lang"))
       .unionByName(p.select(col("pred").as("lang"))).distinct()
     val actC = p.groupBy(col("act").as("lang")).agg(count(lit(1)).as("n_act"))
@@ -233,7 +230,7 @@ object MiningOps {
     * part-cardinality dimension (broadcast-able). Top-k is
     * TakeOrderedAndProject, never a global sort.
     */
-  def basketLift(lineitem: DataFrame, minSupport: Long = 3, topK: Int = 20): DataFrame = {
+  def basketLift(lineitem: DataFrame): DataFrame = {
     val li = lineitem.select(col("l_orderkey"), col("l_partkey")).distinct()
       .transform(graft.Stage.mat) // feeds the pair join (twice) and both count aggs
     val nOrders = li.select(col("l_orderkey")).distinct().agg(count(lit(1)).as("n_orders"))
@@ -242,7 +239,7 @@ object MiningOps {
       .join(li.select(col("l_orderkey"), col("l_partkey").as("pb")), Seq("l_orderkey"))
       .filter(col("pa") < col("pb"))
       .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("c_ab"))
-      .filter(col("c_ab") >= minSupport)
+      .filter(col("c_ab") >= 3L)
     pairs
       .join(itemC.select(col("l_partkey").as("pa"), col("c").as("c_a")), Seq("pa"))
       .join(itemC.select(col("l_partkey").as("pb"), col("c").as("c_b")), Seq("pb"))
@@ -257,7 +254,7 @@ object MiningOps {
         expr("""(CAST(c_ab AS DECIMAL(38,0)) * n_orders * 1000000)
                  DIV (CAST(c_a AS DECIMAL(38,0)) * c_b)""").as("lift_micros"))
       .orderBy(col("lift_micros").desc, col("pa"), col("pb"))
-      .limit(topK)
+      .limit(20)
   }
 
   /** Frequent item TRIPLES with exact support: the 3-way extension of
@@ -275,7 +272,7 @@ object MiningOps {
     * map-side-combined; the top-k is TakeOrderedAndProject, never a
     * global sort.
     */
-  def basketTriples(lineitem: DataFrame, minSupport: Long = 2, topK: Int = 20): DataFrame = {
+  def basketTriples(lineitem: DataFrame): DataFrame = {
     val li = lineitem.select(col("l_orderkey"), col("l_partkey")).distinct()
       .transform(graft.Stage.mat) // feeds all three join legs
     li.select(col("l_orderkey"), col("l_partkey").as("pa"))
@@ -284,9 +281,9 @@ object MiningOps {
       .join(li.select(col("l_orderkey"), col("l_partkey").as("pc")), Seq("l_orderkey"))
       .filter(col("pb") < col("pc"))
       .groupBy(col("pa"), col("pb"), col("pc")).agg(count(lit(1)).as("support"))
-      .filter(col("support") >= minSupport)
+      .filter(col("support") >= 2L)
       .orderBy(col("support").desc, col("pa"), col("pb"), col("pc"))
-      .limit(topK)
+      .limit(20)
   }
 
   /** Per-node local clustering coefficient (Watts & Strogatz 1998)
@@ -359,8 +356,7 @@ object MiningOps {
     * key prefixes only. Work is (w−1)·N pairs — linear in the corpus
     * for fixed window, the property that separates SN from all-pairs.
     */
-  def sortedNeighborhoodPairs(docs: DataFrame, window: Int = 4,
-                              maxLev: Int = 8): DataFrame = {
+  def sortedNeighborhoodPairs(docs: DataFrame): DataFrame = {
     // Column-API regex, NOT selectExpr: a SQL string literal would eat
     // the class's backslashes (Spark's literal parser turns \f into a
     // plain 'f'), silently corrupting the key. Java \s here == the
@@ -376,7 +372,7 @@ object MiningOps {
       .transform(graft.Stage.mat) // feeds the rank pass AND the verify join
     val ranks = graft.text.Packing.scoreOrder(scored, col("score"))
       .select(col("doc_id"), col("rank"))
-    val offs = docs.sparkSession.range(1, window).select(col("id").as("off"))
+    val offs = docs.sparkSession.range(1, 4).select(col("id").as("off"))
     val cand = ranks.crossJoin(broadcast(offs))
       .withColumn("rank_b", col("rank") + col("off"))
       .select(col("doc_id").as("id_a"), col("rank_b"), col("off"))
@@ -385,8 +381,8 @@ object MiningOps {
     cand
       .join(scored.select(col("doc_id").as("id_a"), col("vkey").as("va")), Seq("id_a"))
       .join(scored.select(col("doc_id").as("id_b"), col("vkey").as("vb")), Seq("id_b"))
-      .withColumn("lev", levenshtein(col("va"), col("vb"), maxLev).cast("long"))
-      .filter(col("lev").between(0, maxLev))
+      .withColumn("lev", levenshtein(col("va"), col("vb"), 8).cast("long"))
+      .filter(col("lev").between(0, 8))
       .select(col("id_a"), col("id_b"), col("off"), col("lev"))
   }
 
@@ -412,7 +408,7 @@ object MiningOps {
         graft.text.TextStats.tokenCount(col("text")).cast("long").as("ntok")))
       def auc(feature: String) = rankSumAuc(
         d.select(col("doc_id"), col("split"), col(feature).as("score")),
-        labelCol = "split", scoreCol = "score")
+        labelCol = "split")
         .selectExpr(s"'$feature' AS feature", "label AS split", "n_pos",
           "n_neg", "auc_micros")
       auc("n_chars").unionByName(auc("ntok"))
@@ -521,7 +517,7 @@ object MiningOps {
     //      global row_number (proving the two-phase rank exact), the
     //      offset equi-join, and every edit distance.
     ("q245_sorted_neighborhood", (s: SparkSession, dir: String) => {
-      sortedNeighborhoodPairs(Tables(s, dir).documents, window = 4, maxLev = 8)
+      sortedNeighborhoodPairs(Tables(s, dir).documents)
         .orderBy(col("id_a"), col("id_b"))
     }, Some(s"""
       WITH t AS (
@@ -558,7 +554,7 @@ object MiningOps {
     //      just the survivor set.
     ("q122_edit_neardup", (s: SparkSession, dir: String) => {
       editVerifiedNearDups(Tables(s, dir).documents.filter(col("doc_id") < 500),
-          threshold = 0.8, maxRatioMicros = 200000L)
+          maxRatioMicros = 200000L)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 9).as("jaccard_r"),
           col("lev"), col("edit_ratio_micros"))
         .orderBy(col("id_a"), col("id_b"))
@@ -652,7 +648,7 @@ object MiningOps {
     //      lift (min co-occurrence 3). All counts and the lift micros
     //      are exact integers; ties order on (pa, pb).
     ("q125_basket_lift", (s: SparkSession, dir: String) => {
-      basketLift(Tables(s, dir).lineitem, minSupport = 3, topK = 20)
+      basketLift(Tables(s, dir).lineitem)
     }, Some("""
       WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
       n AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders FROM li),
@@ -723,7 +719,7 @@ object MiningOps {
     //      replays the distinct-basket projection, both canonical
     //      joins, and the (support desc, pa, pb, pc) tie order.
     ("q151_basket_triples", (s: SparkSession, dir: String) => {
-      basketTriples(Tables(s, dir).lineitem, minSupport = 2, topK = 20)
+      basketTriples(Tables(s, dir).lineitem)
     }, Some("""
       WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
       tri AS (

@@ -90,10 +90,10 @@ object Quantiles {
     * (g, p, q_r) — q_r round-6 snapped, ordered output left to the
     * caller.
     */
-  def exactQuantiles(vals: DataFrame, g: String, x: String,
+  def exactQuantiles(vals: DataFrame,
                      ps: Seq[Double]): DataFrame =
-    quantilesRaw(vals, g, x, ps)
-      .select(col(g), col("p"), round(col("q"), 6).as("q_r"))
+    quantilesRaw(vals, "g", "x", ps)
+      .select(col("g"), col("p"), round(col("q"), 6).as("q_r"))
 
   /** The mirrored DuckDB form of [[quantilesRaw]]: `src` must yield
     * columns (g, x); `psSql` e.g. "(VALUES (0.25), (0.5)) ps(p)".
@@ -165,7 +165,7 @@ object Quantiles {
 
   /** ORDER-STATISTIC SELECTION over the total order (x ASC, key ASC):
     * for each requested rank row (t, k) in `ranks` (a driver-bounded
-    * probe table; 1 ≤ k ≤ n; `key` distinct per row so the order is
+    * probe table; 1 ≤ k ≤ n; x is `r` and key is `o_orderkey`, distinct per row so the order is
     * total), returns (t, bx, bk) — the (x, key) pair at global rank k —
     * WITHOUT a global sort or any fact-scaled window. This is the
     * scale-safe primitive behind rank features (ntile scoring, exact
@@ -191,9 +191,9 @@ object Quantiles {
     * output against a plain ORDER BY in DuckDB: the selected pairs are
     * definitionally the same.
     */
-  def pairRankSelect(base: DataFrame, x: String, key: String,
+  def pairRankSelect(base: DataFrame,
                      ranks: DataFrame): DataFrame =
-    pairRankSelectBy(base.withColumn("_prs_g", lit(0L)), "_prs_g", x, key,
+    pairRankSelectBy(base.withColumn("_prs_g", lit(0L)), "_prs_g", "r", "o_orderkey",
       ranks.withColumn("_prs_g", lit(0L)))
       .select(col("t"), col("bx"), col("bk"))
 

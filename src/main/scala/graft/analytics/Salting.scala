@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * partitions but a hot aggregation key still lands on one reducer).
   *
   * Two-stage aggregation: stage 1 groups by (key, salt) — the hot key
-  * spreads over `saltBuckets` reducers — stage 2 combines the partials
+  * spreads over 16 reducers — stage 2 combines the partials
   * by key. Works for any algebraic aggregate (here: count/sum); the
-  * combine step runs on |keys| × saltBuckets rows, which is tiny.
+  * combine step runs on |keys| × 16 rows, which is tiny.
   */
 object Salting {
 
@@ -19,17 +19,16 @@ object Salting {
     * column (NOT rand() — retries/replays must produce the same salt
     * for exactly-once semantics under Spark task retry).
     */
-  def salt(uniqueCol: Column, saltBuckets: Int): Column =
-    pmod(xxhash64(uniqueCol), lit(saltBuckets))
+  def salt(uniqueCol: Column): Column =
+    pmod(xxhash64(uniqueCol), lit(16))
 
   /** Salted count+sum aggregation equivalent to
     * `df.groupBy(key).agg(count(1), sum(valueCol))`.
     */
-  def saltedCountSum(df: DataFrame, keyCol: String, valueCol: String,
-                     uniqueCol: String, saltBuckets: Int = 16): DataFrame =
-    df.withColumn("__salt", salt(col(uniqueCol), saltBuckets))
-      .groupBy(col(keyCol), col("__salt"))
-      .agg(count(lit(1)).as("__n"), sum(col(valueCol)).as("__s"))
-      .groupBy(col(keyCol))
+  def saltedCountSum(df: DataFrame): DataFrame =
+    df.withColumn("__salt", salt(col("l_orderkey")))
+      .groupBy(col("l_returnflag"), col("__salt"))
+      .agg(count(lit(1)).as("__n"), sum(col("__q")).as("__s"))
+      .groupBy(col("l_returnflag"))
       .agg(sum(col("__n")).as("n"), sum(col("__s")).as("total"))
 }

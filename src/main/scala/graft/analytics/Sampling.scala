@@ -24,24 +24,26 @@ import graft.text.TextStats
 object Sampling {
 
   /** Uniform per-mille bucket in [0, 1000) for a row key. */
-  def hashBucket(key: Column, salt: String): Column =
-    pmod(TextStats.portableHash64(concat(lit(salt + ":"), key.cast("string"))), lit(1000L))
+  def hashBucket(key: Column): Column =
+    pmod(TextStats.portableHash64(concat(lit("sample:"), key.cast("string"))), lit(1000L))
 
   /** The matching DuckDB SQL fragment (oracle authoring). */
-  def hashBucketSql(keyExpr: String, salt: String): String =
-    s"${TextStats.portableHash64Sql(s"concat('$salt:', CAST($keyExpr AS VARCHAR))")} % 1000"
+  def hashBucketSql: String =
+    s"${TextStats.portableHash64Sql(s"concat('sample:', CAST(doc_id AS VARCHAR))")} % 1000"
 
-  /** Uniform bucket in [0, buckets) — the per-mille form generalized for
-    * finer-grained rates (temperature resampling uses parts-per-million).
+  /** Uniform parts-per-million bucket in [0, 1000000) — the per-mille
+    * form for finer-grained rates (temperature resampling, priority
+    * sampling).
     */
-  def hashBucketN(key: Column, salt: String, buckets: Long): Column =
-    pmod(TextStats.portableHash64(concat(lit(salt + ":"), key.cast("string"))), lit(buckets))
+  def hashBucketN(key: Column, salt: String): Column =
+    pmod(TextStats.portableHash64(concat(lit(salt + ":"), key.cast("string"))), lit(1000000L))
 
-  def hashBucketNSql(keyExpr: String, salt: String, buckets: Long): String =
-    s"${TextStats.portableHash64Sql(s"concat('$salt:', CAST($keyExpr AS VARCHAR))")} % $buckets"
+  def hashBucketNSql(keyExpr: String, salt: String): String =
+    s"${TextStats.portableHash64Sql(s"concat('$salt:', CAST($keyExpr AS VARCHAR))")} % 1000000"
 
-  /** Temperature-scaled domain rebalancing (the multilingual-corpus
-    * mixing rule: sample domain d with probability ∝ count_d^(1/T)).
+  /** Temperature-scaled domain rebalancing over `lang`, keyed by
+    * `doc_id`, at T = 2 (the multilingual-corpus mixing rule: sample
+    * domain d with probability ∝ count_d^(1/T)).
     * The per-domain keep rate is count-relative with NO cross-domain
     * float sum: rate_d = (c_d / c_min)^(1/T − 1), which is 1 for the
     * rarest domain and decays for dominant ones — an order-free FP chain
@@ -53,16 +55,14 @@ object Sampling {
     * corpus pass is a map-side join + filter — one shuffle total for the
     * domain counts, nothing row-ordered.
     */
-  def temperatureResample(df: DataFrame, domainCol: String, keyCol: String,
-                          temperature: Double, salt: String = "temp"): DataFrame = {
-    require(temperature >= 1.0, s"temperature < 1 would upsample; got $temperature")
-    val exponent = 1.0 / temperature - 1.0
+  def temperatureResample(df: DataFrame): DataFrame = {
+    val exponent = 1.0 / 2.0 - 1.0
     // null domains (missing metadata — routine in crawl corpora) form
     // their own stratum: the rate join runs on a null-coalesced shadow
     // column, because a plain inner equi-join would silently EXCLUDE
     // every null-domain row (null never equals null) instead of
     // sampling it at its group's rate
-    val dom = coalesce(col(domainCol).cast("string"), lit("\u0000"))
+    val dom = coalesce(col("lang").cast("string"), lit("\u0000"))
     val counts = df.groupBy(dom.as("__dom")).agg(count(lit(1)).as("c_dom"))
     val cmin = counts.agg(min(col("c_dom")).as("c_min"))
     val rates = counts.crossJoin(broadcast(cmin))
@@ -72,7 +72,7 @@ object Sampling {
       .select(col("__dom"), col("c_dom"), col("keep_ppm"))
     df.withColumn("__dom", dom)
       .join(broadcast(rates), Seq("__dom"))
-      .filter(hashBucketN(col(keyCol), salt, 1000000L) < col("keep_ppm"))
+      .filter(hashBucketN(col("doc_id"), "temp") < col("keep_ppm"))
       .drop("__dom")
   }
 
@@ -80,12 +80,11 @@ object Sampling {
     * rate; unlisted strata fall back to `defaultPerMille`.
     */
   def stratifiedSample(df: DataFrame, strataCol: String, keyCol: String,
-                       ratesPerMille: Map[String, Int], defaultPerMille: Int,
-                       salt: String = "sample"): DataFrame = {
+                       ratesPerMille: Map[String, Int], defaultPerMille: Int): DataFrame = {
     val rate = ratesPerMille.foldLeft(lit(defaultPerMille)) { case (acc, (s, r)) =>
       when(col(strataCol) === s, lit(r)).otherwise(acc)
     }
-    df.filter(hashBucket(col(keyCol), salt) < rate)
+    df.filter(hashBucket(col(keyCol)) < rate)
   }
 
   /** DSIR-style importance weights (Xie et al., "Data Selection for
@@ -117,16 +116,15 @@ object Sampling {
     * aggregate on doc_id. Nothing corpus-sized shuffles except the
     * token explode's aggregation, and no stage depends on corpus order.
     */
-  def dsirLogWeights(docs: DataFrame, isTarget: Column, buckets: Int = 512,
-                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def dsirLogWeights(docs: DataFrame, isTarget: Column): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(25, 6)
-    val bd = buckets.toDouble
+    val bd = 512.0
     // feeds the raw counts, the target counts, and the score join —
     // materialize the md5-per-token pass once (minhashNearDups
     // discipline)
-    val toks = docs.select(col(idCol).as("doc_id"), isTarget.as("is_target"),
-        explode(filter(TextStats.tokens(lower(col(textCol))), w => w =!= lit(""))).as("w"))
-      .withColumn("b", pmod(TextStats.portableHash64(col("w")), lit(buckets.toLong)))
+    val toks = docs.select(col("doc_id"), isTarget.as("is_target"),
+        explode(filter(TextStats.tokens(lower(col("text"))), w => w =!= lit(""))).as("w"))
+      .withColumn("b", pmod(TextStats.portableHash64(col("w")), lit(512L)))
       .select(col("doc_id"), col("is_target"), col("b"))
       .transform(graft.Stage.mat)
     // one conditional aggregate yields both distributions (no second
@@ -190,9 +188,8 @@ object Sampling {
     * which Catalyst plans as TakeOrderedAndProject (per-partition
     * heaps + a driver merge of n-row tops), never a full sort.
     */
-  def prioritySample(df: DataFrame, weight: Column, n: Int,
-                     keyCol: String = "doc_id", salt: String = "prio"): DataFrame = {
-    val u = (hashBucketN(col(keyCol), salt, 1000000L).cast("double") + 0.5) / 1000000.0
+  def prioritySample(df: DataFrame, weight: Column, n: Int): DataFrame = {
+    val u = (hashBucketN(col("doc_id"), "prio").cast("double") + 0.5) / 1000000.0
     // w <= 0 means selection probability zero in the exponential-races
     // scheme — excluded up front (under ANSI mode the clock division
     // would otherwise throw DIVIDE_BY_ZERO rather than sort last).
@@ -200,9 +197,9 @@ object Sampling {
     // nulls-FIRST default would sort ahead of every real clock —
     // null-keyed rows would win sample slots with probability 1
     // regardless of weight. No key ⇒ no deterministic draw ⇒ excluded.
-    df.filter(col(keyCol).isNotNull && weight > 0)
+    df.filter(col("doc_id").isNotNull && weight > 0)
       .withColumn("clock_r", round(-log(u) / weight.cast("double"), 9))
-      .orderBy(col("clock_r"), col(keyCol))
+      .orderBy(col("clock_r"), col("doc_id"))
       .limit(n)
   }
 
@@ -245,21 +242,20 @@ object Sampling {
     * noise); the exact-rank form is the verify primitive, same split
     * as q88's perGroupCap.
     */
-  def unimaxSelect(docs: DataFrame, langCol: String, keyCol: String,
-                   budget: Long, salt: String = "unimax"): DataFrame = {
+  def unimaxSelect(docs: DataFrame, budget: Long): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val shadow = coalesce(col(langCol).cast("string"), lit("\u0000"))
+    val shadow = coalesce(col("lang").cast("string"), lit("\u0000"))
     val caps = docs.groupBy(shadow.as("__lang")).agg(count(lit(1)).as("cap"))
       .as[(String, Long)].collect().toSeq
     val quotas = waterfillQuotas(caps, budget)
     val qDf = quotas.toDF("__lang", "__ux_quota")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__lang"))
-      .orderBy(col("__ux_h").asc_nulls_last, col(keyCol).asc_nulls_last)
+      .orderBy(col("__ux_h").asc_nulls_last, col("doc_id").asc_nulls_last)
     docs.withColumn("__lang", shadow)
       .withColumn("__ux_h", graft.text.TextStats.portableHash64(
-        concat(lit(salt + ":"), col(keyCol).cast("string"))))
+        concat(lit("unimax:"), col("doc_id").cast("string"))))
       .withColumn("__rnk", row_number().over(w).cast("long"))
       .join(broadcast(qDf), Seq("__lang"))
       .filter(col("__rnk") <= col("__ux_quota"))
@@ -280,8 +276,7 @@ object Sampling {
     * same output, documented here rather than defaulted because real
     * domain distributions make the plain window the cheaper plan.
     */
-  def perGroupCap(df: DataFrame, groupCol: String, k: Int,
-                  keyCol: String = "doc_id", salt: String = "cap"): DataFrame = {
+  def perGroupCap(df: DataFrame, k: Int): DataFrame = {
     // nulls LAST on both sort keys: a null keyCol hashes to null, and
     // the ascending nulls-first default would hand every null-keyed row
     // a guaranteed cap slot (rank 1..k), evicting real documents from
@@ -289,10 +284,10 @@ object Sampling {
     // hash-ranked rows (ties among multiple null-key rows carry no
     // distinguishing key on purpose — there is nothing to order them by).
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(groupCol))
-      .orderBy(col("__cap_h").asc_nulls_last, col(keyCol).asc_nulls_last)
+      .partitionBy(col("source"))
+      .orderBy(col("__cap_h").asc_nulls_last, col("doc_id").asc_nulls_last)
     df.withColumn("__cap_h", graft.text.TextStats.portableHash64(
-        concat(lit(salt + ":"), col(keyCol).cast("string"))))
+        concat(lit("cap:"), col("doc_id").cast("string"))))
       .withColumn("cap_rank", row_number().over(w).cast("long"))
       .filter(col("cap_rank") <= k)
       .drop("__cap_h")

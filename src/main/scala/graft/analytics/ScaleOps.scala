@@ -149,9 +149,9 @@ object ScaleOps {
     * loop shared by the q130 and q133 oracles. */
   private val pc1ItersSql: String = s"""x0 AS (SELECT list_transform(range(1, 65),
                j -> CAST(CASE WHEN j = 1 THEN 1000000 ELSE 0 END AS BIGINT)) AS xm),
-      ${graft.text.Similarity.powerIterSql(1, 64)},
-      ${graft.text.Similarity.powerIterSql(2, 64)},
-      ${graft.text.Similarity.powerIterSql(3, 64)}"""
+      ${graft.text.Similarity.powerIterSql(1)},
+      ${graft.text.Similarity.powerIterSql(2)},
+      ${graft.text.Similarity.powerIterSql(3)}"""
 
   val defs: Seq[(String, QFn, Option[String])] = Seq(
 
@@ -1052,7 +1052,7 @@ object ScaleOps {
     //      recomputes the values bit-for-bit; ties at a rounded score
     //      break on (w1, w2).
     ("q94_pmi_collocations", (s: SparkSession, dir: String) => {
-      graft.text.Vocab.pmiCollocations(Tables(s, dir).documents, minCount = 5)
+      graft.text.Vocab.pmiCollocations(Tables(s, dir).documents)
         .orderBy(col("pmi_r").desc, col("w1"), col("w2"))
         .limit(50)
     }, Some(s"""
@@ -1087,7 +1087,7 @@ object ScaleOps {
     //      bucket hash.
     ("q95_dsir_weights", (s: SparkSession, dir: String) => {
       Sampling.dsirLogWeights(Tables(s, dir).documents,
-          isTarget = col("lang") === "en", buckets = 512)
+          isTarget = col("lang") === "en")
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH ${graft.analytics.Sampling.dsirRatioSql}
@@ -1110,7 +1110,7 @@ object ScaleOps {
     //      aggregate over the q95 output — nothing new shuffles.
     ("q187_ess", (s: SparkSession, dir: String) => {
       Sampling.dsirLogWeights(Tables(s, dir).documents,
-          isTarget = col("lang") === "en", buckets = 512)
+          isTarget = col("lang") === "en")
         .selectExpr("round(exp(logw_r), 9) AS w")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("w").cast("decimal(30,9)")).as("sw"),
@@ -1149,13 +1149,13 @@ object ScaleOps {
     //      decomposition is the exact global prefix sum (the q58/q86
     //      argument, composed).
     ("q96_shard_manifest", (s: SparkSession, dir: String) => {
-      graft.text.Packing.shardManifest(Tables(s, dir).documents, tokensPerShard = 2048L)
+      graft.text.Packing.shardManifest(Tables(s, dir).documents)
         .orderBy(col("shard_id"))
     }, Some(s"""
       WITH t AS (
         SELECT doc_id,
                CAST(len(regexp_split_to_array(text, '$ws+')) AS BIGINT) AS n_tokens,
-               ${TextStats.fingerprintSql("text")} AS fp,
+               ${TextStats.fingerprintSql} AS fp,
                ${TextStats.portableHash64Sql("concat('shuffle:', CAST(doc_id AS VARCHAR))")} AS k
         FROM documents),
       o AS (
@@ -1215,11 +1215,11 @@ object ScaleOps {
         .orderBy(col("source"))
     }, Some(s"""
       WITH o AS (
-        SELECT DISTINCT ${TextStats.fingerprintSql("text")} AS fp,
+        SELECT DISTINCT ${TextStats.fingerprintSql} AS fp,
                source
         FROM documents WHERE doc_id % 10 <> 3),
       n AS (
-        SELECT DISTINCT ${TextStats.fingerprintSql("text")} AS fp,
+        SELECT DISTINCT ${TextStats.fingerprintSql} AS fp,
                source
         FROM documents WHERE doc_id % 10 <> 7),
       j AS (
@@ -1281,7 +1281,7 @@ object ScaleOps {
       WITH t AS (
         SELECT doc_id,
                CAST(len(regexp_split_to_array(text, '$ws+')) AS BIGINT) AS n_tokens,
-               ${Sampling.hashBucketNSql("doc_id", "prio", 1000000L)} AS b
+               ${Sampling.hashBucketNSql("doc_id", "prio")} AS b
         FROM documents)
       SELECT doc_id, n_tokens,
              round(-ln((CAST(b AS DOUBLE) + 0.5) / 1000000.0)
@@ -1312,7 +1312,7 @@ object ScaleOps {
         .select(col("doc_id"), TextStats.tokenCount(col("text")).cast("long").as("w"))
         .filter(col("doc_id").isNotNull && col("w") > 0)
         .withColumn("q_r", round(col("w").cast("double") /
-          ((Sampling.hashBucketN(col("doc_id"), "prio", 1000000L).cast("double") + 0.5)
+          ((Sampling.hashBucketN(col("doc_id"), "prio").cast("double") + 0.5)
             / 1000000.0), 9))
         .transform(graft.Stage.mat) // feeds top-101 AND the true total
       val top = graft.Stage.mat(
@@ -1333,7 +1333,7 @@ object ScaleOps {
         SELECT doc_id,
                CAST(len(regexp_split_to_array(text, '$ws+')) AS BIGINT) AS w,
                round(CAST(len(regexp_split_to_array(text, '$ws+')) AS DOUBLE)
-                     / ((CAST(${Sampling.hashBucketNSql("doc_id", "prio", 1000000L)} AS DOUBLE) + 0.5)
+                     / ((CAST(${Sampling.hashBucketNSql("doc_id", "prio")} AS DOUBLE) + 0.5)
                         / 1000000.0), 9) AS q_r
         FROM documents
         WHERE doc_id IS NOT NULL
@@ -1459,7 +1459,7 @@ object ScaleOps {
     ("q104_blocklist", (s: SparkSession, dir: String) => {
       val lexicon = Seq("slow", "broken", "spill", "skew")
       val (nHits, nDistinct, nToks, keep) =
-        graft.text.Scrub.blocklistScreen(col("text"), lexicon, maxHitRatio = 0.05)
+        graft.text.Scrub.blocklistScreen(col("text"), lexicon)
       Tables(s, dir).documents
         .select(col("doc_id"), nHits.as("n_hits"), nDistinct.as("n_distinct_hits"),
           nToks.as("n_tokens"), keep.as("keep"))
@@ -1558,7 +1558,7 @@ object ScaleOps {
     //      (z desc, word). The oracle replays scores and the per-source
     //      top-3 verbatim.
     ("q107_distinctive_terms", (s: SparkSession, dir: String) => {
-      graft.text.Vocab.distinctiveTerms(Tables(s, dir).documents, topK = 3)
+      graft.text.Vocab.distinctiveTerms(Tables(s, dir).documents)
         .orderBy(col("source"), col("rank"))
     }, Some(s"""
       WITH ${TextStats.sourceTokensSql},
@@ -1619,7 +1619,7 @@ object ScaleOps {
     //      round-6 (the q74 centroid discipline) make the centroid
     //      vectors — and therefore the cosines — engine-identical.
     ("q109_label_centroids", (s: SparkSession, dir: String) => {
-      graft.text.Similarity.labelCentroids(Tables(s, dir).embeddings, dim = 64)
+      graft.text.Similarity.labelCentroids(Tables(s, dir).embeddings)
         .orderBy(col("label"))
     }, Some(s"""
       WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -1652,8 +1652,7 @@ object ScaleOps {
       val corpus = emb.filter(col("vec_id") > 10)
       val exactTop = graft.text.Similarity
         .topKPerQuery(corpus, queries, 10, qidCol = "q_id")
-      val approx = graft.text.Similarity.lshTopKMulti(corpus, queries, 10,
-        nPlanes = 4, dim = 64, probeHamming = 1)
+      val approx = graft.text.Similarity.lshTopKMulti(corpus, queries)
       val hits = exactTop.select(col("q_id"), col("vec_id"))
         .join(approx.select(col("q_id"), col("vec_id")), Seq("q_id", "vec_id"), "left_semi")
         .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
@@ -1886,12 +1885,12 @@ object ScaleOps {
       // consumer (dev's broadcast join), so since round 14 it stays
       // lazy and builds inside dev's materialization job — one fewer
       // barrier, identical values.
-      val med = histMedian(li, "l_returnflag", "l_extendedprice", "med")
+      val med = histMedian(li, "l_extendedprice", "med")
       val dev = graft.Stage.mat(li.join(broadcast(med), Seq("l_returnflag"))
         .select(col("l_returnflag"), col("l_extendedprice"), col("med"),
           abs(col("l_extendedprice") - col("med")).as("ad")))
       val mad = histMedian(dev.select(col("l_returnflag"), col("ad")),
-        "l_returnflag", "ad", "mad")
+        "ad", "mad")
       dev.join(broadcast(mad), Seq("l_returnflag"))
         .withColumn("z_r", round(
           (col("l_extendedprice") - col("med")) * 0.6745 /
@@ -1945,7 +1944,7 @@ object ScaleOps {
       a1 AS (SELECT vec_id, j, sv, c,
                row_number() OVER (PARTITION BY vec_id, j ORDER BY dist_r, c) AS rn
              FROM (SELECT sub.vec_id, sub.j, sub.sv, cb0.c,
-                     round(${graft.text.PQ.l2sqSql("sv", "cv", 4)}, 6) AS dist_r
+                     round(${graft.text.PQ.l2sqSql}, 6) AS dist_r
                    FROM sub JOIN cb0 USING (j))),
       m1 AS (SELECT vec_id, j, sv, c FROM a1 WHERE rn = 1),
       d1 AS (SELECT j, c, r.i AS i, ${graft.text.Similarity.meanRound6Sql("sv[r.i]")} AS mu
@@ -1956,7 +1955,7 @@ object ScaleOps {
       a2 AS (SELECT vec_id, j, c,
                row_number() OVER (PARTITION BY vec_id, j ORDER BY dist_r, c) AS rn
              FROM (SELECT sub.vec_id, sub.j, cb1.c,
-                     round(${graft.text.PQ.l2sqSql("sv", "cv", 4)}, 6) AS dist_r
+                     round(${graft.text.PQ.l2sqSql}, 6) AS dist_r
                    FROM sub JOIN cb1 USING (j))),
       enc AS (SELECT vec_id, j, c FROM a2 WHERE rn = 1),
       codes AS (SELECT vec_id, array_to_string(list(CAST(c AS VARCHAR) ORDER BY j), ',') AS codes
@@ -2018,7 +2017,7 @@ object ScaleOps {
       Quantiles.exactQuantiles(
         Tables(s, dir).lineitem
           .select(col("l_returnflag").as("g"), col("l_extendedprice").as("x")),
-        "g", "x", Seq(0.25, 0.5, 0.75, 0.95))
+        Seq(0.25, 0.5, 0.75, 0.95))
         .select(col("g").as("l_returnflag"), col("p"), col("q_r"))
         .orderBy(col("l_returnflag"), col("p"))
     }, Some(s"""
@@ -2141,7 +2140,7 @@ object ScaleOps {
     //      and replays the deflation division sign-split exactly.
     ("q133_top2_pc", (s: SparkSession, dir: String) => {
       graft.text.Similarity.topTwoPrincipalComponents(
-          Tables(s, dir).embeddings, dim = 64, iters = 3)
+          Tables(s, dir).embeddings, dim = 64)
         .orderBy(col("comp"), col("j"))
     }, Some(s"""
       WITH ${graft.text.Similarity.centeredSql},
@@ -2161,9 +2160,9 @@ object ScaleOps {
               FROM cmt c JOIN sd s USING (rid), x3 x, xx),
       bx0 AS (SELECT list_transform(range(1, 65),
                 j -> CAST(CASE WHEN j = 1 THEN 1000000 ELSE 0 END AS BIGINT)) AS xm),
-      ${graft.text.Similarity.powerIterSql(1, 64, "cm2", "b")},
-      ${graft.text.Similarity.powerIterSql(2, 64, "cm2", "b")},
-      ${graft.text.Similarity.powerIterSql(3, 64, "cm2", "b")}
+      ${graft.text.Similarity.powerIterSql(1, "cm2", "b")},
+      ${graft.text.Similarity.powerIterSql(2, "cm2", "b")},
+      ${graft.text.Similarity.powerIterSql(3, "cm2", "b")}
       SELECT comp, j, pc_m, pc_r FROM (
         SELECT CAST(1 AS BIGINT) AS comp, r.j AS j, x.xm[r.j] AS pc_m,
                x.xm[r.j] / 1000000.0 AS pc_r FROM x3 x, range(1, 65) r(j)
@@ -2428,7 +2427,7 @@ object ScaleOps {
           """CAST(db BETWEEN 3 AND 6 AND cb BETWEEN 5 AND 9
              AS BIGINT) AS hit_both""",
           "db AS hx0", "cb AS hy0", "CAST(0 AS BIGINT) AS hd0")
-      val hil = hilbertLevelExprs(16).foldLeft(b0) { case (df, exprs) =>
+      val hil = hilbertLevelExprs.foldLeft(b0) { case (df, exprs) =>
         df.selectExpr(("*" +: exprs): _*)
       }
       val base = graft.Stage.mat(hil.selectExpr("db", "cb", "z_mor",
@@ -2439,7 +2438,7 @@ object ScaleOps {
       zoneSummary(graft.Stage.mat(
         zones("z_hil", "hilbert").unionByName(zones("z_mor", "zorder"))))
     }, Some {
-      val gs = hilbertLevelExprs(16).zipWithIndex.map { case (exprs, i) =>
+      val gs = hilbertLevelExprs.zipWithIndex.map { case (exprs, i) =>
         s"g${i + 1} AS (SELECT *, ${exprs.mkString(", ")} FROM g$i)"
       }.mkString(",\n      ")
       s"""
@@ -2725,9 +2724,8 @@ object ScaleOps {
     * generated expression is a Hilbert curve: a bijection on the grid
     * whose consecutive indexes are unit grid steps.
     */
-  private[graft] def hilbertLevelExprs(n: Int): Seq[Seq[String]] = {
-    require(n > 1 && (n & (n - 1)) == 0, "grid side must be a power of two")
-    val levels = Iterator.iterate(n / 2)(_ / 2).takeWhile(_ > 0).toSeq
+  private[graft] def hilbertLevelExprs: Seq[Seq[String]] = {
+    val levels = Iterator.iterate(16 / 2)(_ / 2).takeWhile(_ > 0).toSeq
     levels.zipWithIndex.map { case (s, i) =>
       val (x, y, d) = (s"hx$i", s"hy$i", s"hd$i")
       val rx = s"(CASE WHEN ($x & $s) > 0 THEN 1 ELSE 0 END)"
@@ -2736,8 +2734,8 @@ object ScaleOps {
         s"WHEN $ry = 1 THEN 2 ELSE 3 END)"
       Seq(
         s"$d + ${s * s} * $q AS hd${i + 1}",
-        s"CASE WHEN $ry = 1 THEN $x WHEN $rx = 1 THEN ${n - 1} - $y ELSE $y END AS hx${i + 1}",
-        s"CASE WHEN $ry = 1 THEN $y WHEN $rx = 1 THEN ${n - 1} - $x ELSE $x END AS hy${i + 1}")
+        s"CASE WHEN $ry = 1 THEN $x WHEN $rx = 1 THEN 15 - $y ELSE $y END AS hx${i + 1}",
+        s"CASE WHEN $ry = 1 THEN $y WHEN $rx = 1 THEN 15 - $x ELSE $x END AS hy${i + 1}")
     }
   }
 
@@ -2748,9 +2746,9 @@ object ScaleOps {
     * value. See [[Quantiles]] for why two-phase rank selection is the
     * 100 TB form (bucket-resolution state, never a buffered group).
     */
-  private def histMedian(vals: DataFrame, g: String, x: String, out: String): DataFrame =
-    Quantiles.quantilesRaw(vals, g, x, Seq(0.5))
-      .select(col(g), col("q").as(out))
+  private def histMedian(vals: DataFrame, x: String, out: String): DataFrame =
+    Quantiles.quantilesRaw(vals, "l_returnflag", x, Seq(0.5))
+      .select(col("l_returnflag"), col("q").as(out))
 
   /** The mirrored DuckDB form: `src` must yield columns (g, x); the
     * fragment yields (g, med) — [[Quantiles.rawSql]] at p = 0.5.

@@ -83,16 +83,16 @@ object StatsOps {
     * is the difference between a vocabulary-sized and a
     * token-instance-sized shuffle.
     */
-  def chi2Terms(docs: DataFrame, classCol: String, minDf: Long = 10,
+  def chi2Terms(docs: DataFrame, minDf: Long = 10,
                 topK: Int = 10): DataFrame = {
     val toks = docs
-      .select(col(classCol).as("cls"),
+      .select(col("lang").as("cls"),
         explode(array_distinct(
           filter(TextStats.tokens(lower(col("text"))), x => x =!= lit("")))).as("w"))
     val byCls = toks.groupBy(col("cls"), col("w")).agg(count(lit(1)).as("a"))
     val byW = toks.groupBy(col("w")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
-    val nCls = docs.groupBy(col(classCol).as("cls")).agg(count(lit(1)).as("n_cls"))
+    val nCls = docs.groupBy(col("lang").as("cls")).agg(count(lit(1)).as("n_cls"))
     val n = docs.agg(count(lit(1)).as("n"))
     val scored = byCls
       .join(byW, Seq("w"))
@@ -129,13 +129,13 @@ object StatsOps {
     * |dev| ≲ 3e8 micros (feature range ≲ 300 from its mean — token
     * counts, ratios; for wider features divide the feature first).
     */
-  def momentsMicros(df: DataFrame, group: String, x: String): DataFrame = {
+  def momentsMicros(df: DataFrame, group: String): DataFrame = {
     val means = df.groupBy(col(group))
-      .agg(count(lit(1)).as("n"), sum(col(x)).as("sx"))
+      .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
       .selectExpr(group, "n", "(1000000 * sx) div n AS mean_micros")
     df.join(broadcast(means), Seq(group))
       .selectExpr(group, "n", "mean_micros",
-        s"CAST($x AS BIGINT) * 1000000 - mean_micros AS dev")
+        s"CAST(x AS BIGINT) * 1000000 - mean_micros AS dev")
       .groupBy(col(group), col("n"), col("mean_micros"))
       .agg(sum(col("dev")).as("sum_dev"),
         sum(expr("dev * dev")).as("s2"),
@@ -240,8 +240,7 @@ object StatsOps {
     * B-row table. Σ m·x stays in longs — exact to B·n·|x| ≲ 9e18;
     * swap the product to DECIMAL(38,0) past that.
     */
-  def bootstrapCI(df: DataFrame, keyCol: String, valueMicros: Column,
-                  b: Int = 40): DataFrame = {
+  def bootstrapCI(df: DataFrame, keyCol: String, valueMicros: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // ONE portable hash per row, then B multiplicative-congruential
     // draws u_b = ((h mod p)·(2b+1)) mod p mod 1e6 over the Mersenne
@@ -252,7 +251,7 @@ object StatsOps {
       .withColumn("h", TextStats.portableHash64(
         concat(lit("boot:"), col("k"))) % 2147483647L)
     val rep = base.select(col("h"), col("x"),
-        explode(expr(s"sequence(0, ${b - 1})")).as("rb"))
+        explode(expr(s"sequence(0, 39)")).as("rb"))
       .withColumn("u", expr("((h * (2 * rb + 1)) % 2147483647) % 1000000"))
       .withColumn("m", expr(
         """CASE WHEN u < 367879 THEN 0 WHEN u < 735758 THEN 1
@@ -266,8 +265,8 @@ object StatsOps {
       .transform(graft.Stage.mat)
     val ranked = means.withColumn("rk",
       row_number().over(Window.orderBy(col("mean_micros"), col("b"))))
-    val kLo = math.max(1, b / 20)
-    val kHi = b - math.max(1, b / 20) + 1
+    val kLo = math.max(1, 40 / 20)
+    val kHi = 40 - math.max(1, 40 / 20) + 1
     val lo = ranked.filter(col("rk") === kLo)
       .selectExpr("CAST(-2 AS BIGINT) AS b", "n_eff", "mean_micros")
     val hi = ranked.filter(col("rk") === kHi)
@@ -291,15 +290,14 @@ object StatsOps {
     * combined, no window, no sort. Σ|d| ≤ #days·max-day-volume keeps
     * s_b in long range up to ~9e18 row-days.
     */
-  def signFlipPermutation(dayDiffs: DataFrame, b: Int): DataFrame = {
-    require(b >= 1 && b <= 10000, s"permutation count must be in [1,10000], got $b")
+  def signFlipPermutation(dayDiffs: DataFrame): DataFrame = {
     val base = dayDiffs.withColumn("h",
       TextStats.portableHash64(concat(lit("flip:"), col("grp"), lit(":"),
         col("od").cast("string"))) % 2147483647L)
     val obs = base.groupBy(col("grp"))
       .agg(count(lit(1)).as("n_days"), sum(col("d")).as("s_obs"))
     val perms = base.select(col("grp"), col("d"), col("h"),
-        explode(expr(s"sequence(1, $b)")).as("rb"))
+        explode(expr(s"sequence(1, 200)")).as("rb"))
       .withColumn("sg", lit(1L) - lit(2L) *
         expr("((h * (2 * rb + 1)) % 2147483647) % 2"))
       .groupBy(col("grp"), col("rb"))
@@ -394,19 +392,19 @@ object StatsOps {
 
   /** Two-phase distributed midrank over a tie-group table (score, cnt):
     * range-bucket the distinct scores, cumulate bucket counts in ONE
-    * ≤`buckets`-row window (the PlanSpec-allowlisted bucket-offset
+    * ≤1024-row window (the PlanSpec-allowlisted bucket-offset
     * idiom), then rank within each bucket by a PARTITIONED window.
     * Returns (score, cnt, mn) with mn = the 1-based minimum rank of the
     * tie group — midrank·2 = 2·mn + cnt − 1, the integer form every
     * rank statistic here consumes. Shared by [[kruskalWallis]] (k
     * groups) and [[mannWhitneyU]] (2 groups).
     */
-  private def tieMidranks(ties: DataFrame, buckets: Int): DataFrame = {
+  private def tieMidranks(ties: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val stats = ties.agg(min(col("score")).as("smn"), max(col("score")).as("smx"))
     val bucketed = ties.crossJoin(broadcast(stats))
       .withColumn("rb", floor(
-        (col("score") - col("smn")).cast("double") * buckets /
+        (col("score") - col("smn")).cast("double") * 1024 /
           (col("smx") - col("smn") + 1).cast("double")).cast("long"))
     val offsets = bucketed.groupBy(col("rb")).agg(sum(col("cnt")).as("bcnt"))
       .withColumn("off", coalesce(
@@ -420,12 +418,11 @@ object StatsOps {
       .select(col("score"), col("cnt"), col("mn"))
   }
 
-  def kruskalWallis(df: DataFrame, group: String, score: Column,
-                    buckets: Int = 1024): DataFrame = {
-    val base = df.select(col(group).as("grp"), score.cast("long").as("score"))
+  def kruskalWallis(df: DataFrame, score: Column): DataFrame = {
+    val base = df.select(col("o_orderpriority").as("grp"), score.cast("long").as("score"))
     val ties = base.groupBy(col("score")).agg(count(lit(1)).as("cnt"))
       .transform(graft.Stage.mat) // feeds the stats row AND the ranked pass
-    val mn = tieMidranks(ties, buckets)
+    val mn = tieMidranks(ties)
     val perGs = base.groupBy(col("grp"), col("score")).agg(count(lit(1)).as("pc"))
     val perG = perGs.join(mn, Seq("score"))
       .groupBy(col("grp"))
@@ -469,12 +466,11 @@ object StatsOps {
     * Output: 'g0'/'g1' rows (n_g, doubled rank-sum r2x) + 'zz_u' row
     * (n, U·2 in r2x, z²_micros) — the q239/q240 zz-row shape.
     */
-  def mannWhitneyU(df: DataFrame, treat: Column, score: Column,
-                   buckets: Int = 1024): DataFrame = {
+  def mannWhitneyU(df: DataFrame, treat: Column, score: Column): DataFrame = {
     val base = df.select(treat.cast("long").as("grp"), score.cast("long").as("score"))
     val ties = base.groupBy(col("score")).agg(count(lit(1)).as("cnt"))
       .transform(graft.Stage.mat)
-    val mn = tieMidranks(ties, buckets)
+    val mn = tieMidranks(ties)
     val perGs = base.groupBy(col("grp"), col("score")).agg(count(lit(1)).as("pc"))
     val perG = perGs.join(mn, Seq("score"))
       .groupBy(col("grp"))
@@ -592,7 +588,7 @@ object StatsOps {
     * pair join is (g·T) ⋈ (g·T) on term: per-term width g², bounded by
     * the source catalog, never the corpus.
     */
-  def burrowsDelta(docs: DataFrame, topT: Int = 40): DataFrame = {
+  def burrowsDelta(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("source"),
       explode(filter(TextStats.tokens(lower(col("text"))), x => x =!= lit("")))
         .as("w"))
@@ -600,7 +596,7 @@ object StatsOps {
       .transform(graft.Stage.mat) // feeds top-T, totals, AND the grid join
     val ns = c.groupBy(col("source")).agg(sum(col("c")).as("n_s"))
     val top = c.groupBy(col("w")).agg(sum(col("c")).as("tc"))
-      .orderBy(col("tc").desc, col("w")).limit(topT).select(col("w"))
+      .orderBy(col("tc").desc, col("w")).limit(40).select(col("w"))
     val grid = ns.crossJoin(broadcast(top))
       .join(c, Seq("source", "w"), "left")
       .selectExpr("source", "w", "(1000000 * coalesce(c, 0L)) DIV n_s AS f")
@@ -951,7 +947,7 @@ object StatsOps {
     //      the tie-corrected H. The distribution-free complement of
     //      q240's ANOVA on the same design question.
     ("q239_kruskal_wallis", (s: SparkSession, dir: String) => {
-      kruskalWallis(Tables(s, dir).orders, group = "o_orderpriority",
+      kruskalWallis(Tables(s, dir).orders,
         score = expr("CAST(floor(o_totalprice * 100) AS BIGINT)"))
     }, Some(s"""
       WITH base AS (
@@ -1032,7 +1028,7 @@ object StatsOps {
     //      z). The oracle replays the grid zero-fill, every truncating
     //      DIV, and the (tc desc, w) top-40 tie-break.
     ("q246_burrows_delta", (s: SparkSession, dir: String) => {
-      burrowsDelta(Tables(s, dir).documents, topT = 40)
+      burrowsDelta(Tables(s, dir).documents)
         .orderBy(col("src_a"), col("src_b"))
     }, Some(s"""
       WITH ${TextStats.sourceTokensSql},
@@ -1355,7 +1351,7 @@ object StatsOps {
     //      oracle replays the contingency construction and the integer
     //      chi² exactly, including the (chi2 desc, term) tie-break.
     ("q141_chi2_terms", (s: SparkSession, dir: String) => {
-      chi2Terms(Tables(s, dir).documents, classCol = "lang", minDf = 10, topK = 10)
+      chi2Terms(Tables(s, dir).documents, minDf = 10, topK = 10)
         .withColumnRenamed("cls", "lang")
         .orderBy(col("lang"), col("rnk"))
     }, Some(s"""
@@ -1398,7 +1394,7 @@ object StatsOps {
       momentsMicros(
         Tables(s, dir).documents.select(col("source"),
           TextStats.tokenCount(col("text")).cast("long").as("x")),
-        group = "source", x = "x")
+        group = "source")
         .orderBy(col("source"))
     }, Some(s"""
       WITH f AS (
@@ -1753,8 +1749,7 @@ object StatsOps {
     //      rank selection.
     ("q213_bootstrap_ci", (s: SparkSession, dir: String) => {
       bootstrapCI(Tables(s, dir).orders, keyCol = "o_orderkey",
-        valueMicros = expr("CAST(floor(o_totalprice * 1000000) AS BIGINT)"),
-        b = 40)
+        valueMicros = expr("CAST(floor(o_totalprice * 1000000) AS BIGINT)"))
     }, Some {
       s"""
       WITH base AS (
@@ -1812,7 +1807,7 @@ object StatsOps {
             concat(lit("pt:"), col("user_id").cast("string"))) % 2L)).as("w"))
         .groupBy(col("od")).agg(sum(col("w")).as("d"))
         .withColumn("grp", lit("all"))
-      signFlipPermutation(dayDiffs, b = 200).orderBy(col("grp"))
+      signFlipPermutation(dayDiffs).orderBy(col("grp"))
     }, Some(s"""
       WITH dd AS (
         SELECT CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS od,
@@ -1846,7 +1841,7 @@ object StatsOps {
           (lit(1L) - lit(2L) * (TextStats.portableHash64(
             concat(lit("pt:"), col("user_id").cast("string"))) % 2L)).as("w"))
         .groupBy(col("grp"), col("od")).agg(sum(col("w")).as("d"))
-      val res = graft.Stage.mat(signFlipPermutation(dayDiffs, b = 200))
+      val res = graft.Stage.mat(signFlipPermutation(dayDiffs))
       val m = res.agg(count(lit(1)).as("m"))
       val ranked = res.crossJoin(broadcast(m))
         .withColumn("bh_rank", row_number().over(
@@ -2124,7 +2119,7 @@ object StatsOps {
         .agg(sum(expr("CAST(floor(o_totalprice * 100) AS BIGINT)")).as("r"))
       val ties = graft.Stage.mat(
         rev.groupBy(col("r").as("score")).agg(count(lit(1)).as("cnt")))
-      tieMidranks(ties, 1024)
+      tieMidranks(ties)
         .agg(sum(col("cnt")).as("n"),
           sum(expr("CAST(cnt AS DECIMAL(38,0)) * score")).as("sx"),
           sum(expr(
@@ -2505,7 +2500,7 @@ object StatsOps {
           "abs(d) AS score"))
       val ties = nz.groupBy(col("score")).agg(count(lit(1)).as("cnt"))
         .transform(graft.Stage.mat)
-      val mn = tieMidranks(ties, 1024)
+      val mn = tieMidranks(ties)
       val perSgn = nz.groupBy(col("sgn"), col("score"))
         .agg(count(lit(1)).as("pc"))
         .join(mn, Seq("score"))
@@ -2614,7 +2609,7 @@ object StatsOps {
       val ties = base.groupBy(col("score")).agg(count(lit(1)).as("cnt"))
         .transform(graft.Stage.mat)
       val nTie = graft.Stage.mat(ties.agg(sum(col("cnt")).as("n")))
-      val scored = tieMidranks(ties, 1024).crossJoin(broadcast(nTie))
+      val scored = tieMidranks(ties).crossJoin(broadcast(nTie))
         .selectExpr("score", "cnt",
           "least(2 * mn + cnt - 1, 2 * (n + 1) - (2 * mn + cnt - 1)) AS a2")
         .transform(graft.Stage.mat)

@@ -22,12 +22,10 @@ object TemporalOps {
     * (co-partitioned end to end; AQE coalesces) and each stage's input
     * shrinks to funnel survivors — no whole-history window needed.
     */
-  def funnel(events: DataFrame, steps: Seq[String],
-             userCol: String = "user_id", tsCol: String = "ts",
-             typeCol: String = "event_type"): DataFrame = {
+  def funnel(events: DataFrame, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
-    val e = events.select(col(userCol).as("user_id"), col(tsCol).as("ts"),
-      col(typeCol).as("et"))
+    val e = events.select(col("user_id"), col("ts"),
+      col("event_type").as("et"))
     val mins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     steps.zipWithIndex.foreach { case (st, i) =>
       val base = e.filter(col("et") === lit(st))
@@ -47,7 +45,6 @@ object TemporalOps {
       stepExpr = stepExpr.when(col(s"t$i").isNotNull, i)
     joined
       .withColumn("steps", stepExpr.otherwise(0).cast("int"))
-      .withColumnRenamed("user_id", userCol)
   }
 
   /** Interval-interval overlap pairs within an equi-key: input rows
@@ -87,17 +84,16 @@ object TemporalOps {
     * trend, in-sample Σ|error| (model-fit readout), and all m
     * seasonal components.
     */
-  def holtWinters(events: DataFrame, m: Int = 7, alphaPpm: Long = 300000,
-                  betaPpm: Long = 100000, gammaPpm: Long = 200000): DataFrame = {
+  def holtWinters(events: DataFrame, m: Int = 7): DataFrame = {
     val slotS = s"element_at(acc.s, CAST((acc.p % $m) + 1 AS INT))"
-    val lnew = s"(($alphaPpm * (x - $slotS) + ${1000000 - alphaPpm} * (acc.l + acc.b)) DIV 1000000)"
-    val snew = s"(($gammaPpm * (x - $lnew) + ${1000000 - gammaPpm} * $slotS) DIV 1000000)"
+    val lnew = s"((300000 * (x - $slotS) + 700000 * (acc.l + acc.b)) DIV 1000000)"
+    val snew = s"((200000 * (x - $lnew) + 800000 * $slotS) DIV 1000000)"
     val fold = s"""aggregate(slice(ys, ${m + 1}, size(ys) - $m),
         named_struct('l', l0, 'b', CAST(0 AS BIGINT), 's', s0,
                      'sae', CAST(0 AS BIGINT), 'p', CAST($m AS BIGINT)),
         (acc, x) -> named_struct(
           'l', $lnew,
-          'b', (($betaPpm * ($lnew - acc.l) + ${1000000 - betaPpm} * acc.b) DIV 1000000),
+          'b', ((100000 * ($lnew - acc.l) + 900000 * acc.b) DIV 1000000),
           's', transform(sequence(1, $m),
                  j -> CASE WHEN j = (acc.p % $m) + 1 THEN $snew
                            ELSE element_at(acc.s, CAST(j AS INT)) END),
@@ -124,16 +120,15 @@ object TemporalOps {
 
   /** The DuckDB list_reduce twin of [[holtWinters]]'s fold — same
     * truncating updates over the [l, b, s1..sm, sae, p] list state. */
-  private def holtWintersSql(m: Int, alphaPpm: Long, betaPpm: Long,
-                             gammaPpm: Long): String = {
-    val slotS = s"acc[CAST((acc[${m + 4}] % $m) + 3 AS BIGINT)]"
-    val lnew = s"(($alphaPpm * (x[1] - $slotS) + ${1000000 - alphaPpm} * (acc[1] + acc[2])) // 1000000)"
-    val snew = s"(($gammaPpm * (x[1] - $lnew) + ${1000000 - gammaPpm} * $slotS) // 1000000)"
-    val sEntries = (1 to m).map(j =>
-      s"CASE WHEN (acc[${m + 4}] % $m) + 1 = $j THEN $snew ELSE acc[${j + 2}] END")
+  private def holtWintersSql: String = {
+    val slotS = s"acc[CAST((acc[11] % 7) + 3 AS BIGINT)]"
+    val lnew = s"((300000 * (x[1] - $slotS) + 700000 * (acc[1] + acc[2])) // 1000000)"
+    val snew = s"((200000 * (x[1] - $lnew) + 800000 * $slotS) // 1000000)"
+    val sEntries = (1 to 7).map(j =>
+      s"CASE WHEN (acc[11] % 7) + 1 = $j THEN $snew ELSE acc[${j + 2}] END")
       .mkString(",\n                   ")
-    val zeros = Seq.fill(m + 3)("0::BIGINT").mkString(", ")
-    val initSeason = (1 to m).map(j => s"ys[$j] - l0").mkString(", ")
+    val zeros = Seq.fill(10)("0::BIGINT").mkString(", ")
+    val initSeason = (1 to 7).map(j => s"ys[$j] - l0").mkString(", ")
     s"""
       WITH daily AS (
         SELECT event_type, CAST(ts AS DATE) AS day,
@@ -142,25 +137,25 @@ object TemporalOps {
       packed AS (SELECT event_type, list(xm ORDER BY day) AS ys
                  FROM daily GROUP BY event_type),
       pre AS (SELECT event_type, len(ys) AS n_days, ys,
-                     CAST(list_sum(ys[1:$m]) // $m AS BIGINT) AS l0
-              FROM packed WHERE len(ys) >= ${m + 1}),
+                     CAST(list_sum(ys[1:7]) // 7 AS BIGINT) AS l0
+              FROM packed WHERE len(ys) >= 8),
       folded AS (
         SELECT event_type, n_days,
                list_reduce(
                  list_prepend(
-                   [l0, 0::BIGINT, $initSeason, 0::BIGINT, $m::BIGINT],
-                   list_transform(ys[${m + 1}:], v -> [v, $zeros])),
+                   [l0, 0::BIGINT, $initSeason, 0::BIGINT, 7::BIGINT],
+                   list_transform(ys[8:], v -> [v, $zeros])),
                  (acc, x) -> [
                    $lnew,
-                   (($betaPpm * ($lnew - acc[1]) + ${1000000 - betaPpm} * acc[2]) // 1000000),
+                   ((100000 * ($lnew - acc[1]) + 900000 * acc[2]) // 1000000),
                    $sEntries,
-                   acc[${m + 3}] + abs(x[1] - (acc[1] + acc[2] + $slotS)),
-                   acc[${m + 4}] + 1]) AS st
+                   acc[10] + abs(x[1] - (acc[1] + acc[2] + $slotS)),
+                   acc[11] + 1]) AS st
         FROM pre)
       SELECT event_type, CAST(n_days AS BIGINT) AS n_days,
              st[1] AS level_micros, st[2] AS trend_micros,
-             st[${m + 3}] AS sae_micros,
-             ${(1 to m).map(j => s"st[${j + 2}] AS s${j}_micros").mkString(", ")}
+             st[10] AS sae_micros,
+             ${(1 to 7).map(j => s"st[${j + 2}] AS s${j}_micros").mkString(", ")}
       FROM folded ORDER BY event_type"""
   }
 
@@ -290,23 +285,22 @@ object TemporalOps {
     * rows/day over a decade of days, c² ≲ 1.6e23, den ≲ 6e26 — inside
     * 38 digits; numerators ×1e6 still clear by five orders.
     */
-  def acfLjungBox(daily: DataFrame, maxLag: Int = 7): DataFrame = {
-    require(maxLag >= 1 && maxLag <= 64, s"maxLag must be in [1,64], got $maxLag")
+  def acfLjungBox(daily: DataFrame): DataFrame = {
     val w = Window.orderBy(col("od"))
     val tot = daily.agg(count(lit(1)).as("n"), sum(col("x")).as("t"))
     val cent = daily.crossJoin(broadcast(tot))
       .selectExpr("od", "n", "CAST(n * x - t AS DECIMAL(38,0)) AS c")
     val lagged = cent.select(
       Seq(col("n"), col("c")) ++
-        (1 to maxLag).map(k => lag(col("c"), k).over(w).as(s"c$k")): _*)
+        (1 to 7).map(k => lag(col("c"), k).over(w).as(s"c$k")): _*)
     val aggs = Seq(max(col("n")).as("n"),
       sum(expr("c * c")).cast("decimal(38,0)").as("den")) ++
-      (1 to maxLag).map(k =>
+      (1 to 7).map(k =>
         coalesce(sum(expr(s"c * c$k")), lit(0)).cast("decimal(38,0)").as(s"num$k"))
     val sums = lagged.agg(aggs.head, aggs.tail: _*)
     val stacked = sums.selectExpr("n", "den",
-      s"stack($maxLag, " +
-        (1 to maxLag).map(k => s"CAST($k AS BIGINT), num$k").mkString(", ") +
+      s"stack(7, " +
+        (1 to 7).map(k => s"CAST($k AS BIGINT), num$k").mkString(", ") +
         ") AS (lag_k, num)")
     val rho = stacked.selectExpr("lag_k", "n",
       """CAST(CASE WHEN num < 0 THEN -((-num * 1000000) DIV greatest(den, 1))
@@ -1513,7 +1507,7 @@ object TemporalOps {
     //      The oracle's list_reduce replays the fold bit-for-bit.
     ("q226_holt_winters", (s: SparkSession, dir: String) => {
       holtWinters(Tables(s, dir).events)
-    }, Some(holtWintersSql(7, 300000, 100000, 200000))),
+    }, Some(holtWintersSql)),
 
     // ---- Kendall tau-b between the daily click and purchase volumes:
     //      concordant/discordant/tie counts over the span-bounded
@@ -1779,7 +1773,7 @@ object TemporalOps {
     //      family (q111 spikes, q182 CUSUM, q226 Holt) quietly makes.
     //      Arithmetic/scale contract in [[acfLjungBox]].
     ("q263_acf_ljung_box", (s: SparkSession, dir: String) => {
-      acfLjungBox(graft.Stage.mat(dailyVolumes(s, dir)), maxLag = 7)
+      acfLjungBox(graft.Stage.mat(dailyVolumes(s, dir)))
     }, Some("""
       WITH daily AS (
         SELECT CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS od,

@@ -45,8 +45,8 @@ object GraftFunctions {
   /** One-pass engine-portable winnowing fingerprints (md5-derived 60-bit
     * gram keys, DuckDB-recomputable).
     */
-  def portableWinnow(c: Column, k: Int, w: Int): Column =
-    col(PortableWinnow(expr(c), k, w))
+  def portableWinnow(c: Column): Column =
+    col(PortableWinnow(expr(c), 3, 4))
 
   /** Full (unrestricted) Damerau-Levenshtein distance of two string
     * columns — see [[DamerauLevenshtein]].

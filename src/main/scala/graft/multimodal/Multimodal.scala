@@ -29,6 +29,9 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
+  /** Sample rate (Hz) of every synthetic WAV fixture. */
+  private val WavSampleRate = 8000f
+
   // executor-side codec init: no AWT display needed, and no ImageIO
   // tmp-file cache per decode (it defaults to disk-backed streams)
   locally {
@@ -310,10 +313,8 @@ object Multimodal {
     * partitions with an iterator — the rows stream through without
     * materializing the partition.
     */
-  def extractFeatures(media: DataFrame, partitions: Int = 0): DataFrame = {
-    val repart =
-      if (partitions > 0) media.repartitionByRange(partitions, col("media_type"), col("media_id"))
-      else media.repartitionByRange(col("media_type"), col("media_id"))
+  def extractFeatures(media: DataFrame): DataFrame = {
+    val repart = media.repartitionByRange(col("media_type"), col("media_id"))
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(featureSchema)
     repart.select(col("media_id"), col("media_type"), col("payload"))
       .mapPartitions { rows =>
@@ -452,14 +453,14 @@ object Multimodal {
       .distinct()
   }
 
-  /** Near-duplicate image pairs by perceptual-hash Hamming distance —
-    * [[imagePhash]] into the banded [[hammingBandJoin]].
+  /** Near-duplicate image pairs by perceptual-hash Hamming distance
+    * (at most 8) — [[imagePhash]] into the banded [[hammingBandJoin]].
     */
-  def imagePhashNearDups(media: DataFrame, maxHamming: Int = 5): DataFrame =
+  def imagePhashNearDups(media: DataFrame): DataFrame =
     hammingBandJoin(
       imagePhash(media).filter(col("phash").isNotNull)
         .select(col("media_id").as("id"), col("phash").as("h")),
-      maxHamming)
+      8)
 
   /** 64-bit audio energy-contour fingerprint over the decoded waveform:
     * 64 equal windows of mean-square energy, bit i set when
@@ -502,11 +503,11 @@ object Multimodal {
   /** Near-duplicate audio pairs by fingerprint Hamming distance —
     * [[audioFingerprint]] into the banded [[hammingBandJoin]].
     */
-  def audioFingerprintNearDups(media: DataFrame, maxHamming: Int = 5): DataFrame =
+  def audioFingerprintNearDups(media: DataFrame): DataFrame =
     hammingBandJoin(
       audioFingerprint(media).filter(col("afp").isNotNull)
         .select(col("media_id").as("id"), col("afp").as("h")),
-      maxHamming)
+      5)
 
   /** Deterministic block-noise PNG for the perceptual-dedup fixtures:
     * an 8×8 grid of constant-gray blocks whose values come from an LCG
@@ -517,8 +518,7 @@ object Multimodal {
     * bits of the original's hash. (The gradient [[syntheticPng]] can't
     * serve here: its aHash bit pattern is the same for every seed.)
     */
-  private[graft] def syntheticPatternPng(i: Int, editBlocks: Int = 0,
-                                         w: Int = 64, h: Int = 64): Array[Byte] = {
+  private[graft] def syntheticPatternPng(i: Int, editBlocks: Int = 0): Array[Byte] = {
     val vals = new Array[Int](64)
     var s = i * 2654435761L + 99991L
     var b = 0
@@ -533,12 +533,12 @@ object Multimodal {
       e += 1
     }
     val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      64, 64, java.awt.image.BufferedImage.TYPE_INT_RGB)
     var y = 0
-    while (y < h) {
+    while (y < 64) {
       var x = 0
-      while (x < w) {
-        val v = vals((y * 8 / h) * 8 + (x * 8 / w))
+      while (x < 64) {
+        val v = vals((y * 8 / 64) * 8 + (x * 8 / 64))
         img.setRGB(x, y, (v << 16) | (v << 8) | v)
         x += 1
       }
@@ -556,9 +556,7 @@ object Multimodal {
     * `gain` scales every sample uniformly: the energy-contour hash must
     * be invariant to it.
     */
-  private[graft] def syntheticEnvelopeWav(i: Int, gain: Double = 1.0,
-                                          sampleRate: Float = 8000f,
-                                          nSamples: Int = 1024): Array[Byte] = {
+  private[graft] def syntheticEnvelopeWav(i: Int, gain: Double = 1.0): Array[Byte] = {
     val amps = new Array[Double](16)
     var s0 = i * 2654435761L + 7919L
     var k = 0
@@ -567,15 +565,15 @@ object Multimodal {
       amps(k) = 0.10 + ((s0 >>> 33) % 800) / 1000.0 // 0.10 .. 0.90
       k += 1
     }
-    pcm16Wav(sampleRate, nSamples) { s =>
-      val a = gain * amps(s * 16 / nSamples)
-      (a * math.sin(2 * math.Pi * 400.0 * s / sampleRate) * 32767).toInt
+    pcm16Wav(1024) { s =>
+      val a = gain * amps(s * 16 / 1024)
+      (a * math.sin(2 * math.Pi * 400.0 * s / WavSampleRate) * 32767).toInt
     }
   }
 
   /** WAV bytes of 16-bit mono little-endian PCM whose s-th sample is
     * `sample(s)`, s < nSamples. */
-  private def pcm16Wav(sampleRate: Float, nSamples: Int)(sample: Int => Int): Array[Byte] = {
+  private def pcm16Wav(nSamples: Int)(sample: Int => Int): Array[Byte] = {
     val pcm = new Array[Byte](nSamples * 2)
     var s = 0
     while (s < nSamples) {
@@ -584,7 +582,7 @@ object Multimodal {
       pcm(2 * s + 1) = ((v >> 8) & 0xff).toByte
       s += 1
     }
-    val fmt = new javax.sound.sampled.AudioFormat(sampleRate, 16, 1, true, false)
+    val fmt = new javax.sound.sampled.AudioFormat(WavSampleRate, 16, 1, true, false)
     val ais = new javax.sound.sampled.AudioInputStream(
       new java.io.ByteArrayInputStream(pcm), fmt, nSamples.toLong)
     val bos = new java.io.ByteArrayOutputStream()
@@ -748,16 +746,16 @@ object Multimodal {
     * luminance gradient, so channel statistics are predictable and the
     * real codec path is genuinely exercised.
     */
-  private[graft] def syntheticPng(i: Int, w: Int = 128, h: Int = 96): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+  private[graft] def syntheticPng(i: Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(128, 96, java.awt.image.BufferedImage.TYPE_INT_RGB)
     val baseR = (i * 37) % 256
     val baseG = (i * 73) % 256
     val baseB = (i * 151) % 256
     var y = 0
-    while (y < h) {
+    while (y < 96) {
       var x = 0
-      while (x < w) {
-        val shade = x * 64 / w  // 0..63 left-to-right gradient
+      while (x < 128) {
+        val shade = x * 64 / 128  // 0..63 left-to-right gradient
         val r = math.min(baseR + shade, 255)
         val g = math.min(baseG + shade, 255)
         val b = math.min(baseB + shade, 255)
@@ -776,11 +774,10 @@ object Multimodal {
     * amplitude/√2, zero-crossing rate ≈ 2·f/sampleRate) are predictable
     * and the real codec path is genuinely exercised.
     */
-  private[graft] def syntheticWav(i: Int, sampleRate: Float = 8000f,
-                                  nSamples: Int = 800, amplitude: Double = 0.5): Array[Byte] = {
+  private[graft] def syntheticWav(i: Int): Array[Byte] = {
     val freq = 200.0 + (i % 20) * 20.0
-    pcm16Wav(sampleRate, nSamples) { s =>
-      (amplitude * math.sin(2 * math.Pi * freq * s / sampleRate) * 32767).toInt
+    pcm16Wav(800) { s =>
+      (0.5 * math.sin(2 * math.Pi * freq * s / WavSampleRate) * 32767).toInt
     }
   }
 
@@ -790,18 +787,17 @@ object Multimodal {
     * predictable (flat frames are DC-only, so JPEG loss is ≈ 0) and the
     * real marker-walking split + decode path is genuinely exercised.
     */
-  private[graft] def syntheticMjpeg(i: Int, nFrames: Int = 5,
-                                    w: Int = 64, h: Int = 48): Array[Byte] = {
+  private[graft] def syntheticMjpeg(i: Int, nFrames: Int = 5): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     var f = 0
     while (f < nFrames) {
-      val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val img = new java.awt.image.BufferedImage(64, 48, java.awt.image.BufferedImage.TYPE_INT_RGB)
       val shade = math.min(16 * (f + 1) + (i % 16), 255)
       val rgb = (shade << 16) | (shade << 8) | shade
       var y = 0
-      while (y < h) {
+      while (y < 48) {
         var x = 0
-        while (x < w) { img.setRGB(x, y, rgb); x += 1 }
+        while (x < 64) { img.setRGB(x, y, rgb); x += 1 }
         y += 1
       }
       javax.imageio.ImageIO.write(img, "jpg", bos)

@@ -21,6 +21,9 @@ import org.apache.spark.sql.types.StructType
   */
 object Merge {
 
+  /** The partition columns of every state table the sync writes. */
+  private val PartitionCols = Seq("year", "month")
+
   /** Latest-record-wins dedup (A3/W1; reference comments.js:118-142).
     * Ties beyond `ordering` are broken by a stable hash of the whole row
     * so the result is deterministic under input-order shuffling.
@@ -59,7 +62,7 @@ object Merge {
     * touches one partition, not the table.
     */
   def writePartitioned(df: DataFrame, path: String,
-                       partitionCols: Seq[String] = Seq("year", "month")): Unit = {
+                       partitionCols: Seq[String] = PartitionCols): Unit = {
     // the overwrite mode rides the WRITER, not the session conf — a
     // session-wide `conf.set` would silently flip every later
     // partitioned Overwrite in the same session from replace-table to
@@ -94,11 +97,11 @@ object Merge {
     * Expects a boolean `__from_state` column marking existing-state rows.
     */
   private def routeFirstSeen(unioned: DataFrame, keys: Seq[String],
-                             orderCol: String, partitionCols: Seq[String]): DataFrame = {
+                             orderCol: String): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("__from_state").desc, col(orderCol).asc)
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    partitionCols.foldLeft(unioned) { (df, c) =>
+    PartitionCols.foldLeft(unioned) { (df, c) =>
       df.withColumn(c, first(col(c)).over(w))
     }
   }
@@ -113,7 +116,7 @@ object Merge {
     if (!pathExists(spark, path)) None
     else Some(schema.fold(spark.read)(spark.read.schema).parquet(path))
 
-  /** Key-locate scan: the (keys ++ partitionCols) of the `state` rows
+  /** Key-locate scan: the (keys ++ PartitionCols) of the `state` rows
     * whose keys appear in `probe` — a column-pruned read, a tiny
     * fraction of the table width, semi-joined against the probe's keys
     * (broadcast: micro-batches are small by construction; a semi-join
@@ -122,9 +125,8 @@ object Merge {
     * (posts and votes of one batch) can run ONE scan over their union,
     * materialize it and hand it to `mergePartitioned` as `located`.
     */
-  def locate(state: DataFrame, probe: DataFrame, keys: Seq[String],
-             partitionCols: Seq[String] = Seq("year", "month")): DataFrame =
-    state.select((keys ++ partitionCols).map(col): _*)
+  def locate(state: DataFrame, probe: DataFrame, keys: Seq[String]): DataFrame =
+    state.select((keys ++ PartitionCols).map(col): _*)
       .join(broadcast(probe.select(keys.map(col): _*)), keys, "left_semi")
 
   /** Partition-scoped incremental upsert: merge `incoming` into the
@@ -137,10 +139,8 @@ object Merge {
     * scan; with plain Parquet the narrow scan is the honest answer.
     */
   def upsertPartitioned(incoming: DataFrame, path: String,
-                        keys: Seq[String], orderCol: String,
-                        partitionCols: Seq[String] = Seq("year", "month")): Unit =
-    writePartitioned(mergePartitioned(incoming, path, keys, orderCol, partitionCols),
-      path, partitionCols)
+                        keys: Seq[String], orderCol: String): Unit =
+    writePartitioned(mergePartitioned(incoming, path, keys, orderCol), path)
 
   /** `upsertPartitioned`'s merged rows — every row of the partitions it
     * rewrites — materialized, so the caller can write them (with
@@ -157,21 +157,20 @@ object Merge {
     */
   def mergePartitioned(incoming: DataFrame, path: String,
                        keys: Seq[String], orderCol: String,
-                       partitionCols: Seq[String] = Seq("year", "month"),
                        stateSchema: Option[StructType] = None,
                        located: Option[DataFrame] = None): DataFrame = {
     val spark = incoming.sparkSession
     val incomingTagged = incoming.withColumn("__from_state", lit(false))
     val merged = readState(spark, path, stateSchema) match {
       case None =>
-        latestWins(routeFirstSeen(incomingTagged, keys, orderCol, partitionCols)
+        latestWins(routeFirstSeen(incomingTagged, keys, orderCol)
           .drop("__from_state"), keys, Seq(col(orderCol)))
       case Some(state) =>
         // where do the incoming keys already live? (a shared scan holds
         // the same columns as the table's, so it is located alike)
-        val oldParts = locate(located.getOrElse(state), incoming, keys, partitionCols)
-          .select(partitionCols.map(col): _*)
-        val newParts = incoming.select(partitionCols.map(col): _*)
+        val oldParts = locate(located.getOrElse(state), incoming, keys)
+          .select(PartitionCols.map(col): _*)
+        val newParts = incoming.select(PartitionCols.map(col): _*)
         val touched = oldParts.unionByName(newParts).distinct().collect()
         // null-safe equality: a null partition value (null orderCol → null
         // year/month) lands in the default partition, and === against a null
@@ -179,13 +178,13 @@ object Merge {
         // null-partition state rows from the merge while the dynamic
         // overwrite still rewrites that partition, silently deleting them
         val pruning = touched.map { r =>
-          partitionCols.zipWithIndex
+          PartitionCols.zipWithIndex
             .map { case (c, i) => col(c) <=> lit(r.get(i)) }
             .reduce(_ && _)
         }.reduceOption(_ || _).getOrElse(lit(false))
         val existingTouched = state.filter(pruning).withColumn("__from_state", lit(true))
         val unioned = existingTouched.unionByName(incomingTagged, allowMissingColumns = true)
-        latestWins(routeFirstSeen(unioned, keys, orderCol, partitionCols)
+        latestWins(routeFirstSeen(unioned, keys, orderCol)
           .drop("__from_state"), keys, Seq(col(orderCol)))
     }
     // materialize before overwriting the partitions just read

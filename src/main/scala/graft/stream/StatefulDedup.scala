@@ -7,11 +7,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * S5's alternative path — the engine's sync keeps state in the sink,
   * mirroring the reference, but the capability row for arbitrary keyed
   * state is exercised here): exactly-once keyed dedup across
-  * micro-batches with a state timeout bounding memory.
+  * micro-batches.
   *
   * Emits each (key, token) pair the first time it is seen; duplicates
-  * within and across batches are suppressed while the key's state is
-  * alive. This is the streaming form of the vote-set "append iff
+  * within and across batches are suppressed. This is the streaming form of the vote-set "append iff
   * absent" guard (reference handlers/votes.js:14) with process-side
   * instead of sink-side state.
   */
@@ -19,36 +18,21 @@ object StatefulDedup {
 
   final case class Seen(tokens: Set[String])
 
-  /** `timeout=Some(dur)` bounds state memory via ProcessingTimeTimeout
-    * (note: with a processing-time timeout Spark keeps scheduling
-    * batches to fire expirations — fine for a long-lived sync, but a
-    * test draining with processAllAvailable should pass None).
-    */
-  def firstSeenOnly[K: Encoder](ds: Dataset[(K, String)],
-                                timeout: Option[String] = None): Dataset[(K, String)] = {
+  def firstSeenOnly[K: Encoder](ds: Dataset[(K, String)]): Dataset[(K, String)] = {
     implicit val tupleEnc: Encoder[(K, String)] =
       Encoders.tuple(implicitly[Encoder[K]], Encoders.STRING)
     implicit val seenEnc: Encoder[Seen] = Encoders.product[Seen]
-    val timeoutConf =
-      if (timeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     ds.groupByKey(_._1)
-      .flatMapGroupsWithState[Seen, (K, String)](OutputMode.Append, timeoutConf) {
+      .flatMapGroupsWithState[Seen, (K, String)](OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: K, rows: Iterator[(K, String)], state: GroupState[Seen]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val seen = state.getOption.getOrElse(Seen(Set.empty))
-            val fresh = scala.collection.mutable.ArrayBuffer.empty[(K, String)]
-            var acc = seen.tokens
-            rows.foreach { case (_, tok) =>
-              if (!acc.contains(tok)) { acc += tok; fresh += ((key, tok)) }
-            }
-            state.update(Seen(acc))
-            timeout.foreach(state.setTimeoutDuration)
-            fresh.iterator
+          val seen = state.getOption.getOrElse(Seen(Set.empty))
+          val fresh = scala.collection.mutable.ArrayBuffer.empty[(K, String)]
+          var acc = seen.tokens
+          rows.foreach { case (_, tok) =>
+            if (!acc.contains(tok)) { acc += tok; fresh += ((key, tok)) }
           }
+          state.update(Seen(acc))
+          fresh.iterator
       }
   }
 }

@@ -33,9 +33,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - **State**: exactly the twin's state case class, checkpointed by
   *    the engine; a restart resumes from it (StreamingSpec restart
   *    tests). `GroupStateTimeout.NoTimeout` — monitoring state is
-  *    indefinite by design; twins needing expiry (the bucket family:
-  *    StatefulDedup, StreamingNearDup/MediaNearDup) keep their own
-  *    frames because timeout handling and member-pair emission don't
+  *    indefinite by design. The bucket twins (StatefulDedup,
+  *    StreamingNearDup/MediaNearDup) keep their own frames because
+  *    first-seen and member-pair emission against a live set don't
   *    fit a left-fold, as do the buffer-merge twins (HeavyHitters'
   *    decrement-all over a live map, PrioritySample's top-n merge).
   *  - **Empty batches**: `flatMapGroupsWithState` with NoTimeout only

@@ -24,10 +24,7 @@ import graft.multimodal.Multimodal
   * Emission is at-least-once per qualifying pair (a pair agreeing on m
   * bands emits up to m times; parity is on the SET): route through the
   * keyed exactly-once sink ([[graft.pipeline.Merge]]) for effect-once
-  * delivery, the sync-pipeline discipline. State is bounded by the
-  * optional processing-time `timeout` — the dedup horizon ("copies
-  * within N hours of each other"), how an unbounded ingest keeps
-  * bounded bucket state. This is where media dedup runs in production:
+  * delivery, the sync-pipeline discipline. This is where media dedup runs in production:
   * the copy is worthless the moment it lands, not at the nightly batch.
   */
 object StreamingMediaNearDup {
@@ -44,43 +41,33 @@ object StreamingMediaNearDup {
     * [[phashPairs]] and [[audioPairs]]. Output rows are
     * (id_a, id_b, hamming) with id_a < id_b.
     */
-  def hammingPairs(hashed: DataFrame, maxHamming: Int = 5,
-                   timeout: Option[String] = None,
-                   idCol: String = "id", hCol: String = "h"): Dataset[(Long, Long, Int)] = {
+  def hammingPairs(hashed: DataFrame, maxHamming: Int = 5): Dataset[(Long, Long, Int)] = {
     val spark = hashed.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (timeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     val keyed = hashed
-      .select(col(idCol).as("id"), col(hCol).as("h"))
+      .select(col("id"), col("h"))
       .withColumn("bk", explode(Multimodal.hammingBandKeys(col("h"), maxHamming)))
       .select(concat_ws(":", col("bk.band"), col("bk.bv")).as("bucket"),
         col("id"), col("h"))
       .as[(String, Long, Long)]
     keyed.groupByKey(_._1)
-      .flatMapGroupsWithState[HBucket, (Long, Long, Int)](OutputMode.Append, timeoutConf) {
+      .flatMapGroupsWithState[HBucket, (Long, Long, Int)](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: String, rows: Iterator[(String, Long, Long)], state: GroupState[HBucket]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var members = state.getOption.map(_.members).getOrElse(Map.empty[Long, Long])
-            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-            rows.foreach { case (_, id, h) =>
-              if (!members.contains(id)) {
-                members.foreach { case (oid, oh) =>
-                  val d = java.lang.Long.bitCount(h ^ oh)
-                  if (d <= maxHamming)
-                    out += ((math.min(id, oid), math.max(id, oid), d))
-                }
-                members = members + (id -> h)
+          var members = state.getOption.map(_.members).getOrElse(Map.empty[Long, Long])
+          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
+          rows.foreach { case (_, id, h) =>
+            if (!members.contains(id)) {
+              members.foreach { case (oid, oh) =>
+                val d = java.lang.Long.bitCount(h ^ oh)
+                if (d <= maxHamming)
+                  out += ((math.min(id, oid), math.max(id, oid), d))
               }
+              members = members + (id -> h)
             }
-            state.update(HBucket(members))
-            timeout.foreach(state.setTimeoutDuration)
-            out.iterator
           }
+          state.update(HBucket(members))
+          out.iterator
       }
   }
 
@@ -88,20 +75,17 @@ object StreamingMediaNearDup {
     * decode stage (stateless, streaming-safe) into [[hammingPairs]].
     * Input must carry (media_id, media_type, payload).
     */
-  def phashPairs(media: DataFrame, maxHamming: Int = 5,
-                 timeout: Option[String] = None): Dataset[(Long, Long, Int)] =
+  def phashPairs(media: DataFrame, maxHamming: Int = 5): Dataset[(Long, Long, Int)] =
     hammingPairs(
       Multimodal.imagePhash(media).filter(col("phash").isNotNull)
         .select(col("media_id").as("id"), col("phash").as("h")),
-      maxHamming, timeout)
+      maxHamming)
 
   /** Streaming audio near-dup pairs: the batch
     * [[Multimodal.audioFingerprint]] decode stage into [[hammingPairs]].
     */
-  def audioPairs(media: DataFrame, maxHamming: Int = 5,
-                 timeout: Option[String] = None): Dataset[(Long, Long, Int)] =
+  def audioPairs(media: DataFrame): Dataset[(Long, Long, Int)] =
     hammingPairs(
       Multimodal.audioFingerprint(media).filter(col("afp").isNotNull)
-        .select(col("media_id").as("id"), col("afp").as("h")),
-      maxHamming, timeout)
+        .select(col("media_id").as("id"), col("afp").as("h")))
 }

@@ -19,10 +19,7 @@ import graft.text.Dedup
   * bands emits up to m times; the parity contract is on the SET of
   * pairs): route the output through the keyed exactly-once sink
   * ([[graft.pipeline.Merge]]) for effect-once delivery, the same
-  * discipline the sync pipeline uses. State is bounded by the optional
-  * processing-time `timeout` — the dedup horizon ("near-dups within N
-  * hours of each other"), which is how an unbounded stream keeps
-  * bounded bucket state.
+  * discipline the sync pipeline uses.
   */
 object StreamingNearDup {
 
@@ -33,57 +30,47 @@ object StreamingNearDup {
   // design (r7 review, same fix as StreamingMediaNearDup).
   final case class Bucket(members: Map[Long, Array[Long]])
 
-  /** Defaults MATCH [[graft.text.Dedup.minhashNearDups]] exactly
-    * (16 hashes / 4 bands) — the batch-parity contract is only
-    * meaningful at identical parameters, and a diverging band default
-    * would emit different candidate sets at the same call shape
-    * (review finding r6b). The id column must already be LongType
+  /** Shingle size, signature and bands MATCH the defaults of
+    * [[graft.text.Dedup.minhashNearDups]] exactly (3-shingles, 16 hashes
+    * / 4 bands) — the batch-parity contract is only meaningful at
+    * identical parameters, and a diverging band count would emit
+    * different candidate sets at the same call shape (review finding
+    * r6b). The id column must already be LongType
     * (like the batch twin, which never casts): an implicit cast would
     * fail loudly under ANSI or null out ids without it.
     */
-  def nearDupPairs(docs: DataFrame, threshold: Double = 0.8,
-                   k: Int = 3, numHashes: Int = 16, bands: Int = 4,
-                   timeout: Option[String] = None,
-                   idCol: String = "doc_id", textCol: String = "text"): Dataset[(Long, Long, Double)] = {
+  def nearDupPairs(docs: DataFrame): Dataset[(Long, Long, Double)] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (timeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     val keyed = docs
-      .select(col(idCol).as("id"),
-        Dedup.shingleHashes(col(textCol), k).as("sh"))
+      .select(col("doc_id").as("id"),
+        Dedup.shingleHashes(col("text"), 3).as("sh"))
       .withColumn("bk", explode(
-        Dedup.bandKeys(Dedup.minhashSignature(col("sh"), numHashes), numHashes, bands)))
+        Dedup.bandKeys(Dedup.minhashSignature(col("sh"), 16), 16, 4)))
       .select(concat_ws(":", col("bk.band"), col("bk.bh")).as("bucket"),
         col("id"), col("sh"))
       .as[(String, Long, Array[Long])]
     keyed.groupByKey(_._1)
-      .flatMapGroupsWithState[Bucket, (Long, Long, Double)](OutputMode.Append, timeoutConf) {
+      .flatMapGroupsWithState[Bucket, (Long, Long, Double)](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: String, rows: Iterator[(String, Long, Array[Long])], state: GroupState[Bucket]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var members = state.getOption.map(_.members).getOrElse(Map.empty[Long, Array[Long]])
-            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-            rows.foreach { case (_, id, sh) =>
-              if (!members.contains(id)) {
-                val set = sh.toSet
-                members.foreach { case (oid, osh) =>
-                  val inter = osh.count(set.contains).toDouble
-                  val union = (set.size + osh.length - inter).max(1.0)
-                  val j = inter / union
-                  if (j >= threshold)
-                    out += ((math.min(id, oid), math.max(id, oid), j))
-                }
-                members = members + (id -> sh)
+          var members = state.getOption.map(_.members).getOrElse(Map.empty[Long, Array[Long]])
+          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+          rows.foreach { case (_, id, sh) =>
+            if (!members.contains(id)) {
+              val set = sh.toSet
+              members.foreach { case (oid, osh) =>
+                val inter = osh.count(set.contains).toDouble
+                val union = (set.size + osh.length - inter).max(1.0)
+                val j = inter / union
+                if (j >= 0.8)
+                  out += ((math.min(id, oid), math.max(id, oid), j))
               }
+              members = members + (id -> sh)
             }
-            state.update(Bucket(members))
-            timeout.foreach(state.setTimeoutDuration)
-            out.iterator
           }
+          state.update(Bucket(members))
+          out.iterator
       }
   }
 }

@@ -31,21 +31,20 @@ object StreamingPrioritySample {
   final case class TopBuf(seen: Long, ids: Array[Long], ws: Array[Long],
                           clocks: Array[Double])
 
-  def sample(rows: DataFrame, n: Int = 100, nBuckets: Int = 8,
-             keyCol: String = "doc_id", wCol: String = "w")
+  def sample(rows: DataFrame, n: Int = 100, nBuckets: Int = 8)
       : Dataset[(Long, Long, Long, Long, Double)] = {
     require(n >= 1 && n <= 4096, s"n=$n outside [1, 4096]: n triples per bucket ARE the state")
     require(nBuckets >= 1 && nBuckets <= 65536, s"nBuckets=$nBuckets outside [1, 65536]")
     val spark = rows.sparkSession
     import spark.implicits._
     implicit val stEnc: Encoder[TopBuf] = Encoders.product[TopBuf]
-    val u = (graft.analytics.Sampling.hashBucketN(col(keyCol), "prio", 1000000L)
+    val u = (graft.analytics.Sampling.hashBucketN(col("doc_id"), "prio")
       .cast("double") + 0.5) / 1000000.0
     val keyed = rows
-      .filter(col(keyCol).isNotNull && col(wCol) > 0)
-      .select(pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)).as("bucket"),
-        col(keyCol).cast("long").as("id"), col(wCol).cast("long").as("w"),
-        round(-log(u) / col(wCol).cast("double"), 9).as("clock_r"))
+      .filter(col("doc_id").isNotNull && col("w") > 0)
+      .select(pmod(xxhash64(col("doc_id")), lit(nBuckets.toLong)).as("bucket"),
+        col("doc_id").cast("long").as("id"), col("w").cast("long").as("w"),
+        round(-log(u) / col("w").cast("double"), 9).as("clock_r"))
       .as[(Long, Long, Long, Double)]
     keyed.groupByKey(_._1)
       .flatMapGroupsWithState[TopBuf, (Long, Long, Long, Long, Double)](

@@ -32,11 +32,11 @@ object StreamingSessionize {
     * Works unchanged on a batch DataFrame (the watermark is a no-op
     * there), which is what the parity spec exploits.
     */
-  def sessions(events: DataFrame, gap: String = "10 minutes",
+  def sessions(events: DataFrame,
                watermarkDelay: String = "0 seconds"): DataFrame =
     events
       .withWatermark("ts", watermarkDelay)
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
+      .groupBy(col("user_id"), session_window(col("ts"), "10 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n_events"))

@@ -22,15 +22,13 @@ object StreamingTrend {
 
   final case class TrendState(n: Long, l: Long, b: Long)
 
-  def holt(ds: Dataset[(Long, Long, Long)],
-           alphaMicros: Long = 500000L,
-           betaMicros: Long = 300000L): Dataset[(Long, Long, Long, Long)] = {
+  def holt(ds: Dataset[(Long, Long, Long)]): Dataset[(Long, Long, Long, Long)] = {
     implicit val stEnc: Encoder[TrendState] = Encoders.product[TrendState]
     implicit val outEnc: Encoder[(Long, Long, Long, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
         Encoders.scalaLong, Encoders.scalaLong)
     implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    val a = alphaMicros; val be = betaMicros
+    val a = 500000L; val be = 300000L
     StatefulTwin.perBatch(ds, (r: (Long, Long, Long)) => r._1,
       (r: (Long, Long, Long)) => (r._2, 0L), TrendState(0L, 0L, 0L)) {
       case (st, (_, _, x)) =>

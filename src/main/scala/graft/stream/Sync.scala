@@ -133,20 +133,18 @@ object Sync {
   /** Tumbling/sliding window counts with a watermark (S4; built-in
     * `window()` — late data beyond the watermark is dropped).
     */
-  def windowedCounts(events: DataFrame, windowDur: String, slideDur: String,
-                     watermark: String = "10 minutes"): DataFrame =
+  def windowedCounts(events: DataFrame, windowDur: String, slideDur: String): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), windowDur, slideDur), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
 
   /** Session windows per user with an inactivity gap (S4; built-in
     * `session_window()` — the streaming twin of q51_sessionize).
     */
-  def sessionCounts(events: DataFrame, gap: String,
-                    watermark: String = "10 minutes"): DataFrame =
+  def sessionCounts(events: DataFrame, gap: String): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), gap), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
 }

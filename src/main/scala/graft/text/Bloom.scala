@@ -61,21 +61,20 @@ object Bloom {
     BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
 
   /** Production incremental-dedup path: flag corpus documents sharing at
-    * least one `k`-shingle with the reference set, by pure Bloom probe —
+    * least one 3-shingle with the reference set, by pure Bloom probe —
     * one narrow pass over the corpus, no join against the reference.
     * False-negative-free by construction; a flagged doc is a true hit
     * with probability ≥ 1 − fpp per shingle probe (re-verify the flagged
     * slice exactly when the decision is destructive).
     */
-  def bloomContaminationFlag(corpus: DataFrame, bloomBytes: Array[Byte], k: Int = 3,
-                             idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val csh = corpus.select(col(idCol).as("id"),
-      explode(Dedup.shingleHashes(col(textCol), k)).as("sh"))
+  def bloomContaminationFlag(corpus: DataFrame, bloomBytes: Array[Byte]): DataFrame = {
+    val csh = corpus.select(col("doc_id").as("id"),
+      explode(Dedup.shingleHashes(col("text"), 3)).as("sh"))
     val hits = csh.filter(mightContain(bloomBytes, col("sh")))
       .groupBy(col("id")).agg(count(lit(1)).as("n_bloom_hits"))
-    corpus.select(col(idCol).as("id"))
+    corpus.select(col("doc_id").as("id"))
       .join(hits, Seq("id"), "left")
-      .select(col("id").as(idCol),
+      .select(col("id").as("doc_id"),
         coalesce(col("n_bloom_hits"), lit(0L)).as("n_bloom_hits"),
         (coalesce(col("n_bloom_hits"), lit(0L)) > 0).as("flagged"))
   }
@@ -93,9 +92,8 @@ object Bloom {
     * would return null, and a `!flagged` admit filter would silently
     * drop docs the batch path keeps — r7 review).
     */
-  def contaminationFlagStateless(corpus: DataFrame, bloomBytes: Array[Byte], k: Int = 3,
-                                 idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    corpus.select(col(idCol),
-      coalesce(exists(Dedup.shingleHashes(col(textCol), k),
+  def contaminationFlagStateless(corpus: DataFrame, bloomBytes: Array[Byte]): DataFrame =
+    corpus.select(col("doc_id"),
+      coalesce(exists(Dedup.shingleHashes(col("text"), 3),
         sh => mightContain(bloomBytes, sh)), lit(false)).as("flagged"))
 }

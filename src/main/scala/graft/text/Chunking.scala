@@ -15,14 +15,13 @@ import org.apache.spark.sql.functions._
   */
 object Chunking {
 
-  def chunkTokens(docs: DataFrame, chunkSize: Int, overlap: Int,
-                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def chunkTokens(docs: DataFrame, chunkSize: Int, overlap: Int): DataFrame = {
     require(chunkSize > overlap && overlap >= 0,
       s"need chunkSize > overlap >= 0, got $chunkSize/$overlap")
     val stride = chunkSize - overlap
-    val toks: Column = filter(TextStats.tokens(col(textCol)), t => t =!= lit(""))
+    val toks: Column = filter(TextStats.tokens(col("text")), t => t =!= lit(""))
     docs
-      .select(col(idCol).as("doc_id"), toks.as("toks"))
+      .select(col("doc_id"), toks.as("toks"))
       // empty/whitespace-only docs have zero tokens → sequence(0, -1, +stride)
       // throws "Illegal sequence boundaries" in Spark; such docs produce no
       // chunks (the oracle's range(0, 0, stride) is empty), so explode an

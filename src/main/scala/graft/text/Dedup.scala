@@ -15,25 +15,28 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  /** Round cap of both connected-components forms. */
+  private val CcMaxRounds = 50
+
   // ---- exact -----------------------------------------------------------
 
   /** Exact dedup on the normalized fingerprint: one row per distinct
     * content, keeping the lowest doc_id as canonical (deterministic),
     * with the duplicate count.
     */
-  def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.groupBy(TextStats.fingerprint(col(textCol)).as("fp"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
+  def exact(docs: DataFrame): DataFrame =
+    docs.groupBy(TextStats.fingerprint(col("text")).as("fp"))
+      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
   // ---- shingles & MinHash ---------------------------------------------
 
   /** Word k-shingles of a text column as an array of strings. */
-  def shingles(text: Column, k: Int = 3): Column = {
+  def shingles(text: Column): Column = {
     val toks = TextStats.tokens(lower(text))
-    when(size(toks) < k, array(array_join(toks, " ")))
+    when(size(toks) < 3, array(array_join(toks, " ")))
       .otherwise(transform(
-        sequence(lit(1), size(toks) - (k - 1)),
-        i => array_join(slice(toks, i, lit(k)), " ")))
+        sequence(lit(1), size(toks) - 2),
+        i => array_join(slice(toks, i, lit(3)), " ")))
   }
 
   /** Distinct shingle hash set (the Jaccard universe of the doc).
@@ -75,14 +78,13 @@ object Dedup {
     * filter by threshold. Only bucket-mates are ever paired.
     */
   def minhashNearDups(docs: DataFrame, threshold: Double = 0.8,
-                      k: Int = 3, numHashes: Int = 16, bands: Int = 4,
-                      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                      numHashes: Int = 16, bands: Int = 4): DataFrame = {
     // the shingle computation feeds three consumers (signature derivation
     // and both verify joins) — materialize it once via an eager local
     // checkpoint; unlike persist(), its blocks are released by the
     // context cleaner when the result goes out of scope, so repeated
     // calls in a shared session don't accumulate cached RDDs
-    val base = docs.select(col(idCol).as("id"), shingleHashes(col(textCol), k).as("sh"))
+    val base = docs.select(col("doc_id").as("id"), shingleHashes(col("text"), 3).as("sh"))
       .transform(graft.Stage.mat)
     // Candidate generation travels light: only (band, bandHash, id) goes
     // through the self-join shuffle, and pair dedup happens on the bare
@@ -222,9 +224,8 @@ object Dedup {
     * prefix slice of length |x| − ceil(t·|x|) + 1 in ascending global
     * document frequency (ties on hash).
     */
-  private def prefixIndex(docs: DataFrame, threshold: Double, k: Int,
-                          idCol: String, textCol: String): (DataFrame, DataFrame, DataFrame) = {
-    val sets = docs.select(col(idCol).as("id"), shingleHashes(col(textCol), k).as("sh"))
+  private def prefixIndex(docs: DataFrame, threshold: Double): (DataFrame, DataFrame, DataFrame) = {
+    val sets = docs.select(col("doc_id").as("id"), shingleHashes(col("text"), 3).as("sh"))
       .filter(size(col("sh")) >= 1)
       .transform(graft.Stage.mat)
     val tok = sets.select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("h"))
@@ -238,10 +239,9 @@ object Dedup {
     (sets, tok, prefix)
   }
 
-  def jaccardJoinPrefix(docs: DataFrame, threshold: Double, k: Int = 3,
-                        idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def jaccardJoinPrefix(docs: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold in (0,1]: $threshold")
-    val (sets, _, prefix) = prefixIndex(docs, threshold, k, idCol, textCol)
+    val (sets, _, prefix) = prefixIndex(docs, threshold)
     // positional filter (PPJoin Lemma 1): for the FIRST token the pair
     // shares — which the global rarest-first order forces into both
     // prefixes — every other common element sits after it on BOTH
@@ -289,10 +289,9 @@ object Dedup {
     * corpus-tokens-sized (×k), which is the price of the asymmetric
     * predicate; candidates stay bounded by rare-token df.
     */
-  def containmentJoinPrefix(docs: DataFrame, threshold: Double, k: Int = 3,
-                            idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def containmentJoinPrefix(docs: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold in (0,1]: $threshold")
-    val (sets, tok, prefix) = prefixIndex(docs, threshold, k, idCol, textCol)
+    val (sets, tok, prefix) = prefixIndex(docs, threshold)
     val cand = prefix.select(col("h"), col("id").as("id_a"), col("sz").as("sz_a"))
       .join(tok.select(col("h"), col("id").as("id_b"), col("sz").as("sz_b")), Seq("h"))
       .filter(col("id_a") =!= col("id_b"))
@@ -312,22 +311,21 @@ object Dedup {
 
   // ---- line-level dedup (CCNet/Dolma-style) ----------------------------
 
-  /** Remove lines that occur more than `maxOccurrences` times across the
+  /** Remove lines that occur more than once across the
     * corpus (boilerplate: headers, nav text, disclaimers), preserving
     * line order within each document. Two passes: a global line-hash
     * count (one shuffle on the 64-bit line hash), then a broadcast-or-
     * shuffle semi-join back onto the exploded lines and an ordered
     * re-assembly — no driver-side state, corpus-size agnostic.
     */
-  def lineLevelDedup(docs: DataFrame, maxOccurrences: Long = 1,
-                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def lineLevelDedup(docs: DataFrame): DataFrame = {
     val lines = docs
-      .select(col(idCol).as("id"),
-        posexplode(split(col(textCol), "\n")).as(Seq("pos", "line")))
+      .select(col("doc_id").as("id"),
+        posexplode(split(col("text"), "\n")).as(Seq("pos", "line")))
       .withColumn("lh", xxhash64(trim(col("line"))))
     val frequent = lines.groupBy(col("lh"))
       .agg(count(lit(1)).as("n"))
-      .filter(col("n") > maxOccurrences)
+      .filter(col("n") > 1L)
       .select(col("lh"))
     val kept = lines
       .join(frequent, Seq("lh"), "left_anti")
@@ -338,9 +336,9 @@ object Dedup {
     // surgery ops never lose rows (the dupSpanTrim contract): a doc
     // whose EVERY line is boilerplate comes back with empty text, not
     // silently vanished from the corpus (review finding r6b)
-    docs.select(col(idCol).as("id"))
+    docs.select(col("doc_id").as("id"))
       .join(kept, Seq("id"), "left")
-      .select(col("id").as(idCol),
+      .select(col("id").as("doc_id"),
         coalesce(col("__kept_text"), lit("")).as("text"))
   }
 
@@ -360,10 +358,9 @@ object Dedup {
     * (novelty depends only on hash equality, but the portable key lets
     * the oracle replay the identical grouping).
     */
-  def ngramNovelty(docs: DataFrame, n: Int = 8,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val t = docs.select(col(idCol).as("doc_id"),
-      array_distinct(graft.catalyst.GraftFunctions.portableShingles(col(textCol), n)).as("hs"))
+  def ngramNovelty(docs: DataFrame, n: Int = 8): DataFrame = {
+    val t = docs.select(col("doc_id"),
+      array_distinct(graft.catalyst.GraftFunctions.portableShingles(col("text"), n)).as("hs"))
       .filter(size(col("hs")) >= 1)
     // sh feeds both the first-occurrence aggregate and the join back —
     // materialize the md5-per-gram pass once (minhashNearDups discipline)
@@ -391,10 +388,9 @@ object Dedup {
     * constant. Per-source totals are a source-count-sized aggregate
     * that broadcasts back onto the pair table.
     */
-  def crossSourceDuplication(docs: DataFrame,
-                             textCol: String = "text", srcCol: String = "source"): DataFrame = {
+  def crossSourceDuplication(docs: DataFrame): DataFrame = {
     val fp = docs
-      .select(TextStats.fingerprint(col(textCol)).as("fp"), col(srcCol).as("src"))
+      .select(TextStats.fingerprint(col("text")).as("fp"), col("source").as("src"))
       .distinct()
     val perSource = fp.groupBy(col("src")).agg(count(lit(1)).as("n"))
     val shared = fp.select(col("fp"), col("src").as("source_a"))
@@ -422,10 +418,9 @@ object Dedup {
     * key-partitioned on the same pair; the report is a source-count
     * aggregate. No stage is corpus-quadratic and nothing collects.
     */
-  def snapshotDelta(oldDocs: DataFrame, newDocs: DataFrame,
-                    textCol: String = "text", srcCol: String = "source"): DataFrame = {
+  def snapshotDelta(oldDocs: DataFrame, newDocs: DataFrame): DataFrame = {
     def fps(d: DataFrame, marker: String) = d
-      .select(TextStats.fingerprint(col(textCol)).as("fp"), col(srcCol).as("source"))
+      .select(TextStats.fingerprint(col("text")).as("fp"), col("source"))
       .distinct()
       .withColumn(marker, lit(1))
     fps(oldDocs, "in_old")
@@ -478,19 +473,18 @@ object Dedup {
     * pair — the q37 argument, which lets the DuckDB oracle compare
     * string shingles verbatim).
     */
-  def contamination(corpus: DataFrame, benchmark: DataFrame, k: Int = 3,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def contamination(corpus: DataFrame, benchmark: DataFrame): DataFrame = {
     val bsh = benchmark
-      .select(explode(shingleHashes(col(textCol), k)).as("sh"))
+      .select(explode(shingleHashes(col("text"), 3)).as("sh"))
       .distinct()
     val hits = corpus
-      .select(col(idCol).as("id"), explode(shingleHashes(col(textCol), k)).as("sh"))
+      .select(col("doc_id").as("id"), explode(shingleHashes(col("text"), 3)).as("sh"))
       .join(broadcast(bsh), Seq("sh"))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_shared"))
-    corpus.select(col(idCol).as("id"))
+    corpus.select(col("doc_id").as("id"))
       .join(hits, Seq("id"), "left")
-      .select(col("id").as(idCol),
+      .select(col("id").as("doc_id"),
         coalesce(col("n_shared"), lit(0L)).as("n_shared"),
         (coalesce(col("n_shared"), lit(0L)) > 0).as("contaminated"))
   }
@@ -532,14 +526,12 @@ object Dedup {
     * join for the (rare) surviving candidates only.
     */
   def fuzzyDecontamination(corpus: DataFrame, benchmark: DataFrame,
-                           threshold: Double = 0.8, k: Int = 3,
-                           numHashes: Int = 16, bands: Int = 16,
-                           idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                           threshold: Double = 0.8): DataFrame = {
     def prep(d: DataFrame) = graft.Stage.mat(
-      d.select(col(idCol).as("id"), shingleHashes(col(textCol), k).as("sh")))
+      d.select(col("doc_id").as("id"), shingleHashes(col("text"), 3).as("sh")))
     def keys(base: DataFrame) = base
       .withColumn("bk",
-        explode(bandKeys(minhashSignature(col("sh"), numHashes), numHashes, bands)))
+        explode(bandKeys(minhashSignature(col("sh"), 16), 16, 16)))
       .select(col("id"), col("bk.band"), col("bk.bh"))
     val cb = prep(corpus)
     val bb = prep(benchmark)
@@ -579,11 +571,10 @@ object Dedup {
     * on chain/clique/edge fixtures.
     */
   def connectedComponents(pairs: DataFrame,
-                          aCol: String = "id_a", bCol: String = "id_b",
-                          maxRounds: Int = 50, diameterHint: Int = 8): DataFrame = {
+                          diameterHint: Int = 8): DataFrame = {
     val sym = pairs
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
+      .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
+      .unionByName(pairs.select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst")))
       .distinct()
       .transform(graft.Stage.mat)
     var labels = sym.select(col("src").as("id")).distinct()
@@ -591,7 +582,7 @@ object Dedup {
       .transform(graft.Stage.mat)
     var round = 0
     var converged = false
-    val propRounds = math.min(maxRounds, diameterHint)
+    val propRounds = math.min(CcMaxRounds, diameterHint)
     while (!converged && round < propRounds) {
       val nbrMin = sym.join(labels, col("src") === col("id"))
         .groupBy(col("dst")).agg(min(col("label")).as("nlabel"))
@@ -610,7 +601,7 @@ object Dedup {
       round += 1
     }
     if (!converged)
-      return connectedComponentsAlternating(pairs, aCol, bCol, maxRounds)
+      return connectedComponentsAlternating(pairs)
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("label"))
       .select(col("id").as("doc_id"), col("label").as("cluster_id"),
@@ -634,30 +625,26 @@ object Dedup {
     * reached a fixpoint (then it IS the star forest u → component-min).
     * Output schema matches [[connectedComponents]] exactly.
     */
-  def connectedComponentsAlternating(pairs: DataFrame,
-                                     aCol: String = "id_a", bCol: String = "id_b",
-                                     maxRounds: Int = 50): DataFrame =
-    alternatingWithRounds(pairs, aCol, bCol, maxRounds)._1
+  def connectedComponentsAlternating(pairs: DataFrame): DataFrame =
+    alternatingWithRounds(pairs)._1
 
   /** [[connectedComponentsAlternating]] plus the number of alternation
     * rounds it took — exposed so CurationSpec can assert the O(log² n)
     * bound on the adversarial chain fixture.
     */
-  private[graft] def alternatingWithRounds(pairs: DataFrame,
-                                           aCol: String, bCol: String,
-                                           maxRounds: Int): (DataFrame, Int) = {
-    val nodes = pairs.select(col(aCol).cast("long").as("id"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("id")))
+  private[graft] def alternatingWithRounds(pairs: DataFrame): (DataFrame, Int) = {
+    val nodes = pairs.select(col("id_a").cast("long").as("id"))
+      .unionByName(pairs.select(col("id_b").cast("long").as("id")))
       .distinct().transform(graft.Stage.mat)
     var edges = pairs
-      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+      .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .distinct().transform(graft.Stage.mat)
     var round = 0
     var edgeCount = edges.count()
     var converged = edgeCount == 0L
-    while (!converged && round < maxRounds) {
+    while (!converged && round < CcMaxRounds) {
       // large-star over the symmetric view: m = min(u, min(neighbors)),
       // every neighbor v > u re-points to m. Output stays canonical
       // (v > u ≥ m). One shuffle for the per-u min, one for the join.
@@ -719,13 +706,12 @@ object Dedup {
     * mirror counts), so the window sort is per-group trivial; nothing
     * unpartitioned, text never shuffles (only id, cluster, score).
     */
-  def selectRepresentatives(docs: DataFrame, pairs: DataFrame, score: Column,
-                            idCol: String = "doc_id"): DataFrame = {
+  def selectRepresentatives(docs: DataFrame, pairs: DataFrame, score: Column): DataFrame = {
     val labels = connectedComponents(pairs)
       .select(col("doc_id"), col("cluster_id"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cluster_id")).orderBy(col("score").desc, col("doc_id"))
-    docs.select(col(idCol).as("doc_id"), score.as("score"))
+    docs.select(col("doc_id"), score.as("score"))
       .join(labels, Seq("doc_id"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
       .withColumn("keep", row_number().over(w) === 1)
@@ -777,8 +763,7 @@ object Dedup {
     * groupBy(doc_id) ordered collect. Every shuffle carries (id, pos)
     * or (id, token) pairs.
     */
-  def dupSpanTrim(docs: DataFrame, n: Int = 8,
-                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def dupSpanTrim(docs: DataFrame, n: Int = 8): DataFrame = {
     // the md5-per-gram shingle pass feeds three consumers (dup-key agg,
     // covered-position join, token table + final join) — materialize it
     // once (the minhashNearDups discipline; blocks are freed by the
@@ -787,9 +772,9 @@ object Dedup {
     // n-gram spans, so it passes through UNTRIMMED — a surgery operator
     // whose output replaces the corpus must never silently drop rows
     // (review finding r6b; the previous filter lost every sub-n doc)
-    val t = docs.select(col(idCol).as("doc_id"),
-      filter(split(col(textCol), "\\s+"), x => x =!= lit("")).as("otoks"),
-      graft.catalyst.GraftFunctions.portableShingles(col(textCol), n).as("hs"))
+    val t = docs.select(col("doc_id"),
+      filter(split(col("text"), "\\s+"), x => x =!= lit("")).as("otoks"),
+      graft.catalyst.GraftFunctions.portableShingles(col("text"), n).as("hs"))
       .withColumn("n_tokens", size(col("otoks")).cast("long"))
       .transform(graft.Stage.mat)
     val covered = dupSpanStarts(t)
@@ -824,17 +809,16 @@ object Dedup {
     sh.join(dup, Seq("h"))
   }
 
-  def dupSpanCoverage(docs: DataFrame, n: Int = 8,
-                      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def dupSpanCoverage(docs: DataFrame): DataFrame = {
     // fused native shingle pass: the composed form (explode starts +
     // re-slice/join the token array per row) pushes O(tokens²) bytes per
     // doc through the explode; PortableShingles emits the ordered gram
     // hashes in one O(tokens) pass and posexplode recovers positions
-    val t = docs.select(col(idCol).as("doc_id"),
-      size(filter(TextStats.tokens(lower(col(textCol))), x => x =!= lit("")))
+    val t = docs.select(col("doc_id"),
+      size(filter(TextStats.tokens(lower(col("text"))), x => x =!= lit("")))
         .cast("long").as("n_tokens"),
-      graft.catalyst.GraftFunctions.portableShingles(col(textCol), n).as("hs"))
-      .filter(col("n_tokens") >= n)
+      graft.catalyst.GraftFunctions.portableShingles(col("text"), 8).as("hs"))
+      .filter(col("n_tokens") >= 8)
     val marked = dupSpanStarts(t)
     val perDoc = marked.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_dup_shingles"))
@@ -846,8 +830,8 @@ object Dedup {
     val covered = marked
       .withColumn("nxt", lead(col("i"), 1).over(wNext))
       .select(col("doc_id"),
-        when(col("nxt").isNotNull, least(lit(n.toLong), (col("nxt") - col("i")).cast("long")))
-          .otherwise(lit(n.toLong)).as("c"))
+        when(col("nxt").isNotNull, least(lit(8L), (col("nxt") - col("i")).cast("long")))
+          .otherwise(lit(8L)).as("c"))
       .groupBy(col("doc_id")).agg(sum(col("c")).as("covered_tokens"))
     t.select(col("doc_id"), col("n_tokens"))
       .join(perDoc, Seq("doc_id"), "left")

@@ -30,10 +30,9 @@ object LangModel {
 
   private val D = DecimalType(25, 6)
 
-  def bigramPerplexity(docs: DataFrame,
-                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val t = docs.select(col(idCol).as("doc_id"),
-      filter(TextStats.tokens(lower(col(textCol))), t => t =!= lit("")).as("toks"))
+  def bigramPerplexity(docs: DataFrame): DataFrame = {
+    val t = docs.select(col("doc_id"),
+      filter(TextStats.tokens(lower(col("text"))), t => t =!= lit("")).as("toks"))
     val inst = t.filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(zip_with(
         slice(col("toks"), lit(1), size(col("toks")) - 1),
@@ -106,11 +105,10 @@ object LangModel {
     * second corpus pass. Returns the top-`topK` bigrams by (count
     * desc, w1, w2): (w1, w2, c2, p_kn_nanos).
     */
-  def kneserNeyTop(docs: DataFrame, topK: Int = 50, dMicros: Long = 750000L,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def kneserNeyTop(docs: DataFrame, topK: Int = 50): DataFrame = {
     val D38 = DecimalType(38, 0)
-    val t = docs.select(col(idCol).as("doc_id"),
-      filter(TextStats.tokens(lower(col(textCol))), x => x =!= lit("")).as("toks"))
+    val t = docs.select(col("doc_id"),
+      filter(TextStats.tokens(lower(col("text"))), x => x =!= lit("")).as("toks"))
     val inst = bigramInstances(t)
     val c2 = graft.Stage.mat(
       inst.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2")))
@@ -119,12 +117,12 @@ object LangModel {
     val n1p = c2.groupBy(col("w2")).agg(count(lit(1)).as("n1p"))
     val nbi = c2.agg(count(lit(1)).as("nb"))
     val lam = call_function("div",
-      lit(dMicros).cast(D38) * col("n1f") * 1000, col("ctx"))
+      lit(750000L).cast(D38) * col("n1f") * 1000, col("ctx"))
     c2.join(ctx, Seq("w1")).join(n1f, Seq("w1")).join(n1p, Seq("w2"))
       .crossJoin(broadcast(nbi))
       .select(col("w1"), col("w2"), col("c2"),
         (call_function("div",
-          greatest(col("c2").cast(D38) * 1000000 - dMicros, lit(0).cast(D38)) * 1000,
+          greatest(col("c2").cast(D38) * 1000000 - 750000L, lit(0).cast(D38)) * 1000,
           col("ctx")) +
           call_function("div", lam.cast(D38) * col("n1p"), col("nb")))
           .cast("long").as("p_kn_nanos"))

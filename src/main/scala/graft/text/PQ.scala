@@ -50,28 +50,26 @@ object PQ {
     }.reduce(_ + _)
 
   /** The matching DuckDB expression (same left-assoc order). */
-  private[graft] def l2sqSql(a: String, b: String, d: Int): String =
-    (1 to d).map(i => s"($a[$i]-$b[$i])*($a[$i]-$b[$i])").mkString(" + ")
+  private[graft] def l2sqSql: String =
+    (1 to 4).map(i => s"(sv[$i]-cv[$i])*(sv[$i]-cv[$i])").mkString(" + ")
 
   /** OFFLINE codebook training: hash-spread seeds + one Lloyd update on
     * every subspace at once. Returns cb(j)(c) = centroid c of subspace
     * j, each of length dim/m. Driver state: k·dim doubles.
     */
-  def pqTrain(embeddings: DataFrame, m: Int, k: Int, dim: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              salt: String = "pq"): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
+  def pqTrain(embeddings: DataFrame, m: Int, k: Int, dim: Int): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
     val d = dim / m
     require(m * d == dim, s"dim $dim must divide into m=$m subspaces")
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val e = embeddings.select(col(idCol).as("vec_id"),
-      col(vecCol).cast("array<double>").as("v"))
+    val e = embeddings.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("v"))
 
     // k seed VECTORS by portable-hash order (one scan); seed codebook
     // j = slice j of each — the same spread sample for every subspace.
     val seedVecs: IndexedSeq[IndexedSeq[Double]] = e
       .withColumn("h", TextStats.portableHash64(
-        concat(lit(salt + ":"), col("vec_id").cast("string"))))
+        concat(lit("pq:"), col("vec_id").cast("string"))))
       .orderBy(col("h"), col("vec_id")).limit(k)
       .select(col("v")).as[Seq[Double]].collect()
       .map(_.toIndexedSeq).toIndexedSeq
@@ -107,12 +105,11 @@ object PQ {
     * fused-loop expression ([[graft.catalyst.PQEncode]]) per row; pure
     * projection, no shuffle, stays in whole-stage codegen.
     */
-  def pqEncode(embeddings: DataFrame, cb: IndexedSeq[IndexedSeq[IndexedSeq[Double]]],
-               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+  def pqEncode(embeddings: DataFrame, cb: IndexedSeq[IndexedSeq[IndexedSeq[Double]]]): DataFrame =
     embeddings
-      .select(col(idCol).as("vec_id"),
+      .select(col("vec_id"),
         graft.catalyst.GraftFunctions.pqEncode(
-          col(vecCol).cast("array<double>"), cb).as("pq"))
+          col("embedding").cast("array<double>"), cb).as("pq"))
       .select(col("vec_id"), col("pq.codes").as("codes"),
         round(col("pq.recon_cos"), 6).as("recon_cos_r"))
 
@@ -120,9 +117,8 @@ object PQ {
     * query's shape (the harness compare layer can't sort array cells;
     * the q48 stringify pattern).
     */
-  def pqEncodeStr(embeddings: DataFrame, cb: IndexedSeq[IndexedSeq[IndexedSeq[Double]]],
-                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val enc = pqEncode(embeddings, cb, idCol, vecCol)
+  def pqEncodeStr(embeddings: DataFrame, cb: IndexedSeq[IndexedSeq[IndexedSeq[Double]]]): DataFrame = {
+    val enc = pqEncode(embeddings, cb)
     enc.select(col("vec_id"),
       array_join(transform(col("codes"), c => c.cast("string")), ",").as("codes"),
       col("recon_cos_r"))
@@ -136,8 +132,7 @@ object PQ {
     * order-independent and engine-exact.
     */
   def adcScores(encoded: DataFrame, queries: DataFrame,
-                cb: IndexedSeq[IndexedSeq[IndexedSeq[Double]]],
-                qidCol: String = "q_id", qvecCol: String = "qvec"): DataFrame = {
+                cb: IndexedSeq[IndexedSeq[IndexedSeq[Double]]]): DataFrame = {
     val m = cb.length
     val d = cb.head.head.length
     val D = org.apache.spark.sql.types.DecimalType(25, 6)
@@ -148,8 +143,8 @@ object PQ {
         yield (j, c, cb(j)(c))
     ).toDF("j", "c", "cv")
     val dt = queries.crossJoin(cbDf)
-      .select(col(qidCol).as("q_id"), col("j"), col("c"),
-        round(l2sq(slice(col(qvecCol).cast("array<double>"), col("j") * d + 1, lit(d)),
+      .select(col("q_id"), col("j"), col("c"),
+        round(l2sq(slice(col("qvec").cast("array<double>"), col("j") * d + 1, lit(d)),
           col("cv"), d), 6).cast(D).as("dsub_r"))
     encoded
       .select(col("vec_id"), posexplode(col("codes")).as(Seq("j", "c")))

@@ -28,10 +28,9 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
-  def packOffsets(docs: DataFrame, seqLen: Int, bucketSize: Int = 4096,
-                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val base = docs.select(col(idCol).cast("long").as("doc_id"),
-        TextStats.tokenCount(col(textCol)).cast("long").as("n_tokens"))
+  def packOffsets(docs: DataFrame, seqLen: Int, bucketSize: Int = 4096): DataFrame = {
+    val base = docs.select(col("doc_id").cast("long").as("doc_id"),
+        TextStats.tokenCount(col("text")).cast("long").as("n_tokens"))
       .withColumn("bucket", expr(s"doc_id DIV $bucketSize"))
     val bucketOffsets = base.groupBy(col("bucket"))
       .agg(sum(col("n_tokens")).as("btotal"))
@@ -64,22 +63,21 @@ object Packing {
     *     the roughly-unimodal score distributions quality metrics
     *     produce);
     *  2. within-bucket ranks via a window PARTITIONed BY bucket;
-    *  3. bucket offsets via a window over the `buckets`-row count table
+    *  3. bucket offsets via a window over the 1024-row count table
     *     (the one intentionally serial step), broadcast back.
     *
     * Ties break on doc_id, so the rank is a deterministic total order.
     * The oracle equality against a plain `row_number() OVER (ORDER BY
     * score, doc_id)` proves the decomposition exact.
     */
-  def scoreOrder(docs: DataFrame, score: Column, buckets: Int = 1024,
-                 idCol: String = "doc_id"): DataFrame = {
-    val t = docs.select(col(idCol).cast("long").as("doc_id"), score.cast("long").as("score"))
+  def scoreOrder(docs: DataFrame, score: Column): DataFrame = {
+    val t = docs.select(col("doc_id").cast("long").as("doc_id"), score.cast("long").as("score"))
       .transform(graft.Stage.mat)    // feeds the stats row and the ranked pass
     val stats = t.agg(min(col("score")).as("mn"), max(col("score")).as("mx"),
       count(lit(1)).as("n"))
     val bucketed = t.crossJoin(broadcast(stats))
       .withColumn("rb", floor(
-        (col("score") - col("mn")).cast("double") * buckets /
+        (col("score") - col("mn")).cast("double") * 1024 /
           (col("mx") - col("mn") + 1).cast("double")).cast("long"))
     val offsets = bucketed.groupBy(col("rb")).agg(count(lit(1)).as("cnt"))
       .withColumn("off", coalesce(
@@ -94,7 +92,7 @@ object Packing {
 
   /** Training-shard manifest: walk the corpus in the deterministic
     * [[trainingOrder]] permutation, assign each document to the shard
-    * holding its FIRST token under a fixed `tokensPerShard` budget
+    * holding its FIRST token under a fixed 2048-token budget
     * (shard = running-token-offset DIV budget), and emit one manifest
     * row per shard: document count, token total, the covered
     * permutation-position range, and an order-free xor checksum of the
@@ -112,14 +110,12 @@ object Packing {
     * corpus; the manifest aggregate is one map-side-combined groupBy on
     * shard_id.
     */
-  def shardManifest(docs: DataFrame, tokensPerShard: Long, bucketSize: Int = 4096,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(tokensPerShard > 0, s"tokensPerShard must be positive: $tokensPerShard")
-    val base = docs.select(col(idCol).cast("long").as("doc_id"),
-        TextStats.tokenCount(col(textCol)).cast("long").as("n_tokens"),
-        TextStats.fingerprint(col(textCol)).as("fp"))
-      .join(trainingOrder(docs, idCol = idCol), Seq("doc_id"))
-      .withColumn("pbucket", expr(s"(pos - 1) DIV $bucketSize"))
+  def shardManifest(docs: DataFrame): DataFrame = {
+    val base = docs.select(col("doc_id").cast("long").as("doc_id"),
+        TextStats.tokenCount(col("text")).cast("long").as("n_tokens"),
+        TextStats.fingerprint(col("text")).as("fp"))
+      .join(trainingOrder(docs), Seq("doc_id"))
+      .withColumn("pbucket", expr(s"(pos - 1) DIV 4096"))
     val bucketOffsets = base.groupBy(col("pbucket"))
       .agg(sum(col("n_tokens")).as("btotal"))
       .withColumn("boffset", coalesce(
@@ -131,7 +127,7 @@ object Packing {
     base.join(broadcast(bucketOffsets), Seq("pbucket"))
       .withColumn("start_offset",
         col("boffset") + coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-      .withColumn("shard_id", expr(s"start_offset DIV $tokensPerShard"))
+      .withColumn("shard_id", expr(s"start_offset DIV 2048"))
       .groupBy(col("shard_id"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("shard_tokens"),
@@ -163,12 +159,11 @@ object Packing {
     * `row_number() OVER (ORDER BY key)` — equality proves the
     * decomposition is the exact global rank.
     */
-  def trainingOrder(docs: DataFrame, buckets: Int = 32,
-                    idCol: String = "doc_id"): DataFrame = {
+  def trainingOrder(docs: DataFrame, buckets: Int = 32): DataFrame = {
     require(buckets > 0 && (buckets & (buckets - 1)) == 0,
       s"buckets must be a power of two: $buckets")
     val shift = 60 - (31 - Integer.numberOfLeadingZeros(buckets))
-    val t = docs.select(col(idCol).cast("long").as("doc_id"))
+    val t = docs.select(col("doc_id").cast("long").as("doc_id"))
       .withColumn("k", TextStats.portableHash64(
         concat(lit("shuffle:"), col("doc_id").cast("string"))))
       .withColumn("b", shiftrightunsigned(col("k"), shift))

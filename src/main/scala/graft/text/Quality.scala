@@ -41,9 +41,8 @@ object Quality {
     * fraction, distinct-stopword hits, symbol ratio, bullet/ellipsis
     * line fractions) plus one boolean per rule and the overall `keep`.
     */
-  def gopherQuality(docs: DataFrame,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val text = col(textCol)
+  def gopherQuality(docs: DataFrame): DataFrame = {
+    val text = col("text")
     val toks = words(text)
     val nWords = size(toks).cast("long")
     val nwD = greatest(nWords, lit(1L)).cast("double")
@@ -75,7 +74,7 @@ object Quality {
     val passAlpha = fracAlpha >= 0.8
     val passStop = nStop >= 2L
 
-    docs.select(col(idCol),
+    docs.select(col("doc_id"),
       nWords.as("n_words"), meanWl.as("mean_word_len_r"),
       fracAlpha.as("frac_alpha_r"), nStop.as("n_stop_hits"),
       symbolRatio.as("symbol_ratio_r"), fracBullet.as("frac_bullet_r"),
@@ -94,9 +93,8 @@ object Quality {
     * the >= 3 surviving-lines requirement. Output: line counts, the
     * cleaned text (kept lines re-joined in order), flags, and `keep_doc`.
     */
-  def c4Clean(docs: DataFrame,
-              idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val text = col(textCol)
+  def c4Clean(docs: DataFrame): DataFrame = {
+    val text = col("text")
     val ls = split(text, "\n")
     val kept = filter(ls, l =>
       trim(l).rlike("[.!?\"]$") &&
@@ -104,7 +102,7 @@ object Quality {
         !lower(trim(l)).contains("javascript"))
     val hasLorem = lower(text).contains("lorem ipsum")
     val hasBrace = text.contains("{")
-    docs.select(col(idCol),
+    docs.select(col("doc_id"),
       size(ls).cast("long").as("n_lines"),
       size(kept).cast("long").as("n_kept"),
       array_join(kept, "\n").as("text_clean"),

@@ -22,6 +22,10 @@ import org.apache.spark.sql.functions._
   */
 object Relevance {
 
+  /** BM25's term-frequency saturation k1 and length normalization b. */
+  private val Bm25K1 = 1.2
+  private val Bm25B = 0.75
+
   /** BM25 document ranking against a deterministic query-term set (the
     * corpus's top-`nTerms` highest-df terms; ties broken by term — a
     * self-contained stand-in for a user query that both engines can
@@ -42,15 +46,13 @@ object Relevance {
     * Top-k is a single bounded sort (`orderBy.limit` → TakeOrderedAndProject,
     * no global sort materialization).
     */
-  def bm25TopDocs(docs: DataFrame, nTerms: Int = 8, topK: Int = 50,
-                  k1: Double = 1.2, b: Double = 0.75,
-                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val terms = docs.select(col(idCol).as("doc_id"),
-      explode(filter(TextStats.tokens(lower(col(textCol))), t => t =!= lit(""))).as("term"))
+  def bm25TopDocs(docs: DataFrame, nTerms: Int = 8, topK: Int = 50): DataFrame = {
+    val terms = docs.select(col("doc_id"),
+      explode(filter(TextStats.tokens(lower(col("text"))), t => t =!= lit(""))).as("term"))
     val tf = terms.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
     val dl = terms.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    val dfreq = docs.select(col(idCol).as("doc_id"),
-        explode(array_distinct(filter(TextStats.tokens(lower(col(textCol))), t => t =!= lit("")))).as("term"))
+    val dfreq = docs.select(col("doc_id"),
+        explode(array_distinct(filter(TextStats.tokens(lower(col("text"))), t => t =!= lit("")))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
     val qterms = dfreq.orderBy(col("df").desc, col("term")).limit(nTerms)
     val stats = docs.agg(count(lit(1)).as("n_docs"))
@@ -63,9 +65,9 @@ object Relevance {
       .withColumn("c", round(
         log((col("n_docs").cast("double") - col("df").cast("double") + 0.5) /
               (col("df").cast("double") + 0.5) + 1.0) *
-          (col("tf").cast("double") * lit(k1 + 1.0)) /
+          (col("tf").cast("double") * lit(Bm25K1 + 1.0)) /
           (col("tf").cast("double") +
-            lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl").cast("double") / col("avgdl")))),
+            lit(Bm25K1) * (lit(1.0 - Bm25B) + lit(Bm25B) * (col("dl").cast("double") / col("avgdl")))),
         6))
     contrib
       .groupBy(col("doc_id")).agg(
@@ -119,44 +121,40 @@ object Relevance {
     *
     * Shape at scale: BM25's shape is [[bm25TopDocs]]'s (broadcast query
     * terms, one tf shuffle); the dense side is a broadcast one-row query
-    * against a narrow corpus scan into a bounded TakeOrdered top-`topN`;
-    * the fusion join touches 2·topN rows. The rank windows run AFTER the
+    * against a narrow corpus scan into a bounded TakeOrdered top-50;
+    * the fusion join touches at most 100 rows. The rank windows run AFTER the
     * top-N cuts, so no unpartitioned window ever sees the corpus.
     */
-  def hybridRrf(docs: DataFrame, embeddings: DataFrame, queryVecId: Long = 0L,
-                topN: Int = 50, kRrf: Int = 60, topK: Int = 20,
-                idCol: String = "doc_id", textCol: String = "text",
-                vecIdCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val lex = bm25TopDocs(docs, topK = topN, idCol = idCol, textCol = textCol)
+  def hybridRrf(docs: DataFrame, embeddings: DataFrame): DataFrame = {
+    val lex = bm25TopDocs(docs, topK = 50)
       .withColumn("lex_rank",
         row_number().over(Window.orderBy(col("bm25").desc, col("doc_id"))).cast("long"))
       .select(col("doc_id"), col("lex_rank"))
-    val q = embeddings.filter(col(vecIdCol) === queryVecId)
-      .select(col(vecCol).as("qv"))
-    val dense = embeddings.filter(col(vecIdCol) =!= queryVecId)
+    val q = embeddings.filter(col("vec_id") === 0L)
+      .select(col("embedding").as("qv"))
+    val dense = embeddings.filter(col("vec_id") =!= 0L)
       .crossJoin(broadcast(q))
-      .select(col(vecIdCol).as("doc_id"),
-        round(Similarity.cosine(col(vecCol), col("qv")), 6).as("cos_r"))
-      .orderBy(col("cos_r").desc, col("doc_id")).limit(topN)
+      .select(col("vec_id").as("doc_id"),
+        round(Similarity.cosine(col("embedding"), col("qv")), 6).as("cos_r"))
+      .orderBy(col("cos_r").desc, col("doc_id")).limit(50)
       .withColumn("dense_rank",
         row_number().over(Window.orderBy(col("cos_r").desc, col("doc_id"))).cast("long"))
       .select(col("doc_id"), col("dense_rank"))
     lex.join(dense, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("lex_rank"), col("dense_rank"),
         round(
-          coalesce(lit(1.0) / (lit(kRrf.toLong) + col("lex_rank")), lit(0.0)) +
-            coalesce(lit(1.0) / (lit(kRrf.toLong) + col("dense_rank")), lit(0.0)),
+          coalesce(lit(1.0) / (lit(60L) + col("lex_rank")), lit(0.0)) +
+            coalesce(lit(1.0) / (lit(60L) + col("dense_rank")), lit(0.0)),
           9).as("rrf_r"))
-      .orderBy(col("rrf_r").desc, col("doc_id")).limit(topK)
+      .orderBy(col("rrf_r").desc, col("doc_id")).limit(20)
   }
 
-  def tfIdfTopTerms(docs: DataFrame, k: Int,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val terms = docs.select(col(idCol).as("doc_id"),
-      explode(filter(TextStats.tokens(lower(col(textCol))), t => t =!= lit(""))).as("term"))
+  def tfIdfTopTerms(docs: DataFrame, k: Int): DataFrame = {
+    val terms = docs.select(col("doc_id"),
+      explode(filter(TextStats.tokens(lower(col("text"))), t => t =!= lit(""))).as("term"))
     val tf = terms.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-    val dfreq = docs.select(col(idCol).as("doc_id"),
-        explode(array_distinct(filter(TextStats.tokens(lower(col(textCol))), t => t =!= lit("")))).as("term"))
+    val dfreq = docs.select(col("doc_id"),
+        explode(array_distinct(filter(TextStats.tokens(lower(col("text"))), t => t =!= lit("")))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
     val total = docs.agg(count(lit(1)).as("n_docs"))
     val scored = tf.join(dfreq, Seq("term"))

@@ -65,7 +65,7 @@ object Scrub {
   /** Blocklist screening — the keyword-filter pass (spam/adult/violence
     * lexicons in real pipelines): per document, how many token instances
     * hit the blocklist, how many distinct blocked terms appear, and the
-    * keep verdict at a hit-ratio threshold. Matching is whole-token on
+    * keep verdict at a 5% hit-ratio threshold. Matching is whole-token on
     * the lowercased whitespace tokenization (no substring
     * false-positives: "class" does not hit "ass").
     *
@@ -75,15 +75,14 @@ object Scrub {
     * million-term lexicons switch to the [[graft.text.Bloom]] probe
     * (same plan shape, constant-size literal).
     */
-  def blocklistScreen(text: Column, blocklist: Seq[String],
-                      maxHitRatio: Double = 0.01): (Column, Column, Column, Column) = {
+  def blocklistScreen(text: Column, blocklist: Seq[String]): (Column, Column, Column, Column) = {
     val bl = array(blocklist.map(t => lit(t.toLowerCase)): _*)
     val toks = filter(TextStats.tokens(lower(text)), t => t =!= lit(""))
     val hits = filter(toks, t => array_contains(bl, t))
     val nToks = size(toks).cast("long")
     val nHits = size(hits).cast("long")
     val nDistinct = size(array_distinct(hits)).cast("long")
-    val keep = nHits.cast("double") <= nToks.cast("double") * maxHitRatio
+    val keep = nHits.cast("double") <= nToks.cast("double") * 0.05
     (nHits, nDistinct, nToks, keep)
   }
 }

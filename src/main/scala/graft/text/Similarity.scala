@@ -115,27 +115,25 @@ object Similarity {
     * one-row DataFrame with column `qvec`). Returns (vec_id, cos_sim)
     * ordered best-first.
     */
-  def bruteForceTopK(embeddings: DataFrame, query: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+  def bruteForceTopK(embeddings: DataFrame, query: DataFrame, k: Int): DataFrame =
     embeddings
       .crossJoin(broadcast(query))
-      .withColumn("cos_sim", cosine(col(vecCol), col("qvec")))
-      .select(col(idCol), col("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
+      .withColumn("cos_sim", cosine(col("embedding"), col("qvec")))
+      .select(col("vec_id"), col("cos_sim"))
+      .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(k)
 
   /** All-pairs top-k per query for a query *set*: broadcast the queries,
     * one narrow pass over the corpus, per-query window top-k.
     */
   def topKPerQuery(embeddings: DataFrame, queries: DataFrame, k: Int,
-                   idCol: String = "vec_id", vecCol: String = "embedding",
-                   qidCol: String = "query_id", qvecCol: String = "qvec"): DataFrame = {
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("cos_sim").desc, col(idCol))
+                   qidCol: String = "query_id"): DataFrame = {
+    val w = Window.partitionBy(col(qidCol)).orderBy(col("cos_sim").desc, col("vec_id"))
     embeddings.crossJoin(broadcast(queries))
-      .withColumn("cos_sim", cosine(col(vecCol), col(qvecCol)))
+      .withColumn("cos_sim", cosine(col("embedding"), col("qvec")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
-      .select(col(qidCol), col("rn"), col(idCol), col("cos_sim"))
+      .select(col(qidCol), col("rn"), col("vec_id"), col("cos_sim"))
   }
 
   /** Default hyperplane seed (shared by [[lshBucket]], [[lshTopK]], and
@@ -162,25 +160,24 @@ object Similarity {
     * [[ivfTopK]]) consume the returned centroids as literals/tiny
     * broadcast dims and perform zero driver collects.
     */
-  def ivfTrain(embeddings: DataFrame, nCentroids: Int,
-               idCol: String = "vec_id", vecCol: String = "embedding"): Seq[(Int, Seq[Double])] = {
+  def ivfTrain(embeddings: DataFrame): Seq[(Int, Seq[Double])] = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     // deterministic sample as seed centroids (hash-spread, not first-k)
     val seeds = embeddings
-      .withColumn("__h", xxhash64(col(idCol)))
-      .orderBy(col("__h")).limit(nCentroids)
-      .select(col(vecCol)).as[Seq[Float]].collect()
+      .withColumn("__h", xxhash64(col("vec_id")))
+      .orderBy(col("__h")).limit(8)
+      .select(col("embedding")).as[Seq[Float]].collect()
       .map(_.map(_.toDouble).toSeq).toSeq
     val dim = seeds.head.length
     // one Lloyd refinement: mean of assigned vectors per seed centroid;
     // the per-centroid means are a tiny aggregate (nCentroids × dim)
     embeddings
       .withColumn("centroid_id",
-        nearestCentroid(col(vecCol), seeds.zipWithIndex.map(_.swap)))
+        nearestCentroid(col("embedding"), seeds.zipWithIndex.map(_.swap)))
       .groupBy(col("centroid_id"))
       .agg(array((0 until dim).map(i =>
-        avg(element_at(col(vecCol), i + 1).cast("double"))): _*).as("cvec"))
+        avg(element_at(col("embedding"), i + 1).cast("double"))): _*).as("cvec"))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
   }
@@ -190,9 +187,8 @@ object Similarity {
     * shuffles, zero collects — the centroid id doubles as a
     * partition/cluster column at rest.
     */
-  def ivfAssignWith(embeddings: DataFrame, centroids: Seq[(Int, Seq[Double])],
-                    vecCol: String = "embedding"): DataFrame =
-    embeddings.withColumn("centroid_id", nearestCentroid(col(vecCol), centroids))
+  def ivfAssignWith(embeddings: DataFrame, centroids: Seq[(Int, Seq[Double])]): DataFrame =
+    embeddings.withColumn("centroid_id", nearestCentroid(col("embedding"), centroids))
 
   /** Nearest-centroid id as a pure projection: the centroid set is a
     * driver-side literal (it IS collected state by construction), so
@@ -205,23 +201,21 @@ object Similarity {
       struct(cosine(vec, typedlit(c)).as("s"), lit(id).as("id"))
     }: _*).getField("id")
 
-  /** IVF approximate top-k: probe the nProbe centroids closest to the
+  /** IVF approximate top-k: probe the 3 centroids closest to the
     * query, brute-force only inside those lists.
     */
-  def ivfTopK(assigned: DataFrame, centroids: DataFrame, query: DataFrame,
-              k: Int, nProbe: Int = 2,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def ivfTopK(assigned: DataFrame, centroids: DataFrame, query: DataFrame): DataFrame = {
     val probes = centroids.crossJoin(broadcast(query))
       .withColumn("__sim", cosine(col("cvec"), col("qvec")))
       .orderBy(col("__sim").desc, col("centroid_id"))
-      .limit(nProbe)
+      .limit(3)
       .select(col("centroid_id"))
     assigned.join(broadcast(probes), Seq("centroid_id"))
       .crossJoin(broadcast(query))
-      .withColumn("cos_sim", cosine(col(vecCol), col("qvec")))
-      .select(col(idCol), col("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
+      .withColumn("cos_sim", cosine(col("embedding"), col("qvec")))
+      .select(col("vec_id"), col("cos_sim"))
+      .orderBy(col("cos_sim").desc, col("vec_id"))
+      .limit(10)
   }
 
   /** Embedding-cosine near-duplicate pairs: banded OR-amplified
@@ -254,15 +248,14 @@ object Similarity {
     */
   def cosineNearDups(embeddings: DataFrame, threshold: Double,
                      bands: Int, planesPerBand: Int, dim: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
                      seed: Long = DefaultSeed): DataFrame = {
     // vectors + band keys feed three consumers (candidate generation and
     // both verify joins): materialize once, let the context cleaner
     // release the blocks (same reasoning as Dedup.minhashNearDups)
     val base = embeddings
-      .select(col(idCol).as("id"), col(vecCol).as("v"),
+      .select(col("vec_id").as("id"), col("embedding").as("v"),
         graft.catalyst.GraftFunctions.hyperplaneBands(
-          col(vecCol), bands, planesPerBand, dim, seed).as("bks"))
+          col("embedding"), bands, planesPerBand, dim, seed).as("bks"))
       .transform(graft.Stage.mat)
     // candidates travel light: only (band, bits, id) shuffles; the wide
     // vectors re-attach to the surviving distinct pairs by key join
@@ -305,7 +298,6 @@ object Similarity {
     * bucket), not across 100 TB raw — see [[nearDupPairs]].
     */
   def cosineAllPairsBlocked(embeddings: DataFrame, threshold: Double,
-                            idCol: String = "vec_id", vecCol: String = "embedding",
                             blockTarget: Int = 4096): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -319,8 +311,8 @@ object Similarity {
     // per-element boxing — and the two collect_lists observe rows in the
     // same order (one aggregation pass), so ids[i] owns vs[i*dim..)
     val blocks = embeddings
-      .select(pmod(xxhash64(col(idCol)), lit(nBlocks)).cast("int").as("blk"),
-              col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+      .select(pmod(xxhash64(col("vec_id")), lit(nBlocks)).cast("int").as("blk"),
+              col("vec_id").cast("long").as("id"), col("embedding").as("v"))
       .groupBy(col("blk"))
       .agg(collect_list(col("id")).as("ids"),
            flatten(collect_list(col("v"))).as("vs"))
@@ -375,13 +367,13 @@ object Similarity {
     */
   private[graft] val LshCutoff = 0.7
 
-  /** Bands needed for P(miss a pair at `threshold`) ≤ `missTarget` with
-    * `planesPerBand`-plane AND-bands: P(miss) = (1 − p^r)^b with
+  /** Bands needed for P(miss a pair at `threshold`) ≤ 1e-9 with
+    * 4-plane AND-bands: P(miss) = (1 − p^r)^b with
     * p = 1 − arccos(t)/π (the recall formula in [[cosineNearDups]]).
     */
-  def bandsFor(threshold: Double, planesPerBand: Int, missTarget: Double = 1e-9): Int = {
+  def bandsFor(threshold: Double): Int = {
     val p = 1.0 - math.acos(threshold) / math.Pi
-    math.ceil(math.log(missTarget) / math.log1p(-math.pow(p, planesPerBand))).toInt
+    math.ceil(math.log(1e-9) / math.log1p(-math.pow(p, 4))).toInt
   }
 
   /** Near-duplicate pairs with threshold-aware algorithm dispatch:
@@ -391,15 +383,13 @@ object Similarity {
     * all-pairs-plus-overhead. Both verify with exact cosine, so results
     * are identical up to the LSH path's ≤ missTarget recall loss.
     */
-  def nearDupPairs(embeddings: DataFrame, threshold: Double, dim: Int,
-                   idCol: String = "vec_id", vecCol: String = "embedding",
-                   planesPerBand: Int = 4, missTarget: Double = 1e-9): DataFrame =
+  def nearDupPairs(embeddings: DataFrame, threshold: Double, dim: Int): DataFrame =
     if (threshold >= LshCutoff)
       cosineNearDups(embeddings, threshold,
-        bands = bandsFor(threshold, planesPerBand, missTarget),
-        planesPerBand = planesPerBand, dim = dim, idCol = idCol, vecCol = vecCol)
+        bands = bandsFor(threshold),
+        planesPerBand = 4, dim = dim)
     else
-      cosineAllPairsBlocked(embeddings, threshold, idCol, vecCol)
+      cosineAllPairsBlocked(embeddings, threshold)
 
   /** Bucketed approximate top-k: restrict the scan to the query's LSH
     * bucket, then brute-force within it. Trades recall for a ~2^nPlanes
@@ -431,49 +421,45 @@ object Similarity {
     }
   }
 
-  def lshTopK(embeddings: DataFrame, query: DataFrame, k: Int,
+  def lshTopK(embeddings: DataFrame, query: DataFrame,
               nPlanes: Int, dim: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding",
               probeHamming: Int = 0): DataFrame = {
-    val bucketed = embeddings.withColumn("bucket", lshBucket(col(vecCol), nPlanes, dim))
+    val bucketed = embeddings.withColumn("bucket", lshBucket(col("embedding"), nPlanes, dim))
     val masks = probeMasks(nPlanes, probeHamming)
     val qb = query.withColumn("qbucket", lshBucket(col("qvec"), nPlanes, dim))
       .withColumn("bucket",
         explode(array(masks.map(m => col("qbucket").bitwiseXOR(lit(m))): _*)))
       .drop("qbucket")
     bucketed.join(broadcast(qb), Seq("bucket"))
-      .withColumn("cos_sim", cosine(col(vecCol), col("qvec")))
-      .select(col(idCol), col("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
+      .withColumn("cos_sim", cosine(col("embedding"), col("qvec")))
+      .select(col("vec_id"), col("cos_sim"))
+      .orderBy(col("cos_sim").desc, col("vec_id"))
+      .limit(10)
   }
 
   /** Multi-query [[lshTopK]]: serve a whole BATCH of query vectors in
     * ONE corpus pass — the realistic ANN serving/eval shape (nobody
     * scans 100 TB per single query). The query set rides as a broadcast
-    * (bucket-expanded by the same Hamming probe masks), candidates are
+    * (bucket-expanded by the Hamming-1 probe masks of 4 planes over 64
+    * dims), candidates are
     * bucket-mates only, and the per-query top-k is a rank window
     * PARTITIONed BY the query id over the candidate set — bounded by
     * bucket sizes × queries, never corpus × queries.
     */
-  def lshTopKMulti(embeddings: DataFrame, queries: DataFrame, k: Int,
-                   nPlanes: Int, dim: Int,
-                   idCol: String = "vec_id", vecCol: String = "embedding",
-                   probeHamming: Int = 0,
-                   qidCol: String = "q_id", qvecCol: String = "qvec"): DataFrame = {
-    val bucketed = embeddings.withColumn("bucket", lshBucket(col(vecCol), nPlanes, dim))
-    val masks = probeMasks(nPlanes, probeHamming)
-    val qb = queries.withColumn("qbucket", lshBucket(col(qvecCol), nPlanes, dim))
+  def lshTopKMulti(embeddings: DataFrame, queries: DataFrame): DataFrame = {
+    val bucketed = embeddings.withColumn("bucket", lshBucket(col("embedding"), 4, 64))
+    val masks = probeMasks(4, 1)
+    val qb = queries.withColumn("qbucket", lshBucket(col("qvec"), 4, 64))
       .withColumn("bucket",
         explode(array(masks.map(m => col("qbucket").bitwiseXOR(lit(m))): _*)))
       .drop("qbucket")
     val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(qidCol)).orderBy(col("cos_sim").desc, col(idCol))
+      .partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("vec_id"))
     bucketed.join(broadcast(qb), Seq("bucket"))
-      .withColumn("cos_sim", cosine(col(vecCol), col(qvecCol)))
+      .withColumn("cos_sim", cosine(col("embedding"), col("qvec")))
       .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= k)
-      .select(col(qidCol), col(idCol), col("cos_sim"), col("rn"))
+      .filter(col("rn") <= 10)
+      .select(col("q_id"), col("vec_id"), col("cos_sim"), col("rn"))
   }
 
   /** Lloyd's k-means over an embedding column, fully relational and
@@ -492,15 +478,12 @@ object Similarity {
     *    — so both engines hold bit-identical round-6 centroids.
     *
     * Returns the final per-vector assignment (vec_id, centroid_id,
-    * cos_r). `iters` fixed small (default 2): each iteration is one
-    * corpus-wide agg + one k×dim-sized broadcast — at 100 TB the
-    * dominant cost is `iters` linear scans, the textbook distributed
-    * k-means shape.
+    * cos_r). Two Lloyd iterations: each is one corpus-wide agg + one
+    * k×dim-sized broadcast — at 100 TB the dominant cost is those
+    * linear scans, the textbook distributed k-means shape.
     */
-  def kmeansAssign(embeddings: DataFrame, k: Int, dim: Int, iters: Int = 2,
-                   idCol: String = "vec_id", vecCol: String = "embedding",
-                   salt: String = "kmeans"): DataFrame =
-    kmeansAssignFull(embeddings, k, dim, iters, idCol, vecCol, salt).drop("v")
+  def kmeansAssign(embeddings: DataFrame, k: Int, dim: Int): DataFrame =
+    kmeansAssignFull(embeddings, k, dim).drop("v")
 
   /** Expected cell size the cell-bounded pairwise passes budget for:
     * every within-cell all-pairs term is O(k · (n/k)²) = O(n²/k), so
@@ -534,12 +517,10 @@ object Similarity {
     * oracle's identical integer derivation; the two must only ever
     * change together.
     */
-  def cellCountFor(n: Long, targetCellSize: Long = CellTargetSize,
-                   kMin: Int = CellKMin): Int = {
+  def cellCountFor(n: Long, targetCellSize: Long = CellTargetSize): Int = {
     require(n >= 0, s"corpus size must be nonnegative: $n")
     require(targetCellSize > 0, s"target cell size must be positive: $targetCellSize")
-    require(kMin >= 1, s"minimum cell count must be >= 1: $kMin")
-    val k = math.max(kMin.toLong, (n + targetCellSize - 1) / targetCellSize)
+    val k = math.max(CellKMin.toLong, (n + targetCellSize - 1) / targetCellSize)
     require(k <= Int.MaxValue, s"cell count $k overflows Int — rescale targetCellSize")
     k.toInt
   }
@@ -559,12 +540,11 @@ object Similarity {
     * consciously re-budgets. Failing fast here beats silently planning
     * a cell-quadratic stage that a 100 TB run discovers as a hung task.
     */
-  def requireCellBounded(n: Long, k: Int,
-                         maxExpectedCellSize: Long = CellMaxExpectedSize): Unit = {
+  def requireCellBounded(n: Long, k: Int): Unit = {
     require(k >= 1, s"cell count must be >= 1: $k")
-    require(n <= maxExpectedCellSize * k.toLong,
+    require(n <= CellMaxExpectedSize * k.toLong,
       s"cell-bounded pairwise pass refused: n=$n over k=$k cells gives expected " +
-        s"cell size ${n / k} > $maxExpectedCellSize — derive k from " +
+        s"cell size ${n / k} > ${CellMaxExpectedSize} — derive k from " +
         s"Similarity.cellCountFor(n) (k=${cellCountFor(n)} here) or re-budget explicitly")
   }
 
@@ -592,11 +572,9 @@ object Similarity {
     * SimilaritySpec pins cached ≡ inline and the derive-once count.
     */
   def kmeansFitMemo(s: org.apache.spark.sql.SparkSession, dir: String,
-                    k: Int, dim: Int, iters: Int = 2,
-                    salt: String = "kmeans"): Seq[(Int, Seq[Double])] =
-    graft.Memo.value("kmeans_fit", dir, Seq("embeddings"), k, dim, iters, salt) {
-      val emb = graft.model.Tables(s, dir).embeddings
-      kmeansFit(emb.select(col("vec_id"), col("embedding").as("v")), k, dim, iters, salt)
+                    k: Int, dim: Int): Seq[(Int, Seq[Double])] =
+    graft.Memo.value("kmeans_fit", dir, Seq("embeddings"), k, dim, KmeansIters, KmeansSalt) {
+      kmeansFit(graft.model.Tables(s, dir).embeddings, k, dim)
     }
 
   /** DuckDB twin of [[kmeansFitMemo]] at its declared arguments (dim 64,
@@ -639,22 +617,25 @@ object Similarity {
 
   /** [[kmeansAssignFull]]'s final assignment projection from an
     * already-fit centroid table — a pure codegen'd corpus scan. */
-  def kmeansAssignWith(cents: Seq[(Int, Seq[Double])], embeddings: DataFrame,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val e = embeddings.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
+  def kmeansAssignWith(cents: Seq[(Int, Seq[Double])], embeddings: DataFrame): DataFrame = {
+    val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
     e.withColumn("m", kmeansBest(cents))
       .select(col("vec_id"), (-col("m.nid")).cast("int").as("centroid_id"),
         col("m.s").as("cos_r"), col("v"))
   }
 
+  /** Lloyd iterations and seed-hash salt of every k-means fit; both are
+    * components of the [[kmeansFitMemo]] key. */
+  private val KmeansIters = 2
+  private val KmeansSalt = "kmeans"
+
   /** The Lloyd fit shared by [[kmeansAssignFull]] and
-    * [[kmeansFitMemo]]: `e` must carry (vec_id, v).
+    * [[kmeansFitMemo]].
     */
-  private def kmeansFit(e: DataFrame, k: Int, dim: Int, iters: Int,
-                        salt: String): Seq[(Int, Seq[Double])] = {
-    val spark = e.sparkSession
+  private def kmeansFit(embeddings: DataFrame, k: Int, dim: Int): Seq[(Int, Seq[Double])] = {
+    val spark = embeddings.sparkSession
     import spark.implicits._
+    val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
     // Centroids live on the driver between iterations (k×dim doubles —
     // index-sized state, like ivfTrain's); assignment is then `greatest`
     // over literal centroids: a pure codegen'd projection, so the corpus
@@ -662,11 +643,11 @@ object Similarity {
     // map-side-combined aggregate.
     var cents: Seq[(Int, Seq[Double])] = e
       .withColumn("h", TextStats.portableHash64(
-        concat(lit(salt + ":"), col("vec_id").cast("string"))))
+        concat(lit(KmeansSalt + ":"), col("vec_id").cast("string"))))
       .orderBy(col("h"), col("vec_id")).limit(k)
       .select(col("v").cast("array<double>")).as[Seq[Double]].collect()
       .toSeq.zipWithIndex.map(_.swap)
-    for (_ <- 1 until iters) {
+    for (_ <- 1 until KmeansIters) {
       cents = e.withColumn("m", kmeansBest(cents))
         .select((-col("m.nid")).cast("int").as("cid"), col("v"))
         .groupBy(col("cid"))
@@ -684,20 +665,11 @@ object Similarity {
     * projection, keeping `v` is free, whereas re-attaching it afterwards
     * would cost a corpus-sized join on vec_id.
     */
-  private[text] def kmeansAssignFull(embeddings: DataFrame, k: Int, dim: Int, iters: Int = 2,
-                                     idCol: String = "vec_id", vecCol: String = "embedding",
-                                     salt: String = "kmeans"): DataFrame = {
-    val e = embeddings.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
-    val cents = kmeansFit(e, k, dim, iters, salt)
-    def best(cs: Seq[(Int, Seq[Double])]): Column = kmeansBest(cs)
-
-    e.withColumn("m", best(cents))
-      .select(col("vec_id"), (-col("m.nid")).cast("int").as("centroid_id"),
-        col("m.s").as("cos_r"), col("v"))
-  }
+  private[text] def kmeansAssignFull(embeddings: DataFrame, k: Int, dim: Int): DataFrame =
+    kmeansAssignWith(kmeansFit(embeddings, k, dim), embeddings)
 
   /** Embedding-space outlier scoring: cosine of every vector to the
-    * corpus centroid, flagged when below `threshold` — the cheap quality
+    * corpus centroid, flagged when below 0 — the cheap quality
     * filter that catches garbage embeddings (zero-ish vectors, encoder
     * failures, off-manifold points) before they pollute an ANN index or
     * a near-dup pass. The centroid is the per-dimension [[meanRound6]]
@@ -709,19 +681,18 @@ object Similarity {
     * state) → a one-row broadcast → one narrow scoring pass. The corpus
     * never shuffles and there is no driver state.
     */
-  def centroidOutliers(embeddings: DataFrame, dim: Int, threshold: Double = 0.0,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def centroidOutliers(embeddings: DataFrame, dim: Int): DataFrame = {
     val cent = embeddings
-      .agg(microsSumArray(dim, col(vecCol)).as("ms"), count(lit(1)).as("n"))
+      .agg(microsSumArray(dim, col("embedding")).as("ms"), count(lit(1)).as("n"))
       .select(microsMeanArray(col("ms"), col("n")).as("cvec"))
     embeddings.crossJoin(broadcast(cent))
-      .withColumn("cos_to_centroid", round(cosine(col(vecCol), col("cvec")), 6))
+      .withColumn("cos_to_centroid", round(cosine(col("embedding"), col("cvec")), 6))
       // an all-zero vector — the canonical garbage embedding — yields
       // cosine 0/0 = NaN, and `NaN < t` is FALSE under Spark's NaN
       // ordering, so without the isnan arm the exact rows this filter
       // exists to catch would pass it (review finding r6b)
-      .select(col(idCol).as("vec_id"), col("cos_to_centroid"),
-        (col("cos_to_centroid") < threshold || isnan(col("cos_to_centroid")))
+      .select(col("vec_id"), col("cos_to_centroid"),
+        (col("cos_to_centroid") < 0.0 || isnan(col("cos_to_centroid")))
           .as("is_outlier"))
   }
 
@@ -737,14 +708,13 @@ object Similarity {
     * state), a one-row global aggregate broadcast onto the label table
     * (label-count-sized, tiny) — the corpus never shuffles.
     */
-  def labelCentroids(embeddings: DataFrame, dim: Int,
-                     labelCol: String = "label", vecCol: String = "embedding"): DataFrame = {
-    val perLabel = embeddings.groupBy(col(labelCol).as("label"))
-      .agg(count(lit(1)).as("n_vecs"), microsSumArray(dim, col(vecCol)).as("ms"))
+  def labelCentroids(embeddings: DataFrame): DataFrame = {
+    val perLabel = embeddings.groupBy(col("label"))
+      .agg(count(lit(1)).as("n_vecs"), microsSumArray(64, col("embedding")).as("ms"))
       .select(col("label"), col("n_vecs"),
         microsMeanArray(col("ms"), col("n_vecs")).as("cvec"))
     val global = embeddings
-      .agg(microsSumArray(dim, col(vecCol)).as("ms"), count(lit(1)).as("n"))
+      .agg(microsSumArray(64, col("embedding")).as("ms"), count(lit(1)).as("n"))
       .select(microsMeanArray(col("ms"), col("n")).as("gvec"))
     perLabel.crossJoin(broadcast(global))
       .select(col("label"), col("n_vecs"),
@@ -798,8 +768,7 @@ object Similarity {
     * downstream columnar pruning can drop unused output dims at the
     * scan.
     */
-  def randomProjection(embeddings: DataFrame, dim: Int, outDim: Int = 16,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def randomProjection(embeddings: DataFrame, dim: Int, outDim: Int = 16): DataFrame = {
     // one native pass computes all outDim sums (exact long-micros
     // accumulation of the HALF_UP-rounded terms — bit-identical to the
     // DECIMAL(25,6) fold the oracle replays); whole-stage codegen's
@@ -809,18 +778,18 @@ object Similarity {
     // bug, and silently projecting whatever arrives would mask it
     // (review finding r6b — the parameter was previously unused).
     val proj = graft.catalyst.GraftFunctions
-      .rademacherProject(col(vecCol).cast("array<double>"), outDim)
+      .rademacherProject(col("embedding").cast("array<double>"), outDim)
     // the guard rides INSIDE the first output column (a projected-away
     // assert column would be pruned by the optimizer): width mismatch
     // raises, never silently projects
-    val guard = when(size(col(vecCol)) =!= dim,
+    val guard = when(size(col("embedding")) =!= dim,
       raise_error(concat(lit(s"randomProjection: expected dim $dim, got "),
-        size(col(vecCol)).cast("string"))))
+        size(col("embedding")).cast("string"))))
     val outCols = (0 until outDim).map { j =>
       val e = element_at(proj, j + 1)
       (if (j == 0) coalesce(guard.cast("double"), e) else e).as(f"p$j%02d")
     }
-    embeddings.select((col(idCol).as("vec_id") +: outCols): _*)
+    embeddings.select((col("vec_id") +: outCols): _*)
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -855,15 +824,14 @@ object Similarity {
     * the whole decision is oracle-replayable.
     */
   def semDedup(embeddings: DataFrame, k: Int, dim: Int, tau: Double,
-               idCol: String = "vec_id", vecCol: String = "embedding",
                fit: Option[Seq[(Int, Seq[Double])]] = None): DataFrame = {
     // the assignment is a pure projection, so the vector rides through
     // it for free — no corpus-sized re-attach join on vec_id.
     // `fit`: an already-fit centroid table ([[kmeansFitMemo]]) skips
     // the per-call Lloyd re-fit; None keeps the self-contained form
     // (ScaleSmoke measures that one).
-    val assigned = fit.map(kmeansAssignWith(_, embeddings, idCol, vecCol))
-      .getOrElse(kmeansAssignFull(embeddings, k, dim, idCol = idCol, vecCol = vecCol))
+    val assigned = fit.map(kmeansAssignWith(_, embeddings))
+      .getOrElse(kmeansAssignFull(embeddings, k, dim))
       .transform(graft.Stage.mat) // assignment feeds both pairwise sides + output
     val withVec = assigned.select(col("vec_id"), col("centroid_id"), col("v"))
     val nbrs = withVec.select(col("centroid_id"),
@@ -881,27 +849,26 @@ object Similarity {
         col("n_similar_smaller").isNull.as("is_kept"))
   }
 
-  def quantizeInt8(embeddings: DataFrame, dim: Int,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val v = col(vecCol).cast("array<double>")
+  def quantizeInt8(embeddings: DataFrame, dim: Int): DataFrame = {
+    val v = col("embedding").cast("array<double>")
     // per-element squared error in integer micros: round-6 then ×1e6 is
     // integer-valued, so the long sum is exact and order-independent
     // (the split-accumulator discipline, micro-sized)
     val mseMicros = aggregate(col("err"), lit(0L),
       (acc, x) => acc + round(round(x * x, 6) * 1000000.0, 0).cast("long"))
     embeddings
-      .select(col(idCol).as("vec_id"), v.as(vecCol))
-      .withColumn("amax", array_max(transform(col(vecCol), x => abs(x))))
+      .select(col("vec_id"), v.as("embedding"))
+      .withColumn("amax", array_max(transform(col("embedding"), x => abs(x))))
       // degenerate vectors (all-zero, or NaN-poisoned so amax is NaN)
       // keep their row with null quantization stats and a flag — a
       // per-vector transform whose output replaces the embedding store
       // must never silently lose ids (review finding r6b)
       .withColumn("quantizable", col("amax") > 0.0 && !isnan(col("amax")))
       .withColumn("scale", when(col("quantizable"), lit(127.0) / col("amax")))
-      .withColumn("q", when(col("quantizable"), transform(col(vecCol), x =>
+      .withColumn("q", when(col("quantizable"), transform(col("embedding"), x =>
         greatest(lit(-127), least(lit(127), round(x * col("scale"), 0).cast("int")))))
-        .otherwise(transform(col(vecCol), _ => lit(0))))
-      .withColumn("err", when(col("quantizable"), zip_with(col(vecCol), col("q"),
+        .otherwise(transform(col("embedding"), _ => lit(0))))
+      .withColumn("err", when(col("quantizable"), zip_with(col("embedding"), col("q"),
         (x, q) => q.cast("double") / col("scale") - x)))
       .select(col("vec_id"),
         array_join(col("q"), ",").as("q_str"),
@@ -957,9 +924,8 @@ object Similarity {
     * Returns (j, pc_m, pc_r): 1-based dimension index, the L∞-unit
     * eigendirection in integer micros, and its double rendering.
     */
-  def topPrincipalComponent(embeddings: DataFrame, dim: Int, iters: Int = 3,
-                            vecCol: String = "embedding"): DataFrame =
-    renderPc(powerIterate(centeredMicros(embeddings, dim, vecCol), dim, iters))
+  def topPrincipalComponent(embeddings: DataFrame, dim: Int, iters: Int = 3): DataFrame =
+    renderPc(powerIterate(centeredMicros(embeddings, dim), dim, iters))
 
   /** Top TWO principal components via DEFLATION: after PC1 converges,
     * each centered vector sheds its PC1 projection —
@@ -971,11 +937,10 @@ object Similarity {
     * (any real embedding corpus); the oracle replays whatever the
     * arithmetic produces either way. Output (comp, j, pc_m, pc_r).
     */
-  def topTwoPrincipalComponents(embeddings: DataFrame, dim: Int, iters: Int = 3,
-                                vecCol: String = "embedding"): DataFrame = {
+  def topTwoPrincipalComponents(embeddings: DataFrame, dim: Int): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 0)
-    val cvm = centeredMicros(embeddings, dim, vecCol)
-    val x1 = powerIterate(cvm, dim, iters)
+    val cvm = centeredMicros(embeddings, dim)
+    val x1 = powerIterate(cvm, dim, 3)
     // greatest(.,1): a zero-variance corpus gives an all-zero iterate
     // and xx = 0 — Spark's div-by-zero null and DuckDB's error would
     // diverge (the m-divisor guard, applied here too — r7 review)
@@ -994,7 +959,7 @@ object Similarity {
       .select(zip_with(col("cm"), col("xm"),
         (c, xj) => c - truncDiv(xj.cast(D) * col("srow"), col("xx")).cast("long"))
         .as("cm")))
-    val x2 = powerIterate(cvm2, dim, iters)
+    val x2 = powerIterate(cvm2, dim, 3)
     renderPc(x1).select(lit(1L).as("comp"), col("j"), col("pc_m"), col("pc_r"))
       .union(renderPc(x2).select(lit(2L).as("comp"), col("j"), col("pc_m"), col("pc_r")))
   }
@@ -1002,13 +967,13 @@ object Similarity {
   /** The centered integer-micros corpus (see [[topPrincipalComponent]]
     * arithmetic notes): one Stage.mat'd pass, exact both engines.
     */
-  private def centeredMicros(embeddings: DataFrame, dim: Int, vecCol: String): DataFrame = {
+  private def centeredMicros(embeddings: DataFrame, dim: Int): DataFrame = {
     // null vectors are excluded BEFORE the mean: sum() skips them but
     // count(lit(1)) would not, silently deflating mu and biasing every
     // downstream component toward the mean offset (r7 review)
     val vm = graft.Stage.mat(embeddings
-      .filter(col(vecCol).isNotNull)
-      .select(col(vecCol).cast("array<double>").as("v"))
+      .filter(col("embedding").isNotNull)
+      .select(col("embedding").cast("array<double>").as("v"))
       .select(transform(col("v"),
         x => floor(x * lit(1.0e6) + lit(0.5)).cast("long")).as("vm")))
     val mu = vm.agg(
@@ -1073,13 +1038,13 @@ object Similarity {
     * `//` floor on magnitudes). `src` is the centered-corpus CTE name,
     * `pfx` namespaces the per-iteration CTEs (PC2 reuse).
     */
-  def powerIterSql(i: Int, dim: Int, src: String = "cmt", pfx: String = ""): String = {
+  def powerIterSql(i: Int, src: String = "cmt", pfx: String = ""): String = {
     val prev = if (i == 1) s"${pfx}x0" else s"${pfx}x${i - 1}"
     s"""${pfx}s$i AS (SELECT c.rid, SUM(c.cm[r.j] * x.xm[r.j]) AS srow
-              FROM $src c, range(1, ${dim + 1}) r(j), $prev x
+              FROM $src c, range(1, 65) r(j), $prev x
               GROUP BY c.rid),
       ${pfx}y$i AS (SELECT r.j AS j, SUM(CAST(c.cm[r.j] AS HUGEINT) * s.srow) AS yj
-              FROM $src c JOIN ${pfx}s$i s USING (rid), range(1, ${dim + 1}) r(j)
+              FROM $src c JOIN ${pfx}s$i s USING (rid), range(1, 65) r(j)
               GROUP BY r.j),
       ${pfx}m$i AS (SELECT GREATEST(MAX(ABS(yj)), 1) AS m FROM ${pfx}y$i),
       ${pfx}x$i AS (SELECT list(CAST(CASE WHEN yj >= 0 THEN (ABS(yj) * 1000000) // m

@@ -62,14 +62,15 @@ object TextStats {
     "fr" -> Seq("le", "la", "de", "et", "est", "en", "un", "une", "que", "pour"))
 
   def langIdPredicted(text: Column): Column =
-    langIdPredictedWith(text, langProfiles)
+    langIdPredictedWith(tokens(lower(text)), langProfiles)
 
-  /** [[langIdPredicted]] over a caller-chosen profile set — q354's
-    * Fleiss raters are this predictor run on disjoint stopword halves.
+  /** [[langIdPredicted]] over a caller-chosen profile set, scoring an
+    * already-split lowercased token array `toks` — q354's Fleiss raters
+    * are this predictor run on disjoint stopword halves of one shared
+    * token column.
     */
-  def langIdPredictedWith(text: Column,
+  def langIdPredictedWith(toks: Column,
       profiles: Seq[(String, Seq[String])]): Column = {
-    val toks = tokens(lower(text))
     val scored = profiles.map { case (lang, words) =>
       struct(size(filter(toks, t => t.isin(words: _*))).as("score"), lit(lang).as("lang"))
     }
@@ -199,8 +200,8 @@ object TextStats {
   /** The matching DuckDB SQL for [[fingerprint]] (oracle authoring) —
     * one definition so the engine and every oracle move in lockstep.
     */
-  def fingerprintSql(expr: String): String =
-    portableHash64Sql(s"array_to_string(list_filter(regexp_split_to_array(lower($expr), '$wsClassSql+'), x -> x <> ''), ' ')")
+  def fingerprintSql: String =
+    portableHash64Sql(s"array_to_string(list_filter(regexp_split_to_array(lower(text), '$wsClassSql+'), x -> x <> ''), ' ')")
 
   /** Aggressive CCNet-style normalization fingerprint: lowercase, strip
     * digit runs, strip every non-letter character, collapse whitespace —
@@ -218,20 +219,20 @@ object TextStats {
         s"[^a-z$wsCharsSql]", "")), w => w =!= lit("")), " "))
 
   /** Winnowing fingerprints (Schleimer et al.): k-gram hashes → the
-    * minimum of each sliding window of `w` consecutive hashes, deduped.
+    * minimum of each sliding window of 4 consecutive hashes, deduped.
     * Guarantees any shared substring of length >= k + w - 1 produces a
     * shared fingerprint — the local-dedup/plagiarism primitive. Built on
     * the native shingle-hash pass; the windowed mins are array ops over
     * the (short) per-document hash array.
     */
-  def winnowingFingerprints(text: Column, k: Int = 3, w: Int = 4): Column = {
+  def winnowingFingerprints(text: Column): Column = {
     // position-ordered k-gram hashes (winnowing needs sequence order, so
     // sort the window mins only at the end for set semantics)
-    val grams = graft.catalyst.GraftFunctions.shingleHashesOrdered(text, k)
+    val grams = graft.catalyst.GraftFunctions.shingleHashesOrdered(text, 3)
     val n = size(grams)
     val mins = transform(
-      sequence(lit(1), greatest(n - (w - 1), lit(1))),
-      i => array_min(slice(grams, i, lit(w))))
+      sequence(lit(1), greatest(n - 3, lit(1))),
+      i => array_min(slice(grams, i, lit(4))))
     // zero-gram docs (empty/whitespace-only text) must yield [] — the
     // forced single window would otherwise emit array(null) (array_min
     // of an empty slice is null), leaking a null "fingerprint" that the
@@ -253,6 +254,6 @@ object TextStats {
     * remains the default scale path; this one buys cross-engine
     * verifiability for one md5 per gram.
     */
-  def winnowingFingerprintsPortable(text: Column, k: Int = 3, w: Int = 4): Column =
-    graft.catalyst.GraftFunctions.portableWinnow(text, k, w)
+  def winnowingFingerprintsPortable(text: Column): Column =
+    graft.catalyst.GraftFunctions.portableWinnow(text)
 }

@@ -24,14 +24,14 @@ object Vocab {
     * pass (pairs never materialize per document beyond the projection)
     * into one map-side-combined count keyed by the pair.
     */
-  def bpePairCounts(docs: DataFrame, textCol: String = "text"): DataFrame = {
+  def bpePairCounts(docs: DataFrame): DataFrame = {
     // tokenize in a standalone projection BEFORE the generator: Generate
     // does no common-subexpression elimination, so referencing the
     // tokenizer expression from inside the explode would re-run the
     // regex once per reference (measured 4× the whole query's cost)
     val t = col("toks")
     docs
-      .select(TextStats.bpeishTokens(lower(col(textCol))).as("toks"))
+      .select(TextStats.bpeishTokens(lower(col("text"))).as("toks"))
       .select(explode(
         when(size(t) < 2, array().cast("array<struct<a:string,b:string>>"))
           .otherwise(transform(sequence(lit(1), size(t) - 1),
@@ -77,10 +77,10 @@ object Vocab {
     * not RE2, so a word containing U+0085/U+2028/U+2029 (impossible
     * after the whitespace split here) would tokenize differently.
     */
-  def bpeLearnMerges(docs: DataFrame, nMerges: Int, textCol: String = "text"): DataFrame = {
+  def bpeLearnMerges(docs: DataFrame, nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    learnChain(wordHistSpaced(docs, textCol).select(col("w"), col("cnt")), nMerges)
+    learnChain(wordHistSpaced(docs).select(col("w"), col("cnt")), nMerges)
       ._2.toDF("merge_rank", "tok_a", "tok_b", "n")
   }
 
@@ -88,8 +88,8 @@ object Vocab {
     * BPE loop — `w` is the double-space sentinel form documented on
     * [[bpeLearnMerges]].
     */
-  private def wordHistSpaced(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(words(col(textCol))).as("word"))
+  private def wordHistSpaced(docs: DataFrame): DataFrame =
+    docs.select(explode(words(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .select(col("word"), concat(lit(" "),
         rtrim(regexp_replace(col("word"), "(.)", "$1  ")), lit(" ")).as("w"),
@@ -147,27 +147,26 @@ object Vocab {
     * word-keyed join + map-side-combined sum. The corpus is scanned
     * twice total (histogram + the final explode), both narrow.
     */
-  def bpeEncodeWordTokens(docs: DataFrame, nMerges: Int,
-                          textCol: String = "text"): DataFrame = {
-    val (wcN, _) = learnChain(wordHistSpaced(docs, textCol), nMerges)
+  def bpeEncodeWordTokens(docs: DataFrame, nMerges: Int): DataFrame = {
+    val (wcN, _) = learnChain(wordHistSpaced(docs), nMerges)
     wcN.select(col("word"),
       size(split(trim(col("w")), "  ")).cast("long").as("n_tok"))
   }
 
   /** CTE `hist(word, cnt)` of the BPE replays: the lowercased
-    * whitespace-token histogram of `src`. */
-  private def bpeHistSql(src: String): String = s"""hist AS (
+    * whitespace-token histogram of `documents`. */
+  private def bpeHistSql: String = s"""hist AS (
         SELECT w AS word, count(*) AS cnt FROM (
           SELECT unnest(list_filter(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+'),
                    x -> x <> '')) AS w
-          FROM $src) GROUP BY 1)"""
+          FROM documents) GROUP BY 1)"""
 
   /** The unrolled merges of the BPE replays: per merge i the pair counts
     * `p$i`, the (c desc, a, b) argmax `b$i` and the rewrite `w$i`, which
     * keeps the select-list prefix `carry` ("" to learn, "word, " to
     * encode). */
-  private def bpeMergeStepsSql(nMerges: Int, carry: String): String =
-    (1 to nMerges).map { i =>
+  private def bpeMergeStepsSql(carry: String): String =
+    (1 to 6).map { i =>
       val prev = s"w${i - 1}"
       s"""p$i AS (SELECT p.pr[1] AS a, p.pr[2] AS b, SUM(p.cnt) AS c FROM (
             SELECT unnest(list_transform(range(1, len(toks)),
@@ -184,13 +183,13 @@ object Vocab {
     * histogram, character spacing, weighted pair counts, (c desc, a, b)
     * argmax, and sentinel-padded literal replace, unrolled per merge.
     */
-  def bpeLearnSql(nMerges: Int, src: String = "documents"): String = {
-    val iters = bpeMergeStepsSql(nMerges, "")
-    val sel = (1 to nMerges).map(i =>
+  def bpeLearnSql: String = {
+    val iters = bpeMergeStepsSql("")
+    val sel = (1 to 6).map(i =>
       s"SELECT $i AS merge_rank, a AS tok_a, b AS tok_b, CAST(c AS BIGINT) AS n FROM b$i")
       .mkString("\n      UNION ALL ")
     s"""
-      WITH ${bpeHistSql(src)},
+      WITH ${bpeHistSql},
       w0 AS (SELECT ' ' || rtrim(regexp_replace(word, '(.)', '\\1  ', 'g')) || ' ' AS w, cnt
              FROM hist),
       $iters
@@ -204,20 +203,20 @@ object Vocab {
     * word-keyed join, and the chars-per-token micros — exactly the
     * [[bpeEncodeWordTokens]]-based declared query.
     */
-  def bpeEncodeSql(nMerges: Int, src: String = "documents"): String = {
-    val iters = bpeMergeStepsSql(nMerges, "word, ")
+  def bpeEncodeSql: String = {
+    val iters = bpeMergeStepsSql("word, ")
     s"""
-      WITH ${bpeHistSql(src)},
+      WITH ${bpeHistSql},
       w0 AS (SELECT word,
                ' ' || rtrim(regexp_replace(word, '(.)', '\\1  ', 'g')) || ' ' AS w, cnt
              FROM hist),
       $iters,
       enc AS (SELECT word, CAST(len(string_split(trim(w), '  ')) AS BIGINT) AS n_tok
-              FROM w$nMerges),
+              FROM w6),
       dw AS (SELECT doc_id,
                unnest(list_filter(regexp_split_to_array(lower(text), '${TextStats.wsClassSql}+'),
                  x -> x <> '')) AS word
-             FROM $src),
+             FROM documents),
       ag AS (SELECT doc_id, SUM(e.n_tok) AS n_bpe_tokens,
                CAST(count(*) AS BIGINT) AS n_words, SUM(len(dw.word)) AS n_word_chars
              FROM dw JOIN enc e USING (word) GROUP BY doc_id)
@@ -227,20 +226,20 @@ object Vocab {
              CAST((COALESCE(ag.n_word_chars, 0) * 1000000)
                   // greatest(COALESCE(ag.n_bpe_tokens, 0), 1) AS BIGINT)
                AS chars_per_token_micros
-      FROM $src d LEFT JOIN ag USING (doc_id) ORDER BY doc_id"""
+      FROM documents d LEFT JOIN ag USING (doc_id) ORDER BY doc_id"""
   }
 
   /** Top-`n` whitespace-token vocabulary by corpus frequency, with a
     * deterministic total order (count desc, then token) so the cut at
     * rank n is engine-portable.
     */
-  def topVocab(docs: DataFrame, n: Int, textCol: String = "text"): DataFrame =
-    docs.select(explode(words(col(textCol))).as("word"))
+  def topVocab(docs: DataFrame, n: Int): DataFrame =
+    docs.select(explode(words(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n_occurrences"))
       .orderBy(col("n_occurrences").desc, col("word"))
       .limit(n)
 
-  /** Zipf rank-frequency fit over the corpus' top-`n` vocabulary: the
+  /** Zipf rank-frequency fit over the corpus' top-100 vocabulary: the
     * least-squares slope/intercept of log(frequency) against log(rank) —
     * the corpus-health statistic (natural language sits near slope −1;
     * boilerplate-heavy or synthetic corpora drift off it). One row out.
@@ -255,16 +254,16 @@ object Vocab {
     * inputs, snapped to round-6 on output.
     *
     * Shape at scale: the word-count table is the only corpus-sized
-    * shuffle (map-side combined); the top-`n` cut is a bounded
-    * TakeOrdered; the regression runs over `n` rows.
+    * shuffle (map-side combined); the top-100 cut is a bounded
+    * TakeOrdered; the regression runs over 100 rows.
     */
-  def zipfSlope(docs: DataFrame, n: Int = 100, textCol: String = "text"): DataFrame = {
+  def zipfSlope(docs: DataFrame): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(25, 6)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("n_occurrences").desc, col("word"))
     // the window runs AFTER the top-n cut, so it sorts n rows, not the
     // vocabulary (no unpartitioned corpus window)
-    val pts = topVocab(docs, n, textCol)
+    val pts = topVocab(docs, 100)
       .withColumn("rank", row_number().over(w))
       .select(round(log(col("rank").cast("double")), 6).as("x"),
         round(log(col("n_occurrences").cast("double")), 6).as("y"))
@@ -286,7 +285,7 @@ object Vocab {
     * adjacent word pairs, PMI(w1,w2) = ln(P(w1,w2) / (P(w1)·P(w2)))
     * with P(w1,w2) = c12/N2 (bigram instances) and P(w) = cu/N1 (token
     * occurrences) — the classic collocation-extraction statistic
-    * (Church & Hanks 1990). `minCount` trims the rare-pair noise PMI is
+    * (Church & Hanks 1990). The floor of 5 co-occurrences trims the rare-pair noise PMI is
     * notoriously dominated by.
     *
     * Parity: all five inputs (c12, cu1, cu2, N1, N2) are exact
@@ -302,17 +301,16 @@ object Vocab {
     * (w1)/(w2) — Zipf skew on stopword keys is the q65 AQE-skew-join
     * argument. Totals ride along as one-row broadcasts.
     */
-  def pmiCollocations(docs: DataFrame, minCount: Long = 5,
-                      textCol: String = "text"): DataFrame = {
+  def pmiCollocations(docs: DataFrame): DataFrame = {
     // two corpus passes (unigram + bigram explodes); both totals derive
     // from the count tables instead of re-walking the corpus
-    val t = docs.select(words(col(textCol)).as("toks"))
+    val t = docs.select(words(col("text")).as("toks"))
     val inst = LangModel.bigramInstances(t)
     val uni = t.select(explode(col("toks")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cu"))
     val n1 = uni.agg(sum(col("cu")).as("n1"))
     val allPairs = inst.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-    val pairs = allPairs.filter(col("c12") >= minCount)
+    val pairs = allPairs.filter(col("c12") >= 5L)
     val n2 = allPairs.agg(sum(col("c12")).as("n2"))
     pairs
       .join(uni.select(col("w").as("w1"), col("cu").as("cu1")), Seq("w1"))
@@ -345,8 +343,7 @@ object Vocab {
     * corpus-sized crosses a shuffle except the token explode's own
     * aggregation.
     */
-  def sourceTokenKL(docs: DataFrame, srcCol: String = "source",
-                    textCol: String = "text"): DataFrame = {
+  def sourceTokenKL(docs: DataFrame): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(30, 9)
     // ONE corpus tokenize/explode pass; every other table derives from
     // the (source, word) count matrix. The four consumers share the
@@ -354,7 +351,7 @@ object Vocab {
     // explode's shuffle once — no localCheckpoint needed (measured: the
     // eager checkpoint costs more than it saves here)
     val bySrc = docs
-      .select(col(srcCol).as("source"), explode(words(col(textCol))).as("w"))
+      .select(col("source"), explode(words(col("text"))).as("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("cs"))
     val srcTot = bySrc.groupBy(col("source")).agg(sum(col("cs")).as("ns"))
     val corp = bySrc.groupBy(col("w")).agg(sum(col("cs")).as("cw"))
@@ -395,12 +392,11 @@ object Vocab {
     * the word; the rank window runs over the scored vocab table, never
     * the corpus (the q105 discipline).
     */
-  def distinctiveTerms(docs: DataFrame, topK: Int = 3,
-                       srcCol: String = "source", textCol: String = "text"): DataFrame = {
+  def distinctiveTerms(docs: DataFrame): DataFrame = {
     // one corpus explode; totals derive from the count matrix (the
     // sourceTokenKL discipline)
     val bySrc = docs
-      .select(col(srcCol).as("source"), explode(words(col(textCol))).as("w"))
+      .select(col("source"), explode(words(col("text"))).as("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("ysw"))
     val srcTot = bySrc.groupBy(col("source")).agg(sum(col("ysw")).as("ns"))
     val corp = bySrc.groupBy(col("w")).agg(sum(col("ysw")).as("cw"))
@@ -422,7 +418,7 @@ object Vocab {
     val byZ = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("z").desc, col("w"))
     scored.withColumn("rank", row_number().over(byZ).cast("long"))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= 3)
       .select(col("source"), col("w"), col("ysw"), col("z").as("z_r"), col("rank"))
   }
 
@@ -432,11 +428,10 @@ object Vocab {
     * the corpus side is one explode → broadcast left-join → per-doc
     * count aggregate (map-side combined on doc_id).
     */
-  def oovStats(docs: DataFrame, vocabSize: Int,
-               idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val vocab = topVocab(docs, vocabSize, textCol).select(col("word"), lit(1).as("__in_vocab"))
+  def oovStats(docs: DataFrame, vocabSize: Int): DataFrame = {
+    val vocab = topVocab(docs, vocabSize).select(col("word"), lit(1).as("__in_vocab"))
     docs
-      .select(col(idCol).as("doc_id"), explode(words(col(textCol))).as("word"))
+      .select(col("doc_id"), explode(words(col("text"))).as("word"))
       .join(broadcast(vocab), Seq("word"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),

@@ -20,7 +20,7 @@ class AuditOpsSpec extends SparkSpec {
       (1L, 10L, "O", 100.5, Timestamp.valueOf("2024-01-01 00:00:00"), "1-URGENT"),
       (2L, null, "F", 200.25, Timestamp.valueOf("2024-02-01 00:00:00"), "2-HIGH"),
       (2L, 20L, "P", null, null, null)))
-    val out = SparkEntry.allQueries("q169_profile")(spark, dir).collect()
+    val out = SparkEntry.queries("q169_profile")(spark, dir).collect()
       .map(r => r.getAs[String]("col_name") -> (r.getAs[Long]("n_rows"),
         r.getAs[Long]("n_null"), r.getAs[Long]("n_distinct"),
         Option(r.getAs[java.lang.Long]("min_num_micros")).map(_.toLong),
@@ -53,7 +53,7 @@ class AuditOpsSpec extends SparkSpec {
     Seq((10L, "Customer#10", 1, 0.0, "A"), (20L, "Customer#20", 1, 0.0, "A"))
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    val out = SparkEntry.allQueries("q170_constraints")(spark, dir).collect()
+    val out = SparkEntry.queries("q170_constraints")(spark, dir).collect()
       .map(r => r.getAs[String]("rule") -> (r.getAs[Long]("n_checked"),
         r.getAs[Long]("n_violations"), r.getAs[Boolean]("passed"))).toMap
     assert(out("orderkey_unique") === ((5L, 1L, false)))
@@ -76,7 +76,7 @@ class AuditOpsSpec extends SparkSpec {
     rows.map { case (k, n, b, s) => (k, s"Customer#$k", n, b, s) }
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    val out = SparkEntry.allQueries("q210_k_anonymity")(spark, dir).collect()
+    val out = SparkEntry.queries("q210_k_anonymity")(spark, dir).collect()
       .map(r => (r.getAs[String]("kind"), r.getAs[Long]("k"),
         r.getAs[Long]("n_groups"), r.getAs[Long]("n_rows")))
     assert(out.toSeq === Seq(
@@ -97,7 +97,7 @@ class AuditOpsSpec extends SparkSpec {
       (5L, "c5", 2, 2500.0, "X"))
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    val out = SparkEntry.allQueries("q350_t_closeness")(spark, dir).collect()
+    val out = SparkEntry.queries("q350_t_closeness")(spark, dir).collect()
       .map(r => (r.getAs[Long]("nk"), r.getAs[String]("seg"),
         r.getAs[Long]("n_rows"), r.getAs[Long]("t_ppm")))
     assert(out.toSeq === Seq((1L, "X", 2L, 300000L), (2L, "X", 3L, 200000L),

@@ -73,7 +73,7 @@ class BucketingSpec extends SparkSpec {
     // defining properties asserted here
     val grid = (for (x <- 0 until 16; y <- 0 until 16) yield (x.toLong, y.toLong))
       .toDF("hx0", "hy0").selectExpr("hx0", "hy0", "CAST(0 AS BIGINT) AS hd0")
-    val d = graft.analytics.ScaleOps.hilbertLevelExprs(16)
+    val d = graft.analytics.ScaleOps.hilbertLevelExprs
       .foldLeft(grid) { case (df, exprs) => df.selectExpr(("*" +: exprs): _*) }
       .selectExpr("hx0 AS x", "hy0 AS y", "hd4 AS d")
       .collect().map(r => r.getLong(2) -> (r.getLong(0), r.getLong(1))).toMap

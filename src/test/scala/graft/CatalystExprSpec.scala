@@ -132,7 +132,7 @@ class CatalystExprSpec extends SparkSpec {
     // fingerprint IS the gram hash
     val words = Seq("alpha", "bravo-7", "ünïcode")
     val native = words.toDF("t")
-      .select(GraftFunctions.portableWinnow(col("t"), 3, 4).as("f"))
+      .select(GraftFunctions.portableWinnow(col("t")).as("f"))
       .as[Seq[Long]].collect().map(_.head)
     val sqlForm = words.toDF("t")
       .select(expr("cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)"))
@@ -143,7 +143,7 @@ class CatalystExprSpec extends SparkSpec {
   test("portable_winnow: window/short-doc semantics and codegen/interpreted agreement") {
     val texts = Seq("a b c d e f g h i", "one two", "", "   ", "x")
     val viaDf = texts.toDF("t")
-      .select(GraftFunctions.portableWinnow(col("t"), 3, 4)).as[Seq[Long]].collect()
+      .select(GraftFunctions.portableWinnow(col("t"))).as[Seq[Long]].collect()
     val direct = texts.map(t => graft.catalyst.PortableWinnow
       .compute(org.apache.spark.unsafe.types.UTF8String.fromString(t), 3, 4)
       .toLongArray().toSeq)

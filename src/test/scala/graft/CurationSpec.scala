@@ -67,13 +67,13 @@ class CurationSpec extends SparkSpec {
 
   test("per-group cap keeps exactly k per group, deterministically") {
     val df = (0L until 300L).map(i => (i, s"g${i % 3}")).toDF("doc_id", "source")
-    val kept = Sampling.perGroupCap(df, "source", k = 20)
+    val kept = Sampling.perGroupCap(df, k = 20)
     val counts = kept.groupBy("source").count().as[(String, Long)].collect().toMap
     assert(counts.values.toSet === Set(20L))
     assert(kept.agg(max("cap_rank")).as[Long].head() === 20L)
     // hash-ordered, not rand(): identical on re-evaluation
     val ids1 = kept.select("doc_id").as[Long].collect().sorted
-    val ids2 = Sampling.perGroupCap(df, "source", k = 20)
+    val ids2 = Sampling.perGroupCap(df, k = 20)
       .select("doc_id").as[Long].collect().sorted
     assert(ids1 === ids2)
   }
@@ -167,7 +167,7 @@ class CurationSpec extends SparkSpec {
     val rows = (1 to 100).map(i => (i.toLong, "rare")) ++
       (101 to 500).map(i => (i.toLong, "big"))
     val df = rows.toDF("doc_id", "lang")
-    val kept = Sampling.temperatureResample(df, "lang", "doc_id", temperature = 2.0)
+    val kept = Sampling.temperatureResample(df)
     val ppm = kept.select("lang", "keep_ppm").distinct()
       .as[(String, Long)].collect().toMap
     assert(ppm("rare") === 1000000L)   // (100/100)^-0.5 = 1
@@ -214,7 +214,7 @@ class CurationSpec extends SparkSpec {
       (2L, s"v1 v2 v3 $shared"),            // 12 tokens, 9 covered
       (3L, (1 to 12).map(i => s"w$i").mkString(" ")) // no shared 8-gram
     ).toDF("doc_id", "text")
-    val out = graft.text.Dedup.dupSpanCoverage(docs, n = 8)
+    val out = graft.text.Dedup.dupSpanCoverage(docs)
       .select("doc_id", "n_dup_shingles", "covered_tokens").as[(Long, Long, Long)]
       .collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(out(1L) === ((2L, 9L)), s"doc1: ${out(1L)}")  // 2 shingles, 9-token union
@@ -240,7 +240,7 @@ class CurationSpec extends SparkSpec {
 
   test("corpus report: dup rate counts repeated fingerprints, rates stay in [0,1]") {
     val sfDir = "/root/testdata/sf0.001"
-    val report = graft.SparkEntry.allQueries("q68_corpus_report")(spark, sfDir)
+    val report = graft.SparkEntry.queries("q68_corpus_report")(spark, sfDir)
     val rows = report.select("n_docs", "quality_pass_rate", "exact_dup_rate", "mean_uniq_ratio")
       .as[(Long, Double, Double, Double)].collect()
     assert(rows.nonEmpty)
@@ -313,7 +313,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("priority estimator: DLT threshold estimate is total-consistent and deterministic") {
-    val r = SparkEntry.allQueries("q262_priority_estimator")(spark, "/root/testdata/sf0.001")
+    val r = SparkEntry.queries("q262_priority_estimator")(spark, "/root/testdata/sf0.001")
       .collect().head
     assert(r.getAs[Long]("n_sample") === 100L)
     val est = r.getAs[Long]("est_total_micros")
@@ -382,7 +382,7 @@ class CurationSpec extends SparkSpec {
     val vecs = Seq(
       (0L, Seq(1f, 0f)), (1L, Seq(0f, 1f)), (2L, Seq(1f, 1f)), (3L, Seq(-1f, -1f))
     ).toDF("vec_id", "embedding")
-    val out = graft.text.Similarity.centroidOutliers(vecs, dim = 2, threshold = 0.0)
+    val out = graft.text.Similarity.centroidOutliers(vecs, dim = 2)
       .as[(Long, Double, Boolean)].collect().map(r => r._1 -> r).toMap
     // centroid = (0.25, 0.25): the anti-diagonal vector scores cos = −1
     assert(out(3L)._2 === -1.0 && out(3L)._3)
@@ -409,7 +409,7 @@ class CurationSpec extends SparkSpec {
     "and the diameterHint switch escalates to it") {
     val n = 2000
     val chain = (0 until n - 1).map(i => (i.toLong, (i + 1).toLong)).toDF("id_a", "id_b")
-    val (df, rounds) = Dedup.alternatingWithRounds(chain, "id_a", "id_b", maxRounds = 50)
+    val (df, rounds) = Dedup.alternatingWithRounds(chain)
     val cc = df.as[(Long, Long, Long, Boolean)].collect()
     assert(cc.length === n)
     assert(cc.forall(_._2 === 0L), "every chain node labels to the component min")
@@ -547,7 +547,7 @@ class CurationSpec extends SparkSpec {
       (8 to 10).map(i => (i.toLong, s"doc $i", "fr", "A", 5L)))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q173_stratified_kfold")(spark, dir).collect()
+    val out = SparkEntry.queries("q173_stratified_kfold")(spark, dir).collect()
       .map(r => (r.getAs[String]("lang"), r.getAs[Long]("fold"),
         r.getAs[Long]("n_docs"), r.getAs[Boolean]("balanced")))
     val en = out.filter(_._1 == "en")
@@ -569,7 +569,7 @@ class CurationSpec extends SparkSpec {
       (5L, "e", "en", "A", 50L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q181_kfold_cv")(spark, dir).collect()
+    val out = SparkEntry.queries("q181_kfold_cv")(spark, dir).collect()
       .map(r => (r.getAs[Long]("fold"), r.getAs[Long]("n_eval"),
         r.getAs[Long]("mae_micros")))
     val folds = out.filter(_._1 < 5)
@@ -586,14 +586,14 @@ class CurationSpec extends SparkSpec {
     (1 to 8).map(i => (i.toLong, "same text here", "en", "A", 14L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = SparkEntry.allQueries("q187_ess")(spark, dir).collect().head
+    val r = SparkEntry.queries("q187_ess")(spark, dir).collect().head
     assert(r.getAs[Long]("n_docs") === 8L)
     assert(r.getAs[Double]("ess_r") === 8.0)
     assert(r.getAs[Double]("ess_frac_r") === 1.0)
   }
 
   test("density clusters: DBSCAN partition invariants hold on the fixture corpus") {
-    val rows = SparkEntry.allQueries("q258_density_clusters")(spark, "/root/testdata/sf0.001")
+    val rows = SparkEntry.queries("q258_density_clusters")(spark, "/root/testdata/sf0.001")
       .collect()
       .map(r => (r.getAs[Long]("cluster_id"), r.getAs[Long]("n_core"),
         r.getAs[Long]("n_border"), r.getAs[Long]("n_points")))
@@ -617,7 +617,7 @@ class CurationSpec extends SparkSpec {
       .map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q284_good_turing")(spark, dir).collect()
+    val out = SparkEntry.queries("q284_good_turing")(spark, dir).collect()
       .map(r => (r.getAs[Long]("r"), r.getAs[Long]("n_r"),
         r.getAs[Long]("n_r_next"), r.getAs[Long]("r_star_micros")))
     assert(out.toSeq === Seq(
@@ -643,7 +643,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("Hill estimator: k pins at 64 and the exponent is positive") {
-    val r = SparkEntry.allQueries("q292_hill_tail_index")(
+    val r = SparkEntry.queries("q292_hill_tail_index")(
       spark, "/root/testdata/sf0.001").collect().head
     assert(r.getAs[Long]("k") === 64L)
     assert(r.getAs[Long]("x_ref") >= 1L)
@@ -663,7 +663,7 @@ class CurationSpec extends SparkSpec {
       (3L, "gamma", "fr", "B", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q334_dedup_bias_audit")(spark, dir).collect()
+    val out = SparkEntry.queries("q334_dedup_bias_audit")(spark, dir).collect()
       .map(r => (r.getAs[String]("cohort"), r.getAs[String]("lang"),
         r.getAs[Long]("n"), r.getAs[Long]("share_ppm"),
         r.getAs[Long]("mean_chars_micros")))
@@ -684,7 +684,7 @@ class CurationSpec extends SparkSpec {
       (3L, "a b c d e", "en", "S", 9L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q344_ppl_filter_bias")(spark, dir).collect()
+    val out = SparkEntry.queries("q344_ppl_filter_bias")(spark, dir).collect()
       .map(r => (r.getAs[String]("cohort"), r.getAs[String]("source"),
         r.getAs[Long]("n"), r.getAs[Long]("share_ppm")))
     assert(out.toSeq === Seq(("high_ppl", "S", 1L, 1000000L),
@@ -701,7 +701,7 @@ class CurationSpec extends SparkSpec {
       (3L, "b b b c", "en", "S", 7L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q357_ql_dirichlet")(spark, dir).collect()
+    val out = SparkEntry.queries("q357_ql_dirichlet")(spark, dir).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("dl"),
         r.getAs[Long]("score_nanos")))
     def l9(x: Long) = math.round(math.log(x.toDouble) * 1e9)

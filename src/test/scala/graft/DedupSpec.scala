@@ -209,7 +209,7 @@ class DedupSpec extends SparkSpec {
       (2L, s"$boiler\nanother doc body"),
       (3L, s"totally novel content\n$boiler"),
       (4L, boiler)).toDF("doc_id", "text")            // all-boilerplate doc
-    val out = Dedup.lineLevelDedup(corpus, maxOccurrences = 1)
+    val out = Dedup.lineLevelDedup(corpus)
       .orderBy("doc_id").as[(Long, String)].collect()
     assert(out === Array(
       (1L, "unique first line\nunique third line"),
@@ -271,7 +271,7 @@ class DedupSpec extends SparkSpec {
 
   test("shingles: short documents yield a single whole-text shingle") {
     val sh = Seq((0L, "two words")).toDF("doc_id", "text")
-      .select(Dedup.shingles(col("text"), 3).as("s")).as[Seq[String]].head()
+      .select(Dedup.shingles(col("text")).as("s")).as[Seq[String]].head()
     assert(sh === Seq("two words"))
   }
 }

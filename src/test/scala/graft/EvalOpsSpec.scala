@@ -44,7 +44,7 @@ class EvalOpsSpec extends SparkSpec {
     // x=(1,1,2) y=(1,2,3): ex=(-1,-1,2), ey=(-2,0,2)
     // sxy=6 sxx=6 syy=8 → rho2 = 36e6 DIV 48 = 750000, sign +
     val df = Seq(("g", 1L, 1L), ("g", 1L, 2L), ("g", 2L, 3L)).toDF("g", "x", "y")
-    val r = EvalOps.spearmanMicros(df, "g", "x", "y").collect().head
+    val r = EvalOps.spearmanMicros(df, "g").collect().head
     assert(r.getAs[Long]("sum_ex") === 0L) // centering certificate
     assert(r.getAs[Long]("sum_ey") === 0L)
     assert(r.getAs[Long]("rho_sign") === 1L)
@@ -53,11 +53,11 @@ class EvalOpsSpec extends SparkSpec {
 
   test("spearman is 1 for any monotone map and -1 reversed") {
     val up = Seq(("g", 1L, 1L), ("g", 2L, 4L), ("g", 3L, 9L)).toDF("g", "x", "y")
-    val ru = EvalOps.spearmanMicros(up, "g", "x", "y").collect().head
+    val ru = EvalOps.spearmanMicros(up, "g").collect().head
     assert(ru.getAs[Long]("rho_sign") === 1L)
     assert(ru.getAs[Long]("rho2_micros") === 1000000L)
     val dn = Seq(("g", 1L, 9L), ("g", 2L, 4L), ("g", 3L, 1L)).toDF("g", "x", "y")
-    val rd = EvalOps.spearmanMicros(dn, "g", "x", "y").collect().head
+    val rd = EvalOps.spearmanMicros(dn, "g").collect().head
     assert(rd.getAs[Long]("rho_sign") === -1L)
     assert(rd.getAs[Long]("rho2_micros") === 1000000L)
   }
@@ -80,7 +80,7 @@ class EvalOpsSpec extends SparkSpec {
     // klo = ceil(1) = 1 → lo = 1; khi = ceil(9) = 9 → hi = 9
     // winsorized sum = 55 - 10 + 9 = 54; trimmed = mean(1..9) = 5
     val df = (1L to 10L).map(("g", _)).toDF("g", "x")
-    val r = EvalOps.winsorizedMeans(df, "g", "x", pLo = 10, pHi = 90).collect().head
+    val r = EvalOps.winsorizedMeans(df, "g").collect().head
     assert(r.getAs[Long]("lo") === 1L)
     assert(r.getAs[Long]("hi") === 9L)
     assert(r.getAs[Long]("wins_mean_micros") === 5400000L)
@@ -111,7 +111,7 @@ class EvalOpsSpec extends SparkSpec {
     val emb = Seq(
       (1L, Array(1f, 0f), 7), (2L, Array(2f, 0f), 9), (3L, Array(0.9f, 0.1f), 7)
     ).toDF("vec_id", "embedding", "label")
-    val out = EvalOps.retrievalEval(emb, qLo = 1L, qHi = 1L, k = 10)
+    val out = EvalOps.retrievalEval(emb, qHi = 1L)
       .orderBy("q_id").collect()
     val per = out.find(_.getAs[Long]("q_id") == 1L).get
     assert(per.getAs[Long]("first_hit_rank") === 2L)
@@ -126,7 +126,7 @@ class EvalOpsSpec extends SparkSpec {
     val emb = Seq(
       (1L, Array(1f, 0f), 7), (2L, Array(1f, 0f), 9), (3L, Array(0f, 1f), 9)
     ).toDF("vec_id", "embedding", "label")
-    val per = EvalOps.retrievalEval(emb, 1L, 1L, 10)
+    val per = EvalOps.retrievalEval(emb, 1L)
       .filter(col("q_id") === 1L).collect().head
     assert(per.getAs[Long]("first_hit_rank") === 0L)
     assert(per.getAs[Long]("rr_micros") === 0L)
@@ -135,13 +135,13 @@ class EvalOpsSpec extends SparkSpec {
   test("z-interleave: hand-computed bit placements and 8x8 bijectivity") {
     // z(3, 5): x bits {0,1} → z {0,2} = 5; y bits {0,2} → z {1,5} = 34
     val df = Seq((3L, 5L), (1L, 0L), (0L, 1L)).toDF("x", "y")
-    val z = df.selectExpr(s"${EvalOps.zInterleave16Sql("x", "y")} AS z")
+    val z = df.selectExpr(s"${EvalOps.zInterleave16Sql} AS z")
       .collect().map(_.getLong(0)).toSeq
     assert(z === Seq(39L, 1L, 2L))
     // the interleave is a bijection on the 8x8 grid → 64 distinct
     // values covering exactly 0..63
     val grid = (for { x <- 0L to 7L; y <- 0L to 7L } yield (x, y)).toDF("x", "y")
-    val zs = grid.selectExpr(s"${EvalOps.zInterleave16Sql("x", "y")} AS z")
+    val zs = grid.selectExpr(s"${EvalOps.zInterleave16Sql} AS z")
       .collect().map(_.getLong(0)).toSet
     assert(zs === (0L to 63L).toSet)
   }
@@ -151,7 +151,7 @@ class EvalOpsSpec extends SparkSpec {
     // p50: k=2 → 1; p90: k=ceil(3.6)=4 → 5; p99: k=4 → 5
     // ideal = ceil(8/32) = 1 → salt = 5; top share = 625000 ppm
     val rows = (Seq.fill(5)(1L) ++ Seq(2L, 3L, 4L)).toDF("user_id")
-    val r = EvalOps.skewReport(rows, "user_id").collect().head
+    val r = EvalOps.skewReport(rows).collect().head
     assert(r.getAs[Long]("n_rows") === 8L)
     assert(r.getAs[Long]("n_keys") === 4L)
     assert(r.getAs[Long]("max_c") === 5L)
@@ -173,7 +173,7 @@ class EvalOpsSpec extends SparkSpec {
     ).toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
       "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = SparkEntry.allQueries("q160_rfm_features")(spark, dir)
+    val out = SparkEntry.queries("q160_rfm_features")(spark, dir)
       .collect().map(r => r.getAs[Long]("o_custkey") ->
         (r.getAs[Long]("recency_days"), r.getAs[Long]("frequency"),
           r.getAs[Long]("monetary_micros"), r.getAs[Long]("rfm_code"))).toMap
@@ -190,7 +190,7 @@ class EvalOpsSpec extends SparkSpec {
       (3L, "a b c", "en", "B", 5L), (4L, "a b c d", "en", "B", 7L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q161_quantile_norm")(spark, dir)
+    val out = SparkEntry.queries("q161_quantile_norm")(spark, dir)
       .collect().map(r => r.getAs[String]("source") ->
         (r.getAs[Long]("mean_before_micros"), r.getAs[Long]("mean_after_micros"))).toMap
     // A=[1,2] ranks 1,2 of 2 → corpus order stats at k=2,4 → [2,4];
@@ -203,7 +203,7 @@ class EvalOpsSpec extends SparkSpec {
     // null-feature rows: spearman/winsorize must not throw; benford
     // skips nulls and non-positives by contract
     val r = EvalOps.winsorizedMeans(
-      Seq(("g", Option(5L)), ("g", Option.empty[Long])).toDF("g", "x"), "g", "x")
+      Seq(("g", Option(5L)), ("g", Option.empty[Long])).toDF("g", "x"), "g")
       .collect().head
     assert(r.getAs[Long]("n") === 1L)
     val b = EvalOps.benfordAudit(
@@ -230,7 +230,7 @@ class EvalOpsSpec extends SparkSpec {
     (cal ++ tst ++ tiny)
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q172_conformal")(spark, dir).collect()
+    val out = SparkEntry.queries("q172_conformal")(spark, dir).collect()
     assert(out.length === 1)
     val r = out.head
     assert(r.getAs[String]("et") === "view")
@@ -255,7 +255,7 @@ class EvalOpsSpec extends SparkSpec {
       (24L, Array(0.0f, 1.0f), 0)
     ).toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val out = SparkEntry.allQueries("q180_ndcg")(spark, dir).collect()
+    val out = SparkEntry.queries("q180_ndcg")(spark, dir).collect()
       .map(r => r.getAs[Long]("q_id") -> (r.getAs[Long]("dcg_nanos"),
         r.getAs[Long]("idcg_nanos"), r.getAs[Long]("ndcg_ppm"))).toMap
     assert(out(1L) === ((1500000000L, 1630929754L, 919720L)))
@@ -272,7 +272,7 @@ class EvalOpsSpec extends SparkSpec {
       (5L, "the the xx", "fr", "A", 10L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q190_isotonic")(spark, dir).collect()
+    val out = SparkEntry.queries("q190_isotonic")(spark, dir).collect()
       .map(r => (r.getAs[Long]("bin"), r.getAs[Long]("rate_ppm"),
         r.getAs[Long]("iso_ppm"), r.getAs[Boolean]("monotone_ok")))
     assert(out.toSeq === Seq(
@@ -313,7 +313,7 @@ class EvalOpsSpec extends SparkSpec {
       (7L, Seq(0.05f, 0.95f), 1), (8L, Seq(0.15f, 0.85f), 1))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val out = SparkEntry.allQueries("q230_label_noise")(spark, dir).collect()
+    val out = SparkEntry.queries("q230_label_noise")(spark, dir).collect()
       .map(r => r.getAs[Long]("label") -> (r.getAs[Long]("n_points"),
         r.getAs[Long]("n_noisy"))).toMap
     assert(out(0L) === ((4L, 1L)), "exactly the planted point is noisy")
@@ -331,7 +331,7 @@ class EvalOpsSpec extends SparkSpec {
       (2L, Seq(1.0f, 0.0f), 0), (3L, Seq(0.0f, 1.0f), 1))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val out = SparkEntry.allQueries("q235_mmr_rerank")(spark, dir).collect()
+    val out = SparkEntry.queries("q235_mmr_rerank")(spark, dir).collect()
       .map(r => (r.getAs[Long]("step"), r.getAs[Long]("vec_id"),
         r.getAs[Long]("rel_micros"), r.getAs[Long]("mmr_score_micros")))
     assert(out.toSeq === Seq(
@@ -379,7 +379,7 @@ class EvalOpsSpec extends SparkSpec {
       .map { case (id, t, nc) => (id, t, "en", "src", nc) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = SparkEntry.allQueries("q270_krippendorff")(spark, dir).collect().head
+    val r = SparkEntry.queries("q270_krippendorff")(spark, dir).collect().head
     assert((r.getAs[Long]("n_units"), r.getAs[Long]("n0"), r.getAs[Long]("n1"),
       r.getAs[Long]("n_disagree"), r.getAs[Long]("d_o_ppm"),
       r.getAs[Long]("d_e_ppm"), r.getAs[Long]("alpha_micros")) ===
@@ -394,7 +394,7 @@ class EvalOpsSpec extends SparkSpec {
     Seq((1L, Array(0f, 0f), 0), (2L, Array(0.5f, 0f), 0), (3L, Array(0f, 0.5f), 1))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val out = SparkEntry.allQueries("q272_mahalanobis_outliers")(spark, dir)
+    val out = SparkEntry.queries("q272_mahalanobis_outliers")(spark, dir)
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("score_ppm")))
     assert(out.toSeq === Seq((2L, 2500000L), (3L, 2500000L), (1L, 1000000L)))
   }
@@ -411,7 +411,7 @@ class EvalOpsSpec extends SparkSpec {
       .map { case (id, d, u, t) => (id, ts(s"$d 12:00:00"), u, t, 0.0, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val rows = SparkEntry.allQueries("q285_label_windows")(spark, dir).collect()
+    val rows = SparkEntry.queries("q285_label_windows")(spark, dir).collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events_obs"),
         r.getAs[Long]("n_purchase_obs"), r.getAs[Long]("label")))
     assert(rows.toSeq === Seq(
@@ -421,7 +421,7 @@ class EvalOpsSpec extends SparkSpec {
 
   test("Brier decomposition: Murphy identity holds within the floor slop") {
     val dir = "/root/testdata/sf0.001"
-    val r = SparkEntry.allQueries("q286_brier_decomposition")(spark, dir)
+    val r = SparkEntry.queries("q286_brier_decomposition")(spark, dir)
       .collect().head
     assert(r.getAs[Long]("murphy_ok") === 1L)
     assert(r.getAs[Long]("rel_micros") >= 0L)
@@ -433,13 +433,13 @@ class EvalOpsSpec extends SparkSpec {
 
   test("negative sampling: exactly 5 per anchor, labels always differ, deterministic") {
     val dir = "/root/testdata/sf0.001"
-    val rows = SparkEntry.allQueries("q287_negative_sampling")(spark, dir).collect()
+    val rows = SparkEntry.queries("q287_negative_sampling")(spark, dir).collect()
     val byAnchor = rows.groupBy(_.getAs[Long]("vec_id"))
     assert(byAnchor.size === 500 && byAnchor.values.forall(_.length == 5))
     assert(rows.forall(r =>
       r.getAs[Long]("anchor_label") != r.getAs[Long]("neg_label")))
     assert(rows.forall(r => r.getAs[Long]("neg_id") != r.getAs[Long]("vec_id")))
-    val again = SparkEntry.allQueries("q287_negative_sampling")(spark, dir)
+    val again = SparkEntry.queries("q287_negative_sampling")(spark, dir)
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("neg_rank"),
         r.getAs[Long]("neg_id")))
     assert(again.toSet === rows.map(r => (r.getAs[Long]("vec_id"),
@@ -448,7 +448,7 @@ class EvalOpsSpec extends SparkSpec {
 
   test("silhouette: partition accounting closes and scores stay in [-1, 1]") {
     val dir = "/root/testdata/sf0.001"
-    val rows = SparkEntry.allQueries("q288_silhouette")(spark, dir).collect()
+    val rows = SparkEntry.queries("q288_silhouette")(spark, dir).collect()
     val per = rows.filter(_.getAs[Long]("cid") >= 0L)
     val zz = rows.find(_.getAs[Long]("cid") == -1L).get
     assert(per.map(_.getAs[Long]("n_members")).sum === zz.getAs[Long]("n_members"))
@@ -457,7 +457,7 @@ class EvalOpsSpec extends SparkSpec {
 
   test("adversarial validation on an A/A split reads ~0.5 and is symmetric") {
     val dir = "/root/testdata/sf0.001"
-    val rows = SparkEntry.allQueries("q289_adversarial_validation")(spark, dir)
+    val rows = SparkEntry.queries("q289_adversarial_validation")(spark, dir)
       .collect().map(r => (r.getAs[String]("feature"), r.getAs[String]("split"),
         r.getAs[Long]("auc_micros")))
     assert(rows.length === 4)
@@ -477,7 +477,7 @@ class EvalOpsSpec extends SparkSpec {
     val li = (1 to 8).flatMap { o =>
       Seq((o.toLong, 1L, 30.0), (o.toLong, 2L, 20.0), (o.toLong, 3L, 10.0))
     }.toDF("l_orderkey", "l_partkey", "l_quantity")
-    val out = graft.analytics.EvalOps.bradleyTerry(li, topN = 24, iters = 3)
+    val out = graft.analytics.EvalOps.bradleyTerry(li)
       .collect().map(r => r.getAs[Long]("p") ->
         (r.getAs[Long]("n_wins"), r.getAs[Long]("strength_micros"))).toMap
     assert(out(1L)._1 === 16L && out(2L)._1 === 8L && out(3L)._1 === 0L,
@@ -513,7 +513,7 @@ class EvalOpsSpec extends SparkSpec {
       (3L, "zzz", "en", "A", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q354_fleiss_kappa")(spark, dir).collect()
+    val out = SparkEntry.queries("q354_fleiss_kappa")(spark, dir).collect()
       .map(r => (r.getAs[String]("cat"), r.getAs[Long]("n_ratings"),
         r.getAs[Long]("stat_ppm")))
     assert(out.toSeq === Seq(("de", 2L, 222222L), ("en", 4L, 444444L),

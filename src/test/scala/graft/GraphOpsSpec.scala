@@ -126,7 +126,7 @@ class GraphOpsSpec extends SparkSpec {
     // iter2: a(i1)=1666666, a(i2)=1e6 → i1=1e6, i2=(1e12)//1666666=600000
     //        h(u1)=1.6e6, h(u2)=1e6 → u1=1e6, u2=(1e12)//1600000=625000
     val bi = Seq(("u1", "i1"), ("u1", "i2"), ("u2", "i1")).toDF("src", "dst")
-    val r = GraphOps.hitsMicros(bi, iters = 2).collect()
+    val r = GraphOps.hitsMicros(bi).collect()
       .map(x => (x.getString(0), x.getString(1)) -> x.getLong(2)).toMap
     assert(r === Map(("u1", "hub") -> 1000000L, ("u2", "hub") -> 625000L,
       ("i1", "auth") -> 1000000L, ("i2", "auth") -> 600000L))
@@ -191,7 +191,7 @@ class GraphOpsSpec extends SparkSpec {
     val pend = Seq(("y3", "p1"), ("p1", "p2"))
     val und = k5 ++ cyc ++ pend
     val e = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val out = GraphOps.corenessLadder(e, Seq(1, 2, 4), rounds = 6)
+    val out = GraphOps.corenessLadder(e, Seq(1, 2, 4))
     val got = out.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert((0 until 5).forall(i => got(s"c$i") === 4L), "clique nodes sit in the 4-shell")
     assert(Seq("y1", "y2", "y3").forall(got(_) === 2L), "cycle nodes sit in the 2-shell")
@@ -271,7 +271,7 @@ class GraphOpsSpec extends SparkSpec {
       (e, ts("2024-01-01 10:00:00"), u, "click", 0.0, s"""{"k": $k}""")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q168_link_ra")(spark, dir).collect()
+    val out = SparkEntry.queries("q168_link_ra")(spark, dir).collect()
       .map(r => (r.getAs[Long]("u_a"), r.getAs[Long]("u_b"),
         r.getAs[Long]("common_items"), r.getAs[Long]("ra_micros")))
     assert(out.toSeq === Seq(
@@ -287,7 +287,7 @@ class GraphOpsSpec extends SparkSpec {
       (e, ts("2024-01-01 10:00:00"), u, "click", 0.0, s"""{"k": $k}""")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    def run() = SparkEntry.allQueries("q189_det_walks")(spark, dir).collect()
+    def run() = SparkEntry.queries("q189_det_walks")(spark, dir).collect()
       .map(r => (r.getAs[String]("na"), r.getAs[String]("nb"),
         r.getAs[Long]("n_cooc")))
     val a = run(); val b = run()
@@ -360,7 +360,7 @@ class GraphOpsSpec extends SparkSpec {
     Seq((10L, 1L), (10L, 2L), (10L, 3L), (20L, 3L), (20L, 4L), (30L, 1L), (30L, 2L))
       .toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = SparkEntry.allQueries("q257_triangle_census")(spark, dir).collect()
+    val out = SparkEntry.queries("q257_triangle_census")(spark, dir).collect()
       .map(r => (r.getAs[Long]("v"), r.getAs[Long]("d"),
         r.getAs[Long]("n_tri"), r.getAs[Long]("cc_ppm")))
     assert(out.toSeq === Seq(
@@ -395,7 +395,7 @@ class GraphOpsSpec extends SparkSpec {
     Seq((10L, 1L), (10L, 2L), (20L, 2L), (20L, 3L))
       .toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = SparkEntry.allQueries("q257_triangle_census")(spark, dir).collect()
+    val out = SparkEntry.queries("q257_triangle_census")(spark, dir).collect()
     assert(out.length === 1)
     assert(out.head.getAs[Long]("v") === -1L)
     assert(out.head.getAs[Long]("n_tri") === 0L)
@@ -404,7 +404,7 @@ class GraphOpsSpec extends SparkSpec {
 
   test("rich club: tighter thresholds shrink the club and phi stays a density") {
     val dir = "/root/testdata/sf0.001"
-    val rows = SparkEntry.allQueries("q290_rich_club")(spark, dir).collect()
+    val rows = SparkEntry.queries("q290_rich_club")(spark, dir).collect()
       .map(r => (r.getAs[Long]("pct"), r.getAs[Long]("k_thresh"),
         r.getAs[Long]("n_rich"), r.getAs[Long]("e_rich"),
         r.getAs[Long]("phi_ppm")))
@@ -427,7 +427,7 @@ class GraphOpsSpec extends SparkSpec {
       (40L, 13L), (40L, 9L))
       .toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = SparkEntry.allQueries("q325_adamic_adar")(spark, dir).collect()
+    val out = SparkEntry.queries("q325_adamic_adar")(spark, dir).collect()
     assert(out.length === 1)
     assert((out.head.getAs[Long]("x"), out.head.getAs[Long]("y"),
       out.head.getAs[Long]("cn"), out.head.getAs[Long]("aa_micros")) ===
@@ -448,7 +448,7 @@ class GraphOpsSpec extends SparkSpec {
       (3L, "p3", "B", "T", 1, 10.0))
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice")
       .write.mode("overwrite").parquet(s"$dir/part.parquet")
-    val r = SparkEntry.allQueries("q328_morans_i")(spark, dir).collect().head
+    val r = SparkEntry.queries("q328_morans_i")(spark, dir).collect().head
     assert((r.getAs[Long]("n"), r.getAs[Long]("m"), r.getAs[Long]("i_sign"),
       r.getAs[Long]("i_abs_micros"), r.getAs[Long]("c_micros"),
       r.getAs[Long]("neg_e_i_nanos")) ===
@@ -462,7 +462,7 @@ class GraphOpsSpec extends SparkSpec {
     Seq((10L, 1L), (10L, 2L), (20L, 2L), (20L, 3L))
       .toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = SparkEntry.allQueries("q330_harmonic_3hop")(spark, dir).collect()
+    val out = SparkEntry.queries("q330_harmonic_3hop")(spark, dir).collect()
       .map(r => (r.getAs[Long]("s"), r.getAs[Long]("n1"), r.getAs[Long]("n2"),
         r.getAs[Long]("n3"), r.getAs[Long]("harmonic_micros")))
     assert(out.toSeq === Seq((1L, 1L, 1L, 0L, 1500000L),
@@ -479,7 +479,7 @@ class GraphOpsSpec extends SparkSpec {
       Seq((8L, 4L), (8L, 5L), (8L, 6L)))
       .toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = SparkEntry.allQueries("q335_ktruss_peel")(spark, dir).collect()
+    val out = SparkEntry.queries("q335_ktruss_peel")(spark, dir).collect()
       .map(r => (r.getAs[Long]("round"), r.getAs[Long]("n_edges_in"),
         r.getAs[Long]("n_tri"), r.getAs[Long]("n_kept")))
     assert(out.toSeq === Seq((1L, 9L, 5L, 6L), (2L, 6L, 4L, 6L),
@@ -515,7 +515,7 @@ class GraphOpsSpec extends SparkSpec {
     // over the dead triangles' edge credits, removed-keyed lookups
     // instead of kept-keyed semi-joins) must equal both — same oracle,
     // same golden pins
-    val inc = GraphOps.kTrussRoundsInc(cohort(), 3, 2).collect().toSeq
+    val inc = GraphOps.kTrussRoundsInc(cohort()).collect().toSeq
     assert(inc === reenum)
   }
 
@@ -531,7 +531,7 @@ class GraphOpsSpec extends SparkSpec {
       (4L, 5L), (5L, 6L))
       .toDF("pa", "pb")
     val classic = GraphRefs.kTrussRounds(graft.Stage.mat(e), 3, 2).collect().toSeq
-    val inc = GraphOps.kTrussRoundsInc(graft.Stage.mat(e), 3, 2).collect().toSeq
+    val inc = GraphOps.kTrussRoundsInc(graft.Stage.mat(e)).collect().toSeq
     assert(inc === classic)
     // the fixture must actually peel across two successive rounds
     val kept = classic.map(_.getAs[Long]("n_kept"))
@@ -545,7 +545,7 @@ class GraphOpsSpec extends SparkSpec {
     Seq((10L, 1L), (10L, 2L), (20L, 2L), (20L, 3L))
       .toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = SparkEntry.allQueries("q342_eigencentrality")(spark, dir).collect()
+    val out = SparkEntry.queries("q342_eigencentrality")(spark, dir).collect()
       .map(r => (r.getAs[Long]("v"), r.getAs[Long]("walks3"),
         r.getAs[Long]("score_ppm")))
     assert(out.toSeq === Seq((2L, 4L, 1000000L), (1L, 2L, 500000L),
@@ -567,7 +567,7 @@ class GraphOpsSpec extends SparkSpec {
         "l_quantity", "l_extendedprice", "l_discount", "l_tax",
         "l_returnflag", "l_linestatus", "l_shipdate")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val r = SparkEntry.allQueries("q348_reciprocity")(spark, dir).collect().head
+    val r = SparkEntry.queries("q348_reciprocity")(spark, dir).collect().head
     assert((r.getAs[Long]("n_nodes"), r.getAs[Long]("n_edges"),
       r.getAs[Long]("n_mutual_pairs"), r.getAs[Long]("r_ppm"),
       r.getAs[Long]("abar_ppm"), r.getAs[Long]("rho_ppm")) ===
@@ -576,7 +576,7 @@ class GraphOpsSpec extends SparkSpec {
 
   test("consistent hashing: only the joining node receives moved keys") {
     val dir = "/root/testdata/sf0.001"
-    val rows = SparkEntry.allQueries("q291_consistent_hashing")(spark, dir).collect()
+    val rows = SparkEntry.queries("q291_consistent_hashing")(spark, dir).collect()
     val per = rows.filter(_.getAs[String]("node") != "zz_moved")
     assert(per.map(_.getAs[String]("node")).sorted.toSeq ===
       Seq("n0", "n1", "n2", "n3", "n4"))
@@ -631,7 +631,7 @@ class GraphOpsSpec extends SparkSpec {
       (5L, "p5", "B", "T", 32, 1.0), (6L, "p6", "B", "T", 33, 1.0))
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice")
       .write.mode("overwrite").parquet(s"$dir/part.parquet")
-    val out = SparkEntry.allQueries("q358_sssp_weighted")(spark, dir).collect()
+    val out = SparkEntry.queries("q358_sssp_weighted")(spark, dir).collect()
       .map(r => (r.getAs[Long]("node"), r.getAs[Long]("dist"),
         r.getAs[Long]("n_reached")))
     assert(out.toSeq === Seq((-1L, 0L, 6L), (1L, 0L, 0L), (2L, 2L, 0L),
@@ -649,7 +649,7 @@ class GraphOpsSpec extends SparkSpec {
     Seq((1L, "p1", "B", "T", 10, 1.0), (2L, "p2", "B", "T", 11, 1.0))
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice")
       .write.mode("overwrite").parquet(s"$dir/part.parquet")
-    val out = SparkEntry.allQueries("q358_sssp_weighted")(spark, dir).collect()
+    val out = SparkEntry.queries("q358_sssp_weighted")(spark, dir).collect()
       .map(r => (r.getAs[Long]("node"), r.getAs[Long]("dist"),
         r.getAs[Long]("n_reached")))
     assert(out.toSeq === Seq((-1L, 0L, 0L)))

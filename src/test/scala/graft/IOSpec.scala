@@ -43,7 +43,7 @@ class IOSpec extends SparkSpec {
       (2L, s"totally different prefix $shared and suffix"),
       (3L, "nothing in common with the others at all here")).toDF("doc_id", "text")
     val fps = df.select(col("doc_id"),
-        TextStats.winnowingFingerprints(col("text"), k = 3, w = 4).as("fp"))
+        TextStats.winnowingFingerprints(col("text")).as("fp"))
       .as[(Long, Seq[Long])].collect().toMap
     assert((fps(1L).toSet intersect fps(2L).toSet).nonEmpty)
     assert((fps(1L).toSet intersect fps(3L).toSet).isEmpty)
@@ -63,7 +63,7 @@ class IOSpec extends SparkSpec {
       (2L, s"totally different prefix $shared and suffix"),
       (3L, "nothing in common with the others at all here")).toDF("doc_id", "text")
     val fps = df.select(col("doc_id"),
-        TextStats.winnowingFingerprintsPortable(col("text"), k = 3, w = 4).as("fp"))
+        TextStats.winnowingFingerprintsPortable(col("text")).as("fp"))
       .as[(Long, Seq[Long])].collect().toMap
     assert((fps(1L).toSet intersect fps(2L).toSet).nonEmpty)
     assert((fps(1L).toSet intersect fps(3L).toSet).isEmpty)

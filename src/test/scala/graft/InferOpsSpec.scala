@@ -98,7 +98,7 @@ class InferOpsSpec extends SparkSpec {
     // days 1..4 → mid = 3, early = days {1,2}; both halves {10, 20}
     val e = wev(("t", 10L, "2024-01-01 00:00:00"), ("t", 20L, "2024-01-02 00:00:00"),
       ("t", 10L, "2024-01-03 00:00:00"), ("t", 20L, "2024-01-04 00:00:00"))
-    val r = InferOps.welchDrift(e, "event_type", col("v")).collect().head
+    val r = InferOps.welchDrift(e, col("v")).collect().head
     assert(r.getAs[Long]("n_early") === 2L)
     assert(r.getAs[Long]("n_late") === 2L)
     assert(r.getAs[Long]("mean_early_micros") === 15L)
@@ -114,7 +114,7 @@ class InferOpsSpec extends SparkSpec {
     val e = wev(("t", 0L, "2024-01-01 00:00:00"), ("t", 2000L, "2024-01-02 00:00:00"),
       ("t", 1000000L, "2024-01-03 00:00:00"),
       ("t", 1002000L, "2024-01-04 00:00:00"))
-    val r = InferOps.welchDrift(e, "event_type", col("v")).collect().head
+    val r = InferOps.welchDrift(e, col("v")).collect().head
     assert(r.getAs[Long]("mean_early_micros") === 1000L)
     assert(r.getAs[Long]("mean_late_micros") === 1001000L)
     assert(r.getAs[Long]("t2_ppm") === 500000000000L)
@@ -128,7 +128,7 @@ class InferOpsSpec extends SparkSpec {
       (3L, Array(0.9f, 0.1f), 1), // rank 2, miss
       (4L, Array(0f, 1f), 0)) // rank 3, cut by k=2; still counts in R
       .toDF("vec_id", "embedding", "label")
-    val rows = InferOps.averagePrecision(emb, qLo = 1L, qHi = 1L, k = 2)
+    val rows = InferOps.averagePrecision(emb, qHi = 1L, k = 2)
       .collect()
     assert(rows.length === 2)
     // orderBy(q_id) puts the zz row (−1) first
@@ -145,7 +145,7 @@ class InferOpsSpec extends SparkSpec {
     val docs = ((1L to 20L).map(i => (i, "apple banana cherry", "aa"))
       ++ (21L to 40L).map(i => (i, "zebra yak walrus", "bb")))
       .toDF("doc_id", "text", "lang")
-    val rows = InferOps.nbLangId(docs, folds = 5).collect()
+    val rows = InferOps.nbLangId(docs).collect()
     val zz = rows.find(_.getAs[String]("lang") === "zz").get
     assert(zz.getAs[Long]("n_docs") > 0L) // the hash split has a holdout
     assert(zz.getAs[Long]("row_ppm") === 1000000L) // perfect accuracy
@@ -159,7 +159,7 @@ class InferOpsSpec extends SparkSpec {
     // (p1,p2) c_ab=2 → cos² = 4e6/6 = 666666; (p1,p3) dropped (< 2)
     val li = Seq((10L, 1L), (10L, 2L), (11L, 1L), (11L, 2L), (12L, 1L), (12L, 3L))
       .toDF("l_orderkey", "l_partkey")
-    val rows = InferOps.itemNeighbors(li, minSupport = 2, neighborsPerItem = 3)
+    val rows = InferOps.itemNeighbors(li)
       .collect()
     assert(rows.length === 2)
     val m = rows.map(r => r.getAs[Long]("item") ->
@@ -228,7 +228,7 @@ class InferOpsSpec extends SparkSpec {
       (6L, ts("2024-01-03 09:00:00"), 3L, "purchase", 1.0, "{}"),
       (7L, ts("2024-01-01 08:00:00"), 4L, "view", 1.0, "{}"),
       (8L, ts("2024-01-05 08:00:00"), 4L, "view", 1.0, "{}")))
-    val out = SparkEntry.allQueries("q201_nelson_aalen")(spark, dir).collect()
+    val out = SparkEntry.queries("q201_nelson_aalen")(spark, dir).collect()
       .map(r => (r.getAs[Long]("day_off"), r.getAs[Long]("n_risk"),
         r.getAs[Long]("n_deaths"), r.getAs[Long]("h_term_micros"),
         r.getAs[Long]("h_micros")))
@@ -247,7 +247,7 @@ class InferOpsSpec extends SparkSpec {
       (5L, ts("2024-01-02 10:00:00"), 2L, "click", 1.0, "{}"),
       (6L, ts("2024-01-02 11:00:00"), 2L, "error", 1.0, "{}"),
       (7L, ts("2024-01-02 12:00:00"), 2L, "purchase", 1.0, "{}")))
-    val out = SparkEntry.allQueries("q202_position_attribution")(spark, dir).collect()
+    val out = SparkEntry.queries("q202_position_attribution")(spark, dir).collect()
       .map(r => (r.getAs[String]("channel"), r.getAs[Long]("n_touches"),
         r.getAs[Long]("credit_ppm")))
     assert(out.toSeq === Seq(("click", 2L, 700000L), ("error", 1L, 500000L),
@@ -262,7 +262,7 @@ class InferOpsSpec extends SparkSpec {
     val dir = writeEvents(
       burst(100L, "2024-01-01", 10) ++ burst(200L, "2024-01-08", 30)
         ++ burst(300L, "2024-01-02", 20) ++ burst(400L, "2024-01-09", 20))
-    val out = SparkEntry.allQueries("q203_seasonal_anomaly")(spark, dir).collect()
+    val out = SparkEntry.queries("q203_seasonal_anomaly")(spark, dir).collect()
       .map(r => (r.getAs[java.sql.Date]("day").toString,
         r.getAs[Long]("n_events"), r.getAs[Long]("mean_micros"),
         r.getAs[Long]("dev_ppm")))
@@ -278,7 +278,7 @@ class InferOpsSpec extends SparkSpec {
       (1L, ts("2024-01-01 10:00:00"), 7L, "view", 1.0, "{}"),
       (2L, ts("2024-01-01 10:01:00"), 7L, "view", 2.0, "{}"),
       (3L, ts("2024-01-01 10:02:00"), 7L, "view", 4.0, "{}")))
-    val out = SparkEntry.allQueries("q204_forecast_backtest")(spark, dir).collect()
+    val out = SparkEntry.queries("q204_forecast_backtest")(spark, dir).collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"),
         r.getAs[Long]("sae_model"), r.getAs[Long]("sae_naive"),
         r.getAs[Long]("mase_ppm")))
@@ -349,7 +349,7 @@ class InferOpsSpec extends SparkSpec {
       i <- 1 to 5
     } yield (tpe, ts(f"2024-01-0$day 10:0$i:00"), v)
     val df = rows.toDF("event_type", "ts", "value")
-    val out = InferOps.sprtDaily(df, threshold = 35.0).collect()
+    val out = InferOps.sprtDaily(df).collect()
       .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("n_days"),
         r.getAs[Long]("n_obs"), r.getAs[String]("decision"),
         r.getAs[Long]("n_at_decision"), r.getAs[Long]("llr_nanos")))
@@ -421,7 +421,7 @@ class InferOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = SparkEntry.allQueries("q237_cmh_odds")(spark, dir).collect()
+    val out = SparkEntry.queries("q237_cmh_odds")(spark, dir).collect()
       .map(r => r.getAs[Long]("nk") -> (r.getAs[Long]("a"), r.getAs[Long]("b"),
         r.getAs[Long]("c"), r.getAs[Long]("d"), r.getAs[Long]("or_micros"))).toMap
     assert(out(1L) === ((8L, 2L, 4L, 1L, 0L)))
@@ -437,7 +437,7 @@ class InferOpsSpec extends SparkSpec {
     val df = rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val dir = java.nio.file.Files.createTempDirectory("dec_fix").toString
     df.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q238_classical_decomp")(spark, dir).collect()
+    val out = SparkEntry.queries("q238_classical_decomp")(spark, dir).collect()
       .map(r => (r.getAs[Long]("y_micros"), r.getAs[Long]("trend_micros"),
         r.getAs[Long]("seasonal_micros"), r.getAs[Long]("remainder_micros")))
     assert(out.length === 3)
@@ -461,7 +461,7 @@ class InferOpsSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val dir = java.nio.file.Files.createTempDirectory("shap_fix").toString
     rows.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q250_shapley_attribution")(spark, dir).collect()
+    val out = SparkEntry.queries("q250_shapley_attribution")(spark, dir).collect()
       .map(r => r.getString(0) -> r.getLong(3)).toMap
     assert(out("phi_click") === 694444L)
     assert(out("phi_error") === -138888L)
@@ -495,7 +495,7 @@ class InferOpsSpec extends SparkSpec {
   test("split-conformal: the finite-sample coverage guarantee holds on the " +
     "held-out split and the rank follows the ceil(0.9(n+1)) contract") {
     val dir = "/root/testdata/sf0.001"
-    val r = SparkEntry.allQueries("q266_conformal")(spark, dir).collect().head
+    val r = SparkEntry.queries("q266_conformal")(spark, dir).collect().head
     val (nTrain, nCal, nTest) = (r.getAs[Long]("n_train"),
       r.getAs[Long]("n_cal"), r.getAs[Long]("n_test"))
     assert(nTrain + nCal + nTest ===
@@ -512,7 +512,7 @@ class InferOpsSpec extends SparkSpec {
   test("IPS replay: the hash match rate sits at the mixture 1/3 and the " +
     "estimate lands near the synthetic truth") {
     val dir = "/root/testdata/sf0.001"
-    val r = SparkEntry.allQueries("q269_ips_offpolicy")(spark, dir).collect().head
+    val r = SparkEntry.queries("q269_ips_offpolicy")(spark, dir).collect().head
     val (n, m) = (r.getAs[Long]("n"), r.getAs[Long]("n_matched"))
     // P(a_log = a*) = (1/2 + 1/3 + 1/6)/3 = 1/3 when a* is ~uniform;
     // at n = 1000 the binomial band is ±4.5pp at 3 sigma
@@ -536,7 +536,7 @@ class InferOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val r = SparkEntry.allQueries("q275_regression_discontinuity")(spark, dir)
+    val r = SparkEntry.queries("q275_regression_discontinuity")(spark, dir)
       .collect().head
     assert((r.getAs[Long]("h_days"), r.getAs[Long]("n_left"),
       r.getAs[Long]("n_right"), r.getAs[Long]("slope_left"),
@@ -556,7 +556,7 @@ class InferOpsSpec extends SparkSpec {
       (4L, ts(4), 1L, "purchase", 4.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = SparkEntry.allQueries("q345_cvm_test")(spark, dir).collect().head
+    val r = SparkEntry.queries("q345_cvm_test")(spark, dir).collect().head
     assert((r.getAs[Long]("n_a"), r.getAs[Long]("n_b"),
       r.getAs[Long]("t_ppm")) === ((2L, 2L, 125000L)))
   }

@@ -24,7 +24,7 @@ class MiningOpsSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   test("editVerifiedNearDups keeps true revisions and reports exact Levenshtein") {
-    val r = MiningOps.editVerifiedNearDups(docs, threshold = 0.8)
+    val r = MiningOps.editVerifiedNearDups(docs)
       .orderBy("id_a", "id_b").collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(3), x.getLong(4)))
     // (1,2): identical -> lev 0, ratio 0. (1,3)/(2,3): one inserted char
@@ -42,7 +42,7 @@ class MiningOpsSpec extends SparkSpec {
   }
 
   test("a tight edit-ratio cutoff drops the edited revision but keeps the clone") {
-    val r = MiningOps.editVerifiedNearDups(docs, threshold = 0.8, maxRatioMicros = 0L)
+    val r = MiningOps.editVerifiedNearDups(docs, maxRatioMicros = 0L)
       .select("id_a", "id_b").orderBy("id_a").collect().map(x => (x.getLong(0), x.getLong(1)))
     assert(r.toSeq === Seq((1L, 2L)))
   }
@@ -102,7 +102,7 @@ class MiningOpsSpec extends SparkSpec {
       (300L, 1L), (300L, 2L), (300L, 3L),
       (400L, 3L)
     ).toDF("l_orderkey", "l_partkey")
-    val r = MiningOps.basketLift(li, minSupport = 3, topK = 20).collect()
+    val r = MiningOps.basketLift(li).collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(5)))
     // only (1,2) reaches support 3; lift = 3*4*1e6 div (3*3) = 1333333
     assert(r.toSeq === Seq((1L, 2L, 3L, 1333333L)))
@@ -114,7 +114,7 @@ class MiningOpsSpec extends SparkSpec {
       (200L, 1L), (200L, 2L),
       (300L, 1L), (300L, 2L)
     ).toDF("l_orderkey", "l_partkey")
-    val r = MiningOps.basketLift(li, minSupport = 3, topK = 20).collect()
+    val r = MiningOps.basketLift(li).collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(5)))
     // 3 orders here: lift = 3*3*1e6 div (3*3) = 1e6 — and the duplicate
     // (100, p1) row must not inflate c_a past 3
@@ -130,7 +130,7 @@ class MiningOpsSpec extends SparkSpec {
       (3L, 1L), (3L, 2L), (3L, 4L),
       (3L, 4L) // duplicate (order, part) row must not inflate support
     ).toDF("l_orderkey", "l_partkey")
-    val r = MiningOps.basketTriples(li, minSupport = 2, topK = 20).collect()
+    val r = MiningOps.basketTriples(li).collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3)))
     assert(r.toSeq === Seq((1L, 2L, 3L, 2L), (1L, 2L, 4L, 2L)))
   }
@@ -159,7 +159,7 @@ class MiningOpsSpec extends SparkSpec {
       (4L, "Customer#000000004", 2, 0.0, "A")   // singleton block: 0 pairs
     ).toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    val out = SparkEntry.allQueries("q171_er_blocking")(spark, dir).collect()
+    val out = SparkEntry.queries("q171_er_blocking")(spark, dir).collect()
       .map(r => (r.getAs[Long]("nk"), r.getAs[String]("seg")) ->
         (r.getAs[Long]("n_members"), r.getAs[Long]("n_pairs"),
           r.getAs[Long]("n_matches"), r.getAs[Long]("match_rate_ppm"))).toMap
@@ -174,7 +174,7 @@ class MiningOpsSpec extends SparkSpec {
     Seq((1L, 80.0, 0.0), (2L, 15.0, 0.0), (3L, 4.0, 0.0), (4L, 1.0, 0.0))
       .toDF("l_partkey", "l_extendedprice", "l_discount")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = SparkEntry.allQueries("q192_abc_pareto")(spark, dir).collect()
+    val out = SparkEntry.queries("q192_abc_pareto")(spark, dir).collect()
       .map(r => r.getAs[String]("cls") -> (r.getAs[Long]("n_parts"),
         r.getAs[Long]("rev_micros"), r.getAs[Long]("share_ppm"))).toMap
     assert(out("A") === ((1L, 80000000L, 800000L)))
@@ -208,7 +208,7 @@ class MiningOpsSpec extends SparkSpec {
       .map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q228_canonical_rep")(spark, dir).collect()
+    val out = SparkEntry.queries("q228_canonical_rep")(spark, dir).collect()
       .map(r => (r.getAs[Long]("cluster_id"), r.getAs[Long]("n_members"),
         r.getAs[Long]("keep_id"), r.getAs[Long]("keep_chars"),
         r.getAs[Long]("n_dropped")))
@@ -226,14 +226,14 @@ class MiningOpsSpec extends SparkSpec {
       .map { case (k, pr, sz) => (k, s"part$k", "B", "T", sz, pr) }
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice")
       .write.mode("overwrite").parquet(s"$dir/part.parquet")
-    val out = SparkEntry.allQueries("q268_skyline")(spark, dir).collect()
+    val out = SparkEntry.queries("q268_skyline")(spark, dir).collect()
       .map(r => (r.getAs[Long]("p_partkey"), r.getAs[Long]("p_size")))
     assert(out.toSeq === Seq((3L, 3L), (1L, 5L), (2L, 5L), (5L, 7L)))
   }
 
   test("zone-map advisor: pruning is certified sound and clustering helps") {
     val dir = "/root/testdata/sf0.001"
-    val rows = SparkEntry.allQueries("q267_zonemap_advisor")(spark, dir).collect()
+    val rows = SparkEntry.queries("q267_zonemap_advisor")(spark, dir).collect()
     val zones = rows.filter(_.getAs[Long]("zone") >= 0L)
     // soundness: a pruned zone may contain NO matching rows
     assert(zones.filter(_.getAs[Long]("survives") === 0L)
@@ -252,7 +252,7 @@ class MiningOpsSpec extends SparkSpec {
 
   test("Merkle diff flags exactly the buckets holding corrupted rows") {
     val dir = "/root/testdata/sf0.001"
-    val rows = SparkEntry.allQueries("q279_merkle_diff")(spark, dir).collect()
+    val rows = SparkEntry.queries("q279_merkle_diff")(spark, dir).collect()
     val per = rows.filter(_.getAs[Long]("bucket") >= 0L)
     // soundness AND measured no-collision: fingerprints match iff the
     // bucket truly carries zero differing rows
@@ -276,7 +276,7 @@ class MiningOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = SparkEntry.allQueries("q283_fd_discovery")(spark, dir).collect()
+    val out = SparkEntry.queries("q283_fd_discovery")(spark, dir).collect()
       .map(r => (r.getAs[String]("fd"), r.getAs[Long]("ndv_lhs"),
         r.getAs[Long]("ndv_pair"), r.getAs[Long]("n_violating"),
         r.getAs[Boolean]("holds")))
@@ -297,7 +297,7 @@ class MiningOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val r = SparkEntry.allQueries("q295_sequence_gaps")(spark, dir).collect().head
+    val r = SparkEntry.queries("q295_sequence_gaps")(spark, dir).collect().head
     assert((r.getAs[Long]("n_keys"), r.getAs[Long]("key_min"),
       r.getAs[Long]("key_max"), r.getAs[Long]("n_missing"),
       r.getAs[Long]("n_islands"), r.getAs[Long]("gap_start"),

@@ -119,7 +119,7 @@ class MultimodalSpec extends SparkSpec {
   test("banded phash near-dup join finds planted copies, skips unrelated") {
     import graft.multimodal.Multimodal
     val corpus = Multimodal.syntheticImageCorpus(spark, 40, nEdited = 5, nExact = 5)
-    val pairs = Multimodal.imagePhashNearDups(corpus, maxHamming = 8)
+    val pairs = Multimodal.imagePhashNearDups(corpus)
       .select("id_a", "id_b", "hamming")
       .as[(Long, Long, Int)].collect()
     val byPair = pairs.map(p => (p._1, p._2) -> p._3).toMap
@@ -146,7 +146,7 @@ class MultimodalSpec extends SparkSpec {
   test("banded audio near-dup join finds gain-scaled and exact copies") {
     import graft.multimodal.Multimodal
     val corpus = Multimodal.syntheticAudioCorpus(spark, 40, nGained = 5, nExact = 5)
-    val pairs = Multimodal.audioFingerprintNearDups(corpus, maxHamming = 5)
+    val pairs = Multimodal.audioFingerprintNearDups(corpus)
       .select("id_a", "id_b", "hamming")
       .as[(Long, Long, Int)].collect()
     val byPair = pairs.map(p => (p._1, p._2) -> p._3).toMap

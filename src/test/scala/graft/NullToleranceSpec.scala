@@ -97,7 +97,7 @@ class NullToleranceSpec extends SparkSpec {
     // k slots of their group — real-keyed docs rank first
     val grouped = Seq((Option(1L), "s"), (Option(2L), "s"),
       (Option.empty[Long], "s"), (Option.empty[Long], "s")).toDF("doc_id", "source")
-    val capped = Sampling.perGroupCap(grouped, "source", k = 2)
+    val capped = Sampling.perGroupCap(grouped, k = 2)
       .select("doc_id").as[Option[Long]].collect().toSet
     assert(capped === Set(Option(1L), Option(2L)))
     // temperatureResample: null-domain rows form their own stratum and
@@ -107,7 +107,7 @@ class NullToleranceSpec extends SparkSpec {
     val mixed = (1L to 20L).map(i => (i, Option("en"))) ++
       (21L to 23L).map(i => (i, Option.empty[String]))
     val kept = Sampling.temperatureResample(
-        mixed.toDF("doc_id", "lang"), "lang", "doc_id", temperature = 2.0)
+        mixed.toDF("doc_id", "lang"))
       .filter(col("lang").isNull).count()
     assert(kept === 3L)
   }

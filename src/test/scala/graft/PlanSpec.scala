@@ -13,7 +13,7 @@ class PlanSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private def plan(name: String): String = {
-    val df = SparkEntry.allQueries(name)(spark, sf)
+    val df = SparkEntry.queries(name)(spark, sf)
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }
 
@@ -55,7 +55,7 @@ class PlanSpec extends SparkSpec {
   test("whole-stage codegen covers the comment-pipeline expressions") {
     // AQE's pre-execution formatted plan omits codegen annotations; the
     // codegen explain mode reports the compiled subtrees directly.
-    val df = SparkEntry.allQueries("q27_token_filter")(spark, sf)
+    val df = SparkEntry.queries("q27_token_filter")(spark, sf)
     val p = df.queryExecution.explainString(ExplainMode.fromString("codegen"))
     assert(p.contains("WholeStageCodegen subtrees"), s"expected codegen spans in:\n${p.take(500)}")
   }
@@ -64,7 +64,7 @@ class PlanSpec extends SparkSpec {
     // broadcast nested-loop crosses against one-row/tiny build sides are
     // intended (query vectors, centroid tables); an unpartitioned
     // CartesianProduct is always a scale regression.
-    val offenders = SparkEntry.allQueries.keys.toSeq.sorted.filter { name =>
+    val offenders = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
       plan(name).contains("CartesianProduct")
     }
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
@@ -214,7 +214,7 @@ class PlanSpec extends SparkSpec {
 
   test("shard manifest windows per position bucket — no corpus-sized global window") {
     val p = graft.text.Packing
-      .shardManifest(spark.read.parquet(s"$sf/documents.parquet"), tokensPerShard = 2048L)
+      .shardManifest(spark.read.parquet(s"$sf/documents.parquet"))
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(p.contains("BroadcastHashJoin"), s"bucket offsets must broadcast:\n$p")
     assert(p.contains("hashpartitioning(pbucket") || p.contains("hashpartitioning(b"),
@@ -382,7 +382,7 @@ class PlanSpec extends SparkSpec {
       // mat barriers can fire concurrently
       graft.Stage.recorder = Some(p => staged.synchronized { staged += p })
       val top =
-        try SparkEntry.allQueries(name)(spark, dir).queryExecution.optimizedPlan
+        try SparkEntry.queries(name)(spark, dir).queryExecution.optimizedPlan
         finally graft.Stage.recorder = None
       (staged.toSeq :+ top).flatMap(_.collect {
         case w: LWindow if w.partitionSpec.isEmpty &&
@@ -392,7 +392,7 @@ class PlanSpec extends SparkSpec {
       })
     }
     // structural pass (default-deny) at the cheap fixture
-    val offenders = SparkEntry.allQueries.keys.toSeq.sorted.flatMap { name =>
+    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       val bad = unboundedWindows(name, sf)
       if (bad.nonEmpty && !allow.contains(name))
         Some(s"$name: ${bad.map(w => w.orderSpec.map(_.sql).mkString(",")).mkString(" | ")}")

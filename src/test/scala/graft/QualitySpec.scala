@@ -93,7 +93,7 @@ class QualitySpec extends SparkSpec {
     Seq((1L, "The cat sat. It ran!", "en", "A", 20L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = SparkEntry.allQueries("q178_readability")(spark, dir).collect().head
+    val r = SparkEntry.queries("q178_readability")(spark, dir).collect().head
     assert(r.getAs[Long]("n_docs") === 1L)
     assert(r.getAs[Long]("mean_fre_micros") === 119697500L)
     assert(r.getAs[Long]("mean_fkg_micros") === -2815000L)

@@ -15,7 +15,7 @@ class QuantilesSpec extends SparkSpec {
 
   private def check(rows: Seq[(String, Double)]): Unit = {
     val df = rows.toDF("g", "x")
-    val got = Quantiles.exactQuantiles(df, "g", "x", ps)
+    val got = Quantiles.exactQuantiles(df, ps)
       .select(col("g"), col("p"), col("q_r"))
       .as[(String, Double, Double)].collect()
       .map { case (g, p, q) => (g, p) -> q }.toMap
@@ -49,14 +49,14 @@ class QuantilesSpec extends SparkSpec {
     // (the pre-fix behavior) computes ranks against n=4 → 2.5.
     val df = Seq(("a", Some(1.0)), ("a", Some(2.0)), ("a", Some(3.0)), ("a", None))
       .toDF("g", "x")
-    val got = Quantiles.exactQuantiles(df, "g", "x", Seq(0.5))
+    val got = Quantiles.exactQuantiles(df, Seq(0.5))
       .select(col("q_r")).as[Double].collect()
     assert(got.toSeq === Seq(2.0))
   }
 
   test("only bucket-resolution state crosses the plan: no corpus-sized window partition") {
     val df = Seq.tabulate(500)(i => ("a", i.toDouble)).toDF("g", "x")
-    val p = Quantiles.exactQuantiles(df, "g", "x", Seq(0.5))
+    val p = Quantiles.exactQuantiles(df, Seq(0.5))
       .queryExecution.executedPlan.toString
     // the distinct-value window must run AFTER the candidate-bucket
     // semi-join (partition keys g AND b), never over (g) alone on the
@@ -68,7 +68,7 @@ class QuantilesSpec extends SparkSpec {
   test("Neyman sample: budget lands exactly, boundaries realize the " +
     "allocation, the HT estimate tracks the truth") {
     val dir = "/root/testdata/sf0.001"
-    val rows = SparkEntry.allQueries("q271_neyman_sample")(spark, dir).collect()
+    val rows = SparkEntry.queries("q271_neyman_sample")(spark, dir).collect()
     val strata = rows.filter(r => !r.getAs[String]("stratum").startsWith("zz_"))
     // largest-remainder rounding exhausts the budget exactly, and the
     // pairRankSelectBy boundary yields EXACTLY n_alloc rows per stratum

@@ -41,7 +41,7 @@ class SimilaritySpec extends SparkSpec {
     val query = vecs.filter(col("vec_id") === 7).select(col("embedding").as("qvec"))
     val exact = Similarity.bruteForceTopK(vecs, query, 10)
       .select("vec_id").as[Long].collect().toSet
-    val approx = Similarity.lshTopK(vecs, query, 10, nPlanes = 2, dim = dim)
+    val approx = Similarity.lshTopK(vecs, query, nPlanes = 2, dim = dim)
       .select("vec_id").as[Long].collect().toSet
     // 2 planes -> 4 buckets -> ~50 of 200 vectors scanned; the query's own
     // bucket must contain the query vector itself and some true neighbors
@@ -53,9 +53,9 @@ class SimilaritySpec extends SparkSpec {
     val query = vecs.filter(col("vec_id") === 7).select(col("embedding").as("qvec"))
     val exact = Similarity.bruteForceTopK(vecs, query, 10)
       .select("vec_id").as[Long].collect().toSet
-    val single = Similarity.lshTopK(vecs, query, 10, nPlanes = 4, dim = dim)
+    val single = Similarity.lshTopK(vecs, query, nPlanes = 4, dim = dim)
       .select("vec_id").as[Long].collect().toSet
-    val multi = Similarity.lshTopK(vecs, query, 10, nPlanes = 4, dim = dim, probeHamming = 1)
+    val multi = Similarity.lshTopK(vecs, query, nPlanes = 4, dim = dim, probeHamming = 1)
       .select("vec_id").as[Long].collect().toSet
     assert(multi.contains(7L), "query's own vector is in its own bucket")
     // single's candidate set is a subset of multi's, and a displaced
@@ -65,7 +65,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF: assignment covers the corpus; probed top-k achieves recall") {
-    val trained = Similarity.ivfTrain(vecs, nCentroids = 8)
+    val trained = Similarity.ivfTrain(vecs)
     val assigned = Similarity.ivfAssignWith(vecs, trained)
     val centroids = trained.toDF("centroid_id", "cvec")
     assert(assigned.count() === 200)
@@ -73,7 +73,7 @@ class SimilaritySpec extends SparkSpec {
     val query = vecs.filter(col("vec_id") === 11).select(col("embedding").as("qvec"))
     val exact = Similarity.bruteForceTopK(vecs, query, 10)
       .select("vec_id").as[Long].collect().toSet
-    val approx = Similarity.ivfTopK(assigned, centroids, query, 10, nProbe = 3)
+    val approx = Similarity.ivfTopK(assigned, centroids, query)
       .select("vec_id").as[Long].collect().toSet
     assert(approx.contains(11L), "query's own vector must be found")
     assert((exact intersect approx).size >= 3,
@@ -151,7 +151,7 @@ class SimilaritySpec extends SparkSpec {
     val high = Similarity.nearDupPairs(planted, threshold = 0.9, dim = dim)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(high.contains((7L, 9001L)))
-    assert(Similarity.bandsFor(0.9, 4) < Similarity.bandsFor(0.75, 4),
+    assert(Similarity.bandsFor(0.9) < Similarity.bandsFor(0.75),
       "bands must grow as the threshold drops")
   }
 
@@ -205,7 +205,7 @@ class SimilaritySpec extends SparkSpec {
     val withGarbage = vecs.unionByName(Seq(
       (900L, Seq.fill(dim)(0f)),
       (901L, Seq.fill(dim)(Float.NaN))).toDF("vec_id", "embedding"))
-    val out = Similarity.centroidOutliers(withGarbage, dim = dim, threshold = 0.0)
+    val out = Similarity.centroidOutliers(withGarbage, dim = dim)
       .select("vec_id", "is_outlier").as[(Long, Boolean)].collect().toMap
     assert(out(900L), "all-zero vector (NaN cosine) must flag as outlier")
     assert(out(901L), "NaN vector must flag as outlier")
@@ -301,7 +301,7 @@ class SimilaritySpec extends SparkSpec {
       (1L, Seq(10.0f, 10.0f)), (2L, Seq(-10.0f, -10.0f)),
       (3L, Seq(1.0f, -1.0f)), (4L, Seq(-1.0f, 1.0f)))
       .toDF("vec_id", "embedding")
-    val pcs = Similarity.topTwoPrincipalComponents(docs, dim = 2, iters = 3)
+    val pcs = Similarity.topTwoPrincipalComponents(docs, dim = 2)
       .orderBy("comp", "j").as[(Long, Long, Long, Double)].collect().toSeq
     val c1 = pcs.filter(_._1 == 1L).map(p => p._2 -> p._3).toMap
     val c2 = pcs.filter(_._1 == 2L).map(p => p._2 -> p._3).toMap

@@ -64,7 +64,7 @@ class StatsOpsSpec extends SparkSpec {
     // m3 = 0; s4 = 2e24 -> m4 = 666666
     // kurt = 666666*1e12 div 666666² = 1500001 (exact truncation)
     val df = Seq(("g", 1L), ("g", 2L), ("g", 3L)).toDF("g", "x")
-    val r = StatsOps.momentsMicros(df, "g", "x").collect().head
+    val r = StatsOps.momentsMicros(df, "g").collect().head
     assert(r.getAs[Long]("mean_micros") === 2000000L)
     assert(r.getAs[Long]("sum_dev") === 0L)
     assert(r.getAs[Long]("m2_micros") === 666666L)
@@ -80,7 +80,7 @@ class StatsOpsSpec extends SparkSpec {
     // {1,1,3}: mean_micros = 5e6 div 3 = 1666666, devs
     //   {-666666,-666666,1333334} -> sum_dev = 2 (the floored mass)
     val df = Seq(("g", 1L), ("g", 1L), ("g", 3L)).toDF("g", "x")
-    val r = StatsOps.momentsMicros(df, "g", "x").collect().head
+    val r = StatsOps.momentsMicros(df, "g").collect().head
     assert(r.getAs[Long]("mean_micros") === 1666666L)
     assert(r.getAs[Long]("sum_dev") === 2L)
     assert(math.abs(r.getAs[Long]("sum_dev")) < r.getAs[Long]("n"))
@@ -93,7 +93,7 @@ class StatsOpsSpec extends SparkSpec {
     //   chi2 = 4*16*1e6 / (2*2*2*2) = 4e6; 'bb' is uniform -> 0.
     val docs = Seq(("A", "aa bb"), ("A", "aa bb"), ("B", "bb"), ("B", "bb"))
       .toDF("lang", "text")
-    val r = StatsOps.chi2Terms(docs, classCol = "lang", minDf = 1, topK = 2)
+    val r = StatsOps.chi2Terms(docs, minDf = 1, topK = 2)
       .collect().map(x => (x.getAs[String]("cls"), x.getAs[String]("w")) ->
         (x.getAs[Long]("chi2_micros"), x.getAs[Long]("rnk"))).toMap
     assert(r(("A", "aa")) === ((4000000L, 1L)))
@@ -116,7 +116,7 @@ class StatsOpsSpec extends SparkSpec {
       (i * 2 + 2L, ts("2024-01-20 10:00:00"), u, "purchase", post, "{}"))
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q167_cuped")(spark, dir).collect()
+    val out = SparkEntry.queries("q167_cuped")(spark, dir).collect()
       .map(r => r.getAs[Long]("arm") -> (r.getAs[Long]("n_users"),
         r.getAs[Long]("mean_y_micros"), r.getAs[Long]("mean_adj_micros"),
         r.getAs[Long]("varratio_micros"))).toMap
@@ -133,7 +133,7 @@ class StatsOpsSpec extends SparkSpec {
       (3L, "c", "fr", "A", 300L), (4L, "d", "fr", "A", 300L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q179_infogain")(spark, dir).collect()
+    val out = SparkEntry.queries("q179_infogain")(spark, dir).collect()
       .map(r => r.getAs[String]("feature") -> (r.getAs[Long]("n_docs"),
         r.getAs[Long]("p_true_ppm"), r.getAs[Double]("ig_r"))).toMap
     assert(out("has_digit") === ((4L, 500000L, 0.693147)))
@@ -148,7 +148,7 @@ class StatsOpsSpec extends SparkSpec {
       (3L, "c", "en", "B", 60L), (4L, "d", "en", "C", 10L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q185_jackknife")(spark, dir).collect()
+    val out = SparkEntry.queries("q185_jackknife")(spark, dir).collect()
       .map(r => r.getAs[String]("source") -> (r.getAs[Long]("n_i"),
         r.getAs[Long]("theta_loo_micros"))).toMap
     assert(out("A") === ((2L, 35000000L)))
@@ -162,7 +162,7 @@ class StatsOpsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val df = (1L to 200L).map(i => (i, i * 1000L)).toDF("k", "xm")
     def run() = graft.analytics.StatsOps
-      .bootstrapCI(df, keyCol = "k", valueMicros = col("xm"), b = 40)
+      .bootstrapCI(df, keyCol = "k", valueMicros = col("xm"))
       .collect()
       .map(r => (r.getAs[Long]("b"), r.getAs[Long]("n_eff"),
         r.getAs[Long]("mean_micros")))
@@ -216,7 +216,7 @@ class StatsOpsSpec extends SparkSpec {
     // (prob 2^-10 per draw) and p lands near the 1/(B+1) floor
     val dayDiffs = (1 to 10).map(i => ("all", i.toLong, 5L + i))
       .toDF("grp", "od", "d")
-    val r = graft.analytics.StatsOps.signFlipPermutation(dayDiffs, b = 200)
+    val r = graft.analytics.StatsOps.signFlipPermutation(dayDiffs)
       .collect().head
     assert(r.getAs[Long]("n_days") === 10L)
     assert(r.getAs[Long]("s_obs") === (6L to 15L).sum)
@@ -224,14 +224,14 @@ class StatsOpsSpec extends SparkSpec {
     assert(r.getAs[Long]("p_ppm") <= 100000L,
       s"planted effect should reject: p_ppm=${r.getAs[Long]("p_ppm")}")
     // determinism: the hash-seeded draws replay bit-for-bit
-    val r2 = graft.analytics.StatsOps.signFlipPermutation(dayDiffs, b = 200)
+    val r2 = graft.analytics.StatsOps.signFlipPermutation(dayDiffs)
       .collect().head
     assert(r.getAs[Long]("n_ge") === r2.getAs[Long]("n_ge"))
   }
 
   test("BH step-up rejects a prefix of the p-ranked battery") {
     val dir = "/root/testdata/sf0.001"
-    val rows = SparkEntry.allQueries("q265_fdr_bh")(spark, dir).collect()
+    val rows = SparkEntry.queries("q265_fdr_bh")(spark, dir).collect()
     val m = rows.length.toLong
     assert(rows.map(_.getAs[Long]("m")).forall(_ === m))
     assert(rows.map(_.getAs[Long]("bh_rank")).sorted === (1L to m).toArray)
@@ -251,7 +251,7 @@ class StatsOpsSpec extends SparkSpec {
       .map { case ((l, src), i) => (i.toLong, s"text $i", l, src, 10L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = SparkEntry.allQueries("q294_cramers_v")(spark, dir).collect().head
+    val r = SparkEntry.queries("q294_cramers_v")(spark, dir).collect().head
     assert((r.getAs[Long]("n"), r.getAs[Long]("n_langs"),
       r.getAs[Long]("n_sources"), r.getAs[Long]("chi2_micros"),
       r.getAs[Long]("dof"), r.getAs[Long]("v2_micros")) ===
@@ -269,7 +269,7 @@ class StatsOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val r = SparkEntry.allQueries("q327_jarque_bera")(spark, dir).collect().head
+    val r = SparkEntry.queries("q327_jarque_bera")(spark, dir).collect().head
     assert((r.getAs[Long]("n"), r.getAs[Long]("mu_f")) === ((5L, 3L)))
     assert(r.getAs[Double]("skew_r") === 0.0)
     assert(r.getAs[Double]("exkurt_r") === -1.3)
@@ -285,7 +285,7 @@ class StatsOpsSpec extends SparkSpec {
     Seq((1L, "x x y", "en", "A", 5L), (2L, "z z", "en", "B", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q329_simpson_diversity")(spark, dir).collect()
+    val out = SparkEntry.queries("q329_simpson_diversity")(spark, dir).collect()
       .map(r => (r.getAs[String]("source"), r.getAs[Long]("n_tokens"),
         r.getAs[Long]("n_types"), r.getAs[Long]("d_ppm"),
         r.getAs[Long]("inv_simpson_micros")))
@@ -306,7 +306,7 @@ class StatsOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = SparkEntry.allQueries("q331_cornish_fisher")(spark, dir).collect()
+    val out = SparkEntry.queries("q331_cornish_fisher")(spark, dir).collect()
       .map(r => r.getAs[Long]("p_bp") -> (r.getAs[Long]("est2_cents"),
         r.getAs[Long]("exact2_cents"), r.getAs[Long]("err_ppm"))).toMap
     assert(out(5000L) === ((600L, 650L, 76923L)))
@@ -333,7 +333,7 @@ class StatsOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val r = SparkEntry.allQueries("q332_gini_revenue")(spark, dir).collect().head
+    val r = SparkEntry.queries("q332_gini_revenue")(spark, dir).collect().head
     assert((r.getAs[Long]("n"), r.getAs[Long]("total_cents"),
       r.getAs[Long]("mean_cents"), r.getAs[Long]("gini_ppm")) ===
       ((4L, 800L, 200L, 312500L)))
@@ -352,7 +352,7 @@ class StatsOpsSpec extends SparkSpec {
       (4L, ts("10:03:00"), 1L, "click", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q333_markov_entropy_rate")(spark, dir).collect()
+    val out = SparkEntry.queries("q333_markov_entropy_rate")(spark, dir).collect()
       .map(r => (r.getAs[String]("src_et"), r.getAs[Long]("n_out"),
         r.getAs[Long]("n_dst"), r.getAs[Long]("h_nanos")))
     assert(out.toSeq === Seq(("click", 2L, 2L, 693147181L),
@@ -370,7 +370,7 @@ class StatsOpsSpec extends SparkSpec {
       .zipWithIndex.map { case ((t, et), i) => (i.toLong, ts(t), 1L, et, 0.0, "{}") })
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q336_dispersion_index")(spark, dir).collect()
+    val out = SparkEntry.queries("q336_dispersion_index")(spark, dir).collect()
       .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("n"),
         r.getAs[Long]("n_events"), r.getAs[Long]("vmr_ppm"),
         r.getAs[Long]("chi2_micros")))
@@ -387,7 +387,7 @@ class StatsOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = SparkEntry.allQueries("q337_key_discovery")(spark, dir).collect()
+    val out = SparkEntry.queries("q337_key_discovery")(spark, dir).collect()
     assert(out.length === 11)
     val head = out.head
     assert((head.getAs[String]("combo"), head.getAs[Long]("n_distinct"),
@@ -409,7 +409,7 @@ class StatsOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val r = SparkEntry.allQueries("q338_wilson_ci")(spark, dir).collect().head
+    val r = SparkEntry.queries("q338_wilson_ci")(spark, dir).collect().head
     assert((r.getAs[Long]("n"), r.getAs[Long]("k"),
       r.getAs[Long]("rate_ppm")) === ((4L, 1L, 250000L)))
     val z = 1.959963985; val nd = 4.0; val kd = 1.0
@@ -433,7 +433,7 @@ class StatsOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val r = SparkEntry.allQueries("q339_effect_size")(spark, dir).collect().head
+    val r = SparkEntry.queries("q339_effect_size")(spark, dir).collect().head
     assert((r.getAs[Long]("n1"), r.getAs[Long]("n2"),
       r.getAs[Long]("mean1_cents"), r.getAs[Long]("mean2_cents")) ===
       ((2L, 2L, 200L, 100L)))
@@ -456,7 +456,7 @@ class StatsOpsSpec extends SparkSpec {
         "l_quantity", "l_extendedprice", "l_discount", "l_tax",
         "l_returnflag", "l_linestatus", "l_shipdate")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = SparkEntry.allQueries("q326_rle_advisor")(spark, dir).collect()
+    val out = SparkEntry.queries("q326_rle_advisor")(spark, dir).collect()
       .map(r => (r.getAs[String]("layout"), r.getAs[Long]("total_bound")))
     assert(out.toSeq === Seq(("sd,rf,ls,qy", 10L), ("rf,ls,qy,sd", 12L),
       ("ls,qy,rf,sd", 14L), ("qy,sd,rf,ls", 14L)))
@@ -473,7 +473,7 @@ class StatsOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = SparkEntry.allQueries("q352_selectivity_cert")(spark, dir).collect()
+    val out = SparkEntry.queries("q352_selectivity_cert")(spark, dir).collect()
       .map(r => (r.getAs[Long]("cut"), r.getAs[Long]("est"),
         r.getAs[Long]("n_exact"), r.getAs[Long]("err_ppm")))
     assert(out.map(_._1).toSeq === Seq(1L, 2L, 3L, 4L, 5L))
@@ -503,7 +503,7 @@ class StatsOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = SparkEntry.allQueries("q346_wilcoxon_signed_rank")(spark, dir)
+    val out = SparkEntry.queries("q346_wilcoxon_signed_rank")(spark, dir)
       .collect().map(r => (r.getAs[String]("grp"), r.getAs[Long]("n_g"),
         r.getAs[Long]("r2x"), r.getAs[Long]("z2_micros")))
     assert(out.toSeq === Seq(("neg", 1L, 4L, 0L), ("pos", 2L, 8L, 0L),
@@ -524,7 +524,7 @@ class StatsOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = SparkEntry.allQueries("q349_ansari_bradley")(spark, dir)
+    val out = SparkEntry.queries("q349_ansari_bradley")(spark, dir)
       .collect().map(r => (r.getAs[String]("grp"), r.getAs[Long]("n_g"),
         r.getAs[Long]("ab2x"), r.getAs[Long]("z2_micros")))
     assert(out.toSeq === Seq(("g0", 3L, 14L, 0L), ("g1", 2L, 4L, 0L),
@@ -549,7 +549,7 @@ class StatsOpsSpec extends SparkSpec {
       (3L, "c3", 1, 0.0, "B"), (4L, "c4", 1, 0.0, "B"))
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    val out = SparkEntry.allQueries("q355_theil_decomposition")(spark, dir)
+    val out = SparkEntry.queries("q355_theil_decomposition")(spark, dir)
       .collect().map(r => r.getAs[String]("grp") ->
         (r.getAs[Long]("n_g"), r.getAs[Long]("x_cents"),
           r.getAs[Long]("t_nanos"))).toMap
@@ -579,7 +579,7 @@ class StatsOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = SparkEntry.allQueries("q351_page_trend")(spark, dir)
+    val out = SparkEntry.queries("q351_page_trend")(spark, dir)
       .collect().map(r => (r.getAs[String]("t"), r.getAs[Long]("n_blocks"),
         r.getAs[Long]("rr2"), r.getAs[Long]("z2_micros")))
     assert(out.toSeq === Seq(("1-URGENT", 2L, 4L, 0L), ("2-HIGH", 2L, 8L, 0L),

@@ -184,7 +184,7 @@ class StreamingSpec extends SparkSpec {
     } ++ (0 until 4).map(i => (100L + i, s"unrelated singleton $i " + (s"z$i " * 8)))
     val mem = MemoryStream[(Long, String)]
     val q = graft.stream.StreamingNearDup
-      .nearDupPairs(mem.toDS().toDF("doc_id", "text"), threshold = 0.8)
+      .nearDupPairs(mem.toDS().toDF("doc_id", "text"))
       .toDF("id_a", "id_b", "jaccard")
       .writeStream.outputMode("append").format("memory").queryName("neardup_out").start()
     mem.addData(corpus.filter(_._1 % 2 == 0): _*)   // originals
@@ -222,7 +222,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = spark.table("phash_out")
       .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
     q.stop()
-    val batch = graft.multimodal.Multimodal.imagePhashNearDups(corpus, maxHamming = 8)
+    val batch = graft.multimodal.Multimodal.imagePhashNearDups(corpus)
       .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
     assert(streamed === batch)
     for (i <- 0L until 4L)
@@ -241,7 +241,7 @@ class StreamingSpec extends SparkSpec {
     val rows = corpus.as[(Long, String, Array[Byte])].collect()
     val mem = MemoryStream[(Long, String, Array[Byte])]
     val q = graft.stream.StreamingMediaNearDup
-      .audioPairs(mem.toDS().toDF("media_id", "media_type", "payload"), maxHamming = 5)
+      .audioPairs(mem.toDS().toDF("media_id", "media_type", "payload"))
       .toDF("id_a", "id_b", "hamming")
       .writeStream.outputMode("append").format("memory").queryName("afp_out").start()
     mem.addData(rows.filter(_._1 < 1000L).toSeq: _*)
@@ -251,7 +251,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = spark.table("afp_out")
       .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
     q.stop()
-    val batch = graft.multimodal.Multimodal.audioFingerprintNearDups(corpus, maxHamming = 5)
+    val batch = graft.multimodal.Multimodal.audioFingerprintNearDups(corpus)
       .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
     assert(streamed === batch)
     for (i <- 0L until 4L)
@@ -349,7 +349,7 @@ class StreamingSpec extends SparkSpec {
     // late and drop it — the delay must cover cross-user event-time
     // skew between batches, exactly as in production
     val q = graft.stream.StreamingSessionize
-      .sessions(mem.toDS().toDF("user_id", "ts"), gap = "10 minutes",
+      .sessions(mem.toDS().toDF("user_id", "ts"),
         watermarkDelay = "2 hours")
       .writeStream.outputMode("append").format("memory").queryName("sess_out").start()
     mem.addData(wave1: _*); q.processAllAvailable()
@@ -590,7 +590,7 @@ class StreamingSpec extends SparkSpec {
     val src = tmp(); val ckpt = tmp() + "/ck"; val dest = tmp() + "/out"
     def sess = graft.stream.StreamingSessionize.sessions(
       spark.readStream.schema("user_id LONG, ts TIMESTAMP").json(src),
-      gap = "10 minutes", watermarkDelay = "2 hours")
+      watermarkDelay = "2 hours")
     writeOps(src, "w1.json", Seq(
       """{"user_id":1,"ts":"2024-01-01T10:00:00"}""",
       """{"user_id":1,"ts":"2024-01-01T10:05:00"}""",
@@ -993,7 +993,7 @@ class StreamingSpec extends SparkSpec {
       .map { case (id, ts) => (id, ts, 1L, "click", 0.0, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$bdir/events.parquet")
-    val b = SparkEntry.allQueries("q353_harmonic_profile")(spark, bdir)
+    val b = SparkEntry.queries("q353_harmonic_profile")(spark, bdir)
       .collect().head
     assert((fin._2, fin._3, fin._4) ===
       ((b.getAs[Long]("n_events"), b.getAs[Long]("peak_h"),
@@ -1005,9 +1005,9 @@ class StreamingSpec extends SparkSpec {
   test("contract: new stateful twins route through StatefulTwin unless in a documented exempt family") {
     // VERDICT r9 ask #7. StatefulTwin's scaladoc names the two families
     // that intentionally keep their own flatMapGroupsWithState frames:
-    //  - bucket/timeout family (state expiry + member-pair emission
-    //    don't fit a left-fold): StatefulDedup, StreamingNearDup,
-    //    StreamingMediaNearDup;
+    //  - bucket family (first-seen / member-pair emission against a
+    //    live set doesn't fit a left-fold): StatefulDedup,
+    //    StreamingNearDup, StreamingMediaNearDup;
     //  - buffer-merge family (decrement-all / top-n merge over a live
     //    structure): StreamingHeavyHitters, StreamingPrioritySample.
     // A 15th twin that hand-rolls the frame must either use StatefulTwin
@@ -1015,9 +1015,9 @@ class StreamingSpec extends SparkSpec {
     // test fails on any undocumented call site.
     val exempt = Map(
       "StatefulTwin.scala" -> "the shared frame itself",
-      "StatefulDedup.scala" -> "bucket/timeout family: key expiry via GroupStateTimeout",
-      "StreamingNearDup.scala" -> "bucket/timeout family: band-bucket expiry + pair emission",
-      "StreamingMediaNearDup.scala" -> "bucket/timeout family: band-bucket expiry + pair emission",
+      "StatefulDedup.scala" -> "bucket family: first-seen emission against a live key set",
+      "StreamingNearDup.scala" -> "bucket family: pair emission against a live band bucket",
+      "StreamingMediaNearDup.scala" -> "bucket family: pair emission against a live band bucket",
       "StreamingHeavyHitters.scala" -> "buffer-merge family: Misra-Gries decrement-all over a live map",
       "StreamingPrioritySample.scala" -> "buffer-merge family: per-bucket top-n buffer merge")
     val dir = new java.io.File("src/main/scala/graft/stream")

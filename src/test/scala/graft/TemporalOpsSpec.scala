@@ -21,7 +21,7 @@ class TemporalOpsSpec extends SparkSpec {
       (4L, ts("2024-01-01 10:30:00"), 7L, "A", 0.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q157_scd2_history")(spark, dir).collect()
+    val out = SparkEntry.queries("q157_scd2_history")(spark, dir).collect()
     assert(out.length === 3)
     val v = out.map(r => (r.getAs[Long]("version"), r.getAs[String]("state"),
       r.getAs[Timestamp]("valid_from"), Option(r.getAs[Timestamp]("valid_to")),
@@ -45,7 +45,7 @@ class TemporalOpsSpec extends SparkSpec {
       (3L, ts("2024-01-01 10:02:00"), 7L, "view", 4.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = SparkEntry.allQueries("q162_ewma")(spark, dir).collect().head
+    val r = SparkEntry.queries("q162_ewma")(spark, dir).collect().head
     assert(r.getAs[Long]("n_events") === 3L)
     assert(r.getAs[Long]("ewma_micros") === 2110000L)
   }
@@ -64,7 +64,7 @@ class TemporalOpsSpec extends SparkSpec {
       (4L, ts("2024-01-02 10:00:00"), 7L, "purchase", 99.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q166_gapfill")(spark, dir).collect()
+    val out = SparkEntry.queries("q166_gapfill")(spark, dir).collect()
       .map(r => (r.getAs[java.sql.Date]("day").toString,
         r.getAs[Long]("n_obs"), r.getAs[Boolean]("is_filled"),
         r.getAs[Long]("filled_sum_micros")))
@@ -86,7 +86,7 @@ class TemporalOpsSpec extends SparkSpec {
       (5L, ts("2024-01-01 10:00:00"), 8L, "view", 0.0, "{}") // lone event: no pair
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q174_event_transitions")(spark, dir).collect()
+    val out = SparkEntry.queries("q174_event_transitions")(spark, dir).collect()
       .map(r => (r.getAs[String]("src_et"), r.getAs[String]("dst_et"),
         r.getAs[Long]("n"), r.getAs[Long]("p_ppm")))
     assert(out.toSeq === Seq(
@@ -112,7 +112,7 @@ class TemporalOpsSpec extends SparkSpec {
       (8L, ts("2024-01-02 10:00:00"), 4L, "purchase", 1.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q175_kaplan_meier")(spark, dir).collect()
+    val out = SparkEntry.queries("q175_kaplan_meier")(spark, dir).collect()
       .map(r => (r.getAs[Long]("day_off"), r.getAs[Long]("n_risk"),
         r.getAs[Long]("n_deaths"), r.getAs[Long]("s_micros")))
     // day 0: 4 at risk, 1 death → S = 750000
@@ -133,7 +133,7 @@ class TemporalOpsSpec extends SparkSpec {
       (3L, ts("2024-01-01 10:02:00"), 7L, "view", 4.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = SparkEntry.allQueries("q176_holt_trend")(spark, dir).collect().head
+    val r = SparkEntry.queries("q176_holt_trend")(spark, dir).collect().head
     assert(r.getAs[Long]("n_events") === 3L)
     assert(r.getAs[Long]("level_micros") === 2825000L)
     assert(r.getAs[Long]("trend_micros") === 502500L)
@@ -152,7 +152,7 @@ class TemporalOpsSpec extends SparkSpec {
       .map { case (e, d) => (e, ts(s"$d 10:00:00"), 1L, "view", 0.0, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q182_cusum")(spark, dir).collect()
+    val out = SparkEntry.queries("q182_cusum")(spark, dir).collect()
       .map(r => (r.getAs[Long]("x_micros"), r.getAs[Long]("s_hi"),
         r.getAs[Long]("s_lo"), r.getAs[Boolean]("alarm")))
     assert(out.toSeq === Seq(
@@ -174,7 +174,7 @@ class TemporalOpsSpec extends SparkSpec {
       (1 to n).map(j => (i * 10L + j, ts(s"$d 10:00:00"), 1L, "view", 0.0, "{}"))
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q183_autocorr")(spark, dir).collect()
+    val out = SparkEntry.queries("q183_autocorr")(spark, dir).collect()
       .map(r => (r.getAs[Long]("lag"), r.getAs[Long]("n_pairs"),
         r.getAs[Long]("r_micros")))
     assert(out.toSeq === Seq((1L, 3L, -750000L), (2L, 2L, 500000L),
@@ -194,7 +194,7 @@ class TemporalOpsSpec extends SparkSpec {
     // 10000·18·81 = 14,580,000 > 38416·300 = 11,524,800 → increasing
     val d1 = java.nio.file.Files.createTempDirectory("mk_inc").toString
     write(d1, Seq(1, 2, 3, 4, 5))
-    val r1 = SparkEntry.allQueries("q206_mann_kendall")(spark, d1).collect().head
+    val r1 = SparkEntry.queries("q206_mann_kendall")(spark, d1).collect().head
     assert((r1.getAs[Long]("n_days"), r1.getAs[Long]("s"),
       r1.getAs[Long]("var18"), r1.getAs[String]("trend")) ===
       ((5L, 10L, 300L, "increasing")))
@@ -202,7 +202,7 @@ class TemporalOpsSpec extends SparkSpec {
     // variance entirely (var18 = 66 − 66 = 0) → no_trend
     val d2 = java.nio.file.Files.createTempDirectory("mk_const").toString
     write(d2, Seq(2, 2, 2))
-    val r2 = SparkEntry.allQueries("q206_mann_kendall")(spark, d2).collect().head
+    val r2 = SparkEntry.queries("q206_mann_kendall")(spark, d2).collect().head
     assert((r2.getAs[Long]("n_days"), r2.getAs[Long]("s"),
       r2.getAs[Long]("var18"), r2.getAs[String]("trend")) ===
       ((3L, 0L, 0L, "no_trend")))
@@ -223,7 +223,7 @@ class TemporalOpsSpec extends SparkSpec {
         ts(f"2024-01-${i + 1}%02d 10:00:00"), 1L, "view", 0.0, "{}"))
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = SparkEntry.allQueries("q207_theil_sen")(spark, dir).collect().head
+    val r = SparkEntry.queries("q207_theil_sen")(spark, dir).collect().head
     assert((r.getAs[Long]("n_pairs"), r.getAs[Long]("n_days"),
       r.getAs[Long]("slope_micros"), r.getAs[Long]("intercept_micros")) ===
       ((6L, 4L, 2000000L, -39445000000L)))
@@ -241,7 +241,7 @@ class TemporalOpsSpec extends SparkSpec {
       .map { case (d, i) => (i.toLong, ts(s"$d 10:00:00"), 1L, "view", 0.0, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q184_rolling_window")(spark, dir).collect()
+    val out = SparkEntry.queries("q184_rolling_window")(spark, dir).collect()
       .map(r => (r.getAs[Long]("c"), r.getAs[Long]("n_days_in_window"),
         r.getAs[Long]("roll_sum"), r.getAs[Long]("roll_mean_micros"),
         r.getAs[Long]("roll_max")))
@@ -266,7 +266,7 @@ class TemporalOpsSpec extends SparkSpec {
     ).map { case (e, d, u) => (e, ts(s"$d 10:00:00"), u, "view", 0.0, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q186_growth")(spark, dir).collect()
+    val out = SparkEntry.queries("q186_growth")(spark, dir).collect()
       .map(r => (r.getAs[Long]("dau"), r.getAs[Long]("n_new"),
         r.getAs[Long]("n_returning"), r.getAs[Long]("cum_users"),
         r.getAs[Long]("wau")))
@@ -294,7 +294,7 @@ class TemporalOpsSpec extends SparkSpec {
       (6L, ts("2024-01-06 10:00:00"), 3L, "purchase", 1.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q188_attribution")(spark, dir).collect()
+    val out = SparkEntry.queries("q188_attribution")(spark, dir).collect()
       .map(r => r.getAs[String]("et") ->
         (r.getAs[Long]("n_first"), r.getAs[Long]("n_last"))).toMap
     assert(out("click") === ((1L, 0L)))
@@ -317,7 +317,7 @@ class TemporalOpsSpec extends SparkSpec {
       (1 to np).map { _ => id += 1; (id, ts(s"$d 11:00:00"), 1L, "purchase", 0.0, "{}") }
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q191_crosscorr")(spark, dir).collect()
+    val out = SparkEntry.queries("q191_crosscorr")(spark, dir).collect()
       .map(r => r.getAs[Long]("lag") ->
         (r.getAs[Long]("n_pairs"), r.getAs[Long]("r_sign"),
           r.getAs[Long]("r2_micros"))).toMap
@@ -364,7 +364,7 @@ class TemporalOpsSpec extends SparkSpec {
         (1 to np).map(j => (i * 100L + 50 + j, ts(s"$d 11:00:0$j"), 1L, "purchase", 0.0, "{}"))
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = SparkEntry.allQueries("q229_kendall_tau")(spark, dir).collect().head
+    val r = SparkEntry.queries("q229_kendall_tau")(spark, dir).collect().head
     assert((r.getAs[Long]("n_pairs"), r.getAs[Long]("n_concordant"),
       r.getAs[Long]("n_discordant"), r.getAs[Long]("n_ties_x"),
       r.getAs[Long]("n_ties_y"), r.getAs[Long]("tau_sign"),
@@ -383,7 +383,7 @@ class TemporalOpsSpec extends SparkSpec {
       (1 to n).map(j => ((i * 10 + j).toLong, ts(s"$d 12:00:00"), 7L, "click", 0.0, "{}"))
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = SparkEntry.allQueries("q259_changepoint")(spark, dir).collect().head
+    val r = SparkEntry.queries("q259_changepoint")(spark, dir).collect().head
     assert(r.getAs[Long]("n_left") === 2L && r.getAs[Long]("n_right") === 2L)
     assert(r.getAs[Long]("mean_left_micros") === 1000000L)
     assert(r.getAs[Long]("mean_right_micros") === 5000000L)
@@ -393,7 +393,7 @@ class TemporalOpsSpec extends SparkSpec {
     // same fixture, Hodges–Lehmann: Walsh multiset over volumes 1,1,5,5
     // (i ≤ j, 10 pairs) = [2,2,2,6,6,6,6,10,10,10] → lower median at
     // rank 5 is 6 → pseudo-median 3.0
-    val hl = SparkEntry.allQueries("q261_hodges_lehmann")(spark, dir).collect().head
+    val hl = SparkEntry.queries("q261_hodges_lehmann")(spark, dir).collect().head
     assert(hl.getAs[Long]("n_days") === 4L)
     assert(hl.getAs[Long]("n_pairs") === 10L)
     assert(hl.getAs[Long]("hl_doubled") === 6L)
@@ -413,7 +413,7 @@ class TemporalOpsSpec extends SparkSpec {
       (1 to n).map(j => ((i * 10 + j).toLong, ts(s"$d 12:00:00"), 7L, "click", 0.0, "{}"))
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val rows = SparkEntry.allQueries("q263_acf_ljung_box")(spark, dir)
+    val rows = SparkEntry.queries("q263_acf_ljung_box")(spark, dir)
       .collect().map(r => r.getAs[Long]("lag_k") ->
         (r.getAs[Long]("n"), r.getAs[Long]("rho_micros"), r.getAs[Long]("q_lb_micros")))
       .toMap
@@ -442,7 +442,7 @@ class TemporalOpsSpec extends SparkSpec {
       (5L, ts("2024-02-06 12:00:00"), 1L, "weird", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q273_pivot_matrix")(spark, dir).collect()
+    val out = SparkEntry.queries("q273_pivot_matrix")(spark, dir).collect()
       .map(r => (r.getAs[Long]("dow"), r.getAs[Long]("click"),
         r.getAs[Long]("view"), r.getAs[Long]("purchase"), r.getAs[Long]("n_total")))
     assert(out.toSeq === Seq((1L, 2L, 1L, 0L, 3L), (2L, 0L, 0L, 1L, 1L)))
@@ -459,7 +459,7 @@ class TemporalOpsSpec extends SparkSpec {
       .map { case (id, d, u) => (id, ts(s"$d 12:00:00"), u, "click", 0.0, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q274_active_users")(spark, dir).collect()
+    val out = SparkEntry.queries("q274_active_users")(spark, dir).collect()
       .map(r => (r.getAs[Long]("od"), r.getAs[Long]("dau"),
         r.getAs[Long]("wau"), r.getAs[Long]("mau")))
     val byDay = out.map(t => t._1 -> (t._2, t._3, t._4)).toMap
@@ -482,7 +482,7 @@ class TemporalOpsSpec extends SparkSpec {
       .map { case (id, d, t) => (id, ts(s"$d 12:00:00"), 1L, t, 0.0, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val rows = SparkEntry.allQueries("q277_leadlag_beta")(spark, dir).collect()
+    val rows = SparkEntry.queries("q277_leadlag_beta")(spark, dir).collect()
       .map(r => r.getAs[Long]("lag_k") -> r.getAs[Long]("beta_micros")).toMap
     assert(rows.size === 15)
     assert(rows(0L) === 0L)
@@ -503,7 +503,7 @@ class TemporalOpsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = SparkEntry.allQueries("q278_cohort_ltv")(spark, dir).collect()
+    val out = SparkEntry.queries("q278_cohort_ltv")(spark, dir).collect()
       .map(r => (r.getAs[Long]("cohort_m"), r.getAs[Long]("age_m"),
         r.getAs[Long]("n_customers"), r.getAs[Long]("cum_rev_micros"),
         r.getAs[Long]("ltv_micros")))
@@ -525,7 +525,7 @@ class TemporalOpsSpec extends SparkSpec {
       .map { case (id, t, v) => (id, ts(t), 1L, "tick", v, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = SparkEntry.allQueries("q280_twap")(spark, dir).collect().head
+    val r = SparkEntry.queries("q280_twap")(spark, dir).collect().head
     assert((r.getAs[Long]("n_held"), r.getAs[Long]("twap_micros"),
       r.getAs[Long]("mean_micros")) === ((2L, 25000000L, 20000000L)))
   }
@@ -542,7 +542,7 @@ class TemporalOpsSpec extends SparkSpec {
         .map { case (id, t, e) => (id, ts(s"2024-07-01 $t"), u, e, 0.0, "{}") }
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val rows = SparkEntry.allQueries("q293_markov_hitrate")(spark, dir).collect()
+    val rows = SparkEntry.queries("q293_markov_hitrate")(spark, dir).collect()
     val zz = rows.find(_.getAs[String]("src") == "zz_all").get
     assert(zz.getAs[Long]("n_test") > 0L)
     assert(zz.getAs[Long]("hit_ppm") === 1000000L)
@@ -570,7 +570,7 @@ class TemporalOpsSpec extends SparkSpec {
     // 1e6·(36−18−6)²·5 DIV (18·12) = 720e6 DIV 216 = 3333333
     val dir = java.nio.file.Files.createTempDirectory("runs_fix").toString
     hourlyFixture(dir, Seq(5, 1, 5, 1, 5, 1).map(n => Seq.fill(n)("click")))
-    val rows = SparkEntry.allQueries("q322_runs_test")(spark, dir).collect()
+    val rows = SparkEntry.queries("q322_runs_test")(spark, dir).collect()
     val bySgn = rows.map(r => r.getAs[Long]("sgn") ->
       (r.getAs[Long]("n_g"), r.getAs[Long]("runs_g"), r.getAs[Long]("z2_micros"))).toMap
     assert(bySgn(0L) === ((3L, 3L, 0L)))
@@ -584,7 +584,7 @@ class TemporalOpsSpec extends SparkSpec {
     // dw_ppm = 3400000; per-day Σ|e| = 1600, max = 600
     val dir = java.nio.file.Files.createTempDirectory("dw_fix").toString
     hourlyFixture(dir, Seq(2, 1, 2, 1).map(n => Seq.fill(n)("click")))
-    val rows = SparkEntry.allQueries("q323_durbin_watson")(spark, dir).collect()
+    val rows = SparkEntry.queries("q323_durbin_watson")(spark, dir).collect()
     assert(rows.length === 2)
     val day = rows.find(_.getAs[Long]("od") >= 0L).get
     assert((day.getAs[Long]("n_g"), day.getAs[Long]("sae_milli"),
@@ -609,7 +609,7 @@ class TemporalOpsSpec extends SparkSpec {
       .map { case (id, d, u) => (id, ts(d), u, "click", 0.0, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q340_retention_halflife")(spark, dir).collect()
+    val out = SparkEntry.queries("q340_retention_halflife")(spark, dir).collect()
       .map(r => (r.getAs[Long]("o"), r.getAs[Long]("n_active"),
         r.getAs[Long]("ln_nanos"), r.getAs[Double]("slope_r"),
         r.getAs[Double]("half_life_r")))
@@ -624,7 +624,7 @@ class TemporalOpsSpec extends SparkSpec {
     // RSS = 0 (up to float residue) → t is guard-zeroed
     val dir = java.nio.file.Files.createTempDirectory("df_fix").toString
     hourlyFixture(dir, Seq(2, 1, 2, 1).map(n => Seq.fill(n)("click")))
-    val r = SparkEntry.allQueries("q341_dickey_fuller")(spark, dir).collect().head
+    val r = SparkEntry.queries("q341_dickey_fuller")(spark, dir).collect().head
     assert(r.getAs[Long]("n") === 3L)
     assert(r.getAs[Double]("gamma_r") === -2.0)
     assert(r.getAs[Double]("t_r") === 0.0)
@@ -639,7 +639,7 @@ class TemporalOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("acf_fix").toString
     hourlyFixture(dir,
       Seq(5, 1, 1, 5, 1, 1, 5, 1, 1).map(n => Seq.fill(n)("click")))
-    val out = SparkEntry.allQueries("q343_dominant_period")(spark, dir).collect()
+    val out = SparkEntry.queries("q343_dominant_period")(spark, dir).collect()
       .map(r => (r.getAs[Long]("l"), r.getAs[Long]("n_pairs"),
         r.getAs[Long]("sgn"), r.getAs[Long]("abs_rho_ppm"),
         r.getAs[Long]("period")))
@@ -662,7 +662,7 @@ class TemporalOpsSpec extends SparkSpec {
     val y = Seq(2, 1, 3, 2, 3); val x = Seq(1, 2, 1, 2, 2)
     hourlyFixture(dir, y.zip(x).map { case (ny, nx) =>
       Seq.fill(ny)("purchase") ++ Seq.fill(nx)("click") })
-    val rows = SparkEntry.allQueries("q324_granger_lagf")(spark, dir).collect()
+    val rows = SparkEntry.queries("q324_granger_lagf")(spark, dir).collect()
     assert(rows.length === 2)
     val fwd = rows.find(_.getAs[String]("direction") == "click_to_purchase").get
     assert(fwd.getAs[Long]("n") === 4L)
@@ -688,7 +688,7 @@ class TemporalOpsSpec extends SparkSpec {
     }
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q347_pacf")(spark, dir).collect()
+    val out = SparkEntry.queries("q347_pacf")(spark, dir).collect()
       .map(r => r.getAs[Long]("lag") -> r.getAs[Double]("pacf_r")).toMap
     val (r1, r2, r3, r4) = (-45.0 / 54, 36.0 / 54, -27.0 / 54, 18.0 / 54)
     val phi11 = r1
@@ -727,7 +727,7 @@ class TemporalOpsSpec extends SparkSpec {
     ev.map { case (id, ts, et) => (id, Timestamp.valueOf(ts), 1L, et, 0.0, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.allQueries("q356_croston")(spark, dir).collect()
+    val out = SparkEntry.queries("q356_croston")(spark, dir).collect()
       .map(r => r.getAs[String]("event_type") ->
         (r.getAs[Long]("n_days"), r.getAs[Long]("n_demand_days"),
           r.getAs[Long]("size_micros"), r.getAs[Long]("interval_micros"),
@@ -750,7 +750,7 @@ class TemporalOpsSpec extends SparkSpec {
     }
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = SparkEntry.allQueries("q353_harmonic_profile")(spark, dir)
+    val r = SparkEntry.queries("q353_harmonic_profile")(spark, dir)
       .collect().head
     assert(r.getAs[Long]("n_events") === 36L)
     assert((r.getAs[Long]("peak_h"), r.getAs[Long]("peak_p")) === ((0L, 2L)))

@@ -89,7 +89,7 @@ class TextStatsSpec extends SparkSpec {
     // micros·1e6 grid because y is already in micros (defined output,
     // replayed identically by the oracle).
     val docs = Seq("aaa aaa bbb", "aaa ccc", "aaa bbb").toDF("text")
-    val r = graft.analytics.LLMOps.zipfFit(docs, topK = 100).collect().head
+    val r = graft.analytics.LLMOps.zipfFit(docs).collect().head
     assert(r.getAs[Long]("n") === 3L)
     assert(r.getAs[Long]("slope_micros") === -1233661L)
     assert(r.getAs[Long]("intercept_micros") === 1429954733233L)
@@ -160,7 +160,7 @@ class TextStatsSpec extends SparkSpec {
       (2L, (1 to 10).map(i => s"u$i").mkString(" "), "en", "s", 10L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.allQueries("q233_chunking")(spark, dir).collect()
+    val out = SparkEntry.queries("q233_chunking")(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") -> (r.getAs[Long]("n_tokens"),
         r.getAs[Long]("n_chunks"), r.getAs[Long]("chunk_tokens"),
         r.getAs[Long]("n_distinct"))).toMap

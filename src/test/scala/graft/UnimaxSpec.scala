@@ -31,13 +31,13 @@ class UnimaxSpec extends SparkSpec {
       (100 until 110).map(i => (i.toLong, "fr")) ++
       (200 until 206).map(i => (i.toLong, null: String)))
       .toDF("doc_id", "lang")
-    val out = Sampling.unimaxSelect(docs, "lang", "doc_id", budget = 30L)
+    val out = Sampling.unimaxSelect(docs, budget = 30L)
     val byLang = out.groupBy(coalesce(col("lang"), lit("<null>")).as("l"))
       .agg(count(lit(1)).as("n")).as[(String, Long)].collect().toMap
     // caps: null=6, fr=10, en=40; budget 30: share 10 -> null capped 6,
     // rem 24 over 2: fr 10 capped... share 12 -> fr 10, rem 14 -> en 14
     assert(byLang === Map("<null>" -> 6L, "fr" -> 10L, "en" -> 14L))
-    val again = Sampling.unimaxSelect(docs, "lang", "doc_id", budget = 30L)
+    val again = Sampling.unimaxSelect(docs, budget = 30L)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(again === out.select("doc_id").as[Long].collect().sorted.toSeq)
     // schema contract: a sample is input rows, not input + join internals
