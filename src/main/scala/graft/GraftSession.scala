@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * session here, so they all run under the same configuration —
   * shuffle partitions sized to the core count (not the 200 default),
   * UTC, the UI off, a generated-class cache sized to the query suite,
-  * session artifact isolation off, and the native SQL functions
+  * session artifact isolation off, a local filesystem that starts no
+  * processes, and the native SQL functions
   * injected via GraftExtensions. AQE runs on Spark's defaults (enabled,
   * with partition coalescing and skew joins). Partition overwrite stays
   * at Spark's static default: the upsert sink asks for dynamic
@@ -24,6 +25,21 @@ import org.apache.spark.sql.SparkSession
   * its tasks. The engine adds no session artifacts, so isolation is
   * off. A caller that adds session jars, files or classes
   * (`addArtifact`, `addJar`, `addFile`) must revisit this setting.
+  *
+  * Local `file:` paths go through [[sources.NioLocalFileSystem]] and
+  * [[sources.NioLocalFs]]. Without the native-hadoop library (Spark
+  * logs "Unable to load native-hadoop library"), Hadoop's
+  * `RawLocalFileSystem` set each mode by
+  * forking `chmod` and probed each rename's paths for symlinks by
+  * forking `readlink`: a sync benchmark run started 1093 processes,
+  * about 150 per timed replay, and the streaming checkpoint spent
+  * 23-33 ms per batch in each of `walCommit`, `commitOffsets` and
+  * `latestOffset`. The two classes give the same modes and statuses
+  * through `java.nio` and keep the `.crc` files, so on-disk state is
+  * unchanged; they are fixed settings, not options. `FileSystem.CACHE`
+  * is keyed by scheme and user, not by configuration, so a `file:`
+  * filesystem that code fetches with a plain Hadoop `Configuration`
+  * before the session starts keeps Hadoop's class for the JVM's life.
   */
 object GraftSession {
 
@@ -50,5 +66,9 @@ object GraftSession {
       // frames were in 35% of the replay's executor samples (PERF.md).
       // Off, a replay compiles none.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // file: paths without Hadoop's chmod and readlink forks (see the
+      // scaladoc and PERF.md); other schemes keep their own classes
+      .config("spark.hadoop.fs.file.impl", classOf[sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[sources.NioLocalFs].getName)
       .withExtensions(new catalyst.GraftExtensions)
 }

@@ -28,9 +28,7 @@ object Comments {
     */
   def postProjection(comments: DataFrame): DataFrame = {
     val meta = Normalize.parsedMetadata(col("json_metadata"))
-    comments
-      // P5: replies leave the post pipeline (comments.js:113-116)
-      .filter(!Normalize.isReply(col("parent_author")))
+    posts(comments)
       .withColumn("meta", meta)
       .withColumn("tags", Normalize.tagsOf(col("meta")))
       .withColumn("text_body", TextFns.mdToText(col("body")))
@@ -56,6 +54,16 @@ object Comments {
         Normalize.partitionYear(col("timestamp")).as("year"),
         Normalize.partitionMonth(col("timestamp")).as("month"))
   }
+
+  /** The keys [[toPostDocs]] yields, straight from the raw comments: no
+    * metadata repair, text transform or dedup, so a key-locate probe
+    * built on them need not wait for the transform. */
+  def postKeys(comments: DataFrame): DataFrame =
+    posts(comments).select(Keys.postKey(col("author"), col("permlink")))
+
+  /** P5: replies leave the post pipeline (comments.js:113-116). */
+  private def posts(comments: DataFrame): DataFrame =
+    comments.filter(!Normalize.isReply(col("parent_author")))
 
   /** Account-activity projection of the comment stream: every comment
     * bumps its author's last_active (reference handlers/comments.js:179-181).

@@ -34,15 +34,19 @@ object Sync {
     * literal concurrency inside one foreachBatch invocation, which Spark
     * runs as one unit before committing the offset.
     *
-    *  1. The comment transform runs once, behind one `Stage.mat`.
+    *  1. The comment transform runs once, behind one `Stage.mat`, in a
+    *     `Stage.concurrently` call whose other branch is step 2.
     *  2. ONE key-locate scan of posts (`Merge.locate`: post_id, year,
     *     month) probes the batch's post keys ∪ vote keys, materialized
-    *     (batch-sized). The posts merge takes its touched partitions
-    *     from it, and the votes check against pre-merge keys ∪ batch
-    *     keys — which IS the post-merge key set, since the merge never
-    *     deletes a key — so votes on same-batch posts are kept (the
-    *     reference races its handlers and drops them; the engine applies
-    *     the intended ordering) without re-reading posts after the write.
+    *     (batch-sized). Its post keys come from the raw comments
+    *     (`Comments.postKeys`, the key set the transform yields), so the
+    *     scan runs concurrently with step 1 instead of after it. The
+    *     posts merge takes its touched partitions from it, and the votes
+    *     check against pre-merge keys ∪ the transformed batch's keys —
+    *     which IS the post-merge key set, since the merge never deletes
+    *     a key — so votes on same-batch posts are kept (the reference
+    *     races its handlers and drops them; the engine applies the
+    *     intended ordering) without re-reading posts after the write.
     *  3. The three merges are computed concurrently (`Stage.concurrently`),
     *     then the three tables are written concurrently. A failure while
     *     computing cancels the other merges' jobs and writes nothing; a
@@ -62,12 +66,13 @@ object Sync {
     val votes    = Router.votes(ops)
     val accounts = Router.accountUpdates(ops)
 
-    val newPosts = Comments.toPostDocs(comments).transform(graft.Stage.mat)
+    val postDocs = Comments.toPostDocs(comments)
+    val probe = Comments.postKeys(comments).unionByName(Votes.keyed(votes).select(col("post_id")))
+    val Seq(Some(newPosts), located) = graft.Stage.concurrently(spark, "sync-locate")(Seq(
+      () => Some(postDocs.transform(graft.Stage.mat)),
+      () => Merge.readState(spark, postsPath, Some(postDocs.schema))
+        .map(Merge.locate(_, probe, Seq("post_id")).transform(graft.Stage.mat))))
     val postKeys = newPosts.select(col("post_id"))
-    val located = Merge.readState(spark, postsPath, Some(newPosts.schema)).map { state =>
-      Merge.locate(state, postKeys.unionByName(Votes.keyed(votes).select(col("post_id"))),
-        Seq("post_id")).transform(graft.Stage.mat)
-    }
 
     // votes: semi-join against the post keys (J1), then merge the new
     // voter sets into the existing ones (A1 incremental)

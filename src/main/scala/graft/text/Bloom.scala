@@ -68,13 +68,13 @@ object Bloom {
     * slice exactly when the decision is destructive).
     */
   def bloomContaminationFlag(corpus: DataFrame, bloomBytes: Array[Byte]): DataFrame = {
-    val csh = corpus.select(col("doc_id").as("id"),
+    val csh = corpus.select(col("doc_id"),
       explode(Dedup.shingleHashes(col("text"), 3)).as("sh"))
     val hits = csh.filter(mightContain(bloomBytes, col("sh")))
-      .groupBy(col("id")).agg(count(lit(1)).as("n_bloom_hits"))
-    corpus.select(col("doc_id").as("id"))
-      .join(hits, Seq("id"), "left")
-      .select(col("id").as("doc_id"),
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_bloom_hits"))
+    corpus.select(col("doc_id"))
+      .join(hits, Seq("doc_id"), "left")
+      .select(col("doc_id"),
         coalesce(col("n_bloom_hits"), lit(0L)).as("n_bloom_hits"),
         (coalesce(col("n_bloom_hits"), lit(0L)) > 0).as("flagged"))
   }

@@ -320,7 +320,7 @@ object Dedup {
     */
   def lineLevelDedup(docs: DataFrame): DataFrame = {
     val lines = docs
-      .select(col("doc_id").as("id"),
+      .select(col("doc_id"),
         posexplode(split(col("text"), "\n")).as(Seq("pos", "line")))
       .withColumn("lh", xxhash64(trim(col("line"))))
     val frequent = lines.groupBy(col("lh"))
@@ -329,17 +329,16 @@ object Dedup {
       .select(col("lh"))
     val kept = lines
       .join(frequent, Seq("lh"), "left_anti")
-      .groupBy(col("id"))
+      .groupBy(col("doc_id"))
       .agg(array_join(
         transform(array_sort(collect_list(struct(col("pos"), col("line")))),
           s => s.getField("line")), "\n").as("__kept_text"))
     // surgery ops never lose rows (the dupSpanTrim contract): a doc
     // whose EVERY line is boilerplate comes back with empty text, not
     // silently vanished from the corpus (review finding r6b)
-    docs.select(col("doc_id").as("id"))
-      .join(kept, Seq("id"), "left")
-      .select(col("id").as("doc_id"),
-        coalesce(col("__kept_text"), lit("")).as("text"))
+    docs.select(col("doc_id"))
+      .join(kept, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("__kept_text"), lit("")).as("text"))
   }
 
   /** Per-document n-gram novelty: the fraction of a document's DISTINCT
@@ -478,13 +477,13 @@ object Dedup {
       .select(explode(shingleHashes(col("text"), 3)).as("sh"))
       .distinct()
     val hits = corpus
-      .select(col("doc_id").as("id"), explode(shingleHashes(col("text"), 3)).as("sh"))
+      .select(col("doc_id"), explode(shingleHashes(col("text"), 3)).as("sh"))
       .join(broadcast(bsh), Seq("sh"))
-      .groupBy(col("id"))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shared"))
-    corpus.select(col("doc_id").as("id"))
-      .join(hits, Seq("id"), "left")
-      .select(col("id").as("doc_id"),
+    corpus.select(col("doc_id"))
+      .join(hits, Seq("doc_id"), "left")
+      .select(col("doc_id"),
         coalesce(col("n_shared"), lit(0L)).as("n_shared"),
         (coalesce(col("n_shared"), lit(0L)) > 0).as("contaminated"))
   }

@@ -59,6 +59,22 @@ class CommentsSpec extends SparkSpec {
     assert(docs.select("text_title").as[String].head() === "new")
   }
 
+  test("postKeys, read from the raw comments, is the key set toPostDocs yields") {
+    val repost = commentPayload.replace("\"title\":\"T\"", "\"title\":\"again\"")
+    val reply = commentPayload.replace("\"parent_author\":\"\"", "\"parent_author\":\"bob\"")
+      .replace("\"permlink\":\"p1\"", "\"permlink\":\"r1\"")
+    val other = commentPayload.replace("\"author\":\"alice\"", "\"author\":\"bob\"")
+      .replace("\"json_metadata\":\"{\\\"tags\\\":[\\\"hivestockimages\\\"]}\"", "\"json_metadata\":\"{oops\"")
+    val comments = Router.comments(opsFromJson(Seq(
+      envelope(1, "2024-01-01T00:00:00", "comment", commentPayload),
+      envelope(2, "2024-01-02T00:00:00", "comment", repost),
+      envelope(2, "2024-01-02T00:01:00", "comment", reply),
+      envelope(3, "2024-02-01T00:00:00", "comment", other))))
+    val docKeys = Comments.toPostDocs(comments).select("post_id").as[Long].collect()
+    assert(docKeys.length === 2)
+    assert(Comments.postKeys(comments).as[Long].collect().toSet === docKeys.toSet)
+  }
+
   test("non-stock-image post has null stockimage_tags (comments.js:84-98)") {
     val plain = commentPayload
       .replace("hive-118554", "other")

@@ -19,8 +19,10 @@ query differs.
 Some plans depend on what the session ran before them, not only on the
 code: the grouping-set `Expand` of q321_g_test lists its attributes as
 (grp, st) inside the full 358-query run and as (st, grp) when explained
-alone, on the same commit. So a query that differs here is not yet a
-difference: explain it again alone on both checkouts,
+alone, on the same commit, and q294_cramers_v's lists (lang, source) or
+(source, lang) depending on which queries ran before it. So a query
+that differs here is not yet a difference: explain it again alone on
+both checkouts,
 
     sbt "runMain graft.Explain <sfDir> <query>"   # once per checkout
 
